@@ -1,7 +1,11 @@
 package graft.operators
 
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-pair-encoding merge learning (Sennrich et al. 2016) — the
   * tokenizer-training step of an LLM data pipeline, distributed.
@@ -10,12 +14,23 @@ import org.apache.spark.sql.functions._
   * corpus: one corpus pass builds (word, n); the k merge iterations then
   * run over the vocabulary-sized table only, so iteration cost is
   * independent of corpus size (the 100 TB property — a trillion-token
-  * corpus has a few million distinct words). Per iteration: one keyed
-  * pair-count aggregation (map-side partials), ONE driver-side row (the
-  * winning pair — bounded, like duplicateClusters' convergence probe),
-  * and a narrow per-word re-merge map. Eager localCheckpoint truncates
-  * the growing merge-expression lineage each round, same discipline as
-  * Dedup.duplicateClusters.
+  * corpus has a few million distinct words).
+  *
+  * Two finishes, chosen by the vocabulary size [[learnMerges]] already
+  * counts:
+  *  - at most [[DriverLearnWords]] words: the vocabulary is collected
+  *    once and the k merges run as exact sequential BPE on the driver,
+  *    with incremental pair counts — each merge rewrites only the words
+  *    that contain the winning pair. Two Spark jobs in total
+  *    (materialize-and-count, collect), whatever k is; per-job fixed
+  *    cost, not data, is what a loop over a small vocabulary pays for.
+  *  - above the cap, the distributed loop. Per round: one keyed
+  *    pair-count aggregation (map-side partials), ONE driver-side row
+  *    (the winning pair — bounded, like duplicateClusters' convergence
+  *    probe), and a narrow per-word re-merge map. Eager localCheckpoint
+  *    truncates the growing merge-expression lineage each round, same
+  *    discipline as Dedup.duplicateClusters.
+  * Both produce the identical merge sequence (CorpusSpec).
   *
   * The merge itself uses a separator-encoded string form: a symbol
   * sequence [s1, s2, ...] is encoded as ␟s1␟␟s2␟... and merging pair
@@ -36,10 +51,24 @@ object Bpe {
     * out. */
   val Sep = "\u001f"
 
-  /** Rounds executed by the most recent [[learnMerges]] call — diagnostic
-    * for measuring how far batching cuts driver round-trips (read by
-    * CorpusSpec and PROGRESS notes; not part of the operator contract). */
+  /** Distributed rounds executed by the most recent [[learnMerges]] call:
+    * 0 when the vocabulary took the driver finish, otherwise one per
+    * pair-count round of the loop (including the final empty-table probe
+    * when the vocabulary runs out of pairs before k). Diagnostic for
+    * measuring how far batching cuts driver round-trips (read by
+    * CorpusSpec; not part of the operator contract). */
   @volatile private[graft] var lastLearnRounds: Int = 0
+
+  /** Vocabulary cap for the driver finish of [[learnMerges]], set by
+    * driver memory, not speed. Measured at 260k words (`graft.tools.Profile
+    * bpe`, its Zipf fixture of 5–12-letter words, local[4]): k = 64 takes
+    * 1.9 s on the driver vs 82 s (38 rounds) for the loop at batch 8;
+    * k = 1024 takes 8.2–8.4 s and raises the old generation by 290–340 MB
+    * (the checkpointed vocabulary included), and still completes in a
+    * 1 GB heap. Driver state grows with the word count, so the cap keeps
+    * it to a few hundred MB. Above the cap the distributed loop runs
+    * exactly as before. */
+  val DriverLearnWords: Long = 1L << 18
 
   /** Split a word column (by name) into its character symbols (char-based
     * substring, identical semantics to the DuckDB oracle's
@@ -83,17 +112,41 @@ object Bpe {
     *              saving at the smallest look-ahead/fetch cost; widths
     *              beyond 8 bought zero additional rounds on both the
     *              Zipf fixture and the real corpus table.
+    *              `batch` applies to the loop only: a vocabulary of at
+    *              most [[DriverLearnWords]] words takes the driver finish
+    *              (object doc).
     * @return (step, lhs, rhs, n): the i-th winning pair and its count at
     *         selection time. Ties break on (count DESC, lhs ASC, rhs ASC)
     *         — integer counts and binary string order, so the sequence is
     *         deterministic across engines and partitionings, and identical
     *         for every `batch` (CorpusSpec proves batched == sequential).
+    *         A null `n` contributes nothing to a count, as in SQL `sum`.
     */
   def learnMerges(
       words: DataFrame,
       k: Int,
       mode: CheckpointMode = CheckpointMode.Local,
-      batch: Int = 8): DataFrame = {
+      batch: Int = 8): DataFrame =
+    learn(words, k, mode, batch, DriverLearnWords)
+
+  /** [[learnMerges]] without the driver finish: every vocabulary runs the
+    * distributed loop. For the loop's parity and round-count specs, fault
+    * injection mid-loop and loop profiling. */
+  private[graft] def learnMergesLoop(
+      words: DataFrame,
+      k: Int,
+      mode: CheckpointMode = CheckpointMode.Local,
+      batch: Int = 8): DataFrame =
+    learn(words, k, mode, batch, driverFinishWords = 0L)
+
+  /** [[learnMerges]] with a driver-finish cap of `driverFinishWords`
+    * separator-free words (0: never). */
+  private def learn(
+      words: DataFrame,
+      k: Int,
+      mode: CheckpointMode,
+      batch: Int,
+      driverFinishWords: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(batch >= 1, s"batch must be >= 1, got $batch")
     val spark = words.sparkSession
@@ -102,8 +155,6 @@ object Bpe {
     // explicitly so k rounds never pin k copies of the vocab table;
     // `mode` = Reliable(dir) survives executor loss mid-loop
     val lin = new Lineage(spark, mode)
-    def tracked(df: DataFrame): (DataFrame, Set[Int]) = lin.tracked(df)
-    def release(ids: Set[Int]): Unit = lin.release(ids)
     // AQE off for the loop's jobs (restored on exit): every per-round job
     // here is vocabulary-sized, so AQE's per-stage materialization is pure
     // added latency in a k-round loop — measured 655 s -> 332 s for the
@@ -121,9 +172,168 @@ object Bpe {
     // without AQE — acceptable for a batch tokenizer-training job, see
     // AqeGate's scaladoc for the isolation escape hatch.
     AqeGate.withAqeOff(spark) {
-    var (syms, symIds) = tracked(
+    // the vocabulary count rides on the materializing job (Lineage)
+    val (syms, symIds, vocabRows) = lin.trackedCount(
       words.filter(!col("word").contains(Sep)) // encoding invariant — class doc
         .select(charSyms("word").as("syms"), col("n")))
+    val merges =
+      if (driverFinishWords > 0 && vocabRows <= driverFinishWords) {
+        // Driver finish: one collect of the materialized symbol table
+        // (<= driverFinishWords rows), then no further Spark job. Symbols
+        // come from the same charSyms split the loop starts from. A null-n
+        // word adds nothing to any count (SQL sum), so it is left out; a
+        // pair seen only in such words has no count and is never merged
+        // (the loop ranks its NULL count last and cannot report it).
+        val vocab = syms.select(col("syms"), col("n").cast("long")).collect()
+          .collect { case r if !r.isNullAt(0) && !r.isNullAt(1) =>
+            (r.getSeq[String](0).toArray, r.getLong(1)) }
+        lin.release(symIds)
+        lastLearnRounds = 0
+        learnLocal(vocab.toSeq, k)
+      } else learnLoop(syms, symIds, vocabRows, k, batch, lin)
+    import spark.implicits._
+    merges.toDF("step", "lhs", "rhs", "n")
+      .select(col("step").cast("long"), col("lhs"), col("rhs"), col("n"))
+    }
+  }
+
+  /** Exact sequential BPE over a collected vocabulary (symbols per word,
+    * weight) — the driver finish of [[learnMerges]], selection-identical
+    * to its loop at `batch = 1`:
+    *  - counting is overlapping (every adjacent position), weighted by the
+    *    word's n; a pair whose count is 0 still ranks, because the pair
+    *    table holds every adjacent pair that occurs;
+    *  - ranking is (count DESC, lhs ASC, rhs ASC) with strings in Spark's
+    *    binary UTF-8 order (`UTF8String.binaryCompare`), which is code
+    *    point order, not Java's UTF-16 `String.compareTo`;
+    *  - merging is greedy left-to-right and non-overlapping per word;
+    *  - learning stops early when no adjacent pair is left.
+    * Pair counts are maintained incrementally: each pair keeps the words
+    * it was seen in, and a merge rewrites only those words (removing
+    * their old adjacent pairs and adding the new ones), so a step costs
+    * the total length of the words holding the winning pair, never a
+    * rescan. The winning pair comes off a priority queue with lazy
+    * deletion: an entry is live while it matches its pair's current
+    * count, and every count change pushes a fresh entry. */
+  private def learnLocal(
+      vocab: Seq[(Array[String], Long)],
+      k: Int): Seq[(Int, String, String, Long)] = {
+    val symId = new java.util.HashMap[String, Integer]()
+    val symStr = ArrayBuffer.empty[String]
+    val symKey = ArrayBuffer.empty[UTF8String]
+    def intern(s: String): Int = {
+      val id = symId.get(s)
+      if (id != null) id.intValue
+      else {
+        symId.put(s, symStr.size); symStr += s; symKey += UTF8String.fromString(s)
+        symStr.size - 1
+      }
+    }
+    val words: Array[Array[Int]] = vocab.map(_._1.map(intern)).toArray
+    val weight: Array[Long] = vocab.map(_._2).toArray
+    def pairKey(a: Int, b: Int): Long = (a.toLong << 32) | (b.toLong & 0xffffffffL)
+    val pairs = mutable.LongMap.empty[PairStat]
+    val touched = mutable.LongMap.empty[PairStat]
+    // occurrence delta d (+1/-1) of pair (a, b) in word wi; `track`
+    // records wi in the pair's word list for a newly formed adjacency
+    def bump(wi: Int, a: Int, b: Int, d: Int, track: Boolean): Unit = {
+      val key = pairKey(a, b)
+      val p = pairs.getOrElseUpdate(key, new PairStat(a, b))
+      p.cnt += d * weight(wi)
+      p.occ += d
+      if (track) p.addWord(wi)
+      touched(key) = p
+    }
+    def pairsOf(wi: Int, d: Int, track: Int => Boolean): Unit = {
+      val s = words(wi)
+      var i = 0
+      while (i + 1 < s.length) {
+        bump(wi, s(i), s(i + 1), d, d > 0 && track(i))
+        i += 1
+      }
+    }
+    words.indices.foreach(wi => pairsOf(wi, 1, _ => true))
+    val queue = new java.util.PriorityQueue[Ranked](
+      math.max(1, pairs.size),
+      (x: Ranked, y: Ranked) =>
+        if (x.cnt != y.cnt) java.lang.Long.compare(y.cnt, x.cnt)
+        else {
+          val c = symKey(x.a).binaryCompare(symKey(y.a))
+          if (c != 0) c else symKey(x.b).binaryCompare(symKey(y.b))
+        })
+    def requeueTouched(): Unit = {
+      touched.foreachEntry { (key, p) =>
+        if (p.occ == 0) pairs.remove(key) else queue.add(new Ranked(p.cnt, p.a, p.b))
+      }
+      touched.clear()
+    }
+    requeueTouched()
+    // An empty word splits to the symbols ["", ""] (sequence(1, 0) counts
+    // down), and the loop's encode/decode turns any such word into [""]
+    // after the first round, merged or not: its ("", "") pair ranks in the
+    // first step only.
+    val emptyWords = words.indices.filter(wi => vocab(wi)._1.forall(_.isEmpty))
+    val out = ArrayBuffer.empty[(Int, String, String, Long)]
+    var step = 1
+    var exhausted = false
+    while (step <= k && !exhausted) {
+      var best: PairStat = null
+      while (best == null && !queue.isEmpty) {
+        val top = queue.poll()
+        val p = pairs.getOrElse(pairKey(top.a, top.b), null)
+        if (p != null && p.occ > 0 && p.cnt == top.cnt) best = p
+      }
+      if (best == null) exhausted = true
+      else {
+        val (a, b) = (best.a, best.b)
+        out += ((step, symStr(a), symStr(b), best.cnt))
+        val c = intern(symStr(a) + symStr(b))
+        // a listed word may have lost the pair since (or be listed
+        // twice): it is rewritten only while it still holds it, and after
+        // the greedy merge no (a, b) adjacency is left in it
+        java.util.Arrays.copyOf(best.words, best.nWords).foreach { wi =>
+          val s = words(wi)
+          if (s.indices.exists(i => i + 1 < s.length && s(i) == a && s(i + 1) == b)) {
+            pairsOf(wi, -1, _ => false)
+            val merged = ArrayBuffer.empty[Int]
+            var i = 0
+            while (i < s.length) {
+              if (i + 1 < s.length && s(i) == a && s(i + 1) == b) { merged += c; i += 2 }
+              else { merged += s(i); i += 1 }
+            }
+            words(wi) = merged.toArray
+            // only adjacencies touching c are new; the rest were already
+            // in this word and so already list it
+            pairsOf(wi, 1, j => words(wi)(j) == c || words(wi)(j + 1) == c)
+          }
+        }
+        if (step == 1) emptyWords.foreach { wi =>
+          if (words(wi).length > 1) {
+            pairsOf(wi, -1, _ => false)
+            words(wi) = Array(intern(""))
+          }
+        }
+        requeueTouched()
+        step += 1
+      }
+    }
+    out.toSeq
+  }
+
+  /** The distributed merge loop of [[learnMerges]], over the materialized
+    * symbol table `syms0` (`vocabRows` rows, blocks `symIds0`). */
+  private def learnLoop(
+      syms0: DataFrame,
+      symIds0: Set[Int],
+      vocabRows: Long,
+      k: Int,
+      batch: Int,
+      lin: Lineage): Seq[(Int, String, String, Long)] = {
+    val spark = syms0.sparkSession
+    def tracked(df: DataFrame): (DataFrame, Set[Int]) = lin.tracked(df)
+    def release(ids: Set[Int]): Unit = lin.release(ids)
+    var syms = syms0
+    var symIds = symIds0
     // Pin the loop's parallelism at entry, sized from the VOCABULARY, not
     // the cores: the caller's word table often arrives through an
     // AQE-planned materialization that coalesced it to ~1 partition (tiny
@@ -135,9 +345,8 @@ object Bpe {
     // overhead times k rounds (measured +0.9 s on the 31-word corpus
     // table at k=6). So: ~2k words per partition, capped at the cluster's
     // parallelism, and reshuffle ONLY when the inherited width is >4x off
-    // — the count and the occasional re-checkpoint read the already-
-    // materialized frame, never the caller's plan.
-    val vocabRows = syms.count()
+    // — the occasional re-checkpoint reads the already-materialized
+    // frame, never the caller's plan.
     val width = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (vocabRows / 2000L).toInt + 1))
     val inherited = syms.rdd.getNumPartitions
@@ -312,10 +521,7 @@ object Bpe {
     }
     release(symIds)
     lastLearnRounds = rounds
-    import spark.implicits._
-    merges.toSeq.toDF("step", "lhs", "rhs", "n")
-      .select(col("step").cast("long"), col("lhs"), col("rhs"), col("n"))
-    }
+    merges.toSeq
   }
 
   /** One corpus pass to the word-frequency table learnMerges consumes. */
@@ -347,3 +553,22 @@ object Bpe {
       .withColumn("syms", split(trim(encoded, Sep), Sep + Sep))
   }
 }
+
+/** Incremental count of one adjacent symbol pair in `Bpe.learnLocal`:
+  * weighted count, occurrences, and the words it has been seen in (a
+  * superset — a word that lost the pair is skipped when re-checked). */
+private final class PairStat(val a: Int, val b: Int) {
+  var cnt = 0L
+  var occ = 0
+  var words = new Array[Int](2)
+  var nWords = 0
+  def addWord(wi: Int): Unit =
+    if (nWords == 0 || words(nWords - 1) != wi) {
+      if (nWords == words.length) words = java.util.Arrays.copyOf(words, nWords * 2)
+      words(nWords) = wi
+      nWords += 1
+    }
+}
+
+/** A queue entry of `Bpe.learnLocal`: pair (a, b) at count `cnt`. */
+private final class Ranked(val cnt: Long, val a: Int, val b: Int)

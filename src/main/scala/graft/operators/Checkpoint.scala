@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Lineage-truncation strategy for the loop-carried / multi-branch
   * operators (Dedup.duplicateClusters, Similarity.jaccardNearDupPairs,
@@ -68,8 +69,26 @@ private[graft] final class Lineage(spark: SparkSession, mode: CheckpointMode) {
     (out, sc.getPersistentRDDs.keySet.toSet -- before)
   }
 
+  /** [[tracked]] (eager) plus the frame's row count, folded into the
+    * materializing job as an observed metric — a separate `count()` on
+    * the checkpoint would be one more job (two under AQE). */
+  def trackedCount(df: DataFrame): (DataFrame, Set[Int], Long) = {
+    val name = s"graft_rows_${Lineage.observations.incrementAndGet()}"
+    val observed = df.observe(name, count(lit(1)))
+    val (out, ids) = tracked(observed)
+    val rows = observed.queryExecution.observedMetrics.get(name)
+      .map(_.getLong(0))
+      .getOrElse(out.count()) // metric absent: the plan was optimized away
+    (out, ids, rows)
+  }
+
   /** Release blocks pinned by a superseded round (no-op on ids from
     * Reliable mode). Non-blocking: successors are already materialized. */
   def release(ids: Set[Int]): Unit =
     ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+}
+
+private[graft] object Lineage {
+  /** Per-JVM counter keeping observed-metric names unique in a plan. */
+  private val observations = new java.util.concurrent.atomic.AtomicLong()
 }

@@ -1,8 +1,11 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Contraction algorithm for [[Dedup.duplicateClusters]]. Both converge to
   * the same (id, root=component-min) labeling; they differ in per-round
@@ -76,6 +79,60 @@ object Dedup {
       .drop("__dd_rn")
   }
 
+  /** Edge cap for the driver union-find finish of the post-contraction
+    * residual in [[duplicateClusters]]: 1M two-long edges ≤ 16 MB on the
+    * driver — the same bounded-collect class as the bloom-filter bytes
+    * (Joins.scala). Above the cap the distributed star loop runs exactly
+    * as before, so the finish is never load-bearing for correctness. */
+  val DriverFinishEdges: Long = 1L << 20
+
+  /** Raw pair-row cap for the EARLY driver finish of
+    * [[duplicateClusters]] (union-find over the uncontracted graph, no
+    * hop). Its cost is dominated by the nodes it returns as a driver-local
+    * frame, and the raw row count bounds the nodes only by 2x. Measured
+    * against the one-hop path on local[4] (`graft.tools.Profile cc`,
+    * 7 GB heap, warm reps), for the worst shape — disjoint pairs, two new
+    * nodes per row: 64k rows 0.9–1.1 s vs 1.2–1.4 s; 128k rows 1.5–1.8 s
+    * vs 1.6–1.7 s (the crossover); 256k rows 2.6–3.4 s vs 2.0–2.4 s; 1M
+    * rows 9–11 s and +1.1–1.6 GB old gen vs 3.6–5.2 s. Clique forests (few
+    * nodes per row) still win above it (sf0.1: 478k rows over 4.7k nodes,
+    * 0.5–0.7 s vs 1.3 s) but cannot be told apart from the row count the
+    * operator has, so the cap sits at the worst shape's crossover. */
+  val DriverEarlyEdges: Long = 1L << 17
+
+  /** Path taken by the most recent [[duplicateClusters]] call:
+    * "driver" (early driver finish over the raw edges), "hop" (the
+    * one-hop contraction closed every component), "hop+driver" (residual
+    * driver finish) or "hop+loop" (distributed loop over the residual).
+    * Diagnostic read by SimilaritySpec to pin each fixture to the path it
+    * covers; not part of the operator contract. */
+  @volatile private[graft] var lastPath: String = ""
+
+  /** Node cap for broadcasting the min-label map into the contraction
+    * join of [[duplicateClusters]] (2M two-long rows ≈ 32 MB raw, ~100 MB
+    * as two hashed broadcast relations — sized for ordinary 8 GB
+    * executors). Below it the edge set is contracted by a narrow map
+    * without being shuffled; above it the contraction shuffles edges on
+    * each endpoint, which is the safe shape at any node count. */
+  val BroadcastContractNodes: Long = 1L << 21
+
+  /** Dev instrumentation: SPARK_GRAFT_CC_TIMING=1 prints per-phase wall
+    * seconds to stderr (each phase below ends in an eager materialization,
+    * so the timings are real, not lazy-plan noise). Zero cost when unset;
+    * read once at class init like the operator's other env-free constants
+    * are compile-time. Used by tools/CcProbe to attribute the operator's
+    * scale cost to pre-contraction vs loop vs compose. */
+  private val ccTiming = sys.env.get("SPARK_GRAFT_CC_TIMING").contains("1")
+  private def timed[A](label: String)(f: => A): A =
+    if (!ccTiming) f
+    else {
+      val t0 = System.nanoTime()
+      val r = f
+      System.err.println(
+        f"[cc-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      r
+    }
+
   /** Resolve near-dup PAIRS into duplicate CLUSTERS: connected components
     * by iterative contraction. Input: (doc_a, doc_b) pairs; output:
     * (id, root) with root = smallest id in the component; both algorithms
@@ -112,43 +169,26 @@ object Dedup {
     * map-side combine) re-exposes the measured 100x AQE pathology of
     * packing early-round shuffles into too few fat tasks.
     *
+    * Small graphs never enter the loop: when the raw pair rows (after
+    * self-loop removal) number at most `driverFinishEdges` and at most
+    * [[DriverEarlyEdges]], they are collected once and resolved by
+    * union-find on the driver — two Spark jobs (the edge checkpoint,
+    * which also counts, and the collect) instead of the min-label hop,
+    * contraction and 4+ jobs per loop round, whose fixed per-job cost is
+    * the whole price on a graph of that size.
+    * Larger graphs take the pre-contraction hop, and a residual of at
+    * most `driverFinishEdges` edges is again finished on the driver; only
+    * a larger residual runs `algo`'s distributed loop. The driver
+    * finishes take integral ids (byte, short, int, long) and return them
+    * in the input's type; other id types always run the loop.
+    * `driverFinishEdges = 0` forces the loop (parity tests, fault
+    * injection).
+    *
     * `mode` picks where each round's truncated state lives:
     * [[CheckpointMode.Local]] (default, executor blocks — single-node /
     * fail-fast) or [[CheckpointMode.Reliable]] (fault-tolerant checkpoint
     * dir — an executor lost mid-loop re-reads instead of failing the
     * job). Output is identical either way (CheckpointModeSpec). */
-  /** Residual-edge cap for the driver union-find finish in
-    * [[duplicateClusters]]: 1M two-long edges ≤ 16 MB on the driver — the
-    * same bounded-collect class as the bloom-filter bytes (Joins.scala).
-    * Above the cap the distributed star loop runs exactly as before, so
-    * the fallback is never load-bearing for correctness. */
-  val DriverFinishEdges: Long = 1L << 20
-
-  /** Node cap for broadcasting the min-label map into the contraction
-    * join of [[duplicateClusters]] (2M two-long rows ≈ 32 MB raw, ~100 MB
-    * as two hashed broadcast relations — sized for ordinary 8 GB
-    * executors). Below it the edge set is contracted by a narrow map
-    * without being shuffled; above it the contraction shuffles edges on
-    * each endpoint, which is the safe shape at any node count. */
-  val BroadcastContractNodes: Long = 1L << 21
-
-  /** Dev instrumentation: SPARK_GRAFT_CC_TIMING=1 prints per-phase wall
-    * seconds to stderr (each phase below ends in an eager materialization,
-    * so the timings are real, not lazy-plan noise). Zero cost when unset;
-    * read once at class init like the operator's other env-free constants
-    * are compile-time. Used by tools/CcProbe to attribute the operator's
-    * scale cost to pre-contraction vs loop vs compose. */
-  private val ccTiming = sys.env.get("SPARK_GRAFT_CC_TIMING").contains("1")
-  private def timed[A](label: String)(f: => A): A =
-    if (!ccTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[cc-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   def duplicateClusters(
       pairs: DataFrame,
       maxIter: Int = 20,
@@ -163,14 +203,26 @@ object Dedup {
     // distinct value count is orders of magnitude smaller on real
     // near-dup graphs. Materialized eagerly: the frame feeds the
     // min-label aggregation AND the contraction join, and upstream is
-    // typically the expensive near-dup pair pipeline.
-    val (e, eIds) = timed("edges_build")(lin.tracked(
+    // typically the expensive near-dup pair pipeline. The raw pair-row
+    // count (an upper bound, used for the driver-finish decision and for
+    // sizing) is taken in the same job.
+    val (e, eIds, edges) = timed("edges_build")(lin.trackedCount(
       pairs.select(
           greatest(col("doc_a"), col("doc_b")).as("u"),
           least(col("doc_a"), col("doc_b")).as("v"))
-        .filter(col("u") =!= col("v")),
-      eager = true))
-    val edges = e.count() // raw pair rows — an upper bound, used for sizing
+        .filter(col("u") =!= col("v"))))
+    val integralIds = e.schema("u").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    if (integralIds && driverFinishEdges > 0 &&
+        edges <= math.min(driverFinishEdges, DriverEarlyEdges)) {
+      // small raw graph: driver union-find over every edge, no loop at all
+      val labels = timed("driver_resolve")(driverComponents(e))
+      lin.release(eIds)
+      lastPath = "driver"
+      return labels
+    }
 
     // PRE-CONTRACTION (round-9): real near-dup graphs are clique forests —
     // most components are a handful of mutual near-dups whose every node
@@ -281,46 +333,26 @@ object Dedup {
       // every component closed in one hop (the clique-forest fast path):
       // labelsAll IS the final labeling, no loop rounds at all
       lin.release(e1Ids)
+      lastPath = "hop"
       return labelsAll
     }
 
-    // Small residual: finish with driver union-find instead of paying the
-    // loop's per-round job overhead (each distributed round is 4+ jobs —
-    // on a contracted clique forest the residual is thousands of edges
-    // and the rounds are pure fixed cost). Bounded by `driverFinishEdges`
+    // Small residual of a graph too big for the early driver finish:
+    // finish with driver union-find instead of paying the loop's
+    // per-round job overhead (each distributed round is 4+ jobs — on a
+    // contracted clique forest the residual is thousands of edges and the
+    // rounds are pure fixed cost). Bounded by `driverFinishEdges`
     // (≤ 16 MB at the default cap); the labels map broadcasts back, so
     // the compose join is shuffle-free. Set driverFinishEdges = 0 to
     // force the distributed loop (parity tests, fault injection).
     val (residualLabels: DataFrame, residIds: Set[Int]) = timed("residual_resolve")(
-      if (edges1 <= driverFinishEdges) {
-        val spark = pairs.sparkSession
-        val es = e1.collect()
-        val nodes = new java.util.HashSet[Long](es.length * 2)
-        es.foreach { r => nodes.add(r.getLong(0)); nodes.add(r.getLong(1)) }
-        // parent holds only non-self links; absent key = root
-        val parent = new java.util.HashMap[Long, Long](es.length * 2)
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-          var c = x // path compression
-          while (parent.getOrDefault(c, c) != c) {
-            val nxt = parent.get(c); parent.put(c, r); c = nxt
-          }
-          r
-        }
-        es.foreach { row =>
-          val (ru, rv) = (find(row.getLong(0)), find(row.getLong(1)))
-          // union by min — the surviving root is the component minimum
-          if (ru < rv) parent.put(rv, ru)
-          else if (rv < ru) parent.put(ru, rv)
-        }
-        val ids = new scala.collection.mutable.ArrayBuffer[(Long, Long)](nodes.size)
-        nodes.forEach(k => ids += ((k, find(k))))
+      if (integralIds && edges1 <= driverFinishEdges) {
+        val labels = driverComponents(e1)
         lin.release(e1Ids)
-        import spark.implicits._
-        // driver-local frame: nothing pinned in executor storage
-        (broadcast(ids.toSeq.toDF("id", "root")), Set.empty[Int])
+        lastPath = "hop+driver"
+        (broadcast(labels), Set.empty[Int])
       } else {
+        lastPath = "hop+loop"
         val resolved = algo match {
           case CcAlgorithm.Auto(thr) =>
             if (edges1 < thr) CcAlgorithm.HashToMin else CcAlgorithm.TwoPhaseStar
@@ -356,6 +388,42 @@ object Dedup {
     out
   }
 
+  /** Driver union-find over a (u, v) edge frame with integral ids (at most
+    * `driverFinishEdges` rows — one collect, ≤ 16 MB at the default cap):
+    * (id, root) for every endpoint, root = component minimum, both in the
+    * edge frame's id type. The result is a driver-local frame, so nothing
+    * stays pinned in executor storage, and it is read as ONE partition:
+    * the rows come from the driver either way, and a single partition
+    * lets a downstream sort or aggregate on it skip its exchange. */
+  private def driverComponents(e: DataFrame): DataFrame = {
+    val spark = e.sparkSession
+    val idType = e.schema("u").dataType
+    val es = e.select(col("u").cast(LongType), col("v").cast(LongType)).collect()
+    // every endpoint is a key; a root maps to itself
+    val parent = new mutable.LongMap[Long](es.length * 2)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x // path compression
+      while (c != r) { val nxt = parent(c); parent(c) = r; c = nxt }
+      r
+    }
+    es.foreach { row =>
+      val (u, v) = (row.getLong(0), row.getLong(1))
+      parent.getOrElseUpdate(u, u)
+      parent.getOrElseUpdate(v, v)
+      val (ru, rv) = (find(u), find(v))
+      // union by min — the surviving root is the component minimum
+      if (ru < rv) parent(rv) = ru
+      else if (rv < ru) parent(ru) = rv
+    }
+    val ids = parent.keys.toArray.map(x => (x, find(x)))
+    import spark.implicits._
+    ids.toSeq.toDF("id", "root")
+      .select(col("id").cast(idType).as("id"), col("root").cast(idType).as("root"))
+      .coalesce(1)
+  }
+
   /** Partition count for one CC round-shuffle over `rows` two-long edge
     * rows. AQE's byte-based coalescing is the wrong policy on both ends of
     * this loop: early rounds carry tens of millions of tiny rows that pack
@@ -388,10 +456,11 @@ object Dedup {
     * Block hygiene lives in Lineage: superseded round frames are
     * unpersisted EXPLICITLY once their successor is materialized — at
     * scale, letting maxIter copies of the edge set accumulate is a
-    * storage-memory leak. */
-  /** Returns the label frame plus the block ids its checkpoint pins —
-    * the CALLER releases them once it has materialized whatever it
-    * derives from the labels (r10 ADVICE: these used to leak until GC). */
+    * storage-memory leak.
+    *
+    * Returns the label frame plus the block ids its checkpoint pins — the
+    * CALLER releases them once it has materialized whatever it derives
+    * from the labels (otherwise they stay pinned until GC). */
   private def hashToMinClusters(
       e: DataFrame,
       edges: Long,

@@ -53,7 +53,8 @@ object CorpusQueries {
 
     // TF-IDF: top-3 terms per document. tf is a (doc, token) aggregate, df
     // a token aggregate derived from it, N a broadcast one-row aggregate —
-    // two shuffles total, both with partial aggregation. Ranking uses the
+    // tf, df and their join all read ONE token-hash exchange of the
+    // tokenized corpus (the repartition below). Ranking uses the
     // integer-deterministic key (tf desc, df asc, token) so both engines
     // pick identical rows regardless of float ULP differences in ln().
     QueryDef(

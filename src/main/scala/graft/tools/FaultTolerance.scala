@@ -436,11 +436,14 @@ object FaultTolerance {
             (lit(size.toLong) / (col("id") + 1) + 1).cast("long").as("n"))
             .groupBy("word").agg(max("n").as("n"))
           val k = 24
-          val faulted = Bpe.learnMerges(vocab(), k, mode = ckMode)
+          // learnMergesLoop: the fault contract under test is the
+          // DISTRIBUTED loop's round state — the driver finish would learn
+          // this vocabulary in one collect and dodge the kill
+          val faulted = Bpe.learnMergesLoop(vocab(), k, mode = ckMode)
             .orderBy("step").collect().map(_.toSeq).toSeq
           // healed-cluster reference run (no fault): learnMerges is
           // deterministic, so equality proves the fault lost nothing
-          val reference = Bpe.learnMerges(vocab(), k, mode = ckMode)
+          val reference = Bpe.learnMergesLoop(vocab(), k, mode = ckMode)
             .orderBy("step").collect().map(_.toSeq).toSeq
           println(s"[fault] n_merges=${faulted.size} ref=${reference.size}")
           if (faulted.nonEmpty && faulted == reference) "output_ok"

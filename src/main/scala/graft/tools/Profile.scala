@@ -29,6 +29,28 @@ object Profile {
       println(f"[profile] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
     }
+    // time() plus what the call did to the heap: GC seconds, and the
+    // old-generation high-water mark over a post-GC baseline — objects
+    // that lived long enough to be promoted, i.e. the call's retained
+    // working set (local mode: driver and executors share the heap, so
+    // it bounds the driver's share from above)
+    def timeHeap[A](label: String)(f: => A): A = {
+      import java.lang.management.{ManagementFactory, MemoryType}
+      import scala.jdk.CollectionConverters._
+      val old = ManagementFactory.getMemoryPoolMXBeans.asScala
+        .filter(p => p.getType == MemoryType.HEAP && p.getName.contains("Old"))
+      val gcs = ManagementFactory.getGarbageCollectorMXBeans.asScala
+      def gcMs = gcs.map(_.getCollectionTime).sum
+      System.gc()
+      val base = old.map(_.getUsage.getUsed).sum
+      old.foreach(_.resetPeakUsage())
+      val gc0 = gcMs
+      val r = time(label)(f)
+      val peak = old.map(_.getPeakUsage.getUsed).sum
+      println(f"[profile] $label: gc ${(gcMs - gc0) / 1e3}%.2f s, old-gen peak " +
+        f"+${(peak - base) / 1048576.0}%.0f MB over ${base / 1048576.0}%.0f MB")
+      r
+    }
 
     // one phase per JVM (second arg selects) so persisted blocks from an
     // earlier phase can't distort a later measurement
@@ -118,20 +140,55 @@ object Profile {
       println(s"[profile] bpe vocab words = ${words.count()}, k = $k")
       val widths =
         (if (sys.env.get("SPARK_GRAFT_BPE_SEQ").contains("1")) Seq(1) else Nil) ++
-          sys.env.get("SPARK_GRAFT_BPE_WIDTHS").map(_.split(",").toSeq.map(_.trim.toInt))
+          sys.env.get("SPARK_GRAFT_BPE_WIDTHS")
+            .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt))
             .getOrElse(Seq(8, 32, 64))
+      // the batch widths are a property of the distributed loop, so the
+      // sweep forces it; the default entry (driver finish up to
+      // Bpe.DriverLearnWords words) is timed on its own line
       widths.foreach { b =>
-        val n = time(s"bpe k=$k batch=$b")(
-          Bpe.learnMerges(words, k, batch = b).count())
+        val n = timeHeap(s"bpe k=$k batch=$b")(
+          Bpe.learnMergesLoop(words, k, batch = b).count())
         println(s"[profile] bpe batch=$b rounds=${Bpe.lastLearnRounds} merges=$n")
       }
+      val n = timeHeap(s"bpe k=$k default")(Bpe.learnMerges(words, k).count())
+      println(s"[profile] bpe default rounds=${Bpe.lastLearnRounds} merges=$n")
     }
     if (mode == "cc" || mode == "all") {
-      // CC on a cheap precomputed frame: isolates the iteration overhead
-      val cached = Similarity.jaccardNearDupPairs(t, minJaccard = 0.5,
-        corpusRows = Some(Tables.rowCount(spark, sfDir, "documents")))
-        .select("doc_a", "doc_b").localCheckpoint(true)
-      time("CC on checkpointed pairs")(Dedup.duplicateClusters(cached).count())
+      // CC on a cheap precomputed frame: isolates the iteration overhead.
+      // SPARK_GRAFT_CC_EDGES=N swaps the jaccard pairs for a synthetic
+      // clique forest of about N pair rows to time the finishes near
+      // Dedup's driver-finish caps; SPARK_GRAFT_CC_CLIQUE sets the clique
+      // size q (default 8: q(q-1)/2 = 28 rows per clique; 2 gives disjoint
+      // pairs, the most nodes per edge).
+      val cached = (sys.env.get("SPARK_GRAFT_CC_EDGES") match {
+        case Some(n) =>
+          val q = sys.env.getOrElse("SPARK_GRAFT_CC_CLIQUE", "8").toLong
+          val node = (i: String) => (col("id") * q + col(i)).as(s"doc_$i")
+          spark.range(math.max(1L, n.toLong / (q * (q - 1) / 2)))
+            .select(col("id"), explode(sequence(lit(0L), lit(q - 1))).as("a"))
+            .select(col("id"), col("a"), explode(sequence(lit(0L), lit(q - 1))).as("b"))
+            .filter(col("a") < col("b"))
+            .select(node("a"), node("b"))
+        case None => Similarity.jaccardNearDupPairs(t, minJaccard = 0.5,
+            corpusRows = Some(Tables.rowCount(spark, sfDir, "documents")))
+          .select("doc_a", "doc_b")
+      }).localCheckpoint(true)
+      val raw = cached.count()
+      println(s"[profile] cc pair rows = $raw")
+      // the three driver-finish caps: the default (early driver finish
+      // when the raw rows are at most Dedup.DriverEarlyEdges), raw - 1
+      // (one-hop contraction, then the residual driver finish) and 0
+      // (contraction, then the loop); the path taken is printed
+      val reps = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
+      (1 to reps).foreach { r =>
+        Seq("default" -> Dedup.DriverFinishEdges, "raw-1" -> (raw - 1), "0" -> 0L)
+          .foreach { case (name, cap) =>
+            timeHeap(s"CC cap=$name rep$r")(
+              Dedup.duplicateClusters(cached, driverFinishEdges = cap).count())
+            println(s"[profile] CC cap=$name path=${Dedup.lastPath}")
+          }
+      }
     }
     spark.stop()
   }

@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.functions.{TextFunctions => T}
+import graft.operators.Bpe
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -291,11 +295,21 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
       got.mkString(","))
   }
 
-  /** Sequential reference BPE: same tie-breaks (count DESC, lhs, rhs),
+  /** Spark's string order: binary UTF-8, i.e. code point order — not
+    * `String.compareTo`, which orders UTF-16 units and puts a
+    * supplementary-plane symbol before U+E000..U+FFFF. */
+  private val utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(x: String, y: String): Int =
+      java.util.Arrays.compareUnsigned(x.getBytes(UTF_8), y.getBytes(UTF_8))
+  }
+
+  /** Sequential reference BPE: symbols are code points (char_length /
+    * substring), same tie-breaks (count DESC, lhs, rhs in [[utf8Order]]),
     * same greedy left-to-right non-overlapping merge, two-pointer form. */
   private def refBpe(words: Seq[(String, Long)], k: Int): Seq[(Long, String, String, Long)] = {
-    var syms: Seq[(Vector[String], Long)] =
-      words.map { case (w, n) => (w.map(_.toString).toVector, n) }
+    var syms: Seq[(Vector[String], Long)] = words.map { case (w, n) =>
+      (w.codePoints.toArray.toVector.map(cp => new String(Character.toChars(cp))), n)
+    }
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var step = 1
     var done = false
@@ -312,7 +326,8 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
       if (counts.isEmpty) done = true
       else {
         val ((l, r), c) = counts.toSeq
-          .sortBy { case ((a, b), n) => (-n, a, b) }.head
+          .sortBy { case ((a, b), n) => (-n, a, b) }(
+            Ordering.Tuple3(Ordering.Long, utf8Order, utf8Order)).head
         out += ((step.toLong, l, r, c))
         syms = syms.map { case (ss, n) =>
           val nb = Vector.newBuilder[String]
@@ -330,6 +345,39 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
     out.toSeq
   }
 
+  private def mergeRows(df: DataFrame): Seq[(Long, String, String, Long)] =
+    df.orderBy("step").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+
+  /** learnMerges' merges plus [[Bpe.lastLearnRounds]]; `loop` forces the
+    * distributed loop (Bpe.learnMergesLoop). */
+  private def learn(words: DataFrame, k: Int, batch: Int = 8,
+      loop: Boolean = false): (Seq[(Long, String, String, Long)], Int) = {
+    val m = mergeRows(
+      if (loop) Bpe.learnMergesLoop(words, k, batch = batch)
+      else Bpe.learnMerges(words, k, batch = batch))
+    (m, Bpe.lastLearnRounds)
+  }
+
+  /** Driver finish == forced loop (merges and schema); the driver path
+    * runs no distributed round, the loop at least one. */
+  private def driverEqualsLoop(words: DataFrame, k: Int,
+      batch: Int = 8): Seq[(Long, String, String, Long)] = {
+    val drvDf = Bpe.learnMerges(words, k, batch = batch)
+    val drvRounds = Bpe.lastLearnRounds
+    val loopDf = Bpe.learnMergesLoop(words, k, batch = batch)
+    val loopRounds = Bpe.lastLearnRounds
+    val (drv, loop) = (mergeRows(drvDf), mergeRows(loopDf))
+    assert(drv == loop, s"\ndriver: $drv\nloop:   $loop")
+    assert(drvDf.schema == loopDf.schema)
+    assert(drvRounds == 0, s"driver finish ran $drvRounds distributed rounds")
+    assert(loopRounds >= 1)
+    drv
+  }
+
+  private def vocabOf(words: DataFrame): Seq[(String, Long)] =
+    words.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
   test("BPE merges match the sequential reference, including self-pairs and compounds") {
     import spark.implicits._
     // 'aaaa' forces the (a,a) self-pair (greedy non-overlap: aaaa -> aa aa),
@@ -337,9 +385,7 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
     val words = Seq(
       ("aaaa", 10L), ("low", 6L), ("lower", 3L), ("lowest", 4L),
       ("newest", 5L), ("widest", 2L), ("x", 1L))
-    val got = graft.operators.Bpe.learnMerges(words.toDF("word", "n"), 8)
-      .orderBy("step").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    val got = driverEqualsLoop(words.toDF("word", "n"), 8)
     val want = refBpe(words, 8)
     assert(got == want, s"\ngot:  $got\nwant: $want")
     // the self-pair must appear; COUNTING sees all three adjacent (a,a)
@@ -382,18 +428,19 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
     val words = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(explode(T.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
-    def run(b: Int): (Seq[(Long, String, String, Long)], Int) = {
-      val m = graft.operators.Bpe.learnMerges(words, 64, batch = b)
-        .orderBy("step").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      (m, graft.operators.Bpe.lastLearnRounds)
-    }
+    // learnMergesLoop: batching is a property of the distributed loop
+    def run(b: Int) = learn(words, 64, batch = b, loop = true)
     val (seqMerges, seqRounds) = run(1)
     val (batMerges, batRounds) = run(8)
     assert(batMerges == seqMerges,
       s"batched merges diverge from sequential\nseq: $seqMerges\nbat: $batMerges")
     assert(seqRounds == 64)
     assert(batRounds <= seqRounds)
+    // the driver finish and the reference learn the identical sequence
+    val (drvMerges, drvRounds) = learn(words, 64)
+    assert(drvMerges == seqMerges, s"\ndriver: $drvMerges\nloop:   $seqMerges")
+    assert(drvRounds == 0)
+    assert(refBpe(vocabOf(words), 64) == seqMerges)
     info(s"rounds: sequential=$seqRounds batched=$batRounds " +
       s"(${seqMerges.size} merges)")
   }
@@ -408,17 +455,13 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
     // or mishandles an empty pair table would diverge exactly here).
     val rnd = new scala.util.Random(7)
     val alphabet = "abcdefgh"
-    val words = Seq.tabulate(32) { i =>
+    val vocab = Seq.tabulate(32) { i =>
       val len = 4 + rnd.nextInt(4)
       val w = Seq.fill(len)(alphabet(rnd.nextInt(alphabet.length))).mkString
       (w, (1 + rnd.nextInt(20)).toLong)
-    }.distinct.toDF("word", "n")
-    def run(b: Int): (Seq[(Long, String, String, Long)], Int) = {
-      val m = graft.operators.Bpe.learnMerges(words, 1024, batch = b)
-        .orderBy("step").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      (m, graft.operators.Bpe.lastLearnRounds)
-    }
+    }.distinct
+    val words = vocab.toDF("word", "n")
+    def run(b: Int) = learn(words, 1024, batch = b, loop = true)
     val (seqMerges, seqRounds) = run(1)
     val (batMerges, batRounds) = run(32)
     assert(batMerges == seqMerges,
@@ -439,17 +482,22 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
     assert(batRounds < seqRounds,
       s"batching saved nothing: $batRounds vs $seqRounds rounds")
     info(s"merges=${seqMerges.size} rounds: sequential=$seqRounds batched(32)=$batRounds")
+    // the driver finish exhausts at the same step with the same merges
+    val (drvMerges, drvRounds) = learn(words, 1024)
+    assert(drvMerges == seqMerges, s"\ndriver: $drvMerges\nloop:   $seqMerges")
+    assert(drvRounds == 0)
+    assert(refBpe(vocab, 1024) == seqMerges)
   }
 
   test("batched BPE guards against created-pair interference (adversarial fixtures)") {
     import spark.implicits._
     def seqVsBatch(words: Seq[(String, Long)], k: Int): Unit = {
       val df = words.toDF("word", "n")
-      def run(b: Int) = graft.operators.Bpe.learnMerges(df, k, batch = b)
-        .orderBy("step").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+      def run(b: Int) = learn(df, k, batch = b, loop = true)._1
       val (s, b) = (run(1), run(8))
       assert(b == s, s"\nwords=$words\nseq: $s\nbat: $b")
+      // and the driver finish / the reference agree with both
+      assert(learn(df, k)._1 == s && refBpe(words, k) == s, s"\nwords=$words")
     }
     // Created-pair overtake: after merging (a,b) -> "ab", the new pair
     // (x, ab) has count 13 and beats (c, d)=12 — a batcher that merely
@@ -474,15 +522,48 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
     // exclude it — and its presence must not change what is learned.
     val clean = Seq(("aaaa", 10L), ("low", 6L), ("lower", 3L))
     val dirty = clean :+ ("a\u001fa", 100L) // would dominate counts if kept
-    val gotClean = graft.operators.Bpe.learnMerges(clean.toDF("word", "n"), 4)
-      .orderBy("step").collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val gotDirty = graft.operators.Bpe.learnMerges(dirty.toDF("word", "n"), 4)
-      .orderBy("step").collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    val gotClean = learn(clean.toDF("word", "n"), 4)._1
+    val gotDirty = driverEqualsLoop(dirty.toDF("word", "n"), 4)
     assert(gotDirty == gotClean,
       s"separator-carrying word changed learned merges: $gotDirty != $gotClean")
+    assert(refBpe(clean, 4) == gotClean)
     val seg = graft.operators.Bpe
       .applyMerges(Seq("a\u001fa", "low").toDF("word"), Seq(("l", "o")))
       .collect().map(_.getString(0)).toSeq
     assert(seg == Seq("low"), s"applyMerges must drop separator words, got $seg")
+  }
+
+  test("BPE driver finish == loop on code-point order, combining marks, zero/null n, empty input") {
+    import spark.implicits._
+    // Equal counts, so the tie-break decides: UTF-16 (String.compareTo)
+    // puts U+1F600 (surrogates D83D DE00) before U+FF21, binary UTF-8
+    // (F0.. vs EF..) puts U+FF21 first — Spark's order, both paths' order.
+    val astral = Seq(("\uD83D\uDE00a", 5L), ("\uFF21a", 5L), ("b\uD83D\uDE00", 5L),
+      ("b\uFF21", 5L))
+    val gotAstral = driverEqualsLoop(astral.toDF("word", "n"), 4)
+    assert(gotAstral == refBpe(astral, 4))
+    assert(gotAstral.map(m => (m._2, m._3)) == Seq(("b", "\uFF21"),
+      ("b", "\uD83D\uDE00"), ("\uFF21", "a"), ("\uD83D\uDE00", "a")))
+    // a combining mark is its own code point, hence its own symbol
+    val marks = Seq(("e\u0301te", 4L), ("cafe\u0301", 3L), ("e\u0301", 2L))
+    val gotMarks = driverEqualsLoop(marks.toDF("word", "n"), 6)
+    assert(gotMarks == refBpe(marks, 6))
+    assert(gotMarks.head._2 == "e" && gotMarks.head._3 == "\u0301")
+    // n = 0 still ranks (count 0); a null n adds nothing to any count, as
+    // in SQL sum — every pair of the null word also occurs in a counted
+    // word, so the loop never has to report a NULL count
+    val weights = Seq(("xyx", Some(1L)), ("xy", None), ("abab", Some(0L)))
+    val gotWeights = driverEqualsLoop(weights.toDF("word", "n"), 10)
+    assert(gotWeights == refBpe(weights.collect { case (w, Some(n)) => (w, n) }, 10))
+    assert(gotWeights.map(_._4) == Seq(1L, 1L, 0L, 0L))
+    // empty vocabulary: no merges, same schema
+    assert(driverEqualsLoop(Seq.empty[(String, Long)].toDF("word", "n"), 4).isEmpty)
+    // An empty word splits to ["", ""]; the loop's decode leaves it [""]
+    // after its first round, so its ("", "") pair only ranks at step 1 —
+    // compared at batch = 1, where a round is a step.
+    assert(driverEqualsLoop(Seq(("", 5L), ("ab", 3L)).toDF("word", "n"), 3, batch = 1) ==
+      Seq((1L, "", "", 5L), (2L, "a", "b", 3L)))
+    assert(driverEqualsLoop(Seq(("", 2L), ("ab", 3L)).toDF("word", "n"), 3, batch = 1) ==
+      Seq((1L, "a", "b", 3L)))
   }
 }

@@ -144,54 +144,97 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(got(1).getLong(0) == 11L && got(1).getDouble(1) < 3.0)
   }
 
+  /** duplicateClusters under the three driver-finish caps, as (path
+    * taken, id -> root): the default cap (early driver finish over the raw
+    * edges), raw - 1 non-self pair rows (one-hop contraction, then the
+    * residual driver finish — the contraction leaves at most raw - 1
+    * edges, since every edge into a component minimum becomes a loop) and
+    * 0 (contraction, then the distributed loop). A clique forest leaves no
+    * residual, so the last two stop after the hop. */
+  private def ccByCap(pairs: org.apache.spark.sql.DataFrame)
+      : Seq[(String, Map[Long, Long])] = {
+    import graft.operators.Dedup
+    val raw = pairs.filter(col("doc_a") =!= col("doc_b")).count()
+    Seq(Dedup.DriverFinishEdges, raw - 1, 0L).map { cap =>
+      val got = Dedup.duplicateClusters(pairs, driverFinishEdges = cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      (Dedup.lastPath, got)
+    }
+  }
+
   test("duplicateClusters: empty and self-pair-only inputs yield no labels") {
     import spark.implicits._
-    import graft.operators.Dedup
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    assert(Dedup.duplicateClusters(empty).count() == 0)
     // self-pairs are dropped with the oriented edge build (documented):
     // a node appearing ONLY in self-pairs gets no output row
     val selfOnly = Seq((5L, 5L), (9L, 9L)).toDF("doc_a", "doc_b")
-    assert(Dedup.duplicateClusters(selfOnly).count() == 0)
+    Seq(empty, selfOnly).foreach { pairs =>
+      val runs = ccByCap(pairs)
+      assert(runs.map(_._1) == Seq("driver", "hop", "hop"))
+      runs.foreach { case (path, got) => assert(got.isEmpty, path) }
+    }
   }
 
   test("duplicateClusters labels every local minimum (star centered at the max)") {
     import spark.implicits._
-    import graft.operators.Dedup
     // Star whose CENTER is the component maximum: every leaf is a "local
     // minimum" (smaller than its only neighbor), so under the oriented
-    // min-label agg none of the leaves appears on the u side — all their
-    // label rows come from the anti-join recovery path. Descending-pair
-    // orientation (center first) exercises the greatest/least canonical
-    // build too. Expected: all nodes root at the smallest leaf.
+    // min-label agg none of the leaves appears on the u side — on the
+    // contraction paths all their label rows come from the anti-join
+    // recovery. Descending-pair orientation (center first) exercises the
+    // greatest/least canonical build too. Expected: all nodes root at the
+    // smallest leaf.
     val star = Seq((100L, 7L), (100L, 3L), (100L, 9L), (100L, 51L))
       .toDF("doc_a", "doc_b")
-    val got = Dedup.duplicateClusters(star).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == Map(100L -> 3L, 7L -> 3L, 3L -> 3L, 9L -> 3L, 51L -> 3L))
+    val runs = ccByCap(star)
+    assert(runs.map(_._1) == Seq("driver", "hop+driver", "hop+loop"))
+    runs.foreach { case (path, got) =>
+      assert(got == Map(100L -> 3L, 7L -> 3L, 3L -> 3L, 9L -> 3L, 51L -> 3L), path)
+    }
     // isolated pair alongside the star: its smaller end is ALSO recovered
     // (two disjoint local minima in one run)
     val two = star.unionAll(Seq((60L, 55L)).toDF("doc_a", "doc_b"))
-    val got2 = Dedup.duplicateClusters(two).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got2(55L) == 55L && got2(60L) == 55L && got2(3L) == 3L)
+    val runs2 = ccByCap(two)
+    assert(runs2.map(_._1) == Seq("driver", "hop+driver", "hop+loop"))
+    runs2.foreach { case (path, got2) =>
+      assert(got2(55L) == 55L && got2(60L) == 55L && got2(3L) == 3L, path)
+    }
   }
 
   test("duplicateClusters resolves chains and cliques to min-root components") {
     import spark.implicits._
-    import graft.operators.Dedup
     // component 1: chain 1-2-3-4 (diameter 3 forces several iterations);
     // component 2: clique {10,11,12}; component 3: pair {20,21}
     val pairs = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (10L, 12L), (11L, 12L),
       (20L, 21L)).toDF("doc_a", "doc_b")
-    val got = Dedup.duplicateClusters(pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == Map(
-      1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L,
-      20L -> 20L, 21L -> 20L))
+    val runs = ccByCap(pairs)
+    assert(runs.map(_._1) == Seq("driver", "hop+driver", "hop+loop"))
+    runs.foreach { case (path, got) =>
+      assert(got == Map(
+        1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L,
+        20L -> 20L, 21L -> 20L), path)
+    }
+  }
+
+  test("duplicateClusters closes a clique forest in the one-hop contraction") {
+    import spark.implicits._
+    // every node is adjacent to its component minimum: cliques {10,11,12}
+    // and {30..33}, a star centered at its minimum 1, a pair {20,21}, a
+    // duplicate and a reversed row. Under any cap below the raw count the
+    // contraction leaves no residual edge and returns its node map as is.
+    val clique4 = for (a <- 30L to 33L; b <- 30L to 33L if a < b) yield (a, b)
+    val pairs = (Seq((1L, 2L), (1L, 3L), (4L, 1L),
+      (10L, 11L), (10L, 12L), (11L, 12L), (12L, 11L),
+      (20L, 21L)) ++ clique4).toDF("doc_a", "doc_b")
+    val runs = ccByCap(pairs)
+    assert(runs.map(_._1) == Seq("driver", "hop", "hop"))
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L) ++
+      (30L to 33L).map(_ -> 30L)
+    runs.foreach { case (path, got) => assert(got == want, path) }
   }
 
   test("duplicateClusters TwoPhaseStar ≡ HashToMin (chain, clique, pair)") {
@@ -208,9 +251,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val star = run(CcAlgorithm.TwoPhaseStar)
     assert(star == run(CcAlgorithm.HashToMin))
-    // the driver union-find finish (default cap) labels identically
-    assert(star == Dedup.duplicateClusters(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
+    // every path of the default algorithm labels identically
+    val runs = ccByCap(pairs)
+    assert(runs.map(_._1) == Seq("driver", "hop+driver", "hop+loop"))
+    runs.foreach { case (path, got) => assert(got == star, path) }
     assert(star == Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L,
@@ -242,9 +286,51 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // graph and require the fixed-algorithm labeling either way
     assert(star == run(CcAlgorithm.Auto(threshold = 1L)))        // → TwoPhaseStar
     assert(star == run(CcAlgorithm.Auto(threshold = Long.MaxValue))) // → HashToMin
-    // and the driver union-find finish (default cap) labels identically
-    assert(star == Dedup.duplicateClusters(pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+    // and every path of the default algorithm labels identically
+    val runs = ccByCap(pairs)
+    assert(runs.map(_._1) == Seq("driver", "hop+driver", "hop+loop"))
+    runs.foreach { case (path, got) => assert(got.toSeq.sorted == star, path) }
+  }
+
+  test("duplicateClusters: Int and Long ids on the early-driver, residual-driver and loop paths") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+    val edges = Seq((1, 2), (2, 3), (3, 4), (4, 5), (10, 11))
+    val want = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L), (10L, 10L), (11L, 10L))
+    def check(pairs: DataFrame, t: DataType): Unit = {
+      def run(cap: Long) = {
+        val df = Dedup.duplicateClusters(pairs, driverFinishEdges = cap)
+        assert(df.schema.map(f => (f.name, f.dataType)) == Seq(("id", t), ("root", t)),
+          s"cap $cap: ${df.schema}")
+        val labels = df.collect()
+          .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).sorted.toSeq
+        (df, labels)
+      }
+      def isLocal(df: DataFrame) =
+        df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+      // raw = 5 non-self pair rows. The one-hop contraction turns every
+      // edge touching a component minimum into a self-loop, so the
+      // residual has at most raw - 1 edges (here 3: the chain 2-3-4-5
+      // contracts to 1-2-3-4 minus its first edge) — a cap of raw - 1
+      // skips the early finish and still finishes the residual on the
+      // driver; 0 forces the loop.
+      val (early, earlyLabels) = run(Dedup.DriverFinishEdges)
+      assert(Dedup.lastPath == "driver")
+      val (resid, residLabels) = run(pairs.count() - 1)
+      assert(Dedup.lastPath == "hop+driver")
+      val (_, loopLabels) = run(0L)
+      assert(Dedup.lastPath == "hop+loop")
+      assert(earlyLabels == want)
+      assert(residLabels == want)
+      assert(loopLabels == want)
+      assert(isLocal(early), "early finish must return a driver-local frame")
+      assert(!isLocal(resid), "the residual path composes over checkpointed labels")
+    }
+    check(edges.toDF("doc_a", "doc_b"), IntegerType)
+    check(edges.map { case (a, b) => (a.toLong, b.toLong) }.toDF("doc_a", "doc_b"), LongType)
   }
 
   test("keepFromPairs drops planted embedding dups, keeps originals and singletons") {
