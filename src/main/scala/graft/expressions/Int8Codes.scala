@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * native pass — struct(qs, qn, qc) with qs = max|x| / 127 (the symmetric
   * scale), qn = the float L2 norm, qc = `round(x / qs)` byte codes. This
   * is the corpus-scan hot loop of every gated similarity path
-  * (Similarity.quantCodes feeds the gated knnGraph seed, nnDescentRound's
+  * (Similarity.int8Codes feeds the gated knnGraph seed, nnDescentRound's
   * pre-score and quantRerankTopK): the HOF formulation ran THREE
   * interpreted higher-order passes per row (array_max over transform(abs),
   * aggregate-over-zip_with for the norm, transform for the codes) —

@@ -62,8 +62,4 @@ object VectorFunctions {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.expressions.Int8Codes(expression(v)))
   }
-
-  def l2Dist(a: Column, b: Column): Column =
-    sqrt(aggregate(
-      zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (s, x) => s + x))
 }

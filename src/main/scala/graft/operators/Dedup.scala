@@ -116,23 +116,6 @@ object Dedup {
     * each endpoint, which is the safe shape at any node count. */
   val BroadcastContractNodes: Long = 1L << 21
 
-  /** Dev instrumentation: SPARK_GRAFT_CC_TIMING=1 prints per-phase wall
-    * seconds to stderr (each phase below ends in an eager materialization,
-    * so the timings are real, not lazy-plan noise). Zero cost when unset;
-    * read once at class init like the operator's other env-free constants
-    * are compile-time. Used by tools/CcProbe to attribute the operator's
-    * scale cost to pre-contraction vs loop vs compose. */
-  private val ccTiming = sys.env.get("SPARK_GRAFT_CC_TIMING").contains("1")
-  private def timed[A](label: String)(f: => A): A =
-    if (!ccTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[cc-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** Resolve near-dup PAIRS into duplicate CLUSTERS: connected components
     * by iterative contraction. Input: (doc_a, doc_b) pairs; output:
     * (id, root) with root = smallest id in the component; both algorithms
@@ -206,11 +189,11 @@ object Dedup {
     // typically the expensive near-dup pair pipeline. The raw pair-row
     // count (an upper bound, used for the driver-finish decision and for
     // sizing) is taken in the same job.
-    val (e, eIds, edges) = timed("edges_build")(lin.trackedCount(
+    val (e, eIds, edges) = lin.trackedCount(
       pairs.select(
           greatest(col("doc_a"), col("doc_b")).as("u"),
           least(col("doc_a"), col("doc_b")).as("v"))
-        .filter(col("u") =!= col("v"))))
+        .filter(col("u") =!= col("v")))
     val integralIds = e.schema("u").dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
@@ -218,7 +201,7 @@ object Dedup {
     if (integralIds && driverFinishEdges > 0 &&
         edges <= math.min(driverFinishEdges, DriverEarlyEdges)) {
       // small raw graph: driver union-find over every edge, no loop at all
-      val labels = timed("driver_resolve")(driverComponents(e))
+      val labels = driverComponents(e)
       lin.release(eIds)
       lastPath = "driver"
       return labels
@@ -266,11 +249,11 @@ object Dedup {
     // see the tagged one-pass note at the contraction), so presence
     // costs no extra scan of the edge set.
     val np0 = roundPartitions(e, edges)
-    val (labels0, l0Ids) = timed("minlabel_agg")(lin.tracked(
+    val (labels0, l0Ids) = lin.tracked(
       e.repartition(np0, col("u"))
         .groupBy("u").agg(min("v").as("mn"))
         .select(col("u").as("id"), col("mn").as("root")),
-      eager = true))
+      eager = true)
     val aggNodes = labels0.count() // cheap: labels0 is checkpointed
     val lu = labels0.select(col("id").as("u"), col("root").as("ru"))
     val lv = labels0.select(col("id").as("v"), col("root").as("rv"))
@@ -310,14 +293,14 @@ object Dedup {
         lit(0).as("tag")))
     val minStruct = when(col("rv").isNull,
       struct(col("v").as("u"), col("v").as("v"), lit(1).as("tag")))
-    val (comb, combIds) = timed("contract_dedup")(lin.tracked(
+    val (comb, combIds) = lin.tracked(
       contracted
         .select(explode(array(edgeStruct, minStruct)).as("r"))
         .filter(col("r").isNotNull)
         .select(col("r.u").as("u"), col("r.v").as("v"), col("r.tag").as("tag"))
         .repartition(np0, col("u"), col("v"), col("tag"))
         .dropDuplicates(),
-      eager = true))
+      eager = true)
     val e1 = comb.filter(col("tag") === 0).select("u", "v")
     val edges1 = e1.count() // cheap: a filter-count over the small checkpoint
     // Full node map = agg rows ∪ recovered local minima (root = self).
@@ -326,7 +309,7 @@ object Dedup {
     val minima = comb.filter(col("tag") === 1)
       .select(col("u").as("id"), col("v").as("root"))
     val (labelsAll, laIds) =
-      timed("minima_union")(lin.tracked(labels0.unionAll(minima), eager = true))
+      lin.tracked(labels0.unionAll(minima), eager = true)
     lin.release(eIds ++ l0Ids) // labelsAll + residual are materialized
     val e1Ids = combIds // the residual loop owns the combined checkpoint now
     if (edges1 == 0) {
@@ -345,7 +328,7 @@ object Dedup {
     // (≤ 16 MB at the default cap); the labels map broadcasts back, so
     // the compose join is shuffle-free. Set driverFinishEdges = 0 to
     // force the distributed loop (parity tests, fault injection).
-    val (residualLabels: DataFrame, residIds: Set[Int]) = timed("residual_resolve")(
+    val (residualLabels: DataFrame, residIds: Set[Int]) =
       if (integralIds && edges1 <= driverFinishEdges) {
         val labels = driverComponents(e1)
         lin.release(e1Ids)
@@ -366,7 +349,7 @@ object Dedup {
           case _: CcAlgorithm.Auto =>
             throw new IllegalStateException("unreachable")
         }
-      })
+      }
     // Compose: every original node id keeps its labelsAll row; the
     // residual labeling (over m-images only) refines the root. Left join —
     // residual-isolated m-images keep root0 (proof above). The composed
@@ -380,10 +363,10 @@ object Dedup {
     // returned frame's own blocks die with result consumption, like the
     // edges1 == 0 fast path's labelsAll.
     val rm = residualLabels.select(col("id").as("mid"), col("root").as("mroot"))
-    val (out, _) = timed("compose")(lin.tracked(
+    val (out, _) = lin.tracked(
       labelsAll.join(rm, labelsAll("root") === rm("mid"), "left")
         .select(labelsAll("id"), coalesce(col("mroot"), labelsAll("root")).as("root")),
-      eager = true))
+      eager = true)
     lin.release(laIds ++ residIds)
     out
   }
@@ -610,10 +593,10 @@ object Dedup {
       // twice (groupBy + join back), so an unmaterialized large-star
       // subtree would execute twice per round
       val (eLarge, eLargeIds) =
-        timed(s"star_round${i}_large")(tracked(largeStar(e, np), eager = true))
+        tracked(largeStar(e, np), eager = true)
       val (eNext, eNextIds) =
-        timed(s"star_round${i}_small")(tracked(smallStar(eLarge, np), eager = true))
-      val cur = timed(s"star_round${i}_probe")(probe(eNext))
+        tracked(smallStar(eLarge, np), eager = true)
+      val cur = probe(eNext)
       converged = cur == prev
       prev = cur
       release(eIds ++ eLargeIds)

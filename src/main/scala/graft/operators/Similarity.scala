@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{MinHash, Portable, VectorFunctions => V}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,8 +16,130 @@ import org.apache.spark.sql.functions._
   *    rows into buckets (random-hyperplane bits for vectors, MinHash bands
   *    for documents) and only compare within buckets, turning all-pairs into
   *    an equi-join shuffle.
+  *
+  * The vector operators share one skeleton: candidate pairs, an optional
+  * int8 pre-score ([[int8Codes]] + [[approxCosine]]), a survivor fetch of
+  * the float vectors ([[withEndpoints]]) and the exact rescore
+  * ([[rankNeighbors]]). The token operators share the hashed token sets,
+  * the rarest-first ranking, the first-common-token pair dedup and the
+  * verify join.
   */
 object Similarity {
+
+  // ---- shared building blocks ------------------------------------------
+
+  /** Top `n` rows per `partition` by `round(score, 6)` desc, ties broken by
+    * `tieBreak` asc — the one deterministic ranking of every operator here
+    * (the DuckDB oracles replay it), with the rank in `rn`. A partitioned
+    * window, never a global sort; Spark's WindowGroupLimit applies the
+    * limit map-side, so the exchange carries survivors only. */
+  private def topKBy(df: DataFrame, partition: String, score: String,
+      tieBreak: String, n: Int): DataFrame = {
+    val w = Window.partitionBy(partition).orderBy(round(col(score), 6).desc, col(tieBreak))
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
+  }
+
+  /** Partition count of an expansion join (a join whose output is far
+    * larger than its inputs): one partition per ~1k corpus rows, capped at
+    * spark.sql.shuffle.partitions, which is also the count without
+    * `corpusRows`. An explicit count keeps AQE from coalescing the exchange
+    * by its INPUT bytes, which would leave the expanded output on a
+    * handful of tasks. */
+  private def expansionPartitions(spark: SparkSession, corpusRows: Option[Long]): Int = {
+    val cap = spark.sessionState.conf.numShufflePartitions
+    corpusRows.map(n => math.max(1L, math.min(cap.toLong, n / 1000 + 1)).toInt).getOrElse(cap)
+  }
+
+  /** The corpus-size SHUFFLE_HASH gate shared by the candidate joins
+    * (jaccard prefix, containment expansion) and the survivor fetches: at
+    * >= 20k rows broadcast is out of reach and sort-merge would sort
+    * inputs whose order nobody needs (SCALE_r14.json `shj_dial_ab_100x`:
+    * −18% end-to-end at 100x). Below it the planner's choice stands. */
+  private def shjGate(corpusRows: Option[Long]): Boolean = corpusRows.exists(_ >= 20000L)
+
+  /** Gated SHUFFLE_HASH hint for the node-sized BUILD side of a survivor
+    * fetch (vectors or codes keyed by `key`). Above [[shjGate]] the wide
+    * pair stream streams unsorted past a hash build, and the build side is
+    * repartitioned on `key` by [[expansionPartitions]]: SHJ's hash build
+    * cannot spill, so ~1k vectors per partition (≈ 6 MB at dim=768) bounds
+    * it at any corpus size; the explicit count opts out of AQE coalescing
+    * and EnsureRequirements aligns the pair side to it. */
+  private def fetchHint(df: DataFrame, key: String, corpusRows: Option[Long]): DataFrame =
+    if (!shjGate(corpusRows)) df
+    else df.repartition(expansionPartitions(df.sparkSession, corpusRows), col(key))
+      .hint("SHUFFLE_HASH")
+
+  /** int8 code table of the non-degenerate vectors of `df`: (id, vec, qs,
+    * qn, qc) — the symmetric scale max|x|/127, the float norm and the
+    * HALF_UP byte codes (1 byte/dim in Tungsten), all from one native
+    * pass ([[graft.expressions.Int8Codes]], evaluated once per row because
+    * the struct alias is referenced three times). Zero vectors are dropped
+    * (`qs > 0`): cosine is undefined on them and their codes would score
+    * NaN, which a descending sort ranks FIRST. Both engines derive
+    * identical codes, so every gated path is oracle-replayable. */
+  private def int8Codes(df: DataFrame, id: String, vec: String): DataFrame =
+    df.select(col(id), col(vec), V.int8Codes(col(vec)).as("__q"))
+      .select(col(id), col(vec),
+        col("__q").getField("qs").as("qs"),
+        col("__q").getField("qn").as("qn"),
+        col("__q").getField("qc").as("qc"))
+      .filter(col("qs") > 0)
+
+  /** The code columns a pair side carries, in side order. */
+  private val Codes = Seq("qc", "qs", "qn")
+
+  /** Cosine approximated on int8 codes of sides `a` and `b` (columns
+    * `{a}qc`, `{a}qs`, `{a}qn`): the exact integer dot, rescaled by both
+    * scales and normalized by the float norms, so the coarse order matches
+    * the cosine order the exact rescore refines (a raw dot would misalign
+    * the cut on mixed-norm corpora). |code| <= 127 keeps the dot far
+    * inside Long at any dim. */
+  private def approxCosine(a: String, b: String): Column =
+    V.int8Dot(col(a + "qc"), col(b + "qc")).cast("double") * col(a + "qs") * col(b + "qs") /
+      (col(a + "qn") * col(b + "qn"))
+
+  /** One side of a pair: `vec_id` as `key`, each payload column with
+    * prefix `p` (`v` becomes `sv` on the src side, `dv` on the dst side). */
+  private def sideCols(key: String, p: String, payload: Seq[String]): Seq[Column] =
+    col("vec_id").as(key) +: payload.map(c => col(c).as(p + c))
+
+  /** Join both endpoints' payload from the node-sized `table` (vec_id,
+    * payload...) onto (src, dst) pairs — the survivor fetch. Each build
+    * side goes through [[fetchHint]]. */
+  private def withEndpoints(pairs: DataFrame, table: DataFrame, payload: Seq[String],
+      corpusRows: Option[Long]): DataFrame = {
+    def fetch(key: String, p: String) =
+      fetchHint(table.select(sideCols(key, p, payload): _*), key, corpusRows)
+    pairs.join(fetch("src", "s"), Seq("src")).join(fetch("dst", "d"), Seq("dst"))
+  }
+
+  /** Per-src top `n` of (src, dst, s*, d*) code pairs by [[approxCosine]]:
+    * the survivors (src, dst) that go on to the float fetch. */
+  private def prescore(pairs: DataFrame, n: Int): DataFrame =
+    topKBy(pairs.withColumn("approx", approxCosine("s", "d")), "src", "approx", "dst", n)
+      .select(col("src"), col("dst"))
+
+  /** Exact cosine of (src, dst, sv, dv) pairs, ranked per src: the (src,
+    * dst, cos, rn) graph schema with rn in 1..k. */
+  private def rankNeighbors(pairs: DataFrame, k: Int): DataFrame =
+    topKBy(pairs.withColumn("cos", V.cosineNative(col("sv"), col("dv")))
+      .select(col("src"), col("dst"), col("cos")), "src", "cos", "dst", k)
+
+  /** Float vectors fetched for the (src, dst) survivors only, then the
+    * exact rescore. `vecs` is the (vec_id, v) table with zero-norm rows
+    * already dropped. */
+  private def exactRescore(surv: DataFrame, vecs: DataFrame, k: Int,
+      corpusRows: Option[Long]): DataFrame =
+    rankNeighbors(withEndpoints(surv, vecs, Seq("v"), corpusRows), k)
+
+  /** Drop zero-norm vectors: cosine is undefined on them and cosineNative
+    * yields NaN, which a descending window ranks FIRST (one degenerate
+    * vector would become every bucket-mate's top neighbor, and engines
+    * disagree on NaN order). The graph oracles mirror it. */
+  private def nonZero(emb: DataFrame): DataFrame =
+    emb.filter(V.l2NormNative(col("v")) > 0)
+
+  // ---- query-vs-corpus retrieval ---------------------------------------
 
   /** Exact cosine top-k per query vector. `queries` must be small (it is
     * broadcast); the corpus scan stays fully distributed and the per-query
@@ -25,15 +147,9 @@ object Similarity {
   def bruteForceTopK(
       queries: DataFrame, // (q_id, qv: array<double>)
       corpus: DataFrame,  // (vec_id, cv: array<double>)
-      k: Int): DataFrame = {
-    val scored = corpus
-      .crossJoin(broadcast(queries))
-      .withColumn("cos", V.cosineNative(col("qv"), col("cv")))
-    val w = Window.partitionBy("q_id").orderBy(round(col("cos"), 6).desc, col("vec_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-  }
+      k: Int): DataFrame =
+    topKBy(corpus.crossJoin(broadcast(queries))
+      .withColumn("cos", V.cosineNative(col("qv"), col("cv"))), "q_id", "cos", "vec_id", k)
 
   /** ColBERT-style late-interaction retrieval (Khattab & Zaharia, "ColBERT:
     * Efficient and Effective Passage Search via Contextualized Late
@@ -59,32 +175,29 @@ object Similarity {
       .agg(max("cos").as("mx"))
       .groupBy("q_doc", "c_doc")
       .agg(sum("mx").as("maxsim"))
-    val w = Window.partitionBy("q_doc")
-      .orderBy(round(col("maxsim"), 6).desc, col("c_doc"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    topKBy(scored, "q_doc", "maxsim", "c_doc", k)
   }
 
   /** Quantized coarse scan + exact rerank — the MEMORY-bound ANN pattern
     * (Jégou et al.'s scan-then-refine shape on the simplest codebook:
     * symmetric per-vector int8): at 100 TB the embedding store, not the
     * flops, is the cost driver, so the full corpus is scanned as int8
-    * codes (4x smaller than float32; here `round(x / (max|x|/127))`, the
-    * q_embed_quant codec) under an INTEGER dot product, and only the top
-    * `candidateFactor * k` coarse survivors per query fetch their float
-    * vectors (one tiny equi-join) for the exact cosine rerank.
+    * codes ([[int8Codes]], 8x smaller than doubles) under an INTEGER dot
+    * product, and only the top `candidateFactor * k` coarse survivors per
+    * query fetch their float vectors (one tiny equi-join) for the exact
+    * cosine rerank.
     *
     * Recall contract: approximate — the coarse order can drop a true
     * top-k member whose quantized score falls below rank m (the factor is
     * the dial; QuantRerank tests measure recall vs brute force). Both
-    * engines derive identical int8 codes (IEEE double division + the
-    * shared HALF_UP round on .5), so the result set is deterministic and
-    * the DuckDB oracle replays it exactly.
+    * engines derive identical int8 codes, so the result set is
+    * deterministic and the DuckDB oracle replays it exactly.
     *
-    * Zero-norm vectors are dropped on BOTH sides at quantize time, because
-    * cosine is undefined on them: a zero-norm CORPUS vector simply never
-    * appears in any ranking, and a zero-norm QUERY vector's q_id is absent
-    * from the output entirely — a missing q_id means the query itself was
-    * degenerate, not that the corpus was empty for it.
+    * Zero-norm vectors are dropped on BOTH sides at quantize time: a
+    * zero-norm CORPUS vector never appears in any ranking, and a zero-norm
+    * QUERY vector's q_id is absent from the output entirely — a missing
+    * q_id means the query itself was degenerate, not that the corpus was
+    * empty for it.
     *
     * Plan shape: corpus-side narrow map (quantize) → broadcast-queries
     * cross join under integer arithmetic → per-query window over the
@@ -98,60 +211,16 @@ object Similarity {
       k: Int,
       candidateFactor: Int = 4): DataFrame = {
     require(k >= 1 && candidateFactor >= 1)
-    // the int8 store carries per-vector (scale, float norm) metadata —
-    // computed ONCE at quantize time; the coarse score then approximates
-    // COSINE (dot/|q||c|), the same ordering the rerank refines. Scoring
-    // raw dot against a cosine rerank would misalign the cut on
-    // mixed-norm corpora (measured: the planted near-dup fell out of the
-    // coarse top-20 behind high-norm vectors).
-    // zero vectors are DROPPED at quantize time (cosine is undefined on
-    // them, and their scale-0 codes would divide to NaN — which Spark's
-    // descending sort places FIRST, so an unguarded zero vector would
-    // top every ranking instead of losing every ranking).
-    // Codec = the shared Int8Codes native expression: scale, norm and
-    // codes in one fused pass (codes as array<byte> — 1 byte/element in
-    // Tungsten; the integer dot runs in the Int8Dot codegen loop). The
-    // previous HOF spelling ran three interpreted passes per corpus row
-    // and had to dodge the CollapseProject/HOF lambda-hoisting pitfall
-    // with a projection barrier; the native struct is evaluated once per
-    // row by construction (multi-referenced non-cheap alias).
-    val corpusQ = corpus
-      .select(col("vec_id"), V.int8Codes(col("cv")).as("__q"))
-      .select(col("vec_id"),
-        col("__q").getField("qs").as("c_scale"),
-        col("__q").getField("qn").as("c_norm"),
-        col("__q").getField("qc").as("cq"))
-      .filter(col("c_scale") > 0)
-    val queriesQ = queries
-      .select(col("q_id"), V.int8Codes(col("qv")).as("__q"))
-      .select(col("q_id"),
-        col("__q").getField("qs").as("q_scale"),
-        col("__q").getField("qn").as("q_norm"),
-        col("__q").getField("qc").as("qq"))
-      .filter(col("q_scale") > 0)
-    // integer dot: |code| <= 127, so dim * 127^2 stays far inside Long
-    val intDot = V.int8Dot(col("qq"), col("cq"))
-    val coarse = corpusQ
-      .crossJoin(broadcast(queriesQ))
-      .withColumn("approx",
-        intDot.cast("double") * col("q_scale") * col("c_scale") /
-          (col("q_norm") * col("c_norm")))
-    val wCoarse = Window.partitionBy("q_id")
-      .orderBy(round(col("approx"), 6).desc, col("vec_id"))
-    val survivors = coarse
-      .withColumn("crn", row_number().over(wCoarse))
-      .filter(col("crn") <= k * candidateFactor)
+    def coded(df: DataFrame, id: String, vec: String, p: String) =
+      int8Codes(df, id, vec).select(col(id),
+        col("qs").as(p + "qs"), col("qn").as(p + "qn"), col("qc").as(p + "qc"))
+    val coarse = coded(corpus, "vec_id", "cv", "c")
+      .crossJoin(broadcast(coded(queries, "q_id", "qv", "q")))
+      .withColumn("approx", approxCosine("q", "c"))
+    val survivors = topKBy(coarse, "q_id", "approx", "vec_id", k * candidateFactor)
       .select("q_id", "vec_id")
-    // float fetch for survivors only — the memory story: the coarse scan
-    // never touches float32, the rerank never touches the full corpus
-    val wExact = Window.partitionBy("q_id")
-      .orderBy(round(col("cos"), 6).desc, col("vec_id"))
-    survivors
-      .join(corpus, Seq("vec_id"))
-      .join(broadcast(queries), Seq("q_id"))
-      .withColumn("cos", V.cosineNative(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(wExact))
-      .filter(col("rn") <= k)
+    topKBy(survivors.join(corpus, Seq("vec_id")).join(broadcast(queries), Seq("q_id"))
+      .withColumn("cos", V.cosineNative(col("qv"), col("cv"))), "q_id", "cos", "vec_id", k)
   }
 
   /** Deterministic ±1 random-hyperplane entry for (plane j, dimension i) —
@@ -194,16 +263,14 @@ object Similarity {
     column(graft.expressions.SrpBucket(expression(vec), signs))
   }
 
-
   /** Bucket exchange with the partition count PINNED to the session's
     * shuffle parallelism. The bucket self-joins EXPLODE their input:
     * candidate-pair output is ~targetPop x (nBits+1) x the row count, so
     * the exchange's byte size wildly under-states the downstream stage's
-    * work — AQE's byte-based partition coalescing (r17 finding) collapsed
-    * the 100x gated-seed scoring stage to a HANDFUL of tasks (34 tasks,
-    * one running the whole 451 s wall with 9.7 GB of sort spill: int8
-    * codes compress ~10x better than floats, so the coalescer saw 0.5 GB
-    * and threw the parallelism away). An explicit numPartitions makes the
+    * work, and AQE's byte-based coalescing would collapse the scoring
+    * stage to a handful of tasks — worst on the gated seed, whose int8
+    * codes compress ~10x better than floats (OPTIMIZATION_r17.md: 34 tasks,
+    * one running the whole 100x wall). An explicit numPartitions makes the
     * repartition non-coalescable while staying config-driven (the scale
     * probes set spark.sql.shuffle.partitions per scale). */
   private def pinnedByBucket(df: DataFrame): DataFrame =
@@ -230,26 +297,6 @@ object Similarity {
     val buckets = math.max(1L, corpusSize / math.max(1L, targetBucketSize))
     math.min(maxBits, math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)))
   }
-
-  /** Corpus-gated SHUFFLE_HASH dial — the ONE gate shared by BOTH
-    * candidate joins (the jaccard prefix join AND the containment
-    * expansion join) and mirrored by tools/JaccardProbe: hint
-    * SHUFFLE_HASH once the caller's corpusRows says broadcast is already
-    * out of reach (>= 20k docs, ~10 MB of index-prefix rows — the r14
-    * A/B: −18% end-to-end at 100x, SCALE_r14 shj_dial_ab_100x), avoiding
-    * sort-merge's input sorts; the per-partition hash build stays ~1k
-    * docs' rows by the explicit repartition, bounded at any corpus size.
-    *
-    * Env override for probes, BOTH ways (1 forces the hint, 0 forces the
-    * planner default): `SPARK_GRAFT_CAND_SHJ`, with the original
-    * `SPARK_GRAFT_JACCARD_SHJ` honored as an alias — note that either
-    * name governs BOTH candidate joins, not just the jaccard one. */
-  private[graft] def shjGate(corpusRows: Option[Long]): Boolean =
-    sys.env.get("SPARK_GRAFT_CAND_SHJ")
-      .orElse(sys.env.get("SPARK_GRAFT_JACCARD_SHJ")) match {
-      case Some(v) => v == "1"
-      case None    => corpusRows.exists(_ >= 20000L)
-    }
 
   /** LSH near-dup pairs over an embedding table: bucket by SRP bits, compare
     * only within buckets, keep pairs with cosine >= threshold. The self-join
@@ -362,8 +409,7 @@ object Similarity {
     * (query, corpus) candidate arises at most once — no dedup before the
     * rank window. The corpus side is bucket-partitioned ONCE; queries are
     * few, so their (nBits+1)-way explode is negligible; the rank window
-    * partitions by query id. Ranking ties break on round(cos, 6) then
-    * vec_id — deterministic across engines (same convention as ivfTopK).
+    * partitions by query id.
     */
   def lshTopK(
       queries: DataFrame, // (q_id, qv: array<double>)
@@ -379,12 +425,8 @@ object Similarity {
       .withColumn("__qb", srpBucket(col("qv"), dim, nBits, portable))
       .withColumn("bucket", explode(probeKeys(col("__qb"), nBits)))
       .drop("__qb")
-    val w = Window.partitionBy("q_id")
-      .orderBy(round(col("cos"), 6).desc, col("vec_id"))
-    probes.join(cb, Seq("bucket"))
-      .withColumn("cos", V.cosineNative(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    topKBy(probes.join(cb, Seq("bucket"))
+        .withColumn("cos", V.cosineNative(col("qv"), col("cv"))), "q_id", "cos", "vec_id", k)
       .select(col("q_id"), col("vec_id"), col("cos"), col("rn"))
   }
 
@@ -399,44 +441,33 @@ object Similarity {
     * exactly this bucketed approximation).
     *
     * Scale shape: ONE bucket exchange feeds both sides of the candidate
-    * equi-join (the probe side explodes its own bucket + nBits Hamming-1
-    * keys — distinct keys, so each (src, dst) candidate arises exactly
-    * once); per-bucket population is bounded by the [[lshNBits]]
-    * corpus-derived bit count under its 24-bit cap, so the per-bucket
-    * quadratic term carries the same contract as [[lshBucketJoin]]; the
-    * per-node ranking is a partitioned window over (cos desc, dst asc) —
-    * never a global sort (Spark's WindowGroupLimit keeps the rank-k
-    * prefilter map-side, so the src exchange carries survivors, not the
-    * full candidate set) — and the output is k·N edges. `portable = true`
+    * equi-join ([[bucketPairs]]); per-bucket population is bounded by the
+    * [[lshNBits]] corpus-derived bit count under its 24-bit cap, so the
+    * per-bucket quadratic term carries the same contract as
+    * [[lshBucketJoin]]; the per-node ranking is a partitioned window over
+    * (cos desc, dst asc) and the output is k·N edges. `portable = true`
     * derives hyperplanes from the md5 family the DuckDB oracle replays
     * exactly.
     *
     * `prescoreFactor > 0` gates the SEED scoring the same way
     * [[nnDescentRound]]'s dial gates a round: candidate pairs are scored
-    * on int8 codes ([[quantCodes]] — 1 byte/dim riding the bucket join
-    * instead of 8) and only the per-src top `prescoreFactor * k` by
-    * quantized cosine fetch float vectors for the exact rerank. At
-    * dim=64 the exact path wins (r16 A/B) and callers keep the default;
-    * at dim=768/200k vectors the exact seed is the single most expensive
-    * scan in the registry (754 s first-run at 100x — 197M candidate
-    * pairs x 6 KB of float vectors through the bucket join) and the gate
-    * is the difference between a seed you can build and one you can't.
-    * Deterministic and oracle-replayed exactly (the gated knnGraphCtes).
+    * on int8 codes (1 byte/dim riding the bucket join instead of 8) and
+    * only the per-src top `prescoreFactor * k` by quantized cosine fetch
+    * float vectors for the exact rescore. At dim=64 the exact path wins
+    * and callers keep the default; at dim=768/200k vectors the exact seed
+    * moves 197M candidate pairs x 6 KB of float vectors through the bucket
+    * join, and the gate is the difference between a seed you can build and
+    * one you can't. Deterministic and oracle-replayed exactly (the gated
+    * knnGraphCtes).
     *
-    * PINNED COST BOUND (r17, measured at 1x/10x/100x): per-row candidate
-    * count = targetPop × (nBits+1) × skew(N) — 381/453/985 per row at the
-    * three scales, the 100x count (196.9M pairs) matching the bucket
-    * histogram exactly. The O(log N) per-row growth is the probe fan-out
-    * (nBits+1 keys) plus real-data bucket skew (sum(pop²)/flat = 1.16 at
-    * 10x, 1.55 at 100x); per-pair steady cost is ~50 ns (KnnStageProbe
-    * 100x: join 1.5 s + cosine ~4 s + rank ~5 s once codegen is warm —
-    * first runs pay a 6-10x C2 warm-up premium over the 197M-iteration
-    * generated loops, which the min-over-all measurement policy absorbs).
-    * The obvious lever — smaller buckets via lshNBits targetBucketSize —
-    * is RECALL-PRICED 1:1 and deliberately not taken (KnnBucketAB 10x:
-    * target 64/32/16 → recall 0.119/0.086/0.061 while 100x wall drops
-    * 62→9→5.4 s); at fixed recall the bound above is the operator's
-    * honest cost, and the dial stays a caller parameter. */
+    * Cost bound (OPTIMIZATION_r17.md, measured at 1x/10x/100x): per-row
+    * candidate count = targetPop × (nBits+1) × skew(N) — 381/453/985 per
+    * row at the three scales, the 100x count matching the bucket histogram
+    * exactly; ~50 ns per candidate pair once codegen is warm. The
+    * O(log N) per-row growth is the probe fan-out plus real-data bucket
+    * skew. Smaller buckets (lshNBits targetBucketSize) are RECALL-PRICED
+    * 1:1 (target 64/32/16 → recall 0.119/0.086/0.061 at 10x), so the dial
+    * stays a caller parameter. */
   def knnGraph(
       emb: DataFrame, // (vec_id, v: array<double>)
       dim: Int,
@@ -445,118 +476,31 @@ object Similarity {
       portable: Boolean = false,
       prescoreFactor: Int = 0,
       corpusRows: Option[Long] = None): DataFrame = {
-    // zero-norm guard (same convention as quantizeRerank): cosine is
-    // undefined for the zero vector and cosineNative yields NaN, which a
-    // descending window ranks FIRST — one degenerate vector would become
-    // every bucket-mate's top neighbor, and engines disagree on NaN
-    // ordering. Dropped from both graph sides (the guard sits before the
-    // probe/candidate split); the q_sim_knn oracle mirrors it. The gated
-    // path's qs > 0 filter keeps exactly the same rows.
-    val vecs = emb.filter(V.l2NormNative(col("v")) > 0)
-    val w = Window.partitionBy("src")
-      .orderBy(round(col("cos"), 6).desc, col("dst"))
-    if (prescoreFactor <= 0) {
-      val bucketed = pinnedByBucket(vecs
-        .withColumn("bucket", srpBucket(col("v"), dim, nBits, portable)))
-      val probes = bucketed
-        .select(col("bucket").as("n_bucket"), col("vec_id").as("src"), col("v").as("sv"))
-        .withColumn("bucket", explode(probeKeys(col("n_bucket"), nBits)))
-        .drop("n_bucket")
-      val cands = bucketed
-        .select(col("bucket"), col("vec_id").as("dst"), col("v").as("dv"))
-      probes.join(cands, Seq("bucket"))
-        .filter(col("src") =!= col("dst"))
-        .withColumn("cos", V.cosineNative(col("sv"), col("dv")))
-        .select(col("src"), col("dst"), col("cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-    } else {
-      // gated seed: int8 CODES ride the bucket exchange/join (1 byte/dim),
-      // the full float vectors are fetched only for the per-src survivor
-      // set — same one-exchange discipline (bucketed feeds both sides)
-      val bucketed = pinnedByBucket(quantCodes(vecs)
-        .withColumn("bucket", srpBucket(col("v"), dim, nBits, portable))
-        .select(col("vec_id"), col("qs"), col("qn"), col("qc"), col("bucket")))
-      val probes = bucketed
-        .select(col("bucket").as("n_bucket"), col("vec_id").as("src"),
-          col("qc").as("sqc"), col("qs").as("sqs"), col("qn").as("sqn"))
-        .withColumn("bucket", explode(probeKeys(col("n_bucket"), nBits)))
-        .drop("n_bucket")
-      val cands = bucketed
-        .select(col("bucket"), col("vec_id").as("dst"),
-          col("qc").as("dqc"), col("qs").as("dqs"), col("qn").as("dqn"))
-      val wPre = Window.partitionBy("src")
-        .orderBy(round(col("approx"), 6).desc, col("dst"))
-      val surv = probes.join(cands, Seq("bucket"))
-        .filter(col("src") =!= col("dst"))
-        .withColumn("approx",
-          V.int8Dot(col("sqc"), col("dqc")).cast("double") *
-            col("sqs") * col("dqs") / (col("sqn") * col("dqn")))
-        .select(col("src"), col("dst"), col("approx"))
-        .withColumn("__qrn", row_number().over(wPre))
-        .filter(col("__qrn") <= k * prescoreFactor)
-        .select(col("src"), col("dst"))
-      // Float-fetch joins carry a 6 KB vector onto every survivor pair —
-      // under the planner's sort-merge default that intermediate is
-      // SORTED (r17 profile: one Sort of a 16 GiB pair+vector exchange ran
-      // 33 AQE-coalesced tasks x ~220 s = 250 s of the 100x wall). The
-      // node-sized vector table is the natural hash BUILD side, so the
-      // corpus-gated SHUFFLE_HASH hint streams the wide pair side
-      // unsorted; below the gate the planner keeps its broadcast choice
-      // (spec-scale plans unchanged).
-      val fetch = fetchHint(corpusRows) _
-      surv
-        .join(fetch(vecs.select(col("vec_id").as("src"), col("v").as("sv"))), Seq("src"))
-        .join(fetch(vecs.select(col("vec_id").as("dst"), col("v").as("dv"))), Seq("dst"))
-        .withColumn("cos", V.cosineNative(col("sv"), col("dv")))
-        .select(col("src"), col("dst"), col("cos"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
+    val vecs = nonZero(emb)
+    def bucketed(df: DataFrame) =
+      df.withColumn("bucket", srpBucket(col("v"), dim, nBits, portable))
+    if (prescoreFactor <= 0)
+      rankNeighbors(bucketPairs(pinnedByBucket(bucketed(vecs)), Seq("v"), nBits), k)
+    else {
+      // the codes ride the bucket exchange; vectors are fetched for survivors
+      val codes = pinnedByBucket(bucketed(int8Codes(vecs, "vec_id", "v")).drop("v"))
+      exactRescore(prescore(bucketPairs(codes, Codes, nBits), k * prescoreFactor),
+        vecs, k, corpusRows)
     }
   }
 
-  /** Corpus-gated SHUFFLE_HASH hint for the node-sized BUILD side of a
-    * survivor-fetch join (float vectors / int8 codes keyed by vec_id):
-    * same [[shjGate]] dial the candidate joins use — above it, sort-merge
-    * would sort the WIDE pair-stream side (the r17 16 GiB-sort finding);
-    * below it the planner's own choice (typically broadcast) stands.
-    *
-    * Gate-on, the build side is ALSO explicitly repartitioned on its join
-    * key (the frame's FIRST column by the callers' selection contract)
-    * with the candidate joins' corpus-derived count: SHJ's per-partition
-    * hash build cannot spill, and inheriting default/AQE partitioning
-    * would let build bytes per partition grow unboundedly with corpus and
-    * dim (r17 ADVICE). ~1k vectors per partition ≈ 6 MB at dim=768,
-    * capped at the session shuffle width; the user-specified count opts
-    * the exchange out of AQE coalescing, and EnsureRequirements aligns
-    * the pair-stream side to it, so the bound holds at any scale. */
-  private def fetchHint(corpusRows: Option[Long])(df: DataFrame): DataFrame =
-    if (!shjGate(corpusRows)) df
-    else {
-      val cap = df.sparkSession.sessionState.conf.numShufflePartitions
-      val p = corpusRows
-        .map(n => math.max(1L, math.min(cap.toLong, n / 1000 + 1)).toInt)
-        .getOrElse(cap)
-      df.repartition(p, col(df.columns.head)).hint("SHUFFLE_HASH")
-    }
-
-  /** int8 code table of non-degenerate vectors — THE codec every gated
-    * path shares (quantRerankTopK, nnDescentRound's pre-score, the gated
-    * [[knnGraph]] seed): per-vector symmetric scale max|x|/127, HALF_UP
-    * byte codes (1 byte/dim in Tungsten), float norm for cosine
-    * normalization — all three from ONE native fused pass
-    * ([[graft.expressions.Int8Codes]]; the previous three interpreted HOF
-    * passes measured ~1,100 task-seconds per 200k x 768 corpus scan, r17).
-    * The NULL-struct degenerate rule + `qs > 0` keeps exactly the rows
-    * the old scale filter kept. Output: (vec_id, v, qs, qn, qc). */
-  private[graft] def quantCodes(vecs: DataFrame): DataFrame =
-    vecs
-      .select(col("vec_id"), col("v"), V.int8Codes(col("v")).as("__q"))
-      .select(col("vec_id"), col("v"),
-        col("__q").getField("qs").as("qs"),
-        col("__q").getField("qn").as("qn"),
-        col("__q").getField("qc").as("qc"))
-      .filter(col("qs") > 0)
+  /** Candidate (src, dst, s*, d*) pairs of a bucket-partitioned table
+    * (vec_id, payload..., bucket): the one exchange feeds both sides. The
+    * src side explodes its own bucket plus the nBits Hamming-1 keys —
+    * distinct keys, so each (src, dst) candidate arises exactly once. */
+  private def bucketPairs(bucketed: DataFrame, payload: Seq[String], nBits: Int): DataFrame = {
+    val probes = bucketed
+      .select(col("bucket").as("n_bucket") +: sideCols("src", "s", payload): _*)
+      .withColumn("bucket", explode(probeKeys(col("n_bucket"), nBits)))
+      .drop("n_bucket")
+    val cands = bucketed.select(col("bucket") +: sideCols("dst", "d", payload): _*)
+    probes.join(cands, Seq("bucket")).filter(col("src") =!= col("dst"))
+  }
 
   /** One NN-descent refinement round over a kNN graph (Dong et al., WWW'11
     * — "Efficient K-Nearest Neighbor Graph Construction for Generic
@@ -587,25 +531,21 @@ object Similarity {
     * [[knnGraph]], so rounds chain.
     *
     * `prescoreFactor > 0` inserts an int8 PRE-SCORE between expansion and
-    * exact scoring (the [[quantRerankTopK]] codec: per-vector symmetric
-    * `round(x / (max|x|/127))` codes, integer dot, cosine-normalized by
-    * precomputed float norms): every candidate pair is scored on 64-BYTE
-    * codes and only the top `prescoreFactor * k` per src fetch full
-    * float vectors for the exact rerank. The expansion emits up to (2k)²
-    * candidates per node but only O(k) survive to the final ranking, so
-    * the wide exchange — full float vectors riding every candidate pair
-    * — shrinks to the survivor set; the code columns riding the full
-    * pair set are 8x narrower. The gate is candidate-ORDERING only (both
-    * engines derive identical codes — IEEE double division + shared
-    * HALF_UP round — and the integer dot is exact), so the result is
-    * deterministic and the DuckDB oracle replays it exactly; recall vs
-    * brute force is the spec-measured contract, as with
-    * [[quantRerankTopK]].
+    * exact scoring ([[int8Codes]] + [[approxCosine]]): every candidate pair
+    * is scored on 1-byte codes and only the top `prescoreFactor * k` per
+    * src fetch full float vectors for the exact rescore. The expansion
+    * emits up to (2k)² candidates per node but only O(k) survive to the
+    * final ranking, so the wide exchange — full float vectors riding every
+    * candidate pair — shrinks to the survivor set. The gate is
+    * candidate-ORDERING only (both engines derive identical codes and the
+    * integer dot is exact), so the result is deterministic and the DuckDB
+    * oracle replays it exactly; recall vs brute force is the spec-measured
+    * contract, as with [[quantRerankTopK]].
     *
-    * WHEN TO TURN IT ON (measured, tools/NnDescentAB, r16): the gate
-    * trades two extra joins + a per-src pre-rank window for the narrower
-    * exchange, so it pays only when exchange BYTES dominate. At dim=64
-    * it loses at every probed scale (200k vectors: 9.5 s gated vs 7.5 s
+    * When to turn it on (SCALE_r16.json `nndescent_ab`): the gate trades
+    * two extra joins + a per-src pre-rank window for the narrower
+    * exchange, so it pays only when exchange BYTES dominate. At dim=64 it
+    * loses at every probed scale (200k vectors: 9.5 s gated vs 7.5 s
     * exact); at dim=768 it loses at 20k vectors (3.3 vs 2.9 s) and WINS
     * 4.4x at 200k vectors (27.2 vs 120.6 s, where the exact path moves
     * ~120 GB of 6 KB vectors through the candidate exchange). Rule of
@@ -627,128 +567,64 @@ object Similarity {
       prescoreFactor: Int = 0,
       revDegreeCap: Int = -1,
       corpusRows: Option[Long] = None): DataFrame = {
-    // The incoming graph feeds FOUR plan branches (fwd, the reverse-cap
-    // window, and — through und — both sides of the expansion self-join);
-    // without lineage truncation the entire seed pipeline (SRP bucket
-    // exchange + per-node candidate window) re-executes per branch —
-    // measured 185 s vs ~60 s at the 100x probe. The graph is k·N narrow
-    // rows (two longs + a double), so materializing it is cheap at any
-    // corpus size; same CheckpointMode contract as the other multi-branch
-    // operators (see [[CheckpointMode]]).
+    // The incoming graph feeds four plan branches (fwd, the reverse-cap
+    // window and, through und, both sides of the expansion self-join), so
+    // it is truncated once instead of re-running the seed pipeline per
+    // branch. It is k·N narrow rows, cheap to materialize at any size.
     val lin = new Lineage(graph.sparkSession, mode)
     val (g, _) = lin.tracked(graph.select(col("src"), col("dst"), col("cos")))
     val fwd = g.select(col("src"), col("dst"))
-    // reverse edges, degree-capped at k per target: without the cap a hub
-    // that half the corpus lists as a neighbor would fan Σ deg_in·deg_out
-    // candidates through the expansion join — the quadratic term NN-descent
-    // bounds by sampling, bounded here deterministically instead
-    val cap = if (revDegreeCap > 0) revDegreeCap else k
-    val revW = Window.partitionBy("dst").orderBy(round(col("cos"), 6).desc, col("src"))
-    val rev = g.select(col("src"), col("dst"), col("cos"))
-      .withColumn("__rrn", row_number().over(revW))
-      .filter(col("__rrn") <= cap)
+    // reverse edges, degree-capped per target: without the cap a hub that
+    // half the corpus lists as a neighbor would fan Σ deg_in·deg_out
+    // candidates through the expansion join
+    val rev = topKBy(g.select(col("src"), col("dst"), col("cos")), "dst", "cos", "src",
+        if (revDegreeCap > 0) revDegreeCap else k)
       .select(col("dst").as("src"), col("src").as("dst"))
-    // und is ≤ 2kN narrow rows read by BOTH sides of the expansion join —
-    // truncated too, so the union+distinct runs once
+    // ≤ 2kN narrow rows read by both expansion sides: union+distinct once
     val (und, _) = lin.tracked(fwd.unionAll(rev).distinct())
-    // neighbors-of-neighbors through the middle node, plus the current
-    // edges; distinct BEFORE scoring so each pair scores once
+    // neighbors-of-neighbors plus the current edges, distinct before
+    // scoring so each pair scores once
     val cand = und.as("e1")
       .join(und.as("e2"), col("e1.dst") === col("e2.src"))
       .select(col("e1.src").as("src"), col("e2.dst").as("dst"))
       .filter(col("src") =!= col("dst"))
       .unionAll(fwd)
       .distinct()
-    val vecs = emb.filter(V.l2NormNative(col("v")) > 0)
-    val w = Window.partitionBy("src")
-      .orderBy(round(col("cos"), 6).desc, col("dst"))
-    // pre-score gate (see scaladoc): the survivor set that proceeds to
-    // the full-vector joins — either every candidate (exact path) or the
-    // per-src top prescoreFactor*k by quantized cosine
+    val vecs = nonZero(emb)
     val surv =
       if (prescoreFactor <= 0) cand
       else {
-        // the shared gated-path codec (see [[quantCodes]]): codes are
-        // array<byte> — 1 byte/element in Tungsten, so the pair exchange
-        // carries 64 B of codes instead of 512 B of doubles.
-        // Checkpointed (node-sized: ~dim bytes + 16 per vector) because it
-        // feeds BOTH sides of the candidate gate join below — src and dst
-        // projections build different exchanges, so ReuseExchange cannot
-        // share them and the interpreted HOF quantize pass (~dim element
-        // ops/row) would otherwise run twice per round (r17).
-        val (q, _) = lin.tracked(quantCodes(vecs)
-          .select(col("vec_id"), col("qs"), col("qn"), col("qc")))
-        // exact integer dot via the native codegen expression — the HOF
-        // aggregate-over-zip_with form ran interpreted and cost more than
-        // the full-vector exchange it was saving (measured 4-6x at 100x)
-        val qdot = V.int8Dot(col("sqc"), col("dqc"))
-        val wPre = Window.partitionBy("src")
-          .orderBy(round(col("approx"), 6).desc, col("dst"))
-        // code joins: same sort-merge pathology as the float fetch below
-        // at 1/8 the width — the node-sized code table is the hash build
-        // side, the candidate pair stream streams unsorted (r17)
-        val fetchQ = fetchHint(corpusRows) _
-        cand
-          .join(fetchQ(q.select(col("vec_id").as("src"), col("qc").as("sqc"),
-            col("qs").as("sqs"), col("qn").as("sqn"))), Seq("src"))
-          .join(fetchQ(q.select(col("vec_id").as("dst"), col("qc").as("dqc"),
-            col("qs").as("dqs"), col("qn").as("dqn"))), Seq("dst"))
-          .withColumn("approx",
-            qdot.cast("double") * col("sqs") * col("dqs") /
-              (col("sqn") * col("dqn")))
-          .withColumn("__qrn", row_number().over(wPre))
-          .filter(col("__qrn") <= k * prescoreFactor)
-          .select(col("src"), col("dst"))
+        // node-sized, and read by both endpoint fetches: truncated once
+        val (q, _) = lin.tracked(int8Codes(vecs, "vec_id", "v").drop("v"))
+        prescore(withEndpoints(cand, q, Codes, corpusRows), k * prescoreFactor)
       }
-    // corpus-gated SHUFFLE_HASH on the vector build side (see [[fetchHint]]
-    // / the knnGraph gated fetch): above the gate, sort-merge sorted the
-    // pair+vector intermediate — the r17 100x profile's single biggest
-    // stage (16 GiB estimated, 33 tasks x ~220 s)
-    val fetchV = fetchHint(corpusRows) _
-    surv
-      .join(fetchV(vecs.select(col("vec_id").as("src"), col("v").as("sv"))), Seq("src"))
-      .join(fetchV(vecs.select(col("vec_id").as("dst"), col("v").as("dv"))), Seq("dst"))
-      .withColumn("cos", V.cosineNative(col("sv"), col("dv")))
-      .select(col("src"), col("dst"), col("cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    exactRescore(surv, vecs, k, corpusRows)
   }
 
   /** IVF (inverted-file) approximate top-k: corpus vectors are assigned to
-    * their nearest centroid once (a broadcast join against C centroids —
-    * embarrassingly parallel); each query searches only the nprobe
-    * partitions whose centroids are nearest to it. Recall/cost trade-off is
+    * their nearest centroid once; each query searches only the nprobe
+    * cells whose centroids are nearest to it. Recall/cost trade-off is
     * explicit; at 100 TB the per-query scan touches nprobe/C of the corpus.
     *
-    * Centroid "training" is a deterministic sample (every C-th corpus
-    * vector) — k-means iterations can replace it without changing the
-    * query-side plan.
+    * Centroids are a deterministic sample (the first C corpus vectors by
+    * id), so the DuckDB oracle replays every stage (PortableSql.ivfOracle).
     */
   def ivfTopK(
       queries: DataFrame, // (q_id, qv: array<double>)
       corpus: DataFrame,  // (vec_id, cv: array<double>)
       nCentroids: Int,
       nProbe: Int,
-      k: Int,
-      refineIters: Int = 0): DataFrame = {
-    val w = Window.partitionBy("q_id").orderBy(round(col("cos"), 6).desc, col("vec_id"))
-    // refineIters > 0 replaces the deterministic sample with Lloyd-refined
-    // centroids ([[kmeansCentroids]]) — tighter cells, same query plan
-    val centroids =
-      if (refineIters > 0) kmeansCentroids(corpus, nCentroids, refineIters)
-      else corpus
-        .orderBy("vec_id") // deterministic training sample
-        .limit(nCentroids)
-        .select(col("vec_id").as("c_id"), col("cv").as("centroid"))
-    // The centroid table is bounded driver state (C×dim — the same category
-    // as kmeans' per-iteration collect and MLlib KMeans). Riding it into
-    // the NearestCells codegen expression makes both assignment and probing
-    // NARROW MAPS: the previous crossJoin+window formulation shuffled
-    // corpus×C rows through a per-vec_id window just to take an argmin —
-    // C× the corpus through an exchange at 100 TB. (dist, id) tie-break
-    // semantics identical to the window's orderBy(dist, c_id).
+      k: Int): DataFrame = {
+    // The centroid table is bounded driver state (C×dim). Riding it into
+    // the NearestCells codegen expression makes both assignment and
+    // probing NARROW MAPS — no corpus×C rows through an exchange. (dist,
+    // id) tie-break: the nearest cell, ties to the smaller c_id.
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    val cents = centroids.collect()
+    val cents = corpus
+      .orderBy("vec_id")
+      .limit(nCentroids)
+      .select(col("vec_id").as("c_id"), col("cv").as("centroid"))
+      .collect()
     // an empty corpus has no cells and no results — return the empty
     // frame with the right schema instead of letting NearestCells'
     // invariants reject construction
@@ -758,8 +634,7 @@ object Similarity {
         .withColumn("cos", lit(0.0))
         .withColumn("rn", lit(0))
         .select("q_id", "vec_id", "cos", "rn")
-    // a corpus smaller than nProbe cells simply probes them all — the
-    // window formulation's prn <= nProbe degraded the same way
+    // a corpus smaller than nProbe cells simply probes them all
     val probe = math.min(nProbe, cents.length)
     val centArr = cents.map(_.getSeq[Double](1).toArray)
     val idArr = cents.map(_.getLong(0))
@@ -773,59 +648,9 @@ object Similarity {
       .withColumn("c_id", explode(nearest(col("qv"), probe)))
       .select(col("q_id"), col("qv"), col("c_id"))
     // search only the probed cells (equi-join on cell id, not a cross join)
-    assigned.join(probes, Seq("c_id"))
-      .withColumn("cos", V.cosineNative(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    topKBy(assigned.join(probes, Seq("c_id"))
+        .withColumn("cos", V.cosineNative(col("qv"), col("cv"))), "q_id", "cos", "vec_id", k)
       .select("q_id", "vec_id", "cos", "rn")
-  }
-
-  /** Lloyd's k-means over an embedding table — centroid refinement for
-    * [[ivfTopK]]. Each iteration is one broadcast-assign pass plus one
-    * aggregation (element-wise mean via posexplode + groupBy), both fully
-    * distributed; only the C×dim centroid table ever reaches the driver.
-    * Deterministic: init = first C vectors by id, ties in assignment break
-    * by centroid id.
-    */
-  def kmeansCentroids(
-      corpus: DataFrame, // (vec_id, cv: array<double>)
-      nCentroids: Int,
-      iterations: Int): DataFrame = {
-    var centroids = corpus
-      .orderBy("vec_id")
-      .limit(nCentroids)
-      .select(col("vec_id").as("c_id"), col("cv").as("centroid"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(col("dist"), col("c_id"))
-    for (_ <- 0 until iterations) {
-      val assigned = corpus
-        .crossJoin(broadcast(centroids))
-        .withColumn("dist", V.l2Dist(col("cv"), col("centroid")))
-        .withColumn("arn", row_number().over(wAssign))
-        .filter(col("arn") === 1)
-        .select(col("c_id"), col("cv"))
-      // element-wise mean per cell: explode positions, average, re-assemble
-      val means = assigned
-        .select(col("c_id"), posexplode(col("cv")).as(Seq("pos", "x")))
-        .groupBy("c_id", "pos")
-        .agg(avg("x").as("m"))
-        .groupBy("c_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("c_id"), transform(col("pm"), p => p.getField("m")).as("centroid"))
-      // empty cells keep their previous centroid; collect the C×dim result
-      // to the driver (bounded by centroid count — the one collect() the
-      // 100 TB rules allow, same as MLlib KMeans) so each iteration starts
-      // from a literal frame and plans don't stack across iterations
-      val next = centroids.select(col("c_id"), col("centroid").as("prev"))
-        .join(means, Seq("c_id"), "left")
-        .select(col("c_id"), coalesce(col("centroid"), col("prev")).as("centroid"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1)))
-        .toSeq
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      centroids = next.toDF("c_id", "centroid")
-    }
-    centroids
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -835,64 +660,16 @@ object Similarity {
     * the cluster gate: O(Σ cell²) candidate pairs instead of O(n²). Keeper
     * policy is min-id per near-dup group (deterministic; the paper keeps
     * the vector farthest from the centroid — swap the keeper ordering to
-    * get that). Two entry points share the pair/keeper tail
-    * ([[inCellDedup]]):
+    * get that).
     *
-    *  - [[semanticDedup]] — caller-FIXED centroid count, flat argmin
-    *    assignment (narrow map over plan-constant centroids), optional
-    *    k-means refinement.
-    *  - [[semanticDedupScaled]] — corpus-SCALED cell count (cells stay
-    *    ~cellStride rows as the corpus grows, keeping the in-cell
-    *    quadratic term bounded) with a constant-fan-out multi-level
-    *    routing tree, so driver state is deployment-constant and per-row
-    *    assignment cost grows only logarithmically with the corpus.
-    *    This is the 100 TB entry point.
-    *
-    * Input: (vec_id, cv: array<double>); output: (vec_id, c_id) survivors.
-    */
-  /** Caller-FIXED-C variant: assignment is a narrow map over a NearestCells
-    * expression holding all C centroids as plan constants, so driver state
-    * is O(C·dim) and per-row cost O(C·dim) — the caller's contract is that
-    * C is a constant of the deployment (like ivfTopK's nCentroids), NOT
-    * derived from the corpus size. For corpus-scaled cell counts use
-    * [[semanticDedupScaled]]: sizing C ~ N/cell through THIS entry point
-    * makes assignment O(N²·dim) and grows the driver collect linearly —
-    * the round-11 scale audit's one red flag.
-    */
-  def semanticDedup(
-      corpus: DataFrame,
-      nCentroids: Int,
-      tau: Double,
-      refineIters: Int = 0): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    val centroids =
-      if (refineIters > 0) kmeansCentroids(corpus, nCentroids, refineIters)
-      else corpus
-        .orderBy("vec_id")
-        .limit(nCentroids)
-        .select(col("vec_id").as("c_id"), col("cv").as("centroid"))
-    // bounded driver state: C×dim, the same category as ivfTopK's collect
-    val cents = centroids.collect()
-    if (cents.isEmpty) return emptySurvivors(corpus)
-    val centArr = cents.map(_.getSeq[Double](1).toArray)
-    val idArr = cents.map(_.getLong(0))
-    val assigned = corpus
-      .withColumn("c_id",
-        column(graft.expressions.NearestCells(
-          expression(col("cv")), centArr, idArr, 1)).getItem(0))
-      .repartition(col("c_id"))
-    inCellDedup(assigned, tau)
-  }
-
-  /** Corpus-SCALED SemDeDup: cell count grows with the corpus (expected
-    * cell size ~`cellStride`) while driver state stays DEPLOYMENT-CONSTANT
-    * and per-row assignment cost grows only logarithmically. The round-11
-    * audit showed the flat path cannot scale its cell count (argmin over
-    * C = N/64 plan-constant centroids is O(N²·dim) compute with an O(N)
-    * driver collect); the round-12 two-level fix still sized its router
-    * table ceil(sqrt(F)) — an O(N^1.5) total-compute asymptote with a
-    * sqrt(N) driver collect. This variant removes the last data-derived
-    * constant:
+    * The cell count grows with the corpus (expected cell size
+    * ~`cellStride`, keeping the in-cell quadratic term bounded) while
+    * driver state stays DEPLOYMENT-CONSTANT and per-row assignment cost
+    * grows only logarithmically. A flat argmin over C = N/cellStride
+    * plan-constant centroids would be O(N²·dim) compute with an O(N)
+    * driver collect; a two-level router sized ceil(sqrt(F)) would be
+    * O(N^1.5) with a sqrt(N) collect. This design removes every
+    * data-derived constant:
     *
     *  - Fine cells are seeded by the stride-grid sample `vec_id %
     *    cellStride == 0` (plus the min id, so a nonempty corpus always has
@@ -940,11 +717,6 @@ object Similarity {
     * (PortableSql.semanticDedupOracle), so the correctness gate covers
     * this 100 TB code path itself; SimilaritySpec holds a brute-force
     * replay differential across 1-, 2- and 3-level corpora.
-    *
-    * Centroid refinement (kmeansCentroids) deliberately does NOT compose
-    * here: its per-iteration broadcast-assign is O(C·dim) per row — the
-    * very cost this variant removes. Refinement stays a caller-fixed-C
-    * feature of [[semanticDedup]].
     *
     * Input: (vec_id, cv: array<double>); output: (vec_id, c_id) survivors.
     */
@@ -1058,7 +830,7 @@ object Similarity {
       .repartition(col("c_id"))
   }
 
-  /** Shared SemDeDup tail: in-cell pair generation (equi-join on the cell
+  /** SemDeDup tail: in-cell pair generation (equi-join on the cell
     * id over the pre-partitioned assignment — one exchange feeds both
     * sides) + min-id keeper. `assigned`: (vec_id, cv, c_id). */
   private def inCellDedup(assigned: DataFrame, tau: Double): DataFrame = {
@@ -1077,6 +849,101 @@ object Similarity {
       .withColumn("c_id", lit(0L))
       .select("vec_id", "c_id")
 
+  // ---- token-set near-dup pairs ----------------------------------------
+
+  /** (keys..., hs, n_toks): each doc's sorted DISTINCT xxhash64 token set.
+    * Jaccard and containment are set-semantic, so only distinct tokens
+    * matter, and every later stage — the token explode, the frequency
+    * table, the candidate join key, the verify arrays — works on 8-byte
+    * longs hashed once per document; the verify is a primitive
+    * merge-intersection of the sorted arrays. Set scores over the hashes
+    * equal the scores over the tokens unless two distinct tokens of one
+    * compared pair collide in 64 bits (~7e-17 per pair — accepted risk
+    * class, see JaccardSortedLongs). Null tokens are dropped BEFORE
+    * hashing: xxhash64 maps null to its seed, which would count one phantom
+    * token shared by every such doc. */
+  private def hashedTokenSets(docs: DataFrame, keys: Column*): DataFrame =
+    docs
+      .select(keys :+ sort_array(array_distinct(transform(
+        filter(col("toks"), _.isNotNull), xxhash64(_)))).as("hs"): _*)
+      .withColumn("n_toks", size(col("hs")))
+
+  /** Every token of `base` with its 1-based rank `r` in its doc under the
+    * global rarest-first order (tf asc, then hash): (keys..., token,
+    * n_toks, r). Any consistent global order makes the prefix filters
+    * lossless; rarest-first keeps prefixes on each doc's rarest tokens, so
+    * the candidate volume is bounded by true co-occurrence, not corpus². */
+  private def rarestFirst(base: DataFrame, keys: Seq[String]): DataFrame = {
+    val toksExp = base.select((keys :+ "n_toks").map(col) :+ explode(col("hs")).as("token"): _*)
+    val freq = toksExp.groupBy("token").agg(count(lit(1)).as("tf"))
+    val wDoc = Window.partitionBy("doc_id").orderBy(col("tf"), col("token"))
+    toksExp.join(freq, Seq("token"))
+      .withColumn("r", row_number().over(wDoc))
+      .select((keys ++ Seq("token", "n_toks", "r")).map(col): _*)
+  }
+
+  /** Expansion join of probe prefixes `a` against index rows `b` on
+    * `keys`, on [[expansionPartitions]] partitions. Past [[shjGate]] the
+    * index side is hinted SHUFFLE_HASH: sort-merge would sort both inputs
+    * of a join whose cost is producing the matched stream, not ordering
+    * it (10x corpus: 16.4 vs 19.7 s end-to-end; 100x: SCALE_r14.json).
+    * Below the gate the planner broadcasts the index side, the best plan.
+    * The per-partition hash build stays ~1k docs' rows at any size. */
+  private def candidateJoin(a: DataFrame, b: DataFrame, keys: Seq[String], p: Int,
+      corpusRows: Option[Long]): DataFrame =
+    a.repartition(p, keys.map(col): _*)
+      .join(if (shjGate(corpusRows)) b.hint("SHUFFLE_HASH") else b, keys)
+
+  /** Matched-token rows (doc_a, doc_b, n_a, r_a, n_b, r_b) → one row per
+    * pair (doc_a, doc_b, n_a, fa, n_b, fb), with (fa, fb) the ranks of the
+    * pair's FIRST common token, kept only if the positional bound
+    * 1 + min(n_a − fa, n_b − fb) >= `need` holds there.
+    *
+    * The first common token t0 minimizes both ranks (both docs sort by the
+    * same global order, so matched ranks are order-isomorphic across
+    * sides) and, for a qualifying pair, sits inside both prefixes — so
+    * testing the bound on t0 is lossless, and strictly tighter than
+    * testing it on any matched row (which still prunes rows before the
+    * dedup). Since n is constant per (pair, side), packing (n << 32 | r)
+    * makes min(packed) == (n << 32 | r(t0)): two plain 8-byte min buffers
+    * instead of first/min/min_by, halving the row width of the pipeline's
+    * largest exchange. No overflow: n <= 2^31-1, 1 <= r <= n. */
+  private def firstCommonTokenPairs(matched: DataFrame, need: Column): DataFrame = {
+    def bound(ra: String, rb: String) =
+      lit(1) + least(col("n_a") - col(ra), col("n_b") - col(rb)) >= need
+    matched
+      .filter(bound("r_a", "r_b"))
+      .select(col("doc_a"), col("doc_b"),
+        (shiftleft(col("n_a").cast("long"), 32) + col("r_a")).as("pka"),
+        (shiftleft(col("n_b").cast("long"), 32) + col("r_b")).as("pkb"))
+      .groupBy("doc_a", "doc_b")
+      .agg(min(col("pka")).as("pka"), min(col("pkb")).as("pkb"))
+      .select(col("doc_a"), col("doc_b"),
+        shiftright(col("pka"), 32).as("n_a"),
+        col("pka").bitwiseAND(lit(0xFFFFFFFFL)).as("fa"),
+        shiftright(col("pkb"), 32).as("n_b"),
+        col("pkb").bitwiseAND(lit(0xFFFFFFFFL)).as("fb"))
+      .filter(bound("fa", "fb"))
+  }
+
+  /** Verify join: both docs' hash arrays (hs_a, hs_b) joined onto the
+    * candidate pairs, side `first` ("a" or "b") first. ONE corpus-array
+    * exchange serves both joins: `baseArr` is repartitioned by doc_id below
+    * the per-side alias projections, so the two exchange subtrees are
+    * canonically equal and the second is a ReusedExchange (the static rule
+    * with AQE off, the runtime stage cache under AQE — ExchangeReuseSpec).
+    * Only the `first` side's array rides a pair exchange (the re-key on
+    * the second side); the second array is consumed by the score in the
+    * same stage — so callers pass the smaller side first. */
+  private def withTokenSets(cand: DataFrame, base: DataFrame, p: Int, first: String): DataFrame = {
+    val baseArr = base.select(col("doc_id"), col("hs")).repartition(p, col("doc_id"))
+    def fetch(side: String)(pairs: DataFrame) =
+      pairs.repartition(p, col(s"doc_$side"))
+        .join(baseArr.select(col("doc_id").as(s"doc_$side"), col("hs").as(s"hs_$side")),
+          Seq(s"doc_$side"))
+    cand.transform(fetch(first)).transform(fetch(if (first == "a") "b" else "a"))
+  }
+
   /** Exact-Jaccard near-dup pairs with log-length-band blocking.
     *
     * Candidates must share `lang` and land in the same or an ADJACENT
@@ -1092,6 +959,10 @@ object Similarity {
     * (ratio ~1.2) suits corpora where near-dups are light edits; width
     * ln(2) ~ 0.7 guarantees full recall for any pair with Jaccard >= 0.5
     * at a larger candidate volume.
+    *
+    * `mode = Reliable(dir)` makes the lineage truncations reliable
+    * checkpoints, so an executor lost after materialization re-reads
+    * instead of failing the job (CheckpointModeSpec proves output parity).
     */
   def jaccardNearDupPairs(
       docs: DataFrame, // (doc_id, lang, n_chars, toks: array<string>)
@@ -1099,98 +970,37 @@ object Similarity {
       bandWidth: Double = 0.1,
       mode: CheckpointMode = CheckpointMode.Local,
       corpusRows: Option[Long] = None): DataFrame = {
-    // mode = Reliable(dir): the lazy lineage truncations below become
-    // reliable checkpoints, so an executor lost after materialization
-    // re-reads instead of failing the job (CheckpointModeSpec proves
-    // output parity)
     val lin = new Lineage(docs.sparkSession, mode)
-    // Determinism note: the oracle computes the band as DuckDB
-    // ln(1+n)/w while this side uses JVM log1p — different libm entry
-    // points, so a value landing within 1 ULP of a band boundary could in
-    // principle disagree. With band magnitudes ~40 the boundary window is
-    // ~7e-14 per distinct n_chars; across thousands of values the flake
-    // probability is ~1e-10 — accepted rather than redesigned around.
+    // The oracle computes the band as DuckDB ln(1+n)/w and this side uses
+    // JVM log1p: a value within 1 ULP of a band boundary could disagree
+    // (~7e-14 per distinct n_chars at band magnitudes ~40) — accepted.
     def band(c: Column): Column = floor(log1p(c) / bandWidth).cast("long")
-    // Jaccard is set-semantic, so only DISTINCT tokens matter from here on.
-    // Lazy localCheckpoint: this subtree (scan + tokenize + distinct) feeds
-    // THREE plan branches (token explode, and both candidate re-joins) —
-    // checkpointing materializes it once on first use instead of running
-    // the tokenizer three times per invocation.
-    // Measured dead ends (sf0.1, do not redo): eager checkpoints, count()
-    // barriers after each checkpoint, and checkpointing `cand` all came out
-    // 1.5-1.6x SLOWER end-to-end than this lazy one-action form — the
-    // single action lets AQE overlap the checkpoint-materializing stages,
-    // and the dominant cost is the candidate join+dedup stage (~70%), not
-    // recomputation. Profile `pairs` mode times build vs count if revisiting.
-    // Token-HASH pipeline (round-9): every stage from here — the token
-    // explode, the frequency table, the candidate join key and the verify
-    // arrays — works on xxhash64(token) longs, not strings. The hash is
-    // applied ONCE per document; `hs` is the sorted distinct hash array,
-    // so the quadratic-ish candidate stage shuffles 8-byte longs (~40%
-    // narrower rows than UTF8 tokens plus offsets) and the verify is a
-    // primitive merge-intersection (JaccardSortedLongs) instead of a
-    // per-pair UTF8 hash set. Exactness: Jaccard over the hash SETS
-    // equals Jaccard over the token sets unless two distinct tokens of
-    // one compared pair collide in 64 bits (~7e-17 per pair — accepted
-    // risk class, see JaccardSortedLongs). The global frequency order
-    // used for prefixes changes (ties order by hash, not lexicographs) —
-    // irrelevant to losslessness, which only needs SOME consistent
-    // global order.
-    // Null tokens are dropped BEFORE hashing: xxhash64 maps a null input
-    // to its seed constant (42), so a tokenizer emitting null elements
-    // would otherwise count one phantom token shared by all such docs
-    // (r9 ADVICE). The library tokenizers never emit null, so this filter
-    // is a no-op in practice; it pins the semantics (Jaccard over the
-    // non-null token set) rather than inheriting a hash artifact.
-    // Eager-vs-lazy checkpoint dial for the two SHARED subtrees (base,
-    // prefix). Lazy materialization lets AQE overlap the
-    // checkpoint-building stages — but the overlap is also a RACE: the
-    // candidate join's two sides (and verify's two corpus branches) can
-    // compute the same not-yet-materialized checkpoint partitions
-    // CONCURRENTLY, duplicating the tokenizer and the freq+window stage.
-    // Measured round 13 at a 100x corpus (same window, fresh JVMs): lazy
-    // 531/557/582/673 s vs eager 400/528 s — the duplicated prefix build
-    // costs more than the lost overlap once the shared subtrees are
-    // expensive. At sf0.1 the round-10 measurement went the other way
-    // (eager barriers 1.5-1.6x slower — tiny stages, overlap wins), so
-    // the dial is corpus-sized: lazy below ~100k docs, eager barriers
-    // above. SPARK_GRAFT_JACCARD_EAGER overrides both ways for probes.
-    val eagerCkpt = sys.env.get("SPARK_GRAFT_JACCARD_EAGER") match {
-      case Some(v) => v == "1"
-      case None    => corpusRows.exists(_ > 100000L)
-    }
-    val base = docs
-      .select(col("doc_id"), col("lang"), band(col("n_chars")).as("band"),
-        sort_array(array_distinct(transform(
-          filter(col("toks"), _.isNotNull), xxhash64(_)))).as("hs"))
-      .withColumn("n_toks", size(col("hs")))
-      .transform(df => lin.tracked(df, eager = eagerCkpt)._1)
+    // The shared subtrees (base, prefix) each feed several plan branches
+    // and are checkpointed. Lazy materialization lets AQE overlap the
+    // checkpoint-building stages, which wins on small corpora (eager
+    // barriers measured 1.5-1.6x slower at sf0.1); but the overlap is a
+    // race — both join sides can compute the same not-yet-materialized
+    // partitions concurrently — that loses once the subtrees are expensive
+    // (100x: lazy 531-673 s vs eager 400-528 s, SCALE_r13.json
+    // `eager_ab_100x`). Hence eager above 100k docs.
+    val eager = corpusRows.exists(_ > 100000L)
+    val base = hashedTokenSets(docs, col("doc_id"), col("lang"), band(col("n_chars")).as("band"))
+      .transform(df => lin.tracked(df, eager = eager)._1)
 
     // PPJoin prefix filter (Bayardo/Chaudhuri): under a global token order
-    // (rarest first), any pair with Jaccard >= t shares at least one token
-    // within each side's first |x| - ceil(t*|x|) + 1 tokens. Joining on
-    // (lang, band, prefix-token) therefore loses NO qualifying pair —
-    // the oracle brute-forces within bands and the result sets match —
-    // while the candidate count is bounded by token co-occurrence instead
-    // of growing quadratically with band population (the band-only join
-    // measured 20x time at 10x corpus; this is the 100 TB shape).
-    val toksExp = base.select(col("doc_id"), col("lang"), col("band"),
-      col("n_toks"), explode(col("hs")).as("token"))
-    val freq = toksExp.groupBy("token").agg(count(lit(1)).as("tf"))
-    val wDoc = Window.partitionBy("doc_id").orderBy(col("tf"), col("token"))
-    // FP slack (here and in the candidate prunes below): the thresholds are
-    // doubles, so e.g. fl(0.8)*5 = 4.0000000000000004 and a bare ceil/compare
-    // would over-prune a pair whose Jaccard is EXACTLY t. Subtracting 1e-9
-    // before ceil/compare makes every prune conservatively slack — the final
-    // exact-jaccard filter removes any extra candidates, so slack costs
-    // nothing in correctness and keeps the prunes genuinely lossless.
-    val prefix = toksExp.join(freq, Seq("token"))
-      .withColumn("r", row_number().over(wDoc))
+    // any pair with Jaccard >= t shares at least one token within each
+    // side's first |x| - ceil(t*|x|) + 1 tokens, so joining on (lang, band,
+    // prefix token) loses NO qualifying pair (the oracle brute-forces
+    // within bands and the result sets match) while the candidate count is
+    // bounded by token co-occurrence instead of band population².
+    // FP slack: the thresholds are doubles (fl(0.8)*5 = 4.0000000000000004),
+    // so every ceil/compare subtracts 1e-9 — conservatively slack; the
+    // exact filter at the end removes the extra candidates.
+    val prefix = rarestFirst(base, Seq("doc_id", "lang", "band"))
       .filter(col("r") <=
         col("n_toks") - ceil(lit(minJaccard) * col("n_toks") - lit(1e-9)) + 1)
-      .select("doc_id", "lang", "band", "token", "n_toks", "r")
       // read by both sides of the candidate join
-      .transform(df => lin.tracked(df, eager = eagerCkpt)._1)
+      .transform(df => lin.tracked(df, eager = eager)._1)
 
     // Asymmetric prefixes (PPJoin, Xiao et al. WWW'08): orient each pair so
     // side b is the SMALLER document ((n, id) lexicographic tie-break) —
@@ -1215,156 +1025,30 @@ object Similarity {
       .withColumn("band",
         explode(array(col("b_band") - 1, col("b_band"), col("b_band") + 1)))
       .drop("b_band")
-    // candidate ids only — token arrays stay out of the quadratic-ish join.
-    // Two more PPJoin prunes, both applied INSIDE the join (before the
-    // dedup shuffle), both lossless:
-    //  - size filter: J(A,B) <= min/max, so t*|A| <= |B| <= |A|/t;
-    //  - positional filter: a qualifying pair needs overlap
-    //    alpha = ceil(t/(1+t) * (|A|+|B|)), and its FIRST common token (in
-    //    the global frequency order) provably sits within BOTH prefixes, at
-    //    positions (r_a, r_b) with overlap <= 1 + min(|A|-r_a, |B|-r_b).
-    //    Testing that bound >= alpha on EVERY matched-token row is safe:
-    //    the first-common-token row of any qualifying pair passes it.
-    // Without these, shared-vocabulary corpora go quadratic on frequent
-    // prefix tokens (measured 52x time at 10x corpus; with them, the
-    // candidate stream stays proportional to true near-dup volume).
+    // Candidate ids only — token arrays stay out of the expansion join.
+    // Lossless prunes inside the join, before the dedup shuffle: the size
+    // filter J(A,B) <= min/max, so t*|A| <= |B|; and the positional filter
+    // on the first common token ([[firstCommonTokenPairs]]) against the
+    // required overlap alpha = ceil(t/(1+t) * (|A|+|B|)). Without them
+    // shared-vocabulary corpora go quadratic on frequent prefix tokens.
     val alpha = ceil(
       lit(minJaccard / (1 + minJaccard)) * (col("n_a") + col("n_b")) - lit(1e-9))
-    // The pair-level dedup doubles as the FIRST-COMMON-TOKEN positional
-    // filter: for a qualifying pair the globally-first shared token t0 is
-    // inside both prefixes (proof above) and — both documents being sorted
-    // by the same (tf, token) order — t0 has the minimum r_a AND the
-    // minimum r_b among matched rows. So the packed per-side mins recover
-    // t0's exact positions and the positional bound is tested on t0, not on
-    // "some row" (the per-row variant keeps a pair if ANY matched row
-    // passes; this kills every pair whose true first common token sits too
-    // deep — strictly tighter, still lossless).
-    // EXPANSION-JOIN partitioning (the 100x lesson): AQE sizes post-shuffle
-    // partitions from the exchange's INPUT bytes, but this join expands its
-    // ~GB-scale prefix inputs into tens of GB of matched candidate rows —
-    // left to itself, AQE coalesces both sides to input-sized partition
-    // counts (measured: 33 partitions at a 100x corpus, 360 s max tasks,
-    // 16 GB of sort/agg spill, and the whole query superlinear at
-    // per-unit 2.2). An explicit repartition with a user-specified count
-    // marks the exchange non-coalescible, which AQE honors for the whole
-    // join. Same medicine on the verify joins below, whose outputs carry
-    // two token arrays per row. The count itself scales with the corpus
-    // when the caller passes `corpusRows` (a memoized table count — free):
-    // ~1 partition per 1k docs absorbs the measured ~2k-candidate-rows/doc
-    // expansion within ~2M-row tasks, and small corpora skip the fixed
-    // overhead of full-width shuffles (pinning the session cap at a 10x
-    // corpus measured +84% on this query). Capped at
-    // spark.sql.shuffle.partitions — the knob the caller already scales
-    // with the corpus; without the hint, that cap is used directly.
-    val cap = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val p = corpusRows
-      .map(n => math.max(1L, math.min(cap.toLong, n / 1000 + 1)).toInt)
-      .getOrElse(cap)
-    // Candidate-join strategy dial (r14). Three regimes:
-    //  - small corpora: the planner BROADCASTS the index side (it fits
-    //    under the broadcast threshold) — the best plan; a hint here would
-    //    defeat it (measured at sf0.1: hint forces SHJ and loses the
-    //    broadcast's no-shuffle probe side).
-    //  - large corpora: broadcast is impossible and the planner defaults
-    //    to sort-merge, which SORTS both shuffled inputs before streaming
-    //    the matched rows — pure overhead for this join, whose cost is
-    //    producing/filtering the matched-prefix stream, not ordering it.
-    //    SHUFFLE_HASH builds a per-partition hash map of the index side
-    //    instead: measured at a 10x corpus 16.4 vs 19.7 s end-to-end
-    //    (mins across 3 interleaved reps), at 100x see SCALE_r14. Build
-    //    size is bounded by construction: the explicit repartition keeps
-    //    ~1k docs' index prefixes per partition (~120k rows, single-digit
-    //    MB) regardless of corpus size, so the hash map never approaches
-    //    executor memory even at 1000x.
-    // The dial is the same corpus-sized gate as the eager-checkpoint one:
-    // hint only when the caller's corpusRows says broadcast is already
-    // out of reach (see shjGate — ONE helper governs this join, the
-    // containment expansion join, and the JaccardProbe mirror).
-    val bSide = if (shjGate(corpusRows)) b.hint("SHUFFLE_HASH") else b
-    val cand = a.repartition(p, col("lang"), col("band"), col("token"))
-      .join(bSide, Seq("lang", "band", "token"))
-      .filter(col("n_b") < col("n_a") ||
-        (col("n_b") === col("n_a") && col("doc_b") < col("doc_a")))
-      .filter(col("n_b") >= lit(minJaccard) * col("n_a") - lit(1e-9))
-      .filter(lit(1) + least(col("n_a") - col("r_a"), col("n_b") - col("r_b")) >= alpha)
-      // PACKED pair dedup (round-11): this agg's exchange is the
-      // pipeline's largest by far (ShuffleProbe at a 10x corpus: 1.2 GB /
-      // 57M rows — vs ~4 MB for the corpus arrays), so its ROW WIDTH is
-      // the lever. Two facts let each side collapse to ONE long:
-      //  - n is CONSTANT per (pair, side), so first(n) == min(n);
-      //  - the matched ranks are ORDER-ISOMORPHIC across sides (both
-      //    docs sort by the same global (tf, token) order, so a matched
-      //    token preceding another in A precedes it in B too) — min(r_a)
-      //    and min(r_b) are attained by the SAME row, the first common
-      //    token t0 (the previous min_by(r_b, r_a) was therefore just
-      //    min(r_b), extremum buffer wasted).
-      // Pack (n << 32 | r): n constant per group makes the packed min
-      // order BY r, so min(packed) == (n << 32 | r(t0)) exactly — two
-      // plain 8-byte min buffers instead of two firsts (value+seen flag)
-      // + a min + a min_by (value+ordering), roughly halving the
-      // dominant shuffle's row width. Unpack is a narrow projection.
-      // No overflow: n <= 2^31-1 so n<<32 < 2^63; 1 <= r <= n < 2^32.
-      .select(col("doc_a"), col("doc_b"),
-        (shiftleft(col("n_a").cast("long"), 32) + col("r_a")).as("pka"),
-        (shiftleft(col("n_b").cast("long"), 32) + col("r_b")).as("pkb"))
-      .groupBy("doc_a", "doc_b")
-      .agg(min(col("pka")).as("pka"), min(col("pkb")).as("pkb"))
-      .select(col("doc_a"), col("doc_b"),
-        shiftright(col("pka"), 32).as("n_a"),
-        col("pka").bitwiseAND(lit(0xFFFFFFFFL)).as("fa"),
-        shiftright(col("pkb"), 32).as("n_b"),
-        col("pkb").bitwiseAND(lit(0xFFFFFFFFL)).as("fb"))
-      .filter(lit(1) + least(col("n_a") - col("fa"), col("n_b") - col("fb")) >= alpha)
+    val p = expansionPartitions(docs.sparkSession, corpusRows)
+    val cand = firstCommonTokenPairs(
+        candidateJoin(a, b, Seq("lang", "band", "token"), p, corpusRows)
+          .filter(col("n_b") < col("n_a") ||
+            (col("n_b") === col("n_a") && col("doc_b") < col("doc_a")))
+          .filter(col("n_b") >= lit(minJaccard) * col("n_a") - lit(1e-9)),
+        alpha)
       .select("doc_a", "doc_b")
 
-    // merge-intersection over the sorted hash arrays — see the base-build
-    // comment for why this is value-identical to string-set Jaccard
     val jac = {
       import org.apache.spark.sql.GraftColumnBridge.{column, expression}
       column(graft.expressions.JaccardSortedLongs(
         expression(col("hs_a")), expression(col("hs_b"))))
     }
-    // Verify-stage shuffle discipline (round-10; the r9 VERDICT's top
-    // lever — both arrays used to ride through two repartition+join
-    // shuffles). Two changes, both pure plan reshapes:
-    //  - ONE corpus-array exchange, reused: `baseArr` is repartitioned by
-    //    doc_id below the per-join alias projections, so both joins see
-    //    the required HashPartitioning through the alias
-    //    (PartitioningPreservingUnaryExecNode) and the two exchange
-    //    subtrees are canonically EQUAL (aliases and expr ids normalize
-    //    away). Mechanism, measured not assumed: under AQE the reuse is
-    //    invisible in the initial plan — it happens at stage
-    //    materialization, when the second branch hits the runtime stage
-    //    cache and the FINAL adaptive plan carries a ReusedExchange over
-    //    the corpus branch (ExchangeReuseSpec executes this operator and
-    //    asserts exactly that; r10 wrongly credited the static
-    //    ReuseExchange rule, which never runs under AQE). With AQE off
-    //    the static ReuseExchangeAndSubquery rule applies the same
-    //    canonicalized-subtree match, which is why the PLANS.md digest
-    //    (taken AQE-off) shows reuse>=1 here. Either way the corpus
-    //    arrays shuffle once, not twice. Measured magnitude
-    //    (ShuffleProbe A/B, spark.sql.exchange.reuse on/off, 10x corpus):
-    //    identical wall, 1216 vs 1220 MB shuffle write — the SYNTHETIC
-    //    corpus's ~30-token docs make the hs arrays ~4 MB total, while
-    //    the candidate stream carries 56.8M rows / 1.2 GB. The discipline
-    //    is sized for real corpora, where hs is hundreds-to-thousands of
-    //    hashes per doc (100x the synthetic width) and the duplicated
-    //    corpus exchange would be a material fraction of verify bytes.
-    //  - the SMALL side's array is the only pair-expanded payload to
-    //    cross an exchange: hs_b (candidates orient b as the smaller doc,
-    //    n_b <= n_a) is fetched first and travels through the doc_a
-    //    re-key; hs_a joins in last and is consumed by the jaccard
-    //    projection inside the same stage, never entering an exchange.
-    //    At minJaccard = 0.5 the b-side prefix bound gives
-    //    sum(n_b) <= sum(n_a), typically ~25% fewer payload bytes, on
-    //    top of the corpus-exchange halving.
-    val baseArr = base.select(col("doc_id"), col("hs"))
-      .repartition(p, col("doc_id"))
-    cand
-      .repartition(p, col("doc_b"))
-      .join(baseArr.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), Seq("doc_b"))
-      .repartition(p, col("doc_a"))
-      .join(baseArr.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), Seq("doc_a"))
+    // b is the smaller doc (n_b <= n_a), so its array rides the re-key
+    withTokenSets(cand, base, p, first = "b")
       .withColumn("jaccard", jac)
       .filter(col("jaccard") >= minJaccard)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
@@ -1393,31 +1077,24 @@ object Similarity {
     *    (the asymmetric one-side-prefixed variant of Xiao et al.'s
     *    prefix filter: the index side cannot be prefixed because its
     *    bound would need |A|, unknown at index time).
-    *  - the global order is rarest-first (tf, then token hash), so probe
-    *    prefixes hold each document's globally rarest tokens and the
+    *  - the global order is rarest-first ([[rarestFirst]]), so the
     *    candidate volume is Σ over prefix tokens of tf — bounded by true
-    *    co-occurrence, not corpus². Same shape that keeps the Jaccard
-    *    candidate stream linear per decade (tools/JaccardProbe).
+    *    co-occurrence, not corpus². The Jaccard candidate stream of the
+    *    same shape grows linearly per decade (SCALE_r9.json).
     *  - prunes inside the join, both conservatively slack (1e-9, cf. the
     *    FP-slack note in [[jaccardNearDupPairs]]) and therefore lossless:
     *    |B| >= need(A) (overlap can't exceed |B|), and the positional
     *    bound 1 + min(|A|−r_a, |B|−r_b) >= need(A) tested on the pair's
-    *    FIRST common token (recovered exactly by min/min_by over matched
-    *    rows — both sides sort by the same global order, so the first
-    *    common token minimizes both ranks; the proof in
-    *    [[jaccardNearDupPairs]] carries over verbatim).
+    *    FIRST common token ([[firstCommonTokenPairs]]).
     *
     * Verify is exact: |A ∩ B| by primitive merge-intersection over the
     * sorted xxhash64 token arrays ([[graft.expressions.IntersectSortedLongs]]
     * — the count directly, never reconstructed from a ratio), then
     * containment = inter / |A| compared as a double exactly like the
     * brute-force oracle. Same 64-bit collision risk class as the Jaccard
-    * pipeline (~7e-17/pair). Verify shuffle discipline matches the
-    * round-10 Jaccard shape: ONE corpus-array exchange reused by both
-    * joins, and the only pair-expanded array to cross an exchange is
-    * hs_a — the CONTAINED side, which the |A| <= |B|/t bound keeps the
-    * smaller side in the regime this operator exists for; hs_b joins in
-    * last and is consumed by the containment projection in-stage.
+    * pipeline (~7e-17/pair). The verify join fetches hs_a first — the
+    * CONTAINED side, which the |A| <= |B|/t bound keeps the smaller side in
+    * the regime this operator exists for.
     *
     * Output: (doc_a, doc_b, containment), ordered pairs, a ≠ b, same
     * lang; mutually-contained pairs appear in both directions. Empty
@@ -1446,27 +1123,13 @@ object Similarity {
       corpusRows: Option[Long] = None,
       minDocTokens: Long = 1L): DataFrame = {
     val lin = new Lineage(docs.sparkSession, mode)
-    // sorted distinct hash array — one hash pass per doc, shared by the
-    // token explode and both verify joins (lazy checkpoint, cf. the
-    // jaccard base-build note). Null tokens dropped before hashing.
-    val base = docs
-      .select(col("doc_id"), col("lang"),
-        sort_array(array_distinct(transform(
-          filter(col("toks"), _.isNotNull), xxhash64(_)))).as("hs"))
-      .withColumn("n_toks", size(col("hs")))
+    // shared by the token explode and both verify joins
+    val base = hashedTokenSets(docs, col("doc_id"), col("lang"))
       .filter(col("n_toks") > 0)
       .transform(df => lin.tracked(df, eager = false)._1)
-
-    val toksExp = base.select(col("doc_id"), col("lang"), col("n_toks"),
-      explode(col("hs")).as("token"))
-    val freq = toksExp.groupBy("token").agg(count(lit(1)).as("tf"))
-    val wDoc = Window.partitionBy("doc_id").orderBy(col("tf"), col("token"))
-    // full per-doc ranks under the global rarest-first order: the probe
-    // side filters to its prefix; the index side keeps every token unless
-    // the caller asserts a size floor (minDocTokens — scaladoc proof)
-    val ranked = toksExp.join(freq, Seq("token"))
-      .withColumn("r", row_number().over(wDoc))
-      .select("doc_id", "lang", "token", "n_toks", "r")
+    // full per-doc ranks: the probe side filters to its prefix; the index
+    // side keeps every token unless the caller asserts a size floor
+    val ranked = rarestFirst(base, Seq("doc_id", "lang"))
       .transform(df => lin.tracked(df, eager = false)._1)
 
     def need(nA: Column): Column = ceil(lit(minContainment) * nA - lit(1e-9))
@@ -1476,50 +1139,18 @@ object Similarity {
       .select(col("doc_id").as("doc_a"), col("lang"), col("token"),
         col("n_toks").as("n_a"), col("r").as("r_a"))
     // index prefix under the caller's size floor (no-op at the default
-    // m = 1: g = ceil(t − eps) = 1 keeps every rank r <= n_toks) —
-    // losslessness proof in the scaladoc
+    // m = 1: g = ceil(t − eps) = 1 keeps every rank r <= n_toks)
     val g = math.ceil(minContainment * minDocTokens - 1e-9).toLong
     val b = ranked
       .filter(col("r") <= col("n_toks") - lit(g) + 1)
       .select(col("doc_id").as("doc_b"), col("lang"), col("token"),
         col("n_toks").as("n_b"), col("r").as("r_b"))
 
-    // expansion-join partitioning: same AQE-coalescing opt-out and
-    // corpus-derived sizing as the jaccard candidate join
-    val cap = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val p = corpusRows
-      .map(n => math.max(1L, math.min(cap.toLong, n / 1000 + 1)).toInt)
-      .getOrElse(cap)
-    // same corpus-gated SHUFFLE_HASH dial as the jaccard candidate join
-    // (rationale and measurements there; shjGate is the one shared gate):
-    // avoid SMJ's input sorts once broadcast is out of reach;
-    // per-partition build stays ~1k docs' rows
-    val bSide = if (shjGate(corpusRows)) b.hint("SHUFFLE_HASH") else b
-    val cand = a.repartition(p, col("lang"), col("token"))
-      .join(bSide, Seq("lang", "token"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .filter(col("n_b") >= need(col("n_a")))
-      .filter(lit(1) + least(col("n_a") - col("r_a"), col("n_b") - col("r_b")) >=
-        need(col("n_a")))
-      // packed pair dedup — same two facts and the same (n << 32 | r)
-      // packing as the jaccard agg (see the proof there): n constant per
-      // (pair, side) and rank order isomorphic across sides, so two plain
-      // packed mins recover the first common token's exact positions at
-      // half the row width of the first/min/min_by form. This agg's
-      // exchange carries the full candidate stream (the index side is
-      // unprefixed absent a minDocTokens floor), so width matters even
-      // more here.
-      .select(col("doc_a"), col("doc_b"),
-        (shiftleft(col("n_a").cast("long"), 32) + col("r_a")).as("pka"),
-        (shiftleft(col("n_b").cast("long"), 32) + col("r_b")).as("pkb"))
-      .groupBy("doc_a", "doc_b")
-      .agg(min(col("pka")).as("pka"), min(col("pkb")).as("pkb"))
-      .select(col("doc_a"), col("doc_b"),
-        shiftright(col("pka"), 32).as("n_a"),
-        col("pka").bitwiseAND(lit(0xFFFFFFFFL)).as("fa"),
-        shiftright(col("pkb"), 32).as("n_b"),
-        col("pkb").bitwiseAND(lit(0xFFFFFFFFL)).as("fb"))
-      .filter(lit(1) + least(col("n_a") - col("fa"), col("n_b") - col("fb")) >=
+    val p = expansionPartitions(docs.sparkSession, corpusRows)
+    val cand = firstCommonTokenPairs(
+        candidateJoin(a, b, Seq("lang", "token"), p, corpusRows)
+          .filter(col("doc_a") =!= col("doc_b"))
+          .filter(col("n_b") >= need(col("n_a"))),
         need(col("n_a")))
       .select("doc_a", "doc_b", "n_a")
 
@@ -1528,13 +1159,7 @@ object Similarity {
       column(graft.expressions.IntersectSortedLongs(
         expression(col("hs_a")), expression(col("hs_b"))))
     }
-    val baseArr = base.select(col("doc_id"), col("hs"))
-      .repartition(p, col("doc_id"))
-    cand
-      .repartition(p, col("doc_a"))
-      .join(baseArr.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), Seq("doc_a"))
-      .repartition(p, col("doc_b"))
-      .join(baseArr.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), Seq("doc_b"))
+    withTokenSets(cand, base, p, first = "a")
       .withColumn("containment", inter.cast("double") / col("n_a"))
       .filter(col("containment") >= minContainment)
       .select(col("doc_a"), col("doc_b"), col("containment"))

@@ -114,7 +114,7 @@ object PortableSql {
   def cosine(a: String, b: String): String =
     s"""list_sum(list_transform(generate_series(1, len($a)), ci -> $a[ci] * $b[ci])) / (sqrt(list_sum(list_transform($a, cx -> cx * cx))) * sqrt(list_sum(list_transform($b, cx -> cx * cx))))"""
 
-  /** Squared L2 distance — sqrt-free (ordering-equivalent to l2Dist). */
+  /** Squared L2 distance — sqrt-free (ordering-equivalent to the L2 distance). */
   def l2Sq(a: String, b: String): String =
     s"list_sum(list_transform(generate_series(1, len($a)), li -> ($a[li] - $b[li]) * ($a[li] - $b[li])))"
 
@@ -558,7 +558,7 @@ object PortableSql {
 
   /** q_sim_ivf: deterministic-sample IVF (first nCentroids corpus ids),
     * argmin-cell assignment, nProbe nearest cells per query, exact cosine
-    * top-k — mirrors Similarity.ivfTopK(refineIters = 0) stage by stage. */
+    * top-k — mirrors Similarity.ivfTopK stage by stage. */
   def ivfOracle(nCentroids: Int, nProbe: Int, topK: Int): String =
     s"""WITH q AS (SELECT vec_id AS q_id,
                           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv

@@ -47,7 +47,7 @@ object SimilarityQueries {
     * (vec_id, v) with v the [[extendDim]] extension of the stored 64-dim
     * embedding. Built ONCE per query invocation, eagerly, because the
     * consumers (gated knnGraph seed + each NN-descent round) read the
-    * corpus from up to ten plan branches (quantCodes per round, the two
+    * corpus from up to ten plan branches (the int8 codes per round, the two
     * float-fetch joins per round, both seed sides) and the derivation is
     * the expensive part of the scan at dim=768: the extension + int8
     * quantize are interpreted higher-order-function passes (~1.5k element
@@ -197,9 +197,9 @@ object SimilarityQueries {
     // (recall vs brute force measured in ScaleUpSpec / SCALE artifacts).
     // Fully deterministic, so the oracle replays the round exactly.
     // prescoreFactor stays 0 here ON MEASUREMENT: the int8 gate
-    // (nnDescentRound's dial, tools/NnDescentAB) trades two extra joins +
-    // a per-src window for an 8x-narrower candidate exchange, and at
-    // dim=64/k=5 on page-cached local shuffle the A/B puts the gate
+    // (nnDescentRound's dial, SCALE_r16.json `nndescent_ab`) trades two
+    // extra joins + a per-src window for an 8x-narrower candidate exchange,
+    // and at dim=64/k=5 on page-cached local shuffle the A/B puts the gate
     // SLOWER at every probed scale (100x round min 9.5 s gated vs 7.5 s
     // exact; 1x steady 3.6 vs 2.7) — the exchange it narrows is cheaper
     // than the stages it adds. The dial exists for the geometry where it
@@ -393,7 +393,7 @@ object SimilarityQueries {
 
     // IVF approximate top-k — the other scale path for ANN: nearest-centroid
     // partitioning, nProbe-cell search. Every stage is deterministic
-    // (refineIters = 0 sample, argmin ties by centroid id), so the DuckDB
+    // (first-C centroid sample, argmin ties by centroid id), so the DuckDB
     // oracle replays it stage by stage (PortableSql.ivfOracle). Cross-engine
     // float-ranking ties: argmin gaps over 16 random centroids are O(0.1) —
     // same accepted risk class as the jaccard band-boundary note.

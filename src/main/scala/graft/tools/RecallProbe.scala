@@ -142,7 +142,8 @@ object RecallProbe {
     (1 to rounds).foreach { r =>
       val (next, wall) = timed {
         // exact rounds — mirrors the registered q_sim_nndescent (the int8
-        // pre-score dial measured slower at this dim/scale, see NnDescentAB)
+        // pre-score dial measured slower at this dim/scale, SCALE_r16.json
+        // `nndescent_ab`)
         Similarity.nnDescentRound(g, emb, k = k).localCheckpoint(true)
       }
       g = next

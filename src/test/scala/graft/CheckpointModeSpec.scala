@@ -81,6 +81,31 @@ class CheckpointModeSpec extends AnyFunSuite with SparkTest {
     assert(checkpointFilesUnder(dir) > 0, "no reliable checkpoint files written")
   }
 
+  test("jaccardNearDupPairs: past 100k docs the shared subtrees checkpoint eagerly, same pairs") {
+    val docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("lang"), col("n_chars"),
+        graft.functions.TextFunctions.tokens(col("text")).as("toks"))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_a", "doc_b")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    // reliable checkpoints make the construction-time work observable:
+    // the eager branch writes the prefix checkpoint before any action, the
+    // lazy one leaves it to the first action (under AQE, planning the
+    // prefix already runs its map stages and so writes the base)
+    val lazyDir = reliableDir("jac-lazy")
+    val lazyPairs = Similarity.jaccardNearDupPairs(docs, minJaccard = 0.5,
+      mode = CheckpointMode.Reliable(lazyDir))
+    val lazyFiles = checkpointFilesUnder(lazyDir)
+    val eagerDir = reliableDir("jac-eager")
+    val eagerPairs = Similarity.jaccardNearDupPairs(docs, minJaccard = 0.5,
+      mode = CheckpointMode.Reliable(eagerDir), corpusRows = Some(200000L))
+    assert(checkpointFilesUnder(eagerDir) > lazyFiles,
+      "corpusRows > 100k must materialize the shared subtrees while the frame is built")
+    val expected = pairs(lazyPairs)
+    assert(expected.nonEmpty)
+    assert(pairs(eagerPairs) == expected)
+  }
+
   test("containmentNearDupPairs: reliable checkpoint pairs == localCheckpoint pairs") {
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"),

@@ -330,6 +330,47 @@ class ScaleOpsSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("nnDescentRound survivor fetch dial: SHUFFLE_HASH build sides keyed on src and dst past the corpus gate") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    val emb = (0L until 30L)
+      .map(i => (i, Seq.tabulate(8)(d => math.sin(i * 7.0 + d) + 0.1)))
+      .toDF("vec_id", "v")
+    val graph = (0L until 30L)
+      .flatMap(i => Seq(1L, 2L).map(o => (i, (i + o) % 30L, 0.5)))
+      .toDF("src", "dst", "cos")
+    // AQE off: the adaptive root hides its initial plan from collect()
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
+      def shjs(rows: Long) = Similarity.nnDescentRound(graph, emb, k = 3,
+          prescoreFactor = 3, corpusRows = Some(rows))
+        .queryExecution.executedPlan.collect { case j: ShuffledHashJoinExec => j }
+      // each build side is the code or vector table, explicitly
+      // repartitioned on the join key it is fetched by (the dst side reuses
+      // the src side's exchange under its own attribute names)
+      def byNum(e: SparkPlan) = e match {
+        case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_NUM
+        case _ => false
+      }
+      val buildKeys = shjs(20000L).flatMap { j =>
+        val build = if (j.buildSide == BuildRight) j.right else j.left
+        build.collectFirst {
+          case e: ShuffleExchangeExec if byNum(e) => e.outputPartitioning
+          case r: ReusedExchangeExec if byNum(r.child) => r.outputPartitioning
+        }.collect { case HashPartitioning(Seq(a: Attribute), _) => a.name }
+      }
+      assert(buildKeys.sorted == Seq("dst", "dst", "src", "src"),
+        s"codes and vectors must each be fetched on src and on dst: $buildKeys")
+      assert(shjs(100L).isEmpty, "below the gate the planner default must stand")
+    }
+  }
+
   test("q_dedup_url keeper rule: longest doc wins, length ties to smallest id, one agg (no window)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

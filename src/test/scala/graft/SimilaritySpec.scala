@@ -71,24 +71,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert((0L until 3L).forall(q => approx.contains((q, q))))
   }
 
-  test("k-means refines centroids toward cluster means") {
-    import spark.implicits._
-    // two tight clusters around distinct anchors
-    val a = vec(1, 16); val b = vec(2, 16).map(_ + 3.0)
-    val corpus = ((0 until 10).map(i =>
-      (i.toLong, a.zipWithIndex.map { case (x, d) => x + 0.01 * ((i + d) % 3) })) ++
-      (10 until 20).map(i =>
-        (i.toLong, b.zipWithIndex.map { case (x, d) => x + 0.01 * ((i + d) % 3) })))
-      .toDF("vec_id", "cv")
-    val refined = Similarity.kmeansCentroids(corpus, nCentroids = 2, iterations = 3)
-      .collect().map(r => r.getSeq[Double](1)).sortBy(_.sum)
-    // after refinement, one centroid sits near each cluster mean
-    def dist(u: Seq[Double], v: Seq[Double]) =
-      math.sqrt(u.zip(v).map { case (x, y) => (x - y) * (x - y) }.sum)
-    assert(dist(refined(0), a) < 0.5, s"centroid0 far from cluster A")
-    assert(dist(refined(1), b) < 0.5, s"centroid1 far from cluster B")
-  }
-
   test("LSH at 10x corpus: derived bits + multi-probe keep recall, bound buckets") {
     import spark.implicits._
     // 10x the original recall fixture: 450 random vectors + 25 planted pairs
@@ -437,31 +419,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(rGated >= rSeed, s"gated round lost recall vs seed: $rSeed -> $rGated")
     assert((rGated - rRef).abs <= 0.1,
       s"gate should be ordering-only at factor 3: exact=$rRef gated=$rGated")
-  }
-
-  test("semanticDedup drops in-cell near-dups, keeps min id and distinct vectors") {
-    import spark.implicits._
-    val originals = (0L until 20L).map(i => (i, vec(i.toInt + 50, 32)))
-    // near-identical copies of vectors 3 and 7: same cell by construction
-    // (assignment is argmin over the same centroids), must be dropped
-    val copies = Seq((103L, nearDup(vec(53, 32))), (107L, nearDup(vec(57, 32))))
-    val emb = (originals ++ copies).toDF("vec_id", "cv")
-    val kept = Similarity.semanticDedup(emb, nCentroids = 4, tau = 0.999)
-      .collect().map(_.getLong(0)).toSet
-    assert(!kept.contains(103L) && !kept.contains(107L), kept.toString)
-    (0L until 20L).foreach(i => assert(kept.contains(i), s"original $i dropped"))
-    // every survivor carries its cell id; cells come from the centroid ids
-    val cells = Similarity.semanticDedup(emb, nCentroids = 4, tau = 0.999)
-      .collect().map(_.getLong(1)).toSet
-    assert(cells.subsetOf(Set(0L, 1L, 2L, 3L)), cells.toString)
-  }
-
-  test("semanticDedup on an empty corpus returns an empty (vec_id, c_id) frame") {
-    import spark.implicits._
-    val emb = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "cv")
-    val out = Similarity.semanticDedup(emb, nCentroids = 4, tau = 0.9)
-    assert(out.columns.toSeq == Seq("vec_id", "c_id"))
-    assert(out.count() == 0)
   }
 
   // ---- the corpus-scaled radix-rank-tree variant -----------------------
