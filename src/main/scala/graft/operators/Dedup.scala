@@ -7,57 +7,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Contraction algorithm for [[Dedup.duplicateClusters]]. Both converge to
-  * the same (id, root=component-min) labeling; they differ in per-round
-  * shuffle volume on long-chain / high-diameter graphs. */
-sealed trait CcAlgorithm
-
-object CcAlgorithm {
-  /** Rastogi et al. hash-to-min: every node ships its closed neighborhood
-    * to its current minimum each round. Simple, O(log n) rounds, but the
-    * intermediate graph can briefly GROW (each round re-emits full
-    * neighborhoods both ways) before the stars collapse. */
-  case object HashToMin extends CcAlgorithm
-
-  /** Kiveris et al., "Connected Components in MapReduce and Beyond"
-    * (SoCC 2014): alternate large-star (strictly larger neighbors hook to
-    * the neighborhood minimum) and small-star (smaller neighbors collapse
-    * onto the minimum). Each emitted edge strictly decreases a potential,
-    * so the edge set only ever shrinks toward the star fixpoint — no
-    * transient blow-up, and the per-round shuffle carries one edge per
-    * input edge instead of a full symmetrized neighborhood. */
-  case object TwoPhaseStar extends CcAlgorithm
-
-  /** Size-dispatched hybrid: the canonical edge set is materialized and
-    * counted once either way (both algorithms need it for round-shuffle
-    * sizing), so the dispatch is free — below `threshold` edges run
-    * [[HashToMin]], at or above it [[TwoPhaseStar]].
-    *
-    * The round-8 shootout that motivated this knob also emptied its
-    * default: the round-7 1x hash-to-min advantage (2.7 s vs 3.4 s) was
-    * an artifact of hash-to-min skipping the canonical distinct and
-    * shuffling raw duplicate pairs; with the edge build shared (this
-    * refactor), two-phase star won every measured scale — 5k edges
-    * (2.6 s vs 3.4 s), 0.5M (4.2 s vs 4.8 s), and the 29M-edge 100x
-    * corpus (5x). Hence `DefaultThreshold = 0`: `Auto()` ≡ TwoPhaseStar,
-    * and the threshold remains a user lever for graph shapes unlike
-    * near-dup clique forests (where hash-to-min's single shuffle phase
-    * per round might win back the fixed two-phase stage cost). */
-  final case class Auto(threshold: Long = Auto.DefaultThreshold) extends CcAlgorithm
-
-  object Auto {
-    /** Round-8 measured outcome: no scale where hash-to-min wins once the
-      * canonical edge build is shared, so the dispatch defaults to
-      * two-phase star everywhere. */
-    val DefaultThreshold: Long = 0L
-  }
-}
-
 /** Deduplication operators — exact family (SURVEY.md §2.7, §2.10; the
-  * near-dup family lives in graft.functions.MinHash / SimHash).
+  * near-dup family lives in graft.functions.MinHash / SimHash) plus the
+  * pairs → clusters resolution.
   *
-  * All shapes are a single hash shuffle on the dedup key — the only scan
-  * pattern that survives 100 TB. Nothing collects to the driver.
+  * The exact shapes are a single hash shuffle on the dedup key — the only
+  * scan pattern that survives 100 TB. The only driver collects are the
+  * finishes of [[Dedup.duplicateClusters]], bounded at
+  * [[Dedup.DriverFinishEdges]] two-long edges (≤ 16 MB).
   */
 object Dedup {
 
@@ -118,9 +75,9 @@ object Dedup {
 
   /** Resolve near-dup PAIRS into duplicate CLUSTERS: connected components
     * by iterative contraction. Input: (doc_a, doc_b) pairs; output:
-    * (id, root) with root = smallest id in the component; both algorithms
-    * produce identical labelings (parity-tested on chains, cliques and
-    * seeded random graphs — SimilaritySpec).
+    * (id, root) with root = smallest id in the component; every path below
+    * produces the same labeling (SimilaritySpec checks each against a
+    * union-find reference on chains, cliques and seeded random graphs).
     *
     * Self-pairs (doc_a == doc_b) are dropped with the canonical edge
     * build, so a node appearing ONLY in self-pairs gets no output row
@@ -129,20 +86,13 @@ object Dedup {
     * pair producers — jaccardNearDupPairs, minhashCandidatePairs and
     * lshBucketJoin all emit strictly `a < b` pairs.
     *
-    * Default is [[CcAlgorithm.Auto]], which resolves to
-    * [[CcAlgorithm.TwoPhaseStar]] (Kiveris et al. 2014) at every scale
-    * (see Auto's scaladoc for the round-8 shootout): its edge multiset
-    * only ever shrinks, which wins decisively on the dense clique graphs
-    * real near-dup corpora produce — measured on a 29M-pair 100x corpus,
-    * 53 s vs 262 s for hash-to-min on identical checkpointed inputs, and
-    * ahead at 5k/0.5M edges too once both algorithms share the canonical
-    * edge build.
-    * [[CcAlgorithm.HashToMin]] (Rastogi et al.) stays selectable: each
-    * round ships every node's closed neighborhood to its current minimum,
-    * which transiently RE-EXPANDS the working graph on dense components —
-    * the very case dedup clustering exists for. Both run O(log n) rounds;
-    * both use a cheap monotone fixpoint probe per round instead of a
-    * compare-join. Star centers make the groupBy key skewed by design.
+    * Large residuals run two-phase star contraction (Kiveris et al., SoCC
+    * 2014), whose edge set only ever shrinks: with the edge build shared,
+    * it beat hash-to-min at 5k, 0.5M and 29M edges (5x on the last). The
+    * loop runs O(log n) rounds with a cheap monotone fixpoint probe per
+    * round instead of a compare-join, and throws IllegalStateException if
+    * `maxIter` rounds end without a fixpoint — truncated labels would be
+    * wrong clusters. Star centers make the groupBy key skewed by design.
     * Since the round shuffles are explicit repartitions on the key (the
     * AQE-coalescing opt-out, see roundPartitions), the exchange runs
     * BEFORE partial aggregation — raw edge rows shuffle and a giant
@@ -161,7 +111,7 @@ object Dedup {
     * the whole price on a graph of that size.
     * Larger graphs take the pre-contraction hop, and a residual of at
     * most `driverFinishEdges` edges is again finished on the driver; only
-    * a larger residual runs `algo`'s distributed loop. The driver
+    * a larger residual runs the distributed star loop. The driver
     * finishes take integral ids (byte, short, int, long) and return them
     * in the input's type; other id types always run the loop.
     * `driverFinishEdges = 0` forces the loop (parity tests, fault
@@ -176,7 +126,6 @@ object Dedup {
       pairs: DataFrame,
       maxIter: Int = 20,
       mode: CheckpointMode = CheckpointMode.Local,
-      algo: CcAlgorithm = CcAlgorithm.Auto(),
       driverFinishEdges: Long = DriverFinishEdges): DataFrame = {
     val lin = new Lineage(pairs.sparkSession, mode)
     // Oriented edge rows, self-loops dropped — NOT deduplicated (round-9):
@@ -230,8 +179,8 @@ object Dedup {
     // Final label: root(v) = residualRoot(m(v)), else m(v). The hop does
     // NOT help high-diameter graphs (a chain contracts to a chain one
     // edge shorter), which is exactly why the star loop stays as the
-    // big-residual path. Parity with the un-contracted algorithms is
-    // spec-tested on chains, cliques and seeded random graphs
+    // big-residual path. Every path's labeling is spec-tested against a
+    // union-find reference on chains, cliques and seeded random graphs
     // (SimilaritySpec).
     //
     // Shuffle shape (round-11): the agg runs over the ORIENTED edges only,
@@ -336,27 +285,15 @@ object Dedup {
         (broadcast(labels), Set.empty[Int])
       } else {
         lastPath = "hop+loop"
-        val resolved = algo match {
-          case CcAlgorithm.Auto(thr) =>
-            if (edges1 < thr) CcAlgorithm.HashToMin else CcAlgorithm.TwoPhaseStar
-          case fixed => fixed
-        }
-        resolved match {
-          case CcAlgorithm.HashToMin =>
-            hashToMinClusters(e1, edges1, e1Ids, maxIter, lin)
-          case CcAlgorithm.TwoPhaseStar =>
-            twoPhaseStarClusters(e1, edges1, e1Ids, maxIter, lin)
-          case _: CcAlgorithm.Auto =>
-            throw new IllegalStateException("unreachable")
-        }
+        twoPhaseStarClusters(e1, e1Ids, maxIter, lin)
       }
     // Compose: every original node id keeps its labelsAll row; the
     // residual labeling (over m-images only) refines the root. Left join —
     // residual-isolated m-images keep root0 (proof above). The composed
     // result is materialized eagerly (node-sized — one narrow row per
     // node, cheap relative to the operator) so labelsAll's blocks AND the
-    // distributed residual path's final-round blocks (the helpers return
-    // the ids they left pinned — r10 ADVICE) can be RELEASED here instead
+    // distributed residual path's final-round blocks (the loop returns
+    // the ids it left pinned) can be RELEASED here instead
     // of surviving until GC: a long-lived session calling
     // duplicateClusters repeatedly no longer accumulates per-invocation
     // node maps or final residual frames in executor storage. The
@@ -427,89 +364,6 @@ object Dedup {
     math.max(1L, math.min(cap.toLong, rows / RoundRowsPerPartition + 1)).toInt
   }
 
-  /** `e`: the checkpointed canonical edge set from [[duplicateClusters]]
-    * ((u > v) oriented, distinct, no self-loops); `edges` its row count;
-    * `eIds` its pinned blocks (released once the symmetrized graph is
-    * materialized).
-    *
-    * Checkpoint (eager) on the loop-carried frames: truncates the
-    * logical plan each round — without it the plan nests the previous
-    * round's twice per round and analysis alone goes exponential.
-    *
-    * Block hygiene lives in Lineage: superseded round frames are
-    * unpersisted EXPLICITLY once their successor is materialized — at
-    * scale, letting maxIter copies of the edge set accumulate is a
-    * storage-memory leak.
-    *
-    * Returns the label frame plus the block ids its checkpoint pins — the
-    * CALLER releases them once it has materialized whatever it derives
-    * from the labels (otherwise they stay pinned until GC). */
-  private def hashToMinClusters(
-      e: DataFrame,
-      edges: Long,
-      eIds: Set[Int],
-      maxIter: Int,
-      lin: Lineage): (DataFrame, Set[Int]) = {
-    import lin.{release, tracked}
-    var (g, gIds) = tracked(
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(e.select(col("v").as("src"), col("u").as("dst"))),
-      eager = true)
-    release(eIds) // g is materialized; the canonical edge frame is dead
-    // Round-shuffle parallelism is sized from the CURRENT edge count (a
-    // cheap count over the just-checkpointed frame), not left to AQE —
-    // see roundPartitions. The count tracks the shrinking graph, so late
-    // tiny rounds run nearly shuffle-free while early huge rounds never
-    // pack a task beyond the row budget. The initial graph is exactly the
-    // canonical edges symmetrized: 2x the count already in hand.
-    var gRows = 2 * edges
-    def minMap(graph: DataFrame, np: Int): DataFrame =
-      graph.repartition(np, col("src")).groupBy("src").agg(min("dst").as("mnd"))
-        .select(col("src").as("id"), least(col("src"), col("mnd")).as("root"))
-    // Convergence probe: m(v) only ever shrinks, so the exact root sum is
-    // strictly monotone until the star fixpoint — one tiny aggregate per
-    // round replaces a compare-join against the previous mapping.
-    def rootSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("root").cast("decimal(38,0)"))).collect()(0).getDecimal(0)
-    var (labels, labelIds) =
-      tracked(minMap(g, roundPartitions(g, gRows)), eager = true)
-    var prevSum = rootSum(labels)
-    // empty pair set: sum over zero rows is NULL — nothing to contract
-    var converged = prevSum == null
-    var i = 0
-    while (!converged && i < maxIter) {
-      // hash-to-min re-emits closed neighborhoods both ways, so the next
-      // graph can transiently grow ~2x — sized into the budget below
-      val np = roundPartitions(g, 2 * gRows)
-      // hash-to-min round: v's neighborhood moves to m(v); keeping the
-      // (m(v), v) self edge is what lets every node keep (and later
-      // improve) its current minimum
-      val moved = g.repartition(np, col("src"))
-        .join(labels, g("src") === labels("id"))
-        .select(col("root").as("a"), g("dst").as("b"))
-        .unionAll(labels.select(col("root").as("a"), col("id").as("b")))
-        .filter(col("a") =!= col("b"))
-      val (gNext, gNextIds) = tracked(
-        moved.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(moved.select(col("b").as("src"), col("a").as("dst")))
-          .repartition(np, col("src"), col("dst"))
-          .dropDuplicates(),
-        eager = true)
-      gRows = gNext.count() // cheap: gNext is checkpointed
-      val (next, nextIds) =
-        tracked(minMap(gNext, roundPartitions(gNext, gRows)), eager = false)
-      val s = rootSum(next) // also materializes `next`
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      release(gIds ++ labelIds) // successors are materialized; drop ancestors
-      g = gNext; gIds = gNextIds
-      labels = next; labelIds = nextIds
-      i += 1
-    }
-    release(gIds) // the returned labels frame is checkpointed data
-    (labels, labelIds)
-  }
-
   /** Two-phase star contraction (Kiveris et al. 2014). The working set is
     * the canonical undirected edge list oriented (u > v); one round is
     * large-star followed by small-star:
@@ -520,26 +374,27 @@ object Dedup {
     *    neighbors collapse onto mn(u) = min of them — edges (v, mn(u)) for
     *    v ≠ mn(u), plus (u, mn(u)).
     *
-    * Every emitted edge has endpoints no larger than the edge it replaces
-    * (the paper's decreasing potential), so — unlike hash-to-min, whose
-    * symmetrized neighborhood re-emission transiently doubles the graph —
-    * the edge set is monotone shrinking, and both phases shuffle ONE row
-    * per edge (a groupBy plus a join back), not a full closed
-    * neighborhood. Fixpoint = union of stars centered on component minima;
+    * Invariant: every emitted edge has endpoints no larger than the edge
+    * it replaces (the paper's decreasing potential), so the edge set only
+    * ever shrinks and both phases shuffle ONE row per edge (a groupBy plus
+    * a join back). Fixpoint = union of stars centered on component minima;
     * detected when a round leaves the edge multiset unchanged (count +
     * endpoint sums + 64-bit hash sum — a false fixpoint needs a hash-sum
-    * collision at identical counts and endpoint sums, and truncation at
-    * `maxIter` degrades to best-effort labels exactly like hash-to-min).
+    * collision at identical counts and endpoint sums). No fixpoint after
+    * `maxIter` rounds throws IllegalStateException.
+    *
+    * Each phase's output is checkpointed eagerly — truncating the plan,
+    * which would otherwise nest the previous round's twice per round — and
+    * superseded round frames are released through [[Lineage]] once their
+    * successor is materialized.
     *
     * `e0`: the checkpointed canonical edge set from [[duplicateClusters]];
-    * `edges` its row count (seeds the first round's shuffle sizing);
     * `e0Ids` its pinned blocks. Returns the label frame plus the final
     * star frame's pinned block ids (the labels READ from those blocks
     * lazily — the caller must materialize its derivation first, then
-    * release; r10 ADVICE). */
+    * release). */
   private def twoPhaseStarClusters(
       e0: DataFrame,
-      edges: Long,
       e0Ids: Set[Int],
       maxIter: Int,
       lin: Lineage): (DataFrame, Set[Int]) = {
@@ -603,8 +458,14 @@ object Dedup {
       e = eNext; eIds = eNextIds
       i += 1
     }
-    // Stars to labels: children are the u side, roots the v side; the
-    // groupBy(min) also degrades gracefully if maxIter truncated the loop.
+    if (!converged) {
+      release(eIds)
+      throw new IllegalStateException(
+        s"duplicateClusters: star contraction found no fixpoint in maxIter = $maxIter " +
+          s"rounds (${prev.head} edges at the last probe); raise maxIter")
+    }
+    // Stars to labels: children are the u side, roots the v side (one
+    // (root, root) row per star edge, collapsed by the groupBy).
     (e.select(col("u").as("id"), col("v").as("root"))
       .unionAll(e.select(col("v").as("id"), col("v").as("root")))
       .groupBy("id").agg(min("root").as("root")),

@@ -61,14 +61,14 @@ object StringJoin {
     //     with it the vocabulary crosses a shuffle exactly twice (the
     //     join-backs), independent of maxDist.
     //
-    // Measured trade (tools/EditDistProbe A/B vs the string-carrying
-    // shape, 2M strings, d=1, output-identical by count+hash in both
-    // regimes): on the operator's real contract — diverse strings whose
-    // segments are near-unique (16-letter alphabet, 32-63 chars) — this
-    // shape is strictly better: 688 vs 1393 MB shuffle write (-51%), 8.2
-    // vs 13.1 s. On an adversarial LOW-ENTROPY vocabulary (6 letters,
-    // 8-23 chars: segment buckets collide massively and the candidate
-    // join goes quadratic-in-bucket) the bytes INVERT — 8.3 GB vs 0.6 GB
+    // Measured trade (A/B vs the string-carrying shape, 2M strings, d=1,
+    // output-identical by count+hash in both regimes): on the operator's
+    // real contract — diverse strings whose segments are near-unique
+    // (16-letter alphabet, 32-63 chars) — this shape is strictly better:
+    // 688 vs 1393 MB shuffle write (-51%), 8.2 vs 13.1 s. On an
+    // adversarial LOW-ENTROPY vocabulary (6 letters, 8-23 chars: segment
+    // buckets collide massively and the candidate join goes
+    // quadratic-in-bucket) the bytes INVERT — 8.3 GB vs 0.6 GB
     // — because the old shape's distinct grouped on the final strings,
     // letting Catalyst push the exact levenshtein BELOW the distinct's
     // exchange and kill collision junk pre-shuffle, where the id shape

@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
   * global single-partition window), but the classic
   * `df.rdd.zipWithIndex().map(Row...)` round-trip deserializes every row to
   * a GenericRow and drops whole-stage codegen / columnar execution for the
-  * rest of the stage — real money on a wide 100 TB ingest. This helper keeps
-  * the same two-job plan entirely in Catalyst:
+  * rest of the stage — real money on a wide ingest (60-column CSV: 1.0x at
+  * 150k rows, 1.31x at 600k, 1.65x at 1.5M; SCALE_r14.json
+  * `zipindex_wide_csv_ab`). This helper keeps the same two-job plan
+  * entirely in Catalyst:
   *
   *  1. `monotonically_increasing_id()` encodes (partitionIndex << 33 |
   *     rowInPartition) — Spark's documented layout: partition id in the

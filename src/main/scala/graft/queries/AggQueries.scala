@@ -317,7 +317,7 @@ object AggQueries {
       // column, t3's reads t2 — sequential WindowExecs over the SAME
       // partitioning, so no further exchange) and the final per-user agg,
       // zero joins. A/B'd against the staged-min-agg + join-chain shape
-      // (graft.tools.FunnelProbe, sf0.1): windows 0.18-0.22 s vs joins
+      // (sf0.1): windows 0.18-0.22 s vs joins
       // 0.30-0.36 s warm, identical output. Scale note: the one exchange
       // carries the full event stream (no map-side combine), while the
       // join chain shuffled clicks/purchases in full anyway (their stage

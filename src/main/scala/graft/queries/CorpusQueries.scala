@@ -36,10 +36,8 @@ object CorpusQueries {
       val words = Tables.documents(s, d)
         .select(explode(T.tokens(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("n"))
-      // batch=4: provably sequential-identical selection (Bpe.learnMerges
-      // guards), fewer driver round-trips — measured 64 -> 45 rounds at
-      // k=64 on the sf0.001 corpus, oracle-identical output here
-      graft.operators.Bpe.learnMerges(words, 6, batch = 4).orderBy("step").collect()
+      // the ~31-word vocabulary is under Bpe.DriverLearnWords: driver finish
+      graft.operators.Bpe.learnMerges(words, 6).orderBy("step").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
         .toSeq
     })

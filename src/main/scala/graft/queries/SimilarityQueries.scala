@@ -411,7 +411,7 @@ object SimilarityQueries {
 
     // Near-dup pairs resolved into duplicate CLUSTERS: connected components
     // over the jaccard pair graph via iterative star contraction
-    // (Dedup.duplicateClusters, two-phase star default — joins +
+    // (Dedup.duplicateClusters, two-phase star — joins +
     // aggregations only, O(log n) rounds). Oracle: the same closure via a
     // DuckDB recursive CTE — full transitive reachability, so a hash match
     // also proves the contraction ran to convergence.

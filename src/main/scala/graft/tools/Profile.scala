@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.functions.{TextFunctions => T}
-import graft.operators.{Bpe, CcAlgorithm, Dedup, Similarity}
+import graft.operators.{Bpe, Dedup, Similarity}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -86,29 +86,6 @@ object Profile {
     // motivated three "optimizations" that each made the end-to-end slower.
     // Time build vs count (above) instead; the build time IS the AQE
     // stage execution of whatever the operator checkpoints.
-    if (mode == "ccalgo") {
-      // contraction-algorithm shootout on identical checkpointed pairs:
-      // isolates CC iteration cost from pair generation. Order alternates
-      // per repeat so neither algorithm systematically pays JIT warmup.
-      val cached = Similarity.jaccardNearDupPairs(t, minJaccard = 0.5,
-        corpusRows = Some(Tables.rowCount(spark, sfDir, "documents")))
-        .select("doc_a", "doc_b").localCheckpoint(true)
-      println(s"[profile] n_pairs = ${cached.count()}")
-      val reps = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
-      (1 to reps).foreach { r =>
-        val order =
-          if (r % 2 == 1) Seq(CcAlgorithm.HashToMin, CcAlgorithm.TwoPhaseStar)
-          else Seq(CcAlgorithm.TwoPhaseStar, CcAlgorithm.HashToMin)
-        order.foreach(a =>
-          // driverFinishEdges = 0: the shootout measures the ALGORITHMS —
-          // the default driver union-find finish would absorb the residual
-          time(s"CC $a rep$r")(
-            Dedup.duplicateClusters(cached, algo = a, driverFinishEdges = 0L)
-              .count()))
-        time(s"CC driver-finish rep$r")(
-          Dedup.duplicateClusters(cached).count())
-      }
-    }
     if (mode == "bpe") {
       // production-k BPE sweep: rounds + wall per batch width at k from
       // SPARK_GRAFT_BPE_K (default 1024). Sequential (batch=1) is k

@@ -127,21 +127,40 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
   }
 
   /** duplicateClusters under the three driver-finish caps, as (path
-    * taken, id -> root): the default cap (early driver finish over the raw
-    * edges), raw - 1 non-self pair rows (one-hop contraction, then the
-    * residual driver finish — the contraction leaves at most raw - 1
-    * edges, since every edge into a component minimum becomes a loop) and
-    * 0 (contraction, then the distributed loop). A clique forest leaves no
-    * residual, so the last two stop after the hop. */
+    * taken, id -> root; one row per id is asserted): the default cap
+    * (early driver finish over the raw edges), raw - 1 non-self pair rows
+    * (one-hop contraction, then the residual driver finish — the
+    * contraction leaves at most raw - 1 edges, since every edge into a
+    * component minimum becomes a loop) and 0 (contraction, then the
+    * distributed loop). A clique forest leaves no residual, so the last
+    * two stop after the hop. */
   private def ccByCap(pairs: org.apache.spark.sql.DataFrame)
       : Seq[(String, Map[Long, Long])] = {
     import graft.operators.Dedup
     val raw = pairs.filter(col("doc_a") =!= col("doc_b")).count()
     Seq(Dedup.DriverFinishEdges, raw - 1, 0L).map { cap =>
-      val got = Dedup.duplicateClusters(pairs, driverFinishEdges = cap).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
+      val rows = Dedup.duplicateClusters(pairs, driverFinishEdges = cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      val got = rows.toMap
+      assert(got.size == rows.length, s"${Dedup.lastPath}: duplicate id rows")
       (Dedup.lastPath, got)
     }
+  }
+
+  /** Union-find reference for duplicateClusters: id -> component minimum
+    * over every endpoint of a non-self pair (union by min, so each root
+    * is its set's minimum). */
+  private def refCc(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else find(p)
+    }
+    pairs.filter { case (a, b) => a != b }.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
   }
 
   test("duplicateClusters: empty and self-pair-only inputs yield no labels") {
@@ -219,59 +238,55 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     runs.foreach { case (path, got) => assert(got == want, path) }
   }
 
-  test("duplicateClusters TwoPhaseStar ≡ HashToMin (chain, clique, pair)") {
+  test("duplicateClusters: every path == union-find reference (chain, clique, pair)") {
     import spark.implicits._
-    import graft.operators.{CcAlgorithm, Dedup}
-    val pairs = Seq(
+    val edges = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (10L, 12L), (11L, 12L),
-      (20L, 21L)).toDF("doc_a", "doc_b")
-    // driverFinishEdges = 0 forces the DISTRIBUTED loop (the default
-    // finishes a residual this small with driver union-find)
-    def run(a: CcAlgorithm) =
-      Dedup.duplicateClusters(pairs, algo = a, driverFinishEdges = 0L)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val star = run(CcAlgorithm.TwoPhaseStar)
-    assert(star == run(CcAlgorithm.HashToMin))
-    // every path of the default algorithm labels identically
-    val runs = ccByCap(pairs)
-    assert(runs.map(_._1) == Seq("driver", "hop+driver", "hop+loop"))
-    runs.foreach { case (path, got) => assert(got == star, path) }
-    assert(star == Map(
+      (20L, 21L))
+    val want = refCc(edges)
+    assert(want == Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L,
       20L -> 20L, 21L -> 20L))
+    val runs = ccByCap(edges.toDF("doc_a", "doc_b"))
+    assert(runs.map(_._1) == Seq("driver", "hop+driver", "hop+loop"))
+    runs.foreach { case (path, got) => assert(got == want, path) }
   }
 
-  test("duplicateClusters TwoPhaseStar ≡ HashToMin on a seeded random graph + long chain") {
+  test("duplicateClusters: every path == union-find reference on a seeded random graph + long chain") {
     import spark.implicits._
-    import graft.operators.{CcAlgorithm, Dedup}
     val rnd = new scala.util.Random(42)
     // 400 nodes, sparse random edges (many small components) + a diameter-120
     // chain over a disjoint id range (forces multi-round contraction) + dup
     // and self edges (must be ignored)
     val random = (1 to 300).map(_ => (rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
     val chain = (1000L to 1120L).sliding(2).map(s => (s.head, s.last)).toSeq
-    val pairs = (random ++ chain ++ Seq((5L, 5L), (1000L, 1001L)))
-      .toDF("doc_a", "doc_b")
+    val edges = random ++ chain ++ Seq((5L, 5L), (1000L, 1001L))
+    val want = refCc(edges)
+    val pairs = edges.toDF("doc_a", "doc_b")
       .filter(col("doc_a") =!= col("doc_b"))
-    // force the distributed loop: the pre-contraction's driver finish
-    // would otherwise absorb a graph this small
-    def run(a: CcAlgorithm) =
-      Dedup.duplicateClusters(pairs, algo = a, driverFinishEdges = 0L)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val star = run(CcAlgorithm.TwoPhaseStar)
-    assert(star == run(CcAlgorithm.HashToMin))
-    // the chain really contracted to its minimum
-    assert(star.filter(_._1 >= 1000L).forall(_._2 == 1000L))
-    // Auto dispatches by edge count; force BOTH branches over the same
-    // graph and require the fixed-algorithm labeling either way
-    assert(star == run(CcAlgorithm.Auto(threshold = 1L)))        // → TwoPhaseStar
-    assert(star == run(CcAlgorithm.Auto(threshold = Long.MaxValue))) // → HashToMin
-    // and every path of the default algorithm labels identically
     val runs = ccByCap(pairs)
     assert(runs.map(_._1) == Seq("driver", "hop+driver", "hop+loop"))
-    runs.foreach { case (path, got) => assert(got.toSeq.sorted == star, path) }
+    runs.foreach { case (path, got) =>
+      assert(got == want, path)
+      // the chain really contracted to its minimum
+      assert((1000L to 1120L).forall(got(_) == 1000L), path)
+    }
+  }
+
+  test("duplicateClusters throws when the star loop runs out of rounds") {
+    import spark.implicits._
+    import graft.operators.Dedup
+    // the diameter-120 chain needs several star rounds plus a confirming
+    // one; a single round must fail loudly, not return truncated labels
+    val chain = (1000L to 1120L).sliding(2).map(s => (s.head, s.last)).toSeq
+      .toDF("doc_a", "doc_b")
+    val err = intercept[IllegalStateException](
+      Dedup.duplicateClusters(chain, maxIter = 1, driverFinishEdges = 0L))
+    assert(Dedup.lastPath == "hop+loop")
+    assert(err.getMessage.contains("maxIter = 1"), err.getMessage)
+    assert(err.getMessage.matches(".*\\(\\d+ edges at the last probe\\).*"), err.getMessage)
   }
 
   test("duplicateClusters: Int and Long ids on the early-driver, residual-driver and loop paths") {
