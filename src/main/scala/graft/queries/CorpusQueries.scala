@@ -720,6 +720,7 @@ object CorpusQueries {
                ORDER BY pos""")) { (s, d) =>
       import graft.functions.Portable
       val docs = Tables.documents(s, d)
+      // unpartitioned window over `distinct source`: one row per source
       val srcIdx = docs.select("source").distinct()
         .withColumn("src_idx",
           (row_number().over(Window.orderBy("source")) - 1).cast("long"))

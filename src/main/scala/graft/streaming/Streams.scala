@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming surface — SURVEY.md §2.9.
   *
@@ -113,24 +113,18 @@ object Streams {
       key: String,
       updateCols: Seq[String],
       statePath: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     // seed only on first start; a restarted query resumes from the
     // generations its earlier batches wrote
-    if (listGens(initial.sparkSession, statePath).isEmpty)
+    if (listGens(initial.sparkSession, statePath, "gen=").isEmpty)
       initial.write.mode("overwrite").parquet(genDir(statePath, 0L))
+    // not `perBatch`: the merge reads its batch once, so caching it
+    // would only cost memory
     updates.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // newest generation at or below this batch id: on a replay after a
-        // crash the just-written gen=batchId+1 may exist but is ignored, so
-        // the merge re-runs from the same input state it saw the first time
-        val prev = latestGen(spark, statePath, atOrBelow = batchId)
-        val state = spark.read.parquet(genDir(statePath, prev))
-        val merged = graft.operators.Enrich.merge(state, batch, key, updateCols)
-        merged.write.mode("overwrite").parquet(genDir(statePath, batchId + 1))
-        pruneGens(spark, statePath, keepFrom = batchId)
-        ()
+        nextGen(batch.sparkSession, statePath, batchId)(
+          graft.operators.Enrich.merge(_, batch, key, updateCols))
       }
       .start()
   }
@@ -146,51 +140,116 @@ object Streams {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Only COMMITTED generations count: a directory is valid once Spark's
-    * file committer placed its _SUCCESS marker. A crash mid-write (the
-    * initial seed, or an overwrite that deleted the old files first)
-    * leaves no marker, so the partial directory is invisible — seeding
-    * re-runs, replays merge from the last good generation, and a
-    * concurrent [[mergeState]] reader never selects an in-flight one. */
-  private def listGens(spark: SparkSession, statePath: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(statePath)
-    val f = fs(spark, statePath)
+  /** The numbers N of the `<prefix>N` directories under `path` (`gen=` for
+    * the generation sinks, `batch=` for the per-batch ones). Only
+    * COMMITTED directories count: a directory is valid once Spark's file
+    * committer placed its _SUCCESS marker. A crash mid-write (the initial
+    * seed, or an overwrite that deleted the old files first) leaves no
+    * marker, so the partial directory is invisible — seeding re-runs,
+    * replays merge from the last good generation, and a concurrent
+    * [[mergeState]] reader never selects an in-flight one. */
+  private def listGens(spark: SparkSession, path: String, prefix: String): Seq[Long] = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val f = fs(spark, path)
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).toSeq
       .filter(_.isDirectory)
       .filter(s => f.exists(
         new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
       .map(_.getPath.getName)
-      .collect { case s if s.startsWith("gen=") => s.stripPrefix("gen=").toLong }
+      .collect { case s if s.startsWith(prefix) => s.stripPrefix(prefix).toLong }
   }
 
+  /** The error for state committed by batch ids the running query has not
+    * reached: the sink was restarted with a FRESH checkpoint (batch ids
+    * reset to 0) against existing state. Carrying on would silently
+    * re-apply or hide already-committed batches. */
+  private def mismatch(path: String, prefix: String, batchId: Long,
+      committed: Seq[Long]): String =
+    s"checkpoint/state mismatch under $path: batch id $batchId but " +
+      s"committed ${prefix}N are [${committed.sorted.mkString(", ")}] — the sink " +
+      "was restarted with a new checkpoint against existing state. " +
+      "Resume the ORIGINAL checkpointLocation to continue this state, " +
+      "or point the new checkpoint at fresh state paths."
+
   private def latestGen(spark: SparkSession, statePath: String, atOrBelow: Long): Long = {
-    val all = listGens(spark, statePath)
+    val all = listGens(spark, statePath, "gen=")
     val gens = all.filter(_ <= atOrBelow)
-    // A state table exists but every committed generation is NEWER than
-    // this batch id: the query was restarted with a FRESH checkpoint (batch
-    // ids reset to 0) against a statePath whose gen=0 was already pruned.
-    // Falling back to the newest gen would silently re-apply already-merged
-    // batches, so fail loudly with the actual operator error instead of an
-    // opaque require.
-    require(all.isEmpty || gens.nonEmpty,
-      s"checkpoint/state mismatch under $statePath: batch id $atOrBelow but " +
-        s"committed generations are [${all.sorted.mkString(", ")}] — the sink " +
-        "was restarted with a new checkpoint against an existing state table. " +
-        "Resume the ORIGINAL checkpointLocation to continue this state table, " +
-        "or point the new checkpoint at a fresh statePath.")
+    // every committed generation NEWER than this batch id means gen=0 was
+    // already pruned before a fresh-checkpoint restart
+    require(all.isEmpty || gens.nonEmpty, mismatch(statePath, "gen=", atOrBelow, all))
     require(gens.nonEmpty, s"no state generation <= $atOrBelow under $statePath")
     gens.max
   }
 
-  /** Drop generations older than `keepFrom`, keeping the merge input of the
-    * current batch so an interrupted write can still replay. */
-  private def pruneGens(spark: SparkSession, statePath: String, keepFrom: Long): Unit = {
-    val f = fs(spark, statePath)
-    listGens(spark, statePath).filter(_ < keepFrom).foreach { g =>
-      f.delete(new org.apache.hadoop.fs.Path(genDir(statePath, g)), true)
+  /** One generation step of batch `batchId`: `step` maps the newest
+    * generation at or below the batch id to `gen=<batchId+1>`, then
+    * generations older than the step's input are pruned. On a replay after
+    * a crash the just-written gen=batchId+1 may exist but is ignored, so
+    * the step re-runs from the same input state it saw the first time, and
+    * its input survives until the next batch commits. */
+  private def nextGen(spark: SparkSession, statePath: String, batchId: Long)(
+      step: DataFrame => DataFrame): Unit = {
+    val prev = latestGen(spark, statePath, atOrBelow = batchId)
+    step(spark.read.parquet(genDir(statePath, prev)))
+      .write.mode("overwrite").parquet(genDir(statePath, batchId + 1))
+    listGens(spark, statePath, "gen=").filter(_ < batchId).foreach { g =>
+      fs(spark, statePath).delete(new org.apache.hadoop.fs.Path(genDir(statePath, g)), true)
     }
   }
+
+  /** `f` over `df` cached; the cache is dropped however `f` ends. A batch
+    * that fails is replayed on restart, so a leaked cache would pin one
+    * more copy per failed attempt. */
+  private def cached[T](df: DataFrame)(f: DataFrame => T): T = {
+    val c = df.persist()
+    try f(c) finally c.unpersist()
+  }
+
+  /** The micro-batch protocol of every caching sink: an append-mode
+    * `foreachBatch` query on `input` (checkpointed at `checkpointLocation`
+    * when given) that hands `body` each batch, cached, with its batch id.
+    *
+    * Before `body` runs, each of `outputs` (a sink's `batch=<id>` tables)
+    * is checked against the batch id: a committed `batch=N` with N greater
+    * than the running batch id means the query was restarted on a fresh or
+    * absent checkpoint, and the batch fails with an IllegalStateException
+    * instead of hiding the later batches' state and overwriting earlier
+    * output. Known limit: while only `batch=0` is committed, a
+    * fresh-checkpoint restart is indistinguishable from a replay of batch 0
+    * and goes ahead. */
+  private def perBatch(input: DataFrame, checkpointLocation: Option[String],
+      outputs: Seq[String] = Nil)(body: (DataFrame, Long) => Unit): StreamingQuery =
+    checkpointLocation
+      .foldLeft(input.writeStream.outputMode("append"))(
+        (w, p) => w.option("checkpointLocation", p))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        outputs.foreach { path =>
+          val committed = listGens(batch.sparkSession, path, "batch=")
+          if (committed.exists(_ > batchId))
+            throw new IllegalStateException(mismatch(path, "batch=", batchId, committed))
+        }
+        cached(batch)(body(_, batchId))
+      }
+      .start()
+
+  /** The `batch=<id>` rows under `path` that `keep` selects, or None while
+    * nothing is readable there. Missing path OR no visible files yet (a
+    * crashed first batch leaves only batch=N/_temporary, which schema
+    * inference cannot read; a zero-row write can leave no part files) both
+    * raise AnalysisException at read time. Any OTHER failure (corrupt
+    * footer, permission, transient FS fault — these surface as Spark/IO
+    * exceptions, not AnalysisException) must FAIL the batch so the
+    * streaming replay retries it — swallowing it would silently treat the
+    * state as empty and re-admit dups. */
+  private def readBatches(spark: SparkSession, path: String, keep: Column): Option[DataFrame] =
+    (try Some(spark.read.parquet(path)) catch { case _: AnalysisException => None })
+      .map(_.filter(keep))
+
+  /** Write `df` as batch `batchId`'s directory under `path`; overwrite
+    * makes a replayed batch converge on its own earlier half-write. */
+  private def writeBatch(df: DataFrame, path: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$path/batch=$batchId")
 
   /** Streaming SCD2 maintenance: consume an append-only changelog stream
     * and keep a slowly-changing-dimension type-2 table up to date — the
@@ -221,55 +280,42 @@ object Streams {
       attrCols: Seq[String],
       statePath: String,
       checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val logCols = (keys :+ tsCol :+ tieCol) ++ attrCols
-    val writer = checkpointLocation.foldLeft(
-      changes.writeStream.outputMode("append"))(
-      (w, p) => w.option("checkpointLocation", p))
-    writer
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        val spark = batch0.sparkSession
-        val batch = batch0.select(logCols.map(col): _*).persist()
-        // finally-unpersist: a failure anywhere in the merge (state read,
-        // write, mismatch require) triggers foreachBatch retries — without
-        // the finally each retry would leak another cached copy
-        try {
-          // seed an empty gen=0 exactly once (schema = the operator's own)
-          if (listGens(spark, statePath).isEmpty)
-            graft.operators.Cdc
-              .scd2FromChangelog(batch.limit(0), keys, tsCol, tieCol, attrCols)
-              .write.mode("overwrite").parquet(genDir(statePath, 0L))
-          val prev = latestGen(spark, statePath, atOrBelow = batchId)
-          val state = spark.read.parquet(genDir(statePath, prev))
-          val touched = batch.select(keys.map(col): _*).distinct()
-          val closed = state.filter(col("valid_to").isNotNull)
-          val open = state.filter(col("valid_to").isNull)
-          val openUntouched = open.join(touched, keys, "left_anti")
-          val openTouched = open.join(touched, keys, "left_semi")
-          // drop late rows — late in the (tsCol, tieCol) TOTAL order, not
-          // just the timestamp: a row tied on ts but ordered before the open
-          // head would sort ahead of it in the mini changelog and manufacture
-          // a phantom version no full-log batch run would produce. Equality
-          // (a replay of the head row itself) stays: it collapses as an
-          // unchanged run.
-          val heads = openTouched.select(
-            keys.map(col) :+ col("valid_from").as("__head")
-              :+ col(tieCol).as("__headTie"): _*)
-          val fresh = batch.join(heads, keys, "left")
-            .filter(col("__head").isNull ||
-              col(tsCol) > col("__head") ||
-              (col(tsCol) === col("__head") && col(tieCol) >= col("__headTie")))
-            .drop("__head", "__headTie")
-          val rebuilt = graft.operators.Cdc.scd2FromChangelog(
-            fresh.unionByName(openTouched.select(logCols.map(col): _*)),
-            keys, tsCol, tieCol, attrCols)
-          closed.unionByName(openUntouched).unionByName(rebuilt)
-            .write.mode("overwrite").parquet(genDir(statePath, batchId + 1))
-          pruneGens(spark, statePath, keepFrom = batchId)
-        } finally batch.unpersist()
-        ()
+    perBatch(changes, checkpointLocation) { (changed, batchId) =>
+      val spark = changed.sparkSession
+      val batch = changed.select(logCols.map(col): _*)
+      // seed an empty gen=0 exactly once (schema = the operator's own)
+      if (listGens(spark, statePath, "gen=").isEmpty)
+        graft.operators.Cdc
+          .scd2FromChangelog(batch.limit(0), keys, tsCol, tieCol, attrCols)
+          .write.mode("overwrite").parquet(genDir(statePath, 0L))
+      nextGen(spark, statePath, batchId) { state =>
+        val touched = batch.select(keys.map(col): _*).distinct()
+        val closed = state.filter(col("valid_to").isNotNull)
+        val open = state.filter(col("valid_to").isNull)
+        val openUntouched = open.join(touched, keys, "left_anti")
+        val openTouched = open.join(touched, keys, "left_semi")
+        // drop late rows — late in the (tsCol, tieCol) TOTAL order, not
+        // just the timestamp: a row tied on ts but ordered before the open
+        // head would sort ahead of it in the mini changelog and manufacture
+        // a phantom version no full-log batch run would produce. Equality
+        // (a replay of the head row itself) stays: it collapses as an
+        // unchanged run.
+        val heads = openTouched.select(
+          keys.map(col) :+ col("valid_from").as("__head")
+            :+ col(tieCol).as("__headTie"): _*)
+        val fresh = batch.join(heads, keys, "left")
+          .filter(col("__head").isNull ||
+            col(tsCol) > col("__head") ||
+            (col(tsCol) === col("__head") && col(tieCol) >= col("__headTie")))
+          .drop("__head", "__headTie")
+        val rebuilt = graft.operators.Cdc.scd2FromChangelog(
+          fresh.unionByName(openTouched.select(logCols.map(col): _*)),
+          keys, tsCol, tieCol, attrCols)
+        closed.unionByName(openUntouched).unionByName(rebuilt)
       }
-      .start()
+    }
   }
 
   /** Lazily read the newest SCD2 state written by [[scd2Sink]]. */
@@ -303,19 +349,19 @@ object Streams {
     *
     * `docs` must be a streaming (id, shingles: array<string>) frame.
     *
-    * In-batch self-dedup is ON by default: a bursty micro-batch whose
-    * near-dups arrive TOGETHER would otherwise all pass the cross-batch
-    * probe and be admitted as a group. The batch's band table is
-    * self-joined and every id that is the LARGER partner of an in-batch
-    * band collision is dropped (keepFromPairs semantics — the batch's
-    * smallest id per collision cluster survives). Disable with
-    * `selfDedup = false` when the upstream already deduped the burst.
+    * In-batch self-dedup: a bursty micro-batch whose near-dups arrive
+    * TOGETHER would otherwise all pass the cross-batch probe and be
+    * admitted as a group. The batch's band table is self-joined and every
+    * id that is the LARGER partner of an in-batch band collision is
+    * dropped (keepFromPairs semantics — the batch's smallest id per
+    * collision cluster survives).
     *
     * `checkpointLocation`: replay-idempotency depends on STABLE batch ids;
-    * without a checkpoint, Spark uses a temp dir, a restart resets batchId
-    * to 0, and the `batch < batchId` state filter would exclude the whole
-    * persisted corpus while stale batch=N dirs linger. Pass a durable
-    * location in production (tests may omit it for single-run pipelines).
+    * without a checkpoint, Spark uses a temp dir and a restart resets
+    * batchId to 0. The shared runner then fails the batch with a
+    * checkpoint/state mismatch once a later `batch=N` is committed (see
+    * `perBatch`, including its batch-0 limit). Pass a durable location in
+    * production (tests may omit it for single-run pipelines).
     */
   def dedupIngestSink(
       docs: DataFrame,
@@ -323,57 +369,27 @@ object Streams {
       admittedPath: String,
       k: Int,
       nBands: Int,
-      selfDedup: Boolean = true,
       checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = checkpointLocation.foldLeft(
-      docs.writeStream.outputMode("append"))(
-      (w, p) => w.option("checkpointLocation", p))
-    writer
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.persist() // read twice: dup probe + admit anti-join
-        // batch band table computed ONCE, reused by the cross-batch probe,
-        // the self-join and the admitted-state write
-        val inBands = graft.operators.Similarity
-          .bandTable(b, k, nBands).persist()
-        // Missing state path OR no visible files yet (a crashed first
-        // batch leaves only batch=N/_temporary, which schema inference
-        // cannot read) = empty corpus; both raise AnalysisException at
-        // read time. Any OTHER failure (corrupt footer, permission,
-        // transient FS fault — these surface as Spark/IO exceptions, not
-        // AnalysisException) must FAIL the batch so the streaming replay
-        // retries it — swallowing it would silently treat the corpus as
-        // empty and re-admit dups.
-        val existingState =
-          try Some(spark.read.parquet(bandStatePath))
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        val crossDup = existingState match {
-          case None => b.limit(0).select(col("id"))
-          case Some(state) => state
-            .filter(col("batch") < batchId)
-            .select(col("id").as("matched_id"), col("band_idx"), col("band_hash"))
+      : StreamingQuery =
+    perBatch(docs, checkpointLocation, Seq(bandStatePath, admittedPath)) { (b, batchId) =>
+      // batch band table computed ONCE, reused by the cross-batch probe,
+      // the self-join and the admitted-state write
+      cached(graft.operators.Similarity.bandTable(b, k, nBands)) { inBands =>
+        val crossDup = readBatches(b.sparkSession, bandStatePath, col("batch") < batchId)
+          .map(_.select(col("id").as("matched_id"), col("band_idx"), col("band_hash"))
             .join(inBands, Seq("band_idx", "band_hash"))
-            .select("id")
-        }
-        val selfDup =
-          if (!selfDedup) b.limit(0).select(col("id"))
-          else inBands.select(col("id").as("id_a"), col("band_idx"), col("band_hash"))
-            .join(inBands, Seq("band_idx", "band_hash"))
-            .filter(col("id_a") < col("id"))
-            .select("id")
-        val dupIds = crossDup.unionAll(selfDup).distinct()
+            .select("id"))
+        val selfDup = inBands.select(col("id").as("id_a"), col("band_idx"), col("band_hash"))
+          .join(inBands, Seq("band_idx", "band_hash"))
+          .filter(col("id_a") < col("id"))
+          .select("id")
+        val dupIds = crossDup.fold(selfDup)(_.unionAll(selfDup)).distinct()
         val admitted = b.join(dupIds, Seq("id"), "left_anti")
-        inBands.join(admitted.select("id"), Seq("id"), "left_semi")
-          .write.mode("overwrite").parquet(s"$bandStatePath/batch=$batchId")
-        admitted.select("id")
-          .write.mode("overwrite").parquet(s"$admittedPath/batch=$batchId")
-        inBands.unpersist()
-        b.unpersist()
-        ()
+        writeBatch(inBands.join(admitted.select("id"), Seq("id"), "left_semi"),
+          bandStatePath, batchId)
+        writeBatch(admitted.select("id"), admittedPath, batchId)
       }
-      .start()
-  }
+    }
 
   /** All doc ids admitted by [[dedupIngestSink]] so far, with the batch
     * that admitted each. */
@@ -414,42 +430,22 @@ object Streams {
       matchedPath: String,
       unmatchedPath: Option[String] = None,
       checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = checkpointLocation.foldLeft(
-      arrivals.writeStream.outputMode("append"))(
-      (w, p) => w.option("checkpointLocation", p))
-    writer
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.persist() // read twice: resolve + quarantine anti-join
-        try {
-          graft.operators.Linkage
-            .resolveIncremental(canonical, b, canonicalId, dirtyId, blockCol,
-              fields, minScore)
-            .write.mode("overwrite").parquet(s"$matchedPath/batch=$batchId")
-          unmatchedPath.foreach { up =>
-            // anti-join against the JUST-WRITTEN matches (read back, not
-            // recomputed — the resolve's window ran once). A zero-match
-            // batch (every arrival below minScore or blockless) can leave
-            // NO visible part files under batch=<id> (with AQE an empty
-            // result plans to 0 partitions), and that read raises
-            // AnalysisException — unguarded it would fail the batch, and
-            // checkpoint replay would deterministically fail the same way,
-            // wedging the sink. Same empty-dir guard as dedupIngestSink's
-            // existing-state read: no matches = everything quarantines.
-            val matched =
-              (try Some(spark.read.parquet(s"$matchedPath/batch=$batchId"))
-              catch { case _: org.apache.spark.sql.AnalysisException => None })
-                .map(_.select(dirtyId))
-                .getOrElse(b.limit(0).select(dirtyId))
-            b.join(matched, Seq(dirtyId), "left_anti")
-              .write.mode("overwrite").parquet(s"$up/batch=$batchId")
-          }
-        } finally b.unpersist()
-        ()
+      : StreamingQuery =
+    perBatch(arrivals, checkpointLocation, matchedPath +: unmatchedPath.toSeq) { (b, batchId) =>
+      writeBatch(graft.operators.Linkage
+        .resolveIncremental(canonical, b, canonicalId, dirtyId, blockCol, fields, minScore),
+        matchedPath, batchId)
+      unmatchedPath.foreach { up =>
+        // anti-join against the JUST-WRITTEN matches (read back, not
+        // recomputed — the resolve's window ran once). A zero-match batch
+        // (every arrival below minScore or blockless) writes no readable
+        // matches, which reads as None: everything quarantines instead of
+        // failing the batch and wedging the checkpoint replay.
+        val matched = readBatches(b.sparkSession, matchedPath, col("batch") === batchId)
+          .map(_.select(dirtyId))
+        writeBatch(matched.fold(b)(b.join(_, Seq(dirtyId), "left_anti")), up, batchId)
       }
-      .start()
-  }
+    }
 
   /** All matches admitted by [[linkageIngestSink]] so far, with the batch
     * that admitted each. */
@@ -470,16 +466,13 @@ object Streams {
     * admitted store for the exact-cosine gate — admitted corpus buckets
     * are never recomputed and its vectors never rescanned wholesale.
     *
-    * Batch-id discipline is identical to dedupIngestSink: per-batch
-    * `batch=<id>` overwrite (crash replays converge), state reads exclude
-    * partitions >= the current batch id, AnalysisException-only
-    * empty-state fallback, and a durable `checkpointLocation` is required
-    * for restart idempotency (StreamingSpec proves the restart case for
-    * the doc sink; the mechanics here are the same code shape).
+    * Batch-id discipline, state reads and the checkpoint/state mismatch
+    * check are the dedup sink's: both run through the same `perBatch`
+    * runner and `readBatches` reader.
     *
-    * In-batch self-dedup (on by default): a burst of mutual near-dups
-    * admits only the smallest id per collision cluster via an in-batch
-    * multi-probe self-join. */
+    * In-batch self-dedup: a burst of mutual near-dups admits only the
+    * smallest id per collision cluster via an in-batch multi-probe
+    * self-join. */
   def embedIngestSink(
       vecs: DataFrame,
       bucketStatePath: String,
@@ -487,48 +480,25 @@ object Streams {
       dim: Int,
       nBits: Int,
       minCosine: Double,
-      selfDedup: Boolean = true,
       checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = checkpointLocation.foldLeft(
-      vecs.writeStream.outputMode("append"))(
-      (w, p) => w.option("checkpointLocation", p))
-    writer
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.persist()
-        try {
-          val sim = graft.operators.Similarity
-          val inBuckets = sim.bucketTable(b, dim, nBits).persist()
-          try {
-            def stateBefore(path: String): Option[DataFrame] =
-              (try Some(spark.read.parquet(path))
-              catch { case _: org.apache.spark.sql.AnalysisException => None })
-                .map(_.filter(col("batch") < batchId))
-            val crossDup = (stateBefore(bucketStatePath), stateBefore(admittedPath)) match {
-              case (Some(buckets), Some(store)) =>
-                sim.incrementalEmbedDedup(
-                    buckets.select("vec_id", "bucket"),
-                    store.select("vec_id", "v"),
-                    b, dim, nBits, minCosine)
-                  .select("id")
-              case _ => b.limit(0).select(col("vec_id").as("id"))
-            }
-            val selfDup =
-              if (!selfDedup) b.limit(0).select(col("vec_id").as("id"))
-              else sim.lshBucketJoin(b, dim, nBits, minCosine, multiProbe = true)
-                .select(col("id_b").as("id")) // larger partner drops
-            val dupIds = crossDup.unionAll(selfDup).distinct()
-            val admitted = b.join(
-              dupIds.select(col("id").as("vec_id")), Seq("vec_id"), "left_anti")
-            inBuckets.join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")
-              .write.mode("overwrite").parquet(s"$bucketStatePath/batch=$batchId")
-            admitted.select("vec_id", "v")
-              .write.mode("overwrite").parquet(s"$admittedPath/batch=$batchId")
-          } finally inBuckets.unpersist()
-        } finally b.unpersist()
-        ()
+      : StreamingQuery =
+    perBatch(vecs, checkpointLocation, Seq(bucketStatePath, admittedPath)) { (b, batchId) =>
+      val sim = graft.operators.Similarity
+      cached(sim.bucketTable(b, dim, nBits)) { inBuckets =>
+        def before(path: String) = readBatches(b.sparkSession, path, col("batch") < batchId)
+        val crossDup = for (buckets <- before(bucketStatePath); store <- before(admittedPath))
+          yield sim.incrementalEmbedDedup(
+              buckets.select("vec_id", "bucket"), store.select("vec_id", "v"),
+              b, dim, nBits, minCosine)
+            .select("id")
+        val selfDup = sim.lshBucketJoin(b, dim, nBits, minCosine, multiProbe = true)
+          .select(col("id_b").as("id")) // larger partner drops
+        val dupIds = crossDup.fold(selfDup)(_.unionAll(selfDup)).distinct()
+        val admitted = b.join(
+          dupIds.select(col("id").as("vec_id")), Seq("vec_id"), "left_anti")
+        writeBatch(inBuckets.join(admitted.select("vec_id"), Seq("vec_id"), "left_semi"),
+          bucketStatePath, batchId)
+        writeBatch(admitted.select("vec_id", "v"), admittedPath, batchId)
       }
-      .start()
-  }
+    }
 }

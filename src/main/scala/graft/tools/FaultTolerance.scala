@@ -3,8 +3,10 @@ package graft.tools
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{Bpe, CheckpointMode, Dedup}
-import org.apache.spark.sql.SparkSession
+import graft.streaming.Streams
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Fault-injection harness for [[CheckpointMode]]: runs a loop-carried
   * operator on a real multi-process cluster (`local-cluster[2,1,…]` —
@@ -47,6 +49,11 @@ import org.apache.spark.sql.functions._
   *    unfaulted reference run's, and the SRP bucket-state table must be
   *    CONSISTENT with the admitted store (exactly one bucket row per
   *    admitted vector — a half-written batch would break either side).
+  *  - `linkage`: Streams.linkageIngestSink over a file-source stream of
+  *    arrivals that each truncate one canonical record, with the same
+  *    input-gated kill and recovery — the faulted matched store must
+  *    equal an unfaulted reference run's. The sink is stateless across
+  *    batches, so the contract under test is per-batch overwrite alone.
   *
   * Expected behavior (FaultToleranceSpec asserts it from a subprocess):
   *  - `reliable`: the loop's round state lives in checkpoint FILES every
@@ -106,9 +113,8 @@ object FaultTolerance {
 
       val appId = spark.sparkContext.applicationId
 
-      // stream-op fixture dirs (cheap no-ops for cc/bpe)
-      val streamAdmitF =
-        java.nio.file.Files.createTempDirectory("graft-ft-admitF").toString
+      def tmp(tag: String): String =
+        java.nio.file.Files.createTempDirectory(s"graft-ft-$tag").toString
 
       /** SIGKILL every executor JVM of THIS app (matched by appId so a
         * concurrent Spark run is never hit) — unannounced process death,
@@ -138,9 +144,9 @@ object FaultTolerance {
         * lineage — observed, not hypothetical), which would make the spec
         * flaky. Mode-aware because the two modes keep round state in
         * different places: Local = executor blocks, Reliable = files.
-        * (The stream/embed ops do NOT use this poll — their kill is
-        * synchronous and input-gated, see runOp — so the poll only ever
-        * watches the loop ops' checkpoint/persist state.)
+        * (The streaming sink ops do NOT use this poll — their kill is
+        * synchronous and input-gated, see gatedStream — so the poll only
+        * ever watches the loop ops' checkpoint/persist state.)
         */
       def roundStateLive(): Boolean = mode match {
         case "reliable" =>
@@ -175,9 +181,9 @@ object FaultTolerance {
 
       // Poll-based kill for the LOOP ops only (cc/bpe/zip): their kill
       // window is a property of distributed round state the driver can
-      // only observe, not gate. The stream/embed ops gate micro-batch 1's
-      // INPUT on the kill instead (see runOp) — fully deterministic, no
-      // poll, no race.
+      // only observe, not gate. The streaming sink ops gate micro-batch
+      // 1's INPUT on the kill instead (see gatedStream) — fully
+      // deterministic, no poll, no race.
       val killer = new Thread(() => {
         val kd = System.nanoTime() + 120L * 1000 * 1000 * 1000
         while (!roundStateLive() && System.nanoTime() < kd) Thread.sleep(100)
@@ -191,176 +197,121 @@ object FaultTolerance {
         case _          => CheckpointMode.Local
       }
 
+      /** The input-gated kill of the streaming sink ops (stream, embed,
+        * linkage): only file 0 of the JSON source exists when the sink
+        * starts; once batch 0 commits, every executor is SIGKILLed
+        * synchronously from THIS thread, and only then are files 1-5
+        * written. Micro-batch 1 cannot exist before the kill has landed —
+        * no poll, no race. The later batches must recover on replacement
+        * executors (stage retry) or through ONE restart from the same
+        * checkpoint; both are legitimate recoveries of the sinks' crash
+        * contract (per-batch `batch=<id>` overwrite, state reads excluding
+        * >= batchId). An unfaulted reference run on fresh directories
+        * follows on the healed cluster.
+        *
+        * `lines(f)` is file f's JSON lines, `start(source, dir)` starts the
+        * sink with every path under `dir`, `read(dir)` reads a run's
+        * output. Returns the (faulted, reference) outputs. */
+      def gatedStream[T](schema: String, lines: Int => Seq[String])(
+          start: (DataFrame, String) => StreamingQuery)(read: String => T): (T, T) = {
+        val src = tmp("src")
+        def write(f: Int): Unit = {
+          java.nio.file.Files.write(java.nio.file.Paths.get(src, f"part$f%02d.json"),
+            lines(f).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          ()
+        }
+        def run(dir: String): StreamingQuery = start(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src), dir)
+        def drain(q: StreamingQuery): Unit = { q.processAllAvailable(); q.stop() }
+        val faulted = tmp("faulted")
+        write(0)
+        val q = run(faulted)
+        q.processAllAvailable() // batch 0 commits — nothing can kill it
+        println(s"[fault] killed_executor_pid=${killExecutors()}")
+        (1 until 6).foreach(write)
+        val survived =
+          try { drain(q); true }
+          catch {
+            case e: Throwable =>
+              println(s"[fault] stream_query_failed=${e.getClass.getSimpleName}")
+              try q.stop() catch { case _: Throwable => () }
+              false
+          }
+        // offsets replay the failed batch over its own batch=<id> dirs
+        if (!survived) drain(run(faulted))
+        println(s"[fault] stream_survived_kill=$survived")
+        val reference = tmp("reference")
+        drain(run(reference))
+        (read(faulted), read(reference))
+      }
+
+      def longs(path: String, c: String): Seq[Long] =
+        spark.read.parquet(path).select(c).collect().map(_.getLong(0)).toSeq
+
+      /** "output_ok" when the faulted output is non-empty and equals the
+        * unfaulted reference. */
+      def sameNonEmpty(what: String, faulted: Iterable[Any], reference: Iterable[Any]): String = {
+        println(s"[fault] n_$what=${faulted.size} ref=${reference.size}")
+        if (faulted.nonEmpty && faulted == reference) "output_ok" else "output_wrong"
+      }
+
       /** The operator body under fault; returns "output_ok"/"output_wrong". */
       def runOp(): String = op match {
         case "stream" =>
-          // Streaming dedup-ingest under executor SIGKILL — DETERMINISTIC
-          // by input gating (r14 verdict #1): only batch 0's input file
-          // exists when the query starts; once batch 0's state is
-          // committed (processAllAvailable returns) every executor is
-          // SIGKILLed synchronously from THIS thread, and only then are
-          // the remaining input files written. Micro-batch 1 therefore
-          // cannot even exist before the kill has landed — no poll, no
-          // race, the kill provably precedes all later batches. Those
-          // batches must then recover on replacement executors (stage
-          // retry) or via ONE query restart from the checkpoint — both
-          // legitimate recoveries of the sink's crash contract (per-batch
-          // `batch=<id>` overwrite + state reads excluding >= batchId).
-          // The verdict: faulted admitted set == unfaulted reference.
+          // dedup-ingest: each of nUnique texts recurs ~4x across the
+          // file stream under fresh ids
           import graft.functions.{TextFunctions => T}
-          val nFiles = 6
-          val perFile = 60
-          val nUnique = 90 // each text recurs ~4x across the batch stream
+          val (perFile, nUnique) = (60, 90)
           def textOf(t: Int): String =
             (0 until 20).map(j => f"w${(t * 31 + j * 7) % 997}%03d").mkString(" ")
-          val srcDir = java.nio.file.Files.createTempDirectory("graft-ft-src")
-          def writeSrcFile(f: Int): Unit = {
-            val lines = (0 until perFile).map { r =>
+          val (admittedF, admittedR) = gatedStream("id LONG, text STRING",
+            f => (0 until perFile).map { r =>
               val id = f * perFile + r
               s"""{"id":$id,"text":"${textOf(id % nUnique)}"}"""
-            }
-            java.nio.file.Files.write(srcDir.resolve(f"part$f%02d.json"),
-              lines.mkString("\n").getBytes(
-                java.nio.charset.StandardCharsets.UTF_8))
-            ()
-          }
-          writeSrcFile(0)
-          def startSink(ck: String, bands: String, admit: String) = {
-            val docs = spark.readStream.schema("id LONG, text STRING")
-              .option("maxFilesPerTrigger", 1).json(srcDir.toString)
-              .select(col("id"),
-                T.ngrams(T.tokens(col("text")), 3).as("shingles"))
-            graft.streaming.Streams.dedupIngestSink(
-              docs, bands, admit, k = 16, nBands = 4,
-              checkpointLocation = Some(ck))
-          }
-          def tmp(tag: String): String =
-            java.nio.file.Files.createTempDirectory(s"graft-ft-$tag").toString
-          val (ckF, bandsF) = (tmp("ckF"), tmp("bandsF"))
-          val q1 = startSink(ckF, bandsF, streamAdmitF)
-          q1.processAllAvailable() // batch 0 commits — nothing can kill it
-          println(s"[fault] killed_executor_pid=${killExecutors()}")
-          (1 until nFiles).foreach(writeSrcFile)
-          val survived =
-            try { q1.processAllAvailable(); q1.stop(); true }
-            catch {
-              case e: Throwable =>
-                println(s"[fault] stream_query_failed=${e.getClass.getSimpleName}")
-                try q1.stop() catch { case _: Throwable => () }
-                false
-            }
-          if (!survived) {
-            // restart ONCE from the same checkpoint: offsets replay the
-            // failed batch over its own batch=<id> dirs
-            val q2 = startSink(ckF, bandsF, streamAdmitF)
-            q2.processAllAvailable(); q2.stop()
-          }
-          println(s"[fault] stream_survived_kill=$survived")
-          val admittedF = spark.read.parquet(streamAdmitF)
-            .select("id").collect().map(_.getLong(0)).toSet
-          // unfaulted reference on the healed cluster (kill already fired)
-          val (ckR, bandsR, admitR) = (tmp("ckR"), tmp("bandsR"), tmp("admitR"))
-          val q3 = startSink(ckR, bandsR, admitR)
-          q3.processAllAvailable(); q3.stop()
-          val admittedR = spark.read.parquet(admitR)
-            .select("id").collect().map(_.getLong(0)).toSet
-          println(s"[fault] n_admitted=${admittedF.size} ref=${admittedR.size}")
-          if (admittedF.nonEmpty && admittedF == admittedR) "output_ok"
-          else "output_wrong"
+            }) { (src, dir) =>
+              Streams.dedupIngestSink(
+                src.select(col("id"), T.ngrams(T.tokens(col("text")), 3).as("shingles")),
+                s"$dir/state", s"$dir/out", k = 16, nBands = 4,
+                checkpointLocation = Some(s"$dir/ck"))
+            }(dir => longs(s"$dir/out", "id").toSet)
+          sameNonEmpty("admitted", admittedF, admittedR)
         case "embed" =>
-          // Streaming embedding-ingest under executor SIGKILL: the vector
-          // twin of the stream case (r9 VERDICT task 5), with the same
-          // DETERMINISTIC input-gated kill (r14 verdict #1): batch 0's
-          // file alone, commit, synchronous SIGKILL, then the rest of the
-          // stream. Fixture: each of nUnique deterministic base vectors
+          // embedding-ingest: each of nUnique deterministic base vectors
           // recurs ~4x across the file stream under fresh vec_ids — exact
           // dups (cosine 1), so the admission decisions are bucket-exact
-          // and both runs must agree.
-          val nFiles = 6
-          val perFile = 40
-          val nUnique = 60
-          val dim = 8
+          // and both runs must agree
+          val (perFile, nUnique, dim) = (40, 60, 8)
           // never the zero vector: components are k/97 - 0.5 with k
           // integer, and 97/2 is not an integer
           def vecOf(t: Int): Seq[Double] =
             (0 until dim).map(j => ((t * 31 + j * 7) % 97) / 97.0 - 0.5)
-          val srcDir = java.nio.file.Files.createTempDirectory("graft-ft-esrc")
-          def writeVecFile(f: Int): Unit = {
-            val lines = (0 until perFile).map { r =>
+          // (admitted vec_ids, bucket-state vec_ids) of one run
+          val ((admittedF, stateF), (admittedR, _)) = gatedStream(
+            "vec_id LONG, v ARRAY<DOUBLE>",
+            f => (0 until perFile).map { r =>
               val id = f * perFile + r
               s"""{"vec_id":$id,"v":[${vecOf(id % nUnique).mkString(",")}]}"""
-            }
-            java.nio.file.Files.write(srcDir.resolve(f"part$f%02d.json"),
-              lines.mkString("\n").getBytes(
-                java.nio.charset.StandardCharsets.UTF_8))
-            ()
-          }
-          writeVecFile(0)
-          def startEmbedSink(ck: String, buckets: String, admit: String) = {
-            val vecs = spark.readStream.schema("vec_id LONG, v ARRAY<DOUBLE>")
-              .option("maxFilesPerTrigger", 1).json(srcDir.toString)
-            graft.streaming.Streams.embedIngestSink(
-              vecs, buckets, admit, dim = dim, nBits = 8, minCosine = 0.95,
-              checkpointLocation = Some(ck))
-          }
-          def tmpE(tag: String): String =
-            java.nio.file.Files.createTempDirectory(s"graft-ft-$tag").toString
-          val (ckF, bucketsF) = (tmpE("eckF"), tmpE("ebkF"))
-          val q1 = startEmbedSink(ckF, bucketsF, streamAdmitF)
-          q1.processAllAvailable() // batch 0 commits — nothing can kill it
-          println(s"[fault] killed_executor_pid=${killExecutors()}")
-          (1 until nFiles).foreach(writeVecFile)
-          val survived =
-            try { q1.processAllAvailable(); q1.stop(); true }
-            catch {
-              case e: Throwable =>
-                println(s"[fault] stream_query_failed=${e.getClass.getSimpleName}")
-                try q1.stop() catch { case _: Throwable => () }
-                false
-            }
-          if (!survived) {
-            // restart ONCE from the same checkpoint: offsets replay the
-            // failed batch over its own batch=<id> dirs
-            val q2 = startEmbedSink(ckF, bucketsF, streamAdmitF)
-            q2.processAllAvailable(); q2.stop()
-          }
-          println(s"[fault] stream_survived_kill=$survived")
-          val admittedF = spark.read.parquet(streamAdmitF)
-            .select("vec_id").collect().map(_.getLong(0)).toSet
+            }) { (src, dir) =>
+              Streams.embedIngestSink(src, s"$dir/state", s"$dir/out",
+                dim = dim, nBits = 8, minCosine = 0.95,
+                checkpointLocation = Some(s"$dir/ck"))
+            }(dir => (longs(s"$dir/out", "vec_id").toSet, longs(s"$dir/state", "vec_id")))
           // SRP bucket-state consistency: exactly one bucket row per
           // admitted vector (replayed batches overwrite their own dirs,
           // so a recovered run can leave neither orphans nor gaps)
-          val stateIds = spark.read.parquet(bucketsF)
-            .select("vec_id").collect().map(_.getLong(0)).toSeq
           val stateConsistent =
-            stateIds.size == stateIds.toSet.size && stateIds.toSet == admittedF
+            stateF.size == stateF.toSet.size && stateF.toSet == admittedF
           println(s"[fault] bucket_state_consistent=$stateConsistent")
-          // unfaulted reference on the healed cluster (kill already fired)
-          val (ckR, bucketsR, admitR) = (tmpE("eckR"), tmpE("ebkR"), tmpE("eadR"))
-          val q3 = startEmbedSink(ckR, bucketsR, admitR)
-          q3.processAllAvailable(); q3.stop()
-          val admittedR = spark.read.parquet(admitR)
-            .select("vec_id").collect().map(_.getLong(0)).toSet
-          println(s"[fault] n_admitted=${admittedF.size} ref=${admittedR.size}")
-          if (admittedF.nonEmpty && admittedF == admittedR && stateConsistent)
-            "output_ok"
-          else "output_wrong"
+          val verdict = sameNonEmpty("admitted", admittedF, admittedR)
+          if (stateConsistent) verdict else "output_wrong"
         case "linkage" =>
-          // Streaming record-linkage ingest under executor SIGKILL — the ER
-          // twin of the stream/embed cases, same input-gated deterministic
-          // kill. The sink's crash contract is the simplest of the three
-          // (stateless across batches vs the static canonical table +
-          // per-batch overwrite), and this proves it end to end: the
-          // faulted run's matched store must equal an unfaulted reference.
+          // record-linkage ingest: stateless across batches vs the static
+          // canonical table, so the crash contract is per-batch overwrite
+          // alone; every arrival is a truncated copy of a canonical text
           import graft.operators.Linkage
-          val nFiles = 6
-          val perFile = 40
-          val nCanon = 120L
+          val (perFile, nCanon) = (40, 120L)
           def ctextOf(c: Long): String =
             s"blk${c % 40} alpha${c % 7} beta${c % 11} tail$c"
-          def dtextOf(d: Long): String = {
-            val t = ctextOf(d % nCanon); t.take(t.length - 2)
-          }
           val canonical = spark.range(nCanon)
             .select(col("id").as("cid"),
               concat(lit("blk"), pmod(col("id"), lit(40))).as("blk"),
@@ -369,61 +320,23 @@ object FaultTolerance {
                 concat(lit("alpha"), pmod(col("id"), lit(7))),
                 concat(lit("beta"), pmod(col("id"), lit(11))),
                 concat(lit("tail"), col("id"))).as("ctext"))
-          val srcDir = java.nio.file.Files.createTempDirectory("graft-ft-lsrc")
-          def writeLnkFile(f: Int): Unit = {
-            val lines = (0 until perFile).map { r =>
+          val (matchedF, matchedR) = gatedStream("d_id LONG, blk STRING, dtext STRING",
+            f => (0 until perFile).map { r =>
               val id = f * perFile + r
-              s"""{"d_id":$id,"blk":"blk${id % 40}","dtext":"${dtextOf(id.toLong)}"}"""
+              val t = ctextOf(id % nCanon)
+              s"""{"d_id":$id,"blk":"blk${id % 40}","dtext":"${t.take(t.length - 2)}"}"""
+            }) { (src, dir) =>
+              Streams.linkageIngestSink(
+                src, canonical, canonicalId = "cid", dirtyId = "d_id",
+                blockCol = "blk",
+                fields = Seq(Linkage.Field("ctext", "dtext", 1000)),
+                minScore = 600000L, matchedPath = s"$dir/out",
+                checkpointLocation = Some(s"$dir/ck"))
+            } { dir =>
+              spark.read.parquet(s"$dir/out").select("d_id", "matched_id", "score")
+                .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
             }
-            java.nio.file.Files.write(srcDir.resolve(f"part$f%02d.json"),
-              lines.mkString("\n").getBytes(
-                java.nio.charset.StandardCharsets.UTF_8))
-            ()
-          }
-          writeLnkFile(0)
-          def startLnkSink(ck: String, matched: String) = {
-            val arr = spark.readStream
-              .schema("d_id LONG, blk STRING, dtext STRING")
-              .option("maxFilesPerTrigger", 1).json(srcDir.toString)
-            graft.streaming.Streams.linkageIngestSink(
-              arr, canonical, canonicalId = "cid", dirtyId = "d_id",
-              blockCol = "blk",
-              fields = Seq(Linkage.Field("ctext", "dtext", 1000)),
-              minScore = 600000L, matchedPath = matched,
-              checkpointLocation = Some(ck))
-          }
-          def tmpL(tag: String): String =
-            java.nio.file.Files.createTempDirectory(s"graft-ft-$tag").toString
-          val ckF = tmpL("lckF")
-          val q1 = startLnkSink(ckF, streamAdmitF)
-          q1.processAllAvailable() // batch 0 commits — nothing can kill it
-          println(s"[fault] killed_executor_pid=${killExecutors()}")
-          (1 until nFiles).foreach(writeLnkFile)
-          val survived =
-            try { q1.processAllAvailable(); q1.stop(); true }
-            catch {
-              case e: Throwable =>
-                println(s"[fault] stream_query_failed=${e.getClass.getSimpleName}")
-                try q1.stop() catch { case _: Throwable => () }
-                false
-            }
-          if (!survived) {
-            val q2 = startLnkSink(ckF, streamAdmitF)
-            q2.processAllAvailable(); q2.stop()
-          }
-          println(s"[fault] stream_survived_kill=$survived")
-          def matchSet(path: String): Set[(Long, Long, Long)] =
-            spark.read.parquet(path).select("d_id", "matched_id", "score")
-              .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-          val matchedF = matchSet(streamAdmitF)
-          // unfaulted reference on the healed cluster (kill already fired)
-          val (ckR, matchedR) = (tmpL("lckR"), tmpL("lmaR"))
-          val q3 = startLnkSink(ckR, matchedR)
-          q3.processAllAvailable(); q3.stop()
-          val refSet = matchSet(matchedR)
-          println(s"[fault] n_matched=${matchedF.size} ref=${refSet.size}")
-          if (matchedF.nonEmpty && matchedF == refSet) "output_ok"
-          else "output_wrong"
+          sameNonEmpty("matched", matchedF, matchedR)
         case "bpe" =>
           // deterministic Zipf-ish vocabulary (same generator family as
           // Profile's bpe fixture): enough words that learnMerges spans
@@ -445,9 +358,7 @@ object FaultTolerance {
           // deterministic, so equality proves the fault lost nothing
           val reference = Bpe.learnMergesLoop(vocab(), k, mode = ckMode)
             .orderBy("step").collect().map(_.toSeq).toSeq
-          println(s"[fault] n_merges=${faulted.size} ref=${reference.size}")
-          if (faulted.nonEmpty && faulted == reference) "output_ok"
-          else "output_wrong"
+          sameNonEmpty("merges", faulted, reference)
         case "zip" =>
           // ZipIndex.withOrderedIndex under executor SIGKILL AFTER its
           // frozen shuffle layout is materialized (the layout freeze at
@@ -482,8 +393,8 @@ object FaultTolerance {
           if (n == size.toLong && bad == 0) "output_ok" else "output_wrong"
       }
 
-      val pollKill = op != "stream" && op != "embed" && op != "linkage"
-      if (pollKill) killer.start() // stream/embed kill synchronously in runOp
+      val pollKill = !Set("stream", "embed", "linkage").contains(op)
+      if (pollKill) killer.start() // the others kill synchronously in gatedStream
       val result =
         try runOp()
         catch {

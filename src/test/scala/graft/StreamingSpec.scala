@@ -570,6 +570,72 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     assert(admitted(1L) === 0 && admitted(2L) === 0 && admitted(101L) === 1)
   }
 
+  private def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  test("dedup ingest drops its cached frames when a batch fails") {
+    import spark.implicits._
+    import graft.functions.{TextFunctions => T}
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-leak")
+    // the admitted path is a regular file: the admitted write (after the
+    // batch and its band table are cached) cannot create batch=0 under it
+    val admitPath = java.nio.file.Files.createFile(dir.resolve("admitted")).toString
+    spark.catalog.clearCache()
+    val input = MemoryStream[(Long, String)](spark)
+    val docs = input.toDF().toDF("id", "text")
+      .select(col("id"), T.ngrams(T.tokens(col("text")), 3).as("shingles"))
+    val q = Streams.dedupIngestSink(docs, s"$dir/bands", admitPath, k = 16, nBands = 4)
+    input.addData(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog tonight")))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.processAllAvailable())
+    q.stop()
+    assert(q.exception.nonEmpty)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cacheManager.isEmpty, "a failed batch left cached frames behind")
+  }
+
+  test("dedup ingest on a fresh checkpoint over committed batches fails with " +
+    "a checkpoint/state mismatch and keeps batch 0's admissions") {
+    import spark.implicits._
+    import graft.functions.{TextFunctions => T}
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-mismatch").toString
+    val (bandPath, admitPath) = (s"$dir/bands", s"$dir/admitted")
+    def start(input: MemoryStream[(Long, String)], checkpoint: String) =
+      Streams.dedupIngestSink(
+        input.toDF().toDF("id", "text")
+          .select(col("id"), T.ngrams(T.tokens(col("text")), 3).as("shingles")),
+        bandPath, admitPath, k = 16, nBands = 4,
+        checkpointLocation = Some(checkpoint))
+    def batch0Ids = Streams.admittedDocs(spark, admitPath)
+      .filter(col("batch") === 0).select("id").collect().map(_.getLong(0)).toSet
+    val inputA = MemoryStream[(Long, String)](spark)
+    val qa = start(inputA, s"$dir/ckA")
+    inputA.addData(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog tonight"),
+      (2L, "spark shuffles partitions across the cluster respecting locality")))
+    qa.processAllAvailable()
+    inputA.addData(Seq(
+      (101L, "entirely fresh content mentioning gardens and rivers flowing")))
+    qa.processAllAvailable()
+    qa.stop()
+    assert(batch0Ids === Set(1L, 2L))
+    // a fresh checkpoint restarts batch ids at 0 while batch=1 is committed:
+    // running on would hide the corpus from the `batch < 0` state read and
+    // overwrite batch 0's admissions with this near-dup of doc 1
+    val inputB = MemoryStream[(Long, String)](spark)
+    val qb = start(inputB, s"$dir/ckB")
+    inputB.addData(Seq(
+      (300L, "the quick brown fox jumps over the lazy dog tonight again")))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      qb.processAllAvailable())
+    qb.stop()
+    val mismatch = causes(e).collectFirst { case c: IllegalStateException => c }
+    assert(mismatch.exists(_.getMessage.contains("checkpoint/state mismatch")), e)
+    assert(batch0Ids === Set(1L, 2L))
+  }
+
   test("embedding ingest sink admits only vectors fresh vs the admitted store, " +
     "self-dedups bursts, never rescans corpus buckets") {
     import spark.implicits._
