@@ -1,68 +1,47 @@
 package graft
-import org.apache.spark.sql.SparkSession
+/** Registry benchmark main: times every registered query (or the queries
+  * named in `args`) once, cold, in name order, in one fresh session, and
+  * prints the per-query wall times as JSON. Repeats are separate JVMs
+  * (tools/local_bench.py, tools/scale_bench.py), so every row measures a
+  * first run.
+  *
+  * Environment: `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1), plus
+  * [[Tables.session]]'s `SPARK_GRAFT_CPUS`/`SPARK_GRAFT_SHUFFLE` and
+  * `SPARK_GRAFT_BENCH_OUT` (file that receives the full JSON line). */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle parallelism defaults to core count; override for scale probes
-    // — at 10x+ data, partitions must grow with the data or per-partition
-    // sort/spill cost turns linear operators superlinear (recorded in
-    // PROGRESS.jsonl round 4)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
+    val cpus = spark.sparkContext.defaultParallelism
     // absorb JVM/codegen/session warmup outside any query's timing
     spark.range(100000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
-    // Host-noise calibration: a fixed CPU-bound op (data-independent,
-    // shuffle-free) timed as min-of-3 and emitted into the artifact, so a
-    // loud host window is machine-detectable instead of needing forensic
-    // cross-round prose (the r12 driver artifact ran in a window with 7.9x
-    // inflation and only SCALE_r12's narrative said so). Interpretation
-    // rule (README): calibration_s ~0.25-0.5 on a quiet 32-thread host;
-    // >1 means the window is loud and absolute totals overstate cost.
+    // Host-noise calibration, three fixed data-independent probes timed
+    // as min-of-N and emitted into the artifact, so a loud window is
+    // machine-detectable (README gives the quiet references):
+    //  - calibration_s: CPU-bound, shuffle-free;
+    //  - calibration_shuffle_s: a hash exchange + agg over 16M rows, with
+    //    its partition count pinned at 64 so the reading does not depend
+    //    on spark.sql.shuffle.partitions — exchange slowdowns do not show
+    //    on an ALU-bound probe;
+    //  - calibration_launch_s: an empty 32-task job, the per-job fixed cost
+    //    (submit, task launch/collect) that dominates sub-second queries
+    //    (tools/xround_norm.py normalizes sub-second rows by it).
     val calibration = (1 to 3).map { _ =>
       val c0 = System.nanoTime()
-      spark.range(0L, 512000000L, 1L, cpus.toInt)
+      spark.range(0L, 512000000L, 1L, cpus)
         .selectExpr("sum(id % 1000003)").collect()
       (System.nanoTime() - c0) / 1e9
     }.min
-    // Second calibration axis: a fixed SHUFFLE op (hash exchange + agg
-    // over 16M rows). Round-13 lesson: the CPU op alone missed a window
-    // where pure compute was quiet (0.27 s) while every shuffle-heavy
-    // query ran 2-3x over its recorded quiet minimum — exchange
-    // serialization/memory-path degradation is invisible to an ALU-bound
-    // probe. Quiet 32-thread reference ~1.3-1.6 s; >2x that marks a
-    // shuffle-loud window even when calibration_s looks quiet.
-    // explicit repartition(64) pins the exchange's partition count so the
-    // reading is comparable ACROSS invocations with different
-    // spark.sql.shuffle.partitions (the scale probes vary that knob; the
-    // first cut of this op inherited it and read 2x higher at shuffle=128
-    // on the same host)
     val calibrationShuffle = (1 to 3).map { _ =>
       val c0 = System.nanoTime()
-      spark.range(0L, 16000000L, 1L, cpus.toInt)
+      spark.range(0L, 16000000L, 1L, cpus)
         .selectExpr("xxhash64(id) % 100000 AS k")
         .repartition(64, org.apache.spark.sql.functions.col("k"))
         .groupBy("k").count()
         .selectExpr("sum(count)").collect()
       (System.nanoTime() - c0) / 1e9
     }.min
-    // Third calibration axis: JOB-LAUNCH/SCHEDULER overhead (r15 verdict
-    // #3). The r15 like-for-like drift (69.4 -> 81.3 s) was invisible to
-    // BOTH probes above — sub-second queries moved 1.2-1.4x while pure
-    // compute and the shuffle path stayed quiet — and needed a manual
-    // same-HEAD control run to adjudicate. An EMPTY 32-task job times the
-    // per-job fixed costs (DAG submit, task serialize/launch/collect,
-    // scheduler wakeups) that DOMINATE sub-second queries; min-of-5
-    // because the op is itself sub-millisecond-noisy. Quiet 32-thread
-    // reference ~0.02-0.08 s; a 2x+ reading marks a launch-loud window
-    // where small-query totals inflate with no code change
-    // (tools/xround_norm.py normalizes sub-second movers by this axis).
     val calibrationLaunch = (1 to 5).map { _ =>
       val c0 = System.nanoTime()
       spark.range(0L, 32L, 1L, 32).selectExpr("count(*)").collect()
@@ -89,99 +68,17 @@ object Bench {
     // too — the timed body should measure the rewrite, not the fixture
     if (args.isEmpty || args.contains("q_layout_compact_exec"))
       Tables.compactableEventsByDay(spark, sfDir)
-    // deterministic execution order (name-sorted) so per-query timings are
-    // comparable across rounds; optional args narrow to named queries for
-    // targeted profiling (the driver invokes with no args = full suite)
+    // name-sorted so per-query timings line up across runs; args narrow
+    // the run to named queries (no args = full registry)
     val selected =
       if (args.isEmpty) SparkEntry.queries.toSeq
       else SparkEntry.queries.filter(kv => args.contains(kv._1)).toSeq
-    // Dev knob: SPARK_GRAFT_REPEAT=N times each query N times (rows named
-    // q#2, q#3, ...) to separate cold-codegen/JIT cost from steady state in
-    // targeted profiling. The driver never sets it (default 1).
-    val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(1)
-    val runs = selected.sortBy(_._1).flatMap { case (name, fn) =>
-      (1 to repeat).map(r => (if (r == 1) name else s"$name#$r") -> fn)
-    }
-    // Failure policy: a broken query must NOT silently deflate the total
-    // (pre-r9 it timed as a fast -1-row entry and the bench still exited
-    // 0). Failures are collected by name, reported in BOTH output lines,
-    // and fail the process — the artifact can under-report nothing.
+    val runs = selected.sortBy(_._1)
+    // Failure policy: a failed query is named in BOTH output lines and
+    // fails the process (exit 1); its partial elapsed time measures
+    // nothing, so it is left out of the per-query map and the total.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Diag mode (SPARK_GRAFT_DIAG=1, attribution-only — never set on
-    // recorded runs): after each query's cleanup, print one JSON line of
-    // JVM/filesystem state so between-repeat anomalies are attributable
-    // by arithmetic (r15 verdict #2: q_dedup_clusters' 100x steady runs
-    // were 1.3-1.6x SLOWER than its first run — the opposite of every
-    // other query — and the artifact could only say "unexplained").
-    val diag = sys.env.get("SPARK_GRAFT_DIAG").contains("1")
-    def gcTotals(): (Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      val beans = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.asScala
-      (beans.map(_.getCollectionTime).sum, beans.map(_.getCollectionCount).sum)
-    }
-    def jitMs(): Long = java.lang.management.ManagementFactory
-      .getCompilationMXBean.getTotalCompilationTime
-    def codeCacheMb(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.startsWith("CodeHeap"))
-        .map(_.getUsage.getUsed).sum >> 20
-    }
-    def localDirBytes(): Long = {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir", "/tmp"))
-      def size(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles).map(_.map(size).sum).getOrElse(0L)
-        else f.length()
-      Option(tmp.listFiles).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("blockmgr-") ||
-          f.getName.startsWith("spark-"))
-        .map(size).sum
-    }
     val results = runs.flatMap { case (name, fn) =>
-      // q_layout_compact_exec MUTATES its fixture to the converged state;
-      // under REPEAT>1 every later repeat would time a no-op audit instead
-      // of the rewrite. Restore the fragmentation between repeats, outside
-      // the timed body (repeat 1 uses the fresh warmup build).
-      if (name.startsWith("q_layout_compact_exec#"))
-        Tables.refragmentCompactable(spark, sfDir)
-      // Between-repeat memo reset (r15 verdict #1): a repeat observation
-      // must see the session state its FIRST run saw, or it records a memo
-      // hit standing in for the work — q_corpus_bpe's r15 "100x steady"
-      // row was a bpeMergeCache hit (0.077 s) vs the 11.8 s learn.
-      // q_corpus_bpe_apply's exemption is MEMO-SPECIFIC (r16 ADVICE — the
-      // old whole-reset skip also spared countCache and relied on bpe
-      // having run immediately before): its documented cost model is
-      // apply-ONLY (the learn is paid once by q_corpus_bpe, the production
-      // train-once/apply-everywhere shape), so only bpeMergeCache is
-      // spared for its repeats; every other memo still resets. If its
-      // first run ever stops following a learn-bearing query, it pays the
-      // learn VISIBLY on run 1 and the min-policy row stays apply-only.
-      if (name.contains("#"))
-        QueryMemos.reset(except =
-          if (name.startsWith("q_corpus_bpe_apply#")) Set("bpeMergeCache")
-          else Set.empty)
-      // Repeat-row JIT-storm mitigation (r16 verdict #7): 1/76 steady rows
-      // absorbed a 70 s C2 recompilation flood (jit_ms 73-80 s vs 10-32 s;
-      // gc/heap/code-cache flat). Two untimed steps before each REPEAT
-      // body (first runs keep their by-design cold cost): (a) plan +
-      // Janino-compile every WholeStageCodegen subtree so source->class
-      // compilation is out of the timed body and the compile cache is hot;
-      // (b) wait for the JVM JIT queue to QUIESCE, so a C2 flood triggered
-      // by the previous query's code finishes before the clock starts —
-      // storms that would have landed mid-measurement get absorbed here.
-      if (name.contains("#")) {
-        try graft.tools.CodegenPrewarm.prewarm(fn(spark, sfDir))
-        catch { case _: Throwable => () }
-        var lastJit = jitMs(); var quietMs = 0; var waitedMs = 0
-        while (quietMs < 200 && waitedMs < 10000) {
-          Thread.sleep(50); waitedMs += 50
-          val j = jitMs()
-          if (j - lastJit < 5) quietMs += 50 else { quietMs = 0; lastJit = j }
-        }
-      }
-      val (gcMs0, gcN0) = if (diag) gcTotals() else (0L, 0L)
-      val jit0 = if (diag) jitMs() else 0L
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).count(); true } catch {
@@ -191,65 +88,31 @@ object Bench {
             false
         }
       val dt = (System.nanoTime() - t0) / 1e9
-      // Drop blocks the query pinned (localCheckpoint lineage truncation
-      // persists RDD blocks until GC): in production each query runs in its
-      // own job whose blocks die with it; without this, 90+ queries' blocks
-      // accumulate in the one bench JVM and memory pressure inflates every
-      // later query's time (measured 2-5x on the heavy dedup queries).
-      spark.catalog.clearCache()
-      // blocking: an async unpersist storm would compete with the next
-      // query's tasks and bleed into its measurement
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      // broadcast blocks are only destroyed after ContextCleaner GCs their
-      // weak refs, and a 100-query session accumulates enough old-gen
-      // garbage that collection otherwise fires MID-next-query; one
-      // explicit GC here keeps each query's timing free of its
-      // predecessors' cleanup (measured: removes 2-5x tail inflation on
-      // queries that follow global sorts / large broadcasts)
+      // Each query starts from a released session: blocks a predecessor
+      // pinned would otherwise add memory pressure to every later query
+      // (measured 2-5x on the heavy dedup queries). Broadcast blocks are
+      // destroyed only once ContextCleaner sees their weak refs collected,
+      // so one explicit GC here keeps that cleanup, and a predecessor's
+      // old-gen garbage, out of the next query's timing (measured 2-5x
+      // tail inflation after global sorts and large broadcasts).
+      Tables.release(spark)
       System.gc()
-      if (diag) {
-        val (gcMs1, gcN1) = gcTotals()
-        val mem = java.lang.management.ManagementFactory.getMemoryMXBean
-        val heap = mem.getHeapMemoryUsage
-        println(s"""{"diag":"$name","wall_s":${"%.3f".format(dt)},""" +
-          s""""gc_ms":${gcMs1 - gcMs0},"gc_n":${gcN1 - gcN0},""" +
-          s""""jit_ms":${jitMs() - jit0},"code_cache_mb":${codeCacheMb()},""" +
-          s""""heap_used_after_gc_mb":${heap.getUsed >> 20},""" +
-          s""""heap_committed_mb":${heap.getCommitted >> 20},""" +
-          s""""spark_local_dir_mb":${localDirBytes() >> 20}}""")
-      }
-      // A failed query's partial elapsed time is NOT a measurement of
-      // anything — including it would mix successful and aborted timings
-      // in the per-query map and inflate/deflate the total arbitrarily
-      // (r9 ADVICE). Failures are reported solely via `failed` + rc 1.
       if (ok) Some(name -> dt) else None
     }
     def obj(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // Effective-parallelism stamp (r17 verdict #2): the artifact itself
-    // records what the session actually ran with — master string, scheduler
-    // parallelism, shuffle width — so "does the harness honor
-    // $SPARK_GRAFT_CPUS" is answerable from the JSON line alone instead of
-    // needing source forensics. Additive keys only; schema otherwise
-    // unchanged.
+    // the parallelism the session actually ran with
     val parallelism = s""""master":"${spark.sparkContext.master}","default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${spark.sessionState.conf.numShufflePartitions}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec",$parallelism,"calibration_s":$calibration,"calibration_shuffle_s":$calibrationShuffle,"calibration_launch_s":$calibrationLaunch,"queries":${obj(results)},"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
-    // Whole-artifact escape hatch: the driver's capture keeps only the TAIL
-    // of stdout, which truncates the per-query map past ~70 queries (the r3/
-    // r4 artifacts lost the first 43 queries). SPARK_GRAFT_BENCH_OUT writes
-    // the complete line to a file the builder can commit (BENCH_LOCAL_rN).
     sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach { p =>
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p), line + "\n")
     }
-    // Compact summary LAST: the driver's tail capture truncates from the
-    // FRONT, so whatever line ends stdout must parse on its own — the r8
-    // driver artifact recorded "parsed": null because only the back ~half
-    // of the full per-query map survived. This line keeps the same schema
-    // with the 10 slowest queries standing in for the full map (the full
-    // line precedes it and lands intact in SPARK_GRAFT_BENCH_OUT).
+    // Compact summary LAST: a tail capture of stdout truncates from the
+    // front, so the final line must parse on its own. Same keys, with the
+    // 10 slowest queries standing in for the full map.
     val top10 = results.sortBy(-_._2).take(10)
     println(s"""{"metric":"total","value":$total,"unit":"sec",$parallelism,"calibration_s":$calibration,"calibration_shuffle_s":$calibrationShuffle,"calibration_launch_s":$calibrationLaunch,"queries":${obj(top10)},"failed":$failedJson,"sf":"$sfDir","note":"compact summary: queries = 10 slowest of ${results.size}; full map in the preceding line"}""")
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection main: prints the formatted physical plan of each named
   * query (all queries if none named). Usage:
   *   runMain graft.Explain <sfDir> [queryName...]
@@ -13,13 +11,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = Tables.configure(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session(cores = Some(4), logLevel = "ERROR")
     names.foreach { name =>
       println(s"\n======== $name ========")
       try SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -26,10 +26,10 @@ object Tables {
       spark.read.parquet(s"${key._2}/${key._3}.parquet")
     })
 
-  /** Session configs every graft session needs — call once at session
-    * construction (Bench/Verify/Explain and the test harness do).
-    * `nanosAsLong`: events.parquet carries TIMESTAMP(NANOS), which the
-    * vectorized reader rejects; read as long and convert in [[events]].
+  /** Session configs every graft session needs — applied by [[session]],
+    * which every graft main builds its session with, and by the test
+    * harness. `nanosAsLong`: events.parquet carries TIMESTAMP(NANOS), which
+    * the vectorized reader rejects; read as long and convert in [[events]].
     * `session.timeZone=UTC`: the NTZ→TIMESTAMP cast in [[normalizeEventsTs]]
     * is instant-preserving only under a UTC session zone; pinning it here
     * makes every consumer independent of the host default. */
@@ -38,16 +38,42 @@ object Tables {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
 
+  /** The one session recipe of the graft mains: `local[SPARK_GRAFT_CPUS]`
+    * (default 4), `SPARK_GRAFT_SHUFFLE` shuffle partitions (default: the
+    * core count; scale probes raise it, since at 10x+ data a fixed
+    * partition count turns per-partition sort/spill superlinear), UI off,
+    * [[configure]] applied, then `logLevel`.
+    * `cores` pins the core count and shuffle width regardless of the
+    * environment (plan digests must not depend on the host); `master`
+    * replaces the local master; `conf` adds settings applied last. */
+  def session(cores: Option[Int] = None, master: Option[String] = None,
+      logLevel: String = "WARN",
+      conf: Seq[(String, String)] = Nil): SparkSession = {
+    val cpus = cores.fold(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))(_.toString)
+    val shuffle =
+      if (cores.isDefined) cpus else sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val base = configure(SparkSession.builder())
+      .master(master.getOrElse(s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", shuffle)
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** Drop what a finished query pinned: cached plans and persisted RDDs
+    * (localCheckpoint lineage truncation keeps its blocks until GC). The
+    * unpersist blocks, so the release cannot overlap the next query. */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  }
+
   // Row-count memo for operators that size themselves from the corpus
   // (LSH bits): one count job per (session, dir, table), not per query.
   private val countCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
-  // query-level memo (the sizing count is per-session work a production
-  // rerun pays): cleared between bench repeats — see graft.QueryMemos.
-  // The analyzed-plan cache above is NOT registered: plan analysis is
-  // session infrastructure every long-running session keeps, and the
-  // table-prep memos below are one-time layout builds amortized by design.
-  QueryMemos.register("countCache", () => countCache.clear())
 
   def rowCount(spark: SparkSession, dir: String, name: String): Long =
     countCache.computeIfAbsent((spark, dir, name),
@@ -56,8 +82,7 @@ object Tables {
   /** Collision-free filesystem/table tag for a data dir: the sanitized
     * full path for readability PLUS an md5 head of the RAW path for
     * injectivity (sanitization alone maps /a/sf0.1 and /a/sf0_1 to the
-    * same string; a 32-bit hashCode — the pre-round-5 scheme — can
-    * collide outright), plus the JVM pid so concurrent PROCESSES over the
+    * same string; a 32-bit hashCode can collide outright), plus the JVM pid so concurrent PROCESSES over the
     * same dir (Verify alongside Bench) each own their layout instead of
     * racing one overwrite. */
   // Shutdown cleanup for per-process scratch dirs (the dirTag pid suffix
@@ -91,25 +116,22 @@ object Tables {
   // table build; the query body calls it too, so Verify and ad-hoc use stay
   // self-contained.
   // Bucket-count dial for the persisted bucketed layouts, derived from
-  // BYTES per bucket (r16 ADVICE: the former per-table row divisors —
-  // 2.5k vectors / 100k band rows / 250k orders — were three hand-tuned
-  // restatements of the same ~1-8 MB/bucket intent, each silently encoding
-  // a guessed row width). One rule now: measure the layout's actual
-  // average UnsafeRow width from a bounded sample and target
-  // `targetBucketBytes` per bucket, floor 8. A bucketed join's parallelism
-  // IS the bucket count — nothing re-shuffles at read time, so there is no
-  // exchange to re-partition (r16 finding, SCALE_r16
-  // embed_incremental_attribution: pinned at 8, the 100x probe join ran as
-  // an 8-task serial section and the decade ratio read 11.5x). The floor
-  // keeps the sf0.001/sf0.01/sf0.1 spec-scale layouts (and plan digests)
-  // identical to r16.
+  // BYTES per bucket: every layout measures its actual average UnsafeRow
+  // width from a bounded sample and targets `targetBucketBytes` per
+  // bucket, floor 8 — one rule instead of a guessed row width per table.
+  // A bucketed join's parallelism IS the bucket count — nothing
+  // re-shuffles at read time, so there is no exchange to re-partition
+  // (SCALE_r16.json embed_incremental_attribution: pinned at 8, the 100x
+  // probe join ran as an 8-task serial section and the decade ratio read
+  // 11.5x). The floor keeps the sf0.001/sf0.01/sf0.1 spec-scale layouts,
+  // and so their plan digests, at 8 buckets.
   //
-  // 2 MiB is the LOCAL-FIXTURE dial, chosen to reproduce r16's measured
-  // 100x layouts within ~2x (embed 80->53, bands 20->38, orders 60->229
-  // buckets) so probe parallelism stays at-or-above local core count. A
-  // 100 TB deployment raises it to the usual 128 MiB-1 GiB bucket-file
-  // band — the DERIVATION (bytes / target, width measured not guessed) is
-  // the invariant, the constant is the deployment knob.
+  // 2 MiB is the LOCAL-FIXTURE dial: at 100x it gives 53 embed, 38 band
+  // and 229 orders buckets, so probe parallelism stays at or above the
+  // local core count. A 100 TB deployment raises it to the usual
+  // 128 MiB-1 GiB bucket-file band — the DERIVATION (bytes / target,
+  // width measured not guessed) is the invariant, the constant is the
+  // deployment knob.
   private[graft] val targetBucketBytes: Long = 2L << 20
 
   /** Measured average in-memory (UnsafeRow) bytes per row of `df`, from a
@@ -209,7 +231,7 @@ object Tables {
           .filter(col("vec_id") % 5 =!= 0)
         // sized from the WIDE side (the ~520 B/row vector table — both
         // tables share nB): 1x/10x stay at the floor, 100x gets ~53-way
-        // probe parallelism (r16's measured fix was 80; same band)
+        // probe parallelism
         val nB = bucketCountByBytes(existing, rowCount(s, d, "embeddings"))
         graft.sources.Warehouse.writeBucketed(
           graft.operators.Similarity.bucketTable(
@@ -285,14 +307,6 @@ object Tables {
       cleanupOnExit(path)
       path
     })
-
-  /** Rebuild the fragmented compaction fixture (q_layout_compact_exec
-    * mutates it to its converged state — a repeated timing run needs the
-    * fragmentation restored between repeats or it times a no-op audit). */
-  private[graft] def refragmentCompactable(s: SparkSession, d: String): String = {
-    compactDayCache.remove(d)
-    compactableEventsByDay(s, d)
-  }
 
   private val evolveCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()

@@ -47,12 +47,6 @@ object Portable {
   def h48(c: Column): Column =
     conv(substring(md5(c), 1, 12), 16, 10).cast("long")
 
-  /** 32-bit halves of the md5 head — bit source for [[simhash63]]. */
-  def hi32(c: Column): Column =
-    conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-  def lo32(c: Column): Column =
-    conv(substring(md5(c), 9, 8), 16, 10).cast("long")
-
   /** k-component MinHash signature over a PRE-HASHED array (one md5 per
     * shingle, done by the caller via `transform(shingles, h48)` behind an
     * exchange so CollapseProject cannot inline it k times). Each

@@ -32,10 +32,6 @@ object SimHash {
     bitCols.reduce(_.bitwiseOR(_))
   }
 
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming64(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b)).cast("long")
-
   /** Portable 63-bit SimHash per id: token votes from the md5 32-bit
     * halves (graft.functions.Portable), aggregated as 63 codegen'd
     * conditional sums over an exploded token stream — one shuffle on the

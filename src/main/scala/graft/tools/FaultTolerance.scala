@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.operators.{Bpe, CheckpointMode, Dedup}
 import graft.streaming.Streams
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -77,29 +77,32 @@ object FaultTolerance {
         case "zip" => 2000000 // narrow rows; big enough that the post-kill jobs are real
         case _     => 120000
       })
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-ft-ck").toString
+    // every scratch directory of the run is deleted when the JVM exits
+    def tmp(tag: String): String = {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-ft-$tag").toString
+      graft.Tables.cleanupOnExit(dir)
+      dir
+    }
+    val ckDir = tmp("ck")
 
-    val spark = graft.Tables.configure(SparkSession.builder())
-      // 2 workers x 1 core x 1536m: two single-core executor PROCESSES —
-      // small enough to run beside CI, real enough that killing one loses
-      // its block store
-      .master("local-cluster[2,1,1536]")
-      .appName(s"graft-fault-$mode")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // executors are forked JVMs: they need the Java 17 module opens the
-      // parent got from jrun.sh / sbt
-      .config("spark.executor.extraJavaOptions",
-        Seq("java.lang", "java.lang.invoke", "java.nio", "java.util",
-          "java.util.concurrent", "sun.nio.ch")
-          .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED").mkString(" "))
-      // executors are forked JVMs with only the Spark jars: graft's own
-      // classes (custom codegen expressions like Tokenize resolve them
-      // DURING executor-side janino compilation) must ride along
-      .config("spark.executor.extraClassPath",
-        new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 2 workers x 1 core x 1536m: two single-core executor PROCESSES —
+    // small enough to run beside CI, real enough that killing one loses
+    // its block store
+    val spark = graft.Tables.session(master = Some("local-cluster[2,1,1536]"),
+      conf = Seq(
+        "spark.app.name" -> s"graft-fault-$mode",
+        "spark.sql.shuffle.partitions" -> "4",
+        // executors are forked JVMs: they need the Java 17 module opens
+        // the parent got from jrun.sh / sbt
+        "spark.executor.extraJavaOptions" ->
+          Seq("java.lang", "java.lang.invoke", "java.nio", "java.util",
+            "java.util.concurrent", "sun.nio.ch")
+            .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED").mkString(" "),
+        // executors are forked JVMs with only the Spark jars: graft's own
+        // classes (custom codegen expressions like Tokenize resolve them
+        // DURING executor-side janino compilation) must ride along
+        "spark.executor.extraClassPath" ->
+          new java.io.File("target/scala-2.13/classes").getAbsolutePath))
 
     try {
       // wait for both executors to register (driver counts as none here)
@@ -112,9 +115,6 @@ object FaultTolerance {
       println(s"[fault] executors=${executors.size - 1}")
 
       val appId = spark.sparkContext.applicationId
-
-      def tmp(tag: String): String =
-        java.nio.file.Files.createTempDirectory(s"graft-ft-$tag").toString
 
       /** SIGKILL every executor JVM of THIS app (matched by appId so a
         * concurrent Spark run is never hit) — unannounced process death,
@@ -279,21 +279,28 @@ object FaultTolerance {
           // embedding-ingest: each of nUnique deterministic base vectors
           // recurs ~4x across the file stream under fresh vec_ids — exact
           // dups (cosine 1), so the admission decisions are bucket-exact
-          // and both runs must agree
-          val (perFile, nUnique, dim) = (40, 60, 8)
-          // never the zero vector: components are k/97 - 0.5 with k
-          // integer, and 97/2 is not an integer
-          def vecOf(t: Int): Seq[Double] =
-            (0 until dim).map(j => ((t * 31 + j * 7) % 97) / 97.0 - 0.5)
+          // and both runs must agree. The bases are seeded Gaussians, kept
+          // pairwise below minCosine, so every base is admitted exactly once.
+          val (perFile, nUnique, dim, minCosine) = (40, 60, 8, 0.95)
+          val bases = (0 until nUnique).map { t =>
+            val rnd = new java.util.Random(t)
+            (0 until dim).map(_ => rnd.nextGaussian())
+          }
+          val maxCos = bases.combinations(2).map { case Seq(a, b) =>
+            a.zip(b).map { case (x, y) => x * y }.sum /
+              math.sqrt(a.map(x => x * x).sum * b.map(x => x * x).sum)
+          }.max
+          println(f"[fault] base_max_cosine=$maxCos%.4f")
+          require(maxCos < minCosine, s"base vectors must be pairwise below $minCosine")
           // (admitted vec_ids, bucket-state vec_ids) of one run
           val ((admittedF, stateF), (admittedR, _)) = gatedStream(
             "vec_id LONG, v ARRAY<DOUBLE>",
             f => (0 until perFile).map { r =>
               val id = f * perFile + r
-              s"""{"vec_id":$id,"v":[${vecOf(id % nUnique).mkString(",")}]}"""
+              s"""{"vec_id":$id,"v":[${bases(id % nUnique).mkString(",")}]}"""
             }) { (src, dir) =>
               Streams.embedIngestSink(src, s"$dir/state", s"$dir/out",
-                dim = dim, nBits = 8, minCosine = 0.95,
+                dim = dim, nBits = 8, minCosine = minCosine,
                 checkpointLocation = Some(s"$dir/ck"))
             }(dir => (longs(s"$dir/out", "vec_id").toSet, longs(s"$dir/state", "vec_id")))
           // SRP bucket-state consistency: exactly one bucket row per
@@ -303,7 +310,8 @@ object FaultTolerance {
             stateF.size == stateF.toSet.size && stateF.toSet == admittedF
           println(s"[fault] bucket_state_consistent=$stateConsistent")
           val verdict = sameNonEmpty("admitted", admittedF, admittedR)
-          if (stateConsistent) verdict else "output_wrong"
+          val allAdmitted = admittedF.size == nUnique && admittedR.size == nUnique
+          if (stateConsistent && allAdmitted) verdict else "output_wrong"
         case "linkage" =>
           // record-linkage ingest: stateless across batches vs the static
           // canonical table, so the crash contract is per-batch overwrite

@@ -87,13 +87,7 @@ object PlanDigest {
     * PLANS.md with the same session shape as the spec. */
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.Tables.configure(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.session(cores = Some(4), logLevel = "ERROR")
     java.nio.file.Files.write(
       java.nio.file.Paths.get("PLANS.md"),
       render(digestAll(spark, sfDir)).getBytes("UTF-8"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
 
 /** EXECUTED-plan inspection main — the adaptive sibling of [[graft.Explain]]
   * (which prints the static plan without running). Materializes the named
@@ -13,13 +12,7 @@ import org.apache.spark.sql.SparkSession
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = Tables.configure(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session(cores = Some(4), logLevel = "ERROR")
     val df = SparkEntry.queries(args(0))(spark, sfDir)
     df.collect()
     println("=====FINAL=====")

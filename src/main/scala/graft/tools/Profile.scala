@@ -3,7 +3,6 @@ package graft.tools
 import graft.Tables
 import graft.functions.{TextFunctions => T}
 import graft.operators.{Bpe, Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only phase profiler for the expensive near-dup pipeline: times the
@@ -13,14 +12,7 @@ import org.apache.spark.sql.functions._
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     spark.range(100000).selectExpr("sum(id)").collect()
 
     def time[A](label: String)(f: => A): A = {

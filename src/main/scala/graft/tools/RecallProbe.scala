@@ -3,7 +3,7 @@ package graft.tools
 import graft.Tables
 import graft.functions.{VectorFunctions => V}
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -56,14 +56,7 @@ object RecallProbe {
     val mode = args.drop(3).headOption.getOrElse("raw")
     require(Set("raw", "planted", "chained")(mode), s"unknown mode $mode")
     val theta = args.drop(4).headOption.map(_.toDouble).getOrElse(0.2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     spark.range(100000).selectExpr("sum(id)").collect()
 
     val raw = Tables.embeddings(spark, sfDir)

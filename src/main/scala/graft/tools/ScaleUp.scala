@@ -28,13 +28,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorStr) = args
-    val spark = graft.Tables.configure(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session()
     run(spark, srcDir, outDir, factorStr.toInt)
     println(s"""{"scaled": "$outDir", "factor": $factorStr}""")
     spark.stop()

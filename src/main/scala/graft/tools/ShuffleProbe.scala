@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle-volume probe: executes a registered query and reports what the
   * static plan digest CANNOT see — the shuffle work that actually ran.
@@ -21,18 +20,10 @@ object ShuffleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val name = args.drop(1).headOption.getOrElse("q_dedup_jaccard")
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_NOREUSE=1 disables AQE stage-cache exchange reuse — the
     // A/B that measures what reuse actually saves on identical code
     val reuse = if (sys.env.get("SPARK_GRAFT_NOREUSE").contains("1")) "false" else "true"
-    val spark = graft.Tables.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.exchange.reuse", reuse)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tables.session(conf = Seq("spark.sql.exchange.reuse" -> reuse))
     spark.range(100000).selectExpr("sum(id)").collect()
 
     val writeBytes = new AtomicLong(0)

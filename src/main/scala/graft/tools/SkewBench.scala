@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured AQE-vs-salting comparison for the q_join_skew shape — turns
@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *
   * SPARK_GRAFT_HOT_PCT (default 30) sets the share of fact rows landing
   * on the single hot key, assigned by a deterministic event_id hash so
-  * the share is exact-in-expectation at any scale (r14 verdict #6 asked
-  * for a genuinely hot ~30% key at 100x; 85 reproduces the r12 shape).
+  * the share is exact-in-expectation at any scale (30 is a genuinely hot
+  * key at 100x; 85 reproduces the SCALE_r12.json shape).
   *
   *   SPARK_GRAFT_SF_DIR=/tmp/scale100x SPARK_GRAFT_SHUFFLE=1024 \
   *     SPARK_GRAFT_HOT_PCT=30 tools/jrun.sh graft.tools.SkewBench
@@ -28,19 +28,13 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = graft.Tables.configure(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8MB")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4MB")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tables.session(logLevel = "ERROR", conf = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8MB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4MB"))
+    val shuffle = spark.sessionState.conf.numShufflePartitions
 
     val hotPct = sys.env.getOrElse("SPARK_GRAFT_HOT_PCT", "30").toInt
     def fact: DataFrame = graft.Tables.events(spark, sfDir)

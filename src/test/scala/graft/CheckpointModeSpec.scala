@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.{Bpe, CheckpointMode, Dedup, Layout, Similarity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +16,7 @@ class CheckpointModeSpec extends AnyFunSuite with SparkTest {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def reliableDir(tag: String): String =
-    Files.createTempDirectory(s"graft-ckpt-$tag").toString
+    SparkTest.tempDir(s"graft-ckpt-$tag")
 
   private def checkpointFilesUnder(dir: String): Long = {
     def walk(f: java.io.File): Long =
@@ -126,7 +125,7 @@ class CheckpointModeSpec extends AnyFunSuite with SparkTest {
   test("compactExecute: reliable checkpoint audit and layout == local") {
     import spark.implicits._
     def build(): String = {
-      val path = Files.createTempDirectory("graft-ckpt-compact").toString + "/t"
+      val path = SparkTest.tempDir("graft-ckpt-compact") + "/t"
       ((1 to 250).map(i => (i.toLong, "a")) ++
         (1001 to 1090).map(i => (i.toLong, "b"))).toDF("id", "p")
         .repartition(10)

@@ -163,7 +163,7 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
       (14L, "un deux trois quatre cinq six", "fr", "src1"))       // survives
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpus").toString
+    val dir = SparkTest.tempDir("graft-corpus")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("q_corpus_pipeline")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
@@ -209,7 +209,7 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
       (3L, "unique tokens only in this document here now today", "en", "s"))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-substr").toString
+    val dir = SparkTest.tempDir("graft-substr")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q_dedup_substring")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -229,7 +229,7 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
       (2L, "k l m n o p q r s t", "fr", "s"))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-mix").toString
+    val dir = SparkTest.tempDir("graft-mix")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q_corpus_mix")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
@@ -285,7 +285,7 @@ class CorpusSpec extends AnyFunSuite with SparkTest {
       (4L, "solo", "en", "s"))          // no bigrams -> zeros
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")))
-    val dir = java.nio.file.Files.createTempDirectory("graft-lm").toString
+    val dir = SparkTest.tempDir("graft-lm")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q_text_lm_score")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

@@ -107,8 +107,7 @@ class EntrySpec extends AnyFunSuite with SparkTest {
       .groupBy(to_date(date_trunc("DAY", col("ts"))).as("day"))
       .agg(sketch(col("value")).as("sk"))
       .localCheckpoint(true)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-qsketch").toString + "/daily"
+    val path = SparkTest.tempDir("graft-qsketch") + "/daily"
     daily.write.parquet(path)
     val direct = daily.agg(probe(col("sk"))).collect()(0).getSeq[Double](0)
     val viaDisk = spark.read.parquet(path)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.operators.Layout
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +9,7 @@ class LayoutSpec extends AnyFunSuite with SparkTest {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("zorderWrite preserves the exact row multiset") {
-    val out = Files.createTempDirectory("graft-zorder").toString + "/li"
+    val out = SparkTest.tempDir("graft-zorder") + "/li"
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
     Layout.zorderWrite(li, "l_partkey", "l_suppkey", out, nFiles = 8)
@@ -20,7 +19,7 @@ class LayoutSpec extends AnyFunSuite with SparkTest {
   }
 
   test("z-ordered files cluster BOTH dimensions (range predicate touches few files)") {
-    val out = Files.createTempDirectory("graft-zorder").toString + "/li"
+    val out = SparkTest.tempDir("graft-zorder") + "/li"
     val li = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey", "l_suppkey")
     Layout.zorderWrite(li, "l_partkey", "l_suppkey", out, nFiles = 8)
@@ -61,7 +60,7 @@ class LayoutSpec extends AnyFunSuite with SparkTest {
   test("compactExecute rewrites over-target partitions to ceil(n/target) files, " +
     "preserves rows, leaves under-target partitions byte-untouched") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft-compact").toString + "/t"
+    val path = SparkTest.tempDir("graft-compact") + "/t"
     // three partitions: a=250 and b=90 rows fragmented over ~10 files each,
     // c=50 rows in ONE file (already at its target -> must not be rewritten)
     val frag = ((1 to 250).map(i => (i.toLong, "a")) ++

@@ -19,7 +19,7 @@ class OperatorSpec extends AnyFunSuite with SparkTest {
       .toDF("event_id", "user_id", "event_type", "ts", "value")
       .withColumn("ts", to_timestamp(col("ts")))
       .withColumn("props", lit("{}"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-gapfill").toString
+    val dir = SparkTest.tempDir("graft-gapfill")
     // write ts as long nanos to match the fixture's TIMESTAMP(NANOS) shape
     events.withColumn("ts", col("ts").cast("long") * 1000000000L)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -47,7 +47,7 @@ class OperatorSpec extends AnyFunSuite with SparkTest {
       .toDF("event_id", "user_id", "event_type", "ts", "value")
       .withColumn("ts", to_timestamp(col("ts")))
       .withColumn("props", lit("{}"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val dir = SparkTest.tempDir("graft-sess")
     events.withColumn("ts", col("ts").cast("long") * 1000000000L)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("q_win_sessionize")(spark, dir)
@@ -71,7 +71,7 @@ class OperatorSpec extends AnyFunSuite with SparkTest {
       .toDF("event_id", "user_id", "event_type", "ts", "value")
       .withColumn("ts", to_timestamp(col("ts")))
       .withColumn("props", lit("{}"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-pit").toString
+    val dir = SparkTest.tempDir("graft-pit")
     events.withColumn("ts", col("ts").cast("long") * 1000000000L)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("q_join_temporal")(spark, dir)
@@ -142,7 +142,7 @@ class OperatorSpec extends AnyFunSuite with SparkTest {
       .toDF("event_id", "user_id", "event_type", "ts", "value")
       .withColumn("ts", to_timestamp(col("ts")))
       .withColumn("props", lit("{}"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-funnel").toString
+    val dir = SparkTest.tempDir("graft-funnel")
     events.withColumn("ts", col("ts").cast("long") * 1000000000L)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = SparkEntry.queries("q_agg_funnel")(spark, dir)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ScaleUpSpec extends AnyFunSuite with SparkTest {
 
   private lazy val outDir = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-scaleup").toString
+    val dir = SparkTest.tempDir("graft-scaleup")
     graft.tools.ScaleUp.run(spark, "/root/testdata/sf0.001", dir, 3)
     dir
   }
@@ -121,7 +121,7 @@ class ScaleUpSpec extends AnyFunSuite with SparkTest {
     // copies whose perturbed token sits past char 12 pile into one block
     // (measured on the r14 100x corpus: max block 3 -> 150), turning
     // candidate volume quadratic per family.
-    val dir = java.nio.file.Files.createTempDirectory("graft-scaleup-er").toString
+    val dir = SparkTest.tempDir("graft-scaleup-er")
     graft.tools.ScaleUp.run(spark, "/root/testdata/sf0.001", dir, 8)
     def maxBlock(path: String, key: org.apache.spark.sql.Column): Long =
       spark.read.parquet(s"$path/documents.parquet")

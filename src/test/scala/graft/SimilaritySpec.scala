@@ -559,8 +559,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       (2L, "spark shuffles partitions across the cluster respecting locality"),
       (3L, "completely unrelated text about astronomy and telescopes")))
     // persist ONLY the band table — the corpus text is gone
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-bands").toString + "/bands"
+    val statePath = SparkTest.tempDir("graft-bands") + "/bands"
     Similarity.bandTable(corpus, k = 16, nBands = 4)
       .write.parquet(statePath)
     val bands = spark.read.parquet(statePath)
@@ -586,8 +585,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val incoming = batch.toDF("vec_id", "v")
     val nBits = 6
     // persist ONLY the bucket table — corpus buckets are never recomputed
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-buckets").toString + "/buckets"
+    val statePath = SparkTest.tempDir("graft-buckets") + "/buckets"
     Similarity.bucketTable(existing, dim, nBits).write.parquet(statePath)
     val buckets = spark.read.parquet(statePath)
     val got = Similarity.incrementalEmbedDedup(

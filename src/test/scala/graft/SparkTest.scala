@@ -8,7 +8,6 @@ trait SparkTest {
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
@@ -20,5 +19,14 @@ trait SparkTest {
     pairs.foreach { case (k, v) => conf.set(k, v) }
     try f
     finally olds.foreach { case (k, o) => o.fold(conf.unset(k))(v => conf.set(k, v)) }
+  }
+}
+
+object SparkTest {
+  /** A fresh `<prefix>…` temp directory, deleted when the test JVM exits. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    Tables.cleanupOnExit(dir)
+    dir
   }
 }

@@ -32,7 +32,7 @@ class SqlSurfaceSpec extends AnyFunSuite with SparkTest {
   }
 
   test("partitioned sink prunes partitions on read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = SparkTest.tempDir("graft-part")
     val events = Tables.events(spark, sf)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     Warehouse.writePartitioned(events, dir, Seq("day"))

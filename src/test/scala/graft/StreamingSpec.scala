@@ -97,7 +97,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
 
   test("file-source streaming resumes from checkpointed offsets (START_IDX generalized)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toFile
+    val dir = new java.io.File(SparkTest.tempDir("graft-stream"))
     val ckpt = new java.io.File(dir, "ckpt").getAbsolutePath
     val data = new java.io.File(dir, "in").getAbsolutePath
     def write(ids: Seq[Long]): Unit =
@@ -142,8 +142,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
 
   test("foreachBatch merge sink applies streaming updates to target state") {
     import spark.implicits._
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-merge-state").toString
+    val statePath = SparkTest.tempDir("graft-merge-state")
     val initial = Seq((1L, "old"), (2L, "old"), (3L, "old")).toDF("id", "cat")
     val input = MemoryStream[(Long, String)](spark)
     val q = Streams.mergeSink(
@@ -161,8 +160,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
 
   test("merge-sink state survives many micro-batches without driver materialization") {
     import spark.implicits._
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-merge-state-n").toString
+    val statePath = SparkTest.tempDir("graft-merge-state-n")
     val initial = (1L to 5L).map(i => (i, "old", 0L)).toDF("id", "cat", "seen")
     val input = MemoryStream[(Long, String, Long)](spark)
     val q = Streams.mergeSink(
@@ -188,8 +186,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
 
   test("merge-sink replay of a batch id is idempotent (gen = batchId + 1)") {
     import spark.implicits._
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-merge-replay").toString
+    val statePath = SparkTest.tempDir("graft-merge-replay")
     val initial = Seq((1L, "old"), (2L, "old")).toDF("id", "cat")
     // run batch 0 once
     val in1 = MemoryStream[(Long, String)](spark)
@@ -317,10 +314,8 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   test("streaming dedup ingest admits only docs fresh vs the persisted corpus") {
     import spark.implicits._
     import graft.functions.{TextFunctions => T}
-    val bandPath = java.nio.file.Files
-      .createTempDirectory("graft-ingest-bands").toString + "/bands"
-    val admitPath = java.nio.file.Files
-      .createTempDirectory("graft-ingest-admit").toString + "/admitted"
+    val bandPath = SparkTest.tempDir("graft-ingest-bands") + "/bands"
+    val admitPath = SparkTest.tempDir("graft-ingest-admit") + "/admitted"
     val input = MemoryStream[(Long, String)](spark)
     val docs = input.toDF().toDF("id", "text")
       .select(col("id"), T.ngrams(T.tokens(col("text")), 3).as("shingles"))
@@ -372,7 +367,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   }
 
   test("dedup ingest sustains 20+ rate-source batches; state grows with ADMITTED rows, not batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-thr-doc").toString
+    val dir = SparkTest.tempDir("graft-thr-doc")
     val nBands = 4
     val rowsPerBatch = 400L
     // shingle group = value % 2000: groups 0..1999 first arrive in batches
@@ -404,7 +399,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   }
 
   test("embed ingest sustains 20+ rate-source batches; bucket state = one row per admitted vector") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-thr-emb").toString
+    val dir = SparkTest.tempDir("graft-thr-emb")
     val rowsPerBatch = 100L
     val dim = 16
     // vector group = value % 500: identical vectors recur from batch 5 on,
@@ -441,7 +436,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   // mapGroupsWithState-style operators, which these sinks don't use.
 
   test("dedup ingest at 10k-row batches: rows/s reflects pipeline cost, not batch overhead") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-thr-doc-big").toString
+    val dir = SparkTest.tempDir("graft-thr-doc-big")
     val nBands = 4
     val rowsPerBatch = 10000L
     // group = value % 50000: batches 0-4 are all fresh (consecutive values
@@ -468,7 +463,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   }
 
   test("embed ingest at 5k-row batches: rows/s reflects pipeline cost, not batch overhead") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-thr-emb-big").toString
+    val dir = SparkTest.tempDir("graft-thr-emb-big")
     val rowsPerBatch = 5000L
     val dim = 16
     // vector group = value % 25000: batches 0-4 fresh, 5-9 pure duplicates
@@ -494,12 +489,9 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   test("dedup ingest self-dedups a bursty batch: two in-batch near-dups admit one") {
     import spark.implicits._
     import graft.functions.{TextFunctions => T}
-    val bandPath = java.nio.file.Files
-      .createTempDirectory("graft-ingest-bands2").toString + "/bands"
-    val admitPath = java.nio.file.Files
-      .createTempDirectory("graft-ingest-admit2").toString + "/admitted"
-    val checkpoint = java.nio.file.Files
-      .createTempDirectory("graft-ingest-ckpt2").toString
+    val bandPath = SparkTest.tempDir("graft-ingest-bands2") + "/bands"
+    val admitPath = SparkTest.tempDir("graft-ingest-admit2") + "/admitted"
+    val checkpoint = SparkTest.tempDir("graft-ingest-ckpt2")
     val input = MemoryStream[(Long, String)](spark)
     val docs = input.toDF().toDF("id", "text")
       .select(col("id"), T.ngrams(T.tokens(col("text")), 3).as("shingles"))
@@ -528,12 +520,9 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     "and keeps rejecting docs admitted before the restart") {
     import spark.implicits._
     import graft.functions.{TextFunctions => T}
-    val bandPath = java.nio.file.Files
-      .createTempDirectory("graft-ingest-bands3").toString + "/bands"
-    val admitPath = java.nio.file.Files
-      .createTempDirectory("graft-ingest-admit3").toString + "/admitted"
-    val checkpoint = java.nio.file.Files
-      .createTempDirectory("graft-ingest-ckpt3").toString
+    val bandPath = SparkTest.tempDir("graft-ingest-bands3") + "/bands"
+    val admitPath = SparkTest.tempDir("graft-ingest-admit3") + "/admitted"
+    val checkpoint = SparkTest.tempDir("graft-ingest-ckpt3")
     val input = MemoryStream[(Long, String)](spark)
     val docs = input.toDF().toDF("id", "text")
       .select(col("id"), T.ngrams(T.tokens(col("text")), 3).as("shingles"))
@@ -576,7 +565,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   test("dedup ingest drops its cached frames when a batch fails") {
     import spark.implicits._
     import graft.functions.{TextFunctions => T}
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-leak")
+    val dir = java.nio.file.Paths.get(SparkTest.tempDir("graft-ingest-leak"))
     // the admitted path is a regular file: the admitted write (after the
     // batch and its band table are cached) cannot create batch=0 under it
     val admitPath = java.nio.file.Files.createFile(dir.resolve("admitted")).toString
@@ -600,7 +589,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     "a checkpoint/state mismatch and keeps batch 0's admissions") {
     import spark.implicits._
     import graft.functions.{TextFunctions => T}
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-mismatch").toString
+    val dir = SparkTest.tempDir("graft-ingest-mismatch")
     val (bandPath, admitPath) = (s"$dir/bands", s"$dir/admitted")
     def start(input: MemoryStream[(Long, String)], checkpoint: String) =
       Streams.dedupIngestSink(
@@ -646,10 +635,8 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       }
     def nearDup(v: Seq[Double]): Seq[Double] =
       v.zipWithIndex.map { case (x, i) => x + (if (i % 7 == 0) 0.01 else 0.0) }
-    val bucketPath = java.nio.file.Files
-      .createTempDirectory("graft-embed-buckets").toString + "/buckets"
-    val admitPath = java.nio.file.Files
-      .createTempDirectory("graft-embed-admit").toString + "/admitted"
+    val bucketPath = SparkTest.tempDir("graft-embed-buckets") + "/buckets"
+    val admitPath = SparkTest.tempDir("graft-embed-admit") + "/admitted"
     val input = MemoryStream[(Long, Seq[Double])](spark)
     val q = Streams.embedIngestSink(
       input.toDF().toDF("vec_id", "v"), bucketPath, admitPath,
@@ -688,12 +675,9 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       }
     def nearDup(v: Seq[Double]): Seq[Double] =
       v.zipWithIndex.map { case (x, i) => x + (if (i % 7 == 0) 0.01 else 0.0) }
-    val bucketPath = java.nio.file.Files
-      .createTempDirectory("graft-embed-buckets2").toString + "/buckets"
-    val admitPath = java.nio.file.Files
-      .createTempDirectory("graft-embed-admit2").toString + "/admitted"
-    val checkpoint = java.nio.file.Files
-      .createTempDirectory("graft-embed-ckpt2").toString
+    val bucketPath = SparkTest.tempDir("graft-embed-buckets2") + "/buckets"
+    val admitPath = SparkTest.tempDir("graft-embed-admit2") + "/admitted"
+    val checkpoint = SparkTest.tempDir("graft-embed-ckpt2")
     val input = MemoryStream[(Long, Seq[Double])](spark)
     def start() = Streams.embedIngestSink(
       input.toDF().toDF("vec_id", "v"), bucketPath, admitPath,
@@ -719,7 +703,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   test("linkage ingest: per-batch map-side resolve, union == one batch resolve, quarantine gets the rest") {
     import spark.implicits._
     import graft.operators.Linkage
-    val dir = java.nio.file.Files.createTempDirectory("graft-linkage-sink").toString
+    val dir = SparkTest.tempDir("graft-linkage-sink")
     val canonical = Seq(
       (10L, "blkA", "alpha beta gamma canonical body"),
       (11L, "blkA", "alpha beta delta other canonical"),
@@ -769,7 +753,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     // files under batch=0 — the quarantine read-back must fall back to an
     // empty matched set (AnalysisException guard), not fail the batch and
     // wedge the checkpoint replay
-    val dir = java.nio.file.Files.createTempDirectory("graft-linkage-empty").toString
+    val dir = SparkTest.tempDir("graft-linkage-empty")
     val canonical = Seq((10L, "blkA", "alpha beta gamma canonical body"))
       .toDF("doc_id", "blk", "ctext")
     val fields = Seq(Linkage.Field("ctext", "dtext", 1000))
@@ -796,8 +780,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
 
   test("scd2Sink over micro-batches == batch scd2FromChangelog over the full log") {
     import spark.implicits._
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-scd2-state").toString
+    val statePath = SparkTest.tempDir("graft-scd2-state")
     // changelog: key 1 goes A,A,B,A (batch split mid-run!); key 2 appears
     // in batch 2 only; key 3 never changes across batches
     val b1 = Seq((1L, 1L, "A", 10L), (2L, 1L, "A", 20L), (10L, 3L, "X", 11L))
@@ -829,8 +812,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
 
   test("scd2Sink drops a late row tied on ts but ordered before the open head") {
     import spark.implicits._
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft-scd2-tie").toString
+    val statePath = SparkTest.tempDir("graft-scd2-tie")
     // batch 1 establishes A@(10,tie 1) then B@(20,tie 5) — open head is
     // (20, 5). Batch 2 replays a LATE row (ts=20, tie=3, A): it precedes
     // the head in the total order, so it must be dropped, not allowed to

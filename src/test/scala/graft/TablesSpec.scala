@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +20,7 @@ class TablesSpec extends AnyFunSuite with SparkTest {
   private lazy val encodedDirs: Map[String, String] = {
     val base = Tables.events(spark, sf) // normalized µs TIMESTAMP
     def mk(name: String)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): (String, String) = {
-      val dir = Files.createTempDirectory(s"graft-enc-$name").toString
+      val dir = SparkTest.tempDir(s"graft-enc-$name")
       f(base).write.mode("overwrite").parquet(s"$dir/events.parquet")
       name -> dir
     }
@@ -90,7 +88,7 @@ class TablesSpec extends AnyFunSuite with SparkTest {
   }
 
   test("events rejects an unknown ts encoding instead of mis-reading it") {
-    val dir = Files.createTempDirectory("graft-enc-bad").toString
+    val dir = SparkTest.tempDir("graft-enc-bad")
     Tables.events(spark, sf).withColumn("ts", col("ts").cast("string"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val e = intercept[IllegalStateException](Tables.events(spark, dir))
