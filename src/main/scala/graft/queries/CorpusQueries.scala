@@ -18,18 +18,14 @@ import org.apache.spark.sql.functions._
   */
 object CorpusQueries {
 
-  // Learned-merge memo, one learn per (session, dir): q_corpus_bpe emits
-  // the merge table, q_corpus_bpe_apply segments with it — in production
-  // the tokenizer is trained once and applied everywhere, so the two
-  // queries sharing the k-iteration learn is the honest cost model (same
-  // policy as Tables.rowCount / the bucketed-pair warmup). The memo value
-  // is k rows — driver-bounded by construction.
-  private val bpeMergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Seq[(Long, String, String, Long)]]()
-
+  // Learned merges, one learn per (session, dir): q_corpus_bpe emits the
+  // merge table, q_corpus_bpe_apply segments with it — in production the
+  // tokenizer is trained once and applied everywhere, so the two queries
+  // sharing the k-iteration learn is the honest cost model. Whichever
+  // runs first times the learn. The value is k rows — driver-bounded.
   private def learnedMerges(s: org.apache.spark.sql.SparkSession, d: String)
       : Seq[(Long, String, String, Long)] =
-    bpeMergeCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("bpe_merges", s, d) {
       val words = Tables.documents(s, d)
         .select(explode(T.tokens(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("n"))
@@ -37,7 +33,7 @@ object CorpusQueries {
       graft.operators.Bpe.learnMerges(words, 6).orderBy("step").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
         .toSeq
-    })
+    }
 
   // Regexes kept RE2-compatible (no lookarounds) so the identical pattern
   // runs in Spark (java.util.regex) and the DuckDB oracle (RE2).

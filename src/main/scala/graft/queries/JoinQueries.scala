@@ -179,9 +179,8 @@ object JoinQueries {
                      CAST(count(*) AS BIGINT) AS n_orders,
                      CAST(round(CAST(sum(o.o_totalprice) AS DECIMAL(28,6)), 2) AS DOUBLE) AS sum_price
               FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-              GROUP BY o.o_custkey ORDER BY custkey""")) { (s, d) =>
-      // one-time bucketed table build memoized in Tables (Bench pre-builds
-      // it during warmup, so the bench row times the join, not the write)
+              GROUP BY o.o_custkey ORDER BY custkey"""),
+        prep = Tables.bucketedOrdersCustomer) { (s, d) =>
       val (ordsT, custT) = Tables.bucketedOrdersCustomer(s, d)
       Warehouse.colocatedJoin(s, ordsT, custT, "custkey")
         .groupBy("custkey")

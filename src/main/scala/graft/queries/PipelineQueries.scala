@@ -339,12 +339,15 @@ object PipelineQueries {
               FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""")) { (s, d) =>
       val url = s"jdbc:derby:memory:graft_${Integer.toHexString(d.hashCode)};create=true"
       val driver = Some("org.apache.derby.jdbc.EmbeddedDriver")
-      Jdbc.ensureLoaded(
-        Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey"),
-        s, url, "nation_rt", driver,
-        // Derby maps StringType to CLOB by default, which cannot be
-        // compared/aggregated — pin a comparable type for the name column
-        columnTypes = Some("n_name VARCHAR(64)"))
+      // the sink load runs once per session, inside the first timed run
+      Tables.once("jdbc", s, (url, "nation_rt")) {
+        Jdbc.write(
+          Tables.nation(s, d).select("n_nationkey", "n_name", "n_regionkey"),
+          url, "nation_rt", driver = driver,
+          // Derby maps StringType to CLOB by default, which cannot be
+          // compared/aggregated — pin a comparable type for the name column
+          columnTypes = Some("n_name VARCHAR(64)"))
+      }
       Jdbc.readPartitioned(s, url, "nation_rt", "n_nationkey", 4, driver)
         .groupBy("n_regionkey")
         .agg(

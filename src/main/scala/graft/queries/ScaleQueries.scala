@@ -337,7 +337,8 @@ object ScaleQueries {
       Some("""SELECT CAST(count(*) AS BIGINT) AS n,
                      CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
                      CAST(round(CAST(sum(value) AS DECIMAL(28,6)), 2) AS DOUBLE) AS sum_value
-              FROM events WHERE event_type = 'purchase'""")) { (s, d) =>
+              FROM events WHERE event_type = 'purchase'"""),
+        prep = Tables.partitionedEvents) { (s, d) =>
       val path = Tables.partitionedEvents(s, d)
       s.read.parquet(path)
         .filter(col("event_type") === "purchase")
@@ -357,7 +358,8 @@ object ScaleQueries {
       Some("""SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
                      CAST(count(*) AS BIGINT) AS n,
                      CAST(round(CAST(sum(value) AS DECIMAL(28,6)), 2) AS DOUBLE) AS sum_value
-              FROM events GROUP BY 1 ORDER BY day""")) { (s, d) =>
+              FROM events GROUP BY 1 ORDER BY day"""),
+        prep = Tables.partitionedEventsByDay) { (s, d) =>
       val path = Tables.partitionedEventsByDay(s, d)
       // recompute one day and swap just its partition (idempotent: the
       // rewritten rows equal the originals)
@@ -553,7 +555,8 @@ object ScaleQueries {
       Some("""SELECT strftime(CAST(date_trunc('day', ts) AS DATE), '%Y-%m-%d') AS day,
                      CAST(count(*) AS BIGINT) AS n_rows,
                      CAST(ceil(count(*) / 2000.0) AS BIGINT) AS n_files
-              FROM events GROUP BY 1 ORDER BY day""")) { (s, d) =>
+              FROM events GROUP BY 1 ORDER BY day"""),
+        prep = Tables.compactableEventsByDay) { (s, d) =>
       val path = Tables.compactableEventsByDay(s, d)
       Layout.compactExecute(s, path, "event_date", Tables.CompactTargetRows)
         .select(col("event_date").as("day"), col("n_rows"),

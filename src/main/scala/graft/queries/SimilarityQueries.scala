@@ -499,7 +499,8 @@ object SimilarityQueries {
     // family: the oracle recomputes both band tables and the join exactly
     // (PortableSql.incrementalOracle).
     QueryDef("q_dedup_incremental",
-        Some(PortableSql.incrementalOracle(16, 4))) { (s, d) =>
+        Some(PortableSql.incrementalOracle(16, 4)),
+        prep = Tables.bucketedBandTable) { (s, d) =>
       val shingled = Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id").as("id"),
@@ -526,7 +527,8 @@ object SimilarityQueries {
     // probe set and cosine gate exactly
     // (PortableSql.embedDedupIncrementalOracle).
     QueryDef("q_dedup_embed_incremental",
-        Some(PortableSql.embedDedupIncrementalOracle(0.3))) { (s, d) =>
+        Some(PortableSql.embedDedupIncrementalOracle(0.3)),
+        prep = Tables.bucketedEmbedTables) { (s, d) =>
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), V.asDouble(col("embedding")).as("v"))
       val nBits = Similarity.lshNBits(Tables.rowCount(s, d, "embeddings"))

@@ -98,22 +98,4 @@ object Jdbc {
     driver.foreach(r.option("driver", _))
     r.load()
   }
-
-  // Write-once memo per (session, url, table): the roundtrip query re-runs
-  // inside Verify/Bench sessions; the sink load is one-time table prep
-  // (same policy as Tables.bucketedOrdersCustomer).
-  private val loaded =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Boolean]()
-
-  def ensureLoaded(
-      df: => DataFrame,
-      spark: SparkSession,
-      url: String,
-      table: String,
-      driver: Option[String] = None,
-      columnTypes: Option[String] = None): Unit =
-    loaded.computeIfAbsent((spark, url, table), { _ =>
-      write(df, url, table, SaveMode.Overwrite, driver, columnTypes)
-      java.lang.Boolean.TRUE
-    })
 }

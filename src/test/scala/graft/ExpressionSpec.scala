@@ -2,7 +2,7 @@ package graft
 
 import graft.expressions.CosineSimilarity
 import graft.functions.{VectorFunctions => V}
-import graft.operators.Skew
+import graft.operators.{Joins, Skew}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -306,7 +306,7 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
       (1 to 20).map(i => (i.toLong % 5 + 2, i.toLong))).toDF("k", "lv")
     val right = (1L to 10L).map(k => (k, s"r$k")).toDF("k", "rv")
     val plain = left.join(right, Seq("k")).orderBy("k", "lv").collect().toSeq
-    val salted = Skew.saltedJoin(left, right, "k", saltFactor = 8)
+    val salted = Joins.saltedJoin(left, right, "k", salts = 8, saltSource = col("lv"))
       .select("k", "lv", "rv").orderBy("k", "lv").collect().toSeq
     assert(salted == plain)
   }

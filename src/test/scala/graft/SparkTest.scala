@@ -4,12 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session per test JVM (suites reuse via getOrCreate). */
 trait SparkTest {
-  lazy val spark: SparkSession = Tables.configure(SparkSession.builder())
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    Tables.session(cores = Some(4), conf = Seq("spark.app.name" -> "graft-test"))
 
   /** Scoped session-conf override (restores prior values afterwards) —
     * for plan-shape assertions that must pin e.g. the broadcast threshold. */

@@ -94,6 +94,53 @@ class TablesSpec extends AnyFunSuite with SparkTest {
     val e = intercept[IllegalStateException](Tables.events(spark, dir))
     assert(e.getMessage.contains("unsupported events.ts type"))
   }
+
+  test("once builds each key once, also when a build calls once for another key") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    def inner(): Int =
+      Tables.once("spec_inner", spark, "k") { builds.incrementAndGet(); 1 }
+    def outer(): Int =
+      Tables.once("spec_outer", spark, "k") { builds.incrementAndGet(); inner() + 1 }
+    assert(outer() == 2 && outer() == 2 && inner() == 1)
+    assert(builds.get == 2, "the nested build ran more than once per key")
+    // racing first calls of one key share one build
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val threads = (1 to 4).map { i =>
+      new Thread(() => {
+        got.add(Tables.once("spec_race", spark, "k") { builds.incrementAndGet(); i }); ()
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(builds.get == 3 && got.size == 4 && got.toArray.distinct.length == 1)
+    // a build that throws leaves no value behind: the next call builds again
+    var tries = 0
+    def flaky(): Int = Tables.once("spec_flaky", spark, "k") {
+      tries += 1
+      if (tries == 1) throw new IllegalStateException("transient")
+      tries
+    }
+    intercept[IllegalStateException](flaky())
+    assert(flaky() == 2 && flaky() == 2)
+  }
+
+  test("every prep layout and bucketed-table location is registered for exit cleanup") {
+    Registry.defs.foreach(_.prep(spark, sf))
+    val tag = Tables.dirTag(sf)
+    val warehouse = new java.io.File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    def written(dir: java.io.File): Map[String, String] =
+      Option(dir.listFiles).toSeq.flatten
+        .filter(f => f.getName.startsWith("graft_") && f.getName.endsWith(tag))
+        .map(f => f.getName.stripSuffix("_" + tag) -> f.getPath).toMap
+    val layouts = written(new java.io.File("/tmp")) ++ written(warehouse)
+    val expected = Seq("graft_events_bytype", "graft_events_byday",
+      "graft_events_compact", "graft_orders_bkt", "graft_cust_bkt",
+      "graft_bands_bkt", "graft_srp_bkt", "graft_vec_bkt")
+    assert(expected.forall(layouts.contains),
+      s"prep wrote ${layouts.keys.toSeq.sorted}, expected $expected")
+    val kept = layouts.filterNot { case (_, p) => Tables.registeredForCleanup(p) }
+    assert(kept.isEmpty, s"left on disk at exit: ${kept.keys.toSeq.sorted}")
+  }
 }
 
 private case class Row3(id: Long, micros: Long)

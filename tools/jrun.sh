@@ -1,8 +1,10 @@
 #!/bin/bash
-# Run a graft main class directly against the compiled classes + Spark jars,
-# bypassing sbt (avoids the sbt project lock during long test runs).
+# Run a graft main class directly against the compiled classes of this
+# checkout + Spark jars, bypassing sbt (avoids the sbt project lock during
+# long test runs).
 # Usage: tools/jrun.sh [-Xmx..] <mainClass> [args...]
 set -e
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -14,4 +16,4 @@ done
 MEM="${SPARK_DRIVER_MEM:-48g}"
 exec java $OPENS -Xmx$MEM $JRUN_EXTRA \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"

@@ -25,7 +25,7 @@ def main():
     per = {}
     for d in passes:
         for k, v in d["queries"].items():
-            if "#" in k or v < 0:
+            if v < 0:
                 continue
             per.setdefault(k, []).append(v)
     queries = {

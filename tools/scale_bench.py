@@ -44,10 +44,7 @@ def main():
         else:
             per_family.setdefault(family(q), []).append(q)
     groups.extend(sorted(per_family.items()))
-    env = dict(os.environ,
-               SPARK_GRAFT_SF_DIR=sfdir,
-               SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-               SPARK_GRAFT_SHUFFLE=shuffle)
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir, SPARK_GRAFT_SHUFFLE=shuffle)
     failed = []
     for gname, qs in groups:
         out = os.path.join(outdir, f"bench_{tag}_{gname}.json")
