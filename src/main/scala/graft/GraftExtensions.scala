@@ -1,9 +1,10 @@
 package graft
 
 import graft.expressions.{CosineSimilarity, JaccardSimilarity, MinHashSignature, NGrams, NfcNormalize, RabinKarpWindows, SimHash64, Tokenize}
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.IntegerType
 
 /** SQL-surface registration for the engine's custom expressions —
   * SURVEY.md §7.4. Attach with:
@@ -16,55 +17,32 @@ import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
   * `SELECT graft_cosine(a.embedding, b.embedding)` works from plain SQL.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions.intArg
+
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(children(0), children(1))))
-    // graft_minhash(tokens, k) — k must be a literal int (plan-time constant)
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashSignature(
-          children(0),
-          children(1).asInstanceOf[Literal].value.asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaccard"),
-      new ExpressionInfo(classOf[JaccardSimilarity].getName, "graft_jaccard"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        JaccardSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_tokens"),
-      new ExpressionInfo(classOf[Tokenize].getName, "graft_tokens"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Tokenize(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash64(children(0))))
-    // graft_ngrams(tokens, n) — n must be a literal int (plan-time constant)
-    ext.injectFunction((
-      FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[NGrams].getName, "graft_ngrams"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        NGrams(
-          children(0),
-          children(1).asInstanceOf[Literal].value.asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        NfcNormalize(children(0))))
-    // graft_rk_windows(tokens, w) — w must be a literal int (plan-time constant)
-    ext.injectFunction((
-      FunctionIdentifier("graft_rk_windows"),
-      new ExpressionInfo(classOf[RabinKarpWindows].getName, "graft_rk_windows"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        RabinKarpWindows(
-          children(0),
-          children(1).asInstanceOf[Literal].value.asInstanceOf[Int])))
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    fn("graft_cosine", classOf[CosineSimilarity])(c => CosineSimilarity(c(0), c(1)))
+    fn("graft_minhash", classOf[MinHashSignature])(c =>
+      MinHashSignature(c(0), intArg("graft_minhash", "k", c(1))))
+    fn("graft_jaccard", classOf[JaccardSimilarity])(c => JaccardSimilarity(c(0), c(1)))
+    fn("graft_tokens", classOf[Tokenize])(c => Tokenize(c(0)))
+    fn("graft_simhash", classOf[SimHash64])(c => SimHash64(c(0)))
+    fn("graft_ngrams", classOf[NGrams])(c => NGrams(c(0), intArg("graft_ngrams", "n", c(1))))
+    fn("graft_nfc", classOf[NfcNormalize])(c => NfcNormalize(c(0)))
+    fn("graft_rk_windows", classOf[RabinKarpWindows])(c =>
+      RabinKarpWindows(c(0), intArg("graft_rk_windows", "w", c(1))))
   }
+}
+
+object GraftExtensions {
+  /** The plan-time INT constant that `param` of SQL function `func` must
+    * be; anything else (a column, another type, NULL) is an analysis
+    * error naming both. */
+  private def intArg(func: String, param: String, e: Expression): Int =
+    (if (e.foldable && e.dataType == IntegerType) e.eval() else null) match {
+      case v: Int => v
+      case _ => throw new AnalysisException("NON_FOLDABLE_ARGUMENT", Map(
+        "funcName" -> func, "paramName" -> param, "paramType" -> "INT"))
+    }
 }

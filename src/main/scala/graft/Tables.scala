@@ -71,6 +71,7 @@ object Tables {
     val spark = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
+    sweepDeadLayouts(spark)
     spark
   }
 
@@ -87,6 +88,10 @@ object Tables {
   def rowCount(spark: SparkSession, dir: String, name: String): Long =
     once("count", spark, (dir, name))(table(spark, dir, name).count())
 
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+  }
+
   // Paths deleted at JVM exit, one hook each. The pid in dirTag keeps
   // concurrent processes apart, so without the hook every run would leave
   // its own copy of each layout behind.
@@ -94,16 +99,28 @@ object Tables {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private[graft] def cleanupOnExit(path: String): Unit =
     if (cleanupRegistered.add(path)) {
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(path))
-      }
+      sys.addShutdownHook(rm(new java.io.File(path)))
       ()
     }
   private[graft] def registeredForCleanup(path: String): Boolean =
     cleanupRegistered.contains(path)
+
+  /** Delete the layouts of JVMs that died without running their exit hooks
+    * (`kill -9`, an OOM kill): `/tmp/graft_*_p<pid>` and warehouse
+    * `graft_*_bkt_*_p<pid>` entries whose pid is not a live process. A
+    * live pid's layouts are never touched. */
+  private def sweepDeadLayouts(spark: SparkSession): Unit = {
+    val warehouse = new java.io.File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    val owned = Seq(
+      new java.io.File("/tmp") -> """graft_.+_p(\d{1,10})""".r,
+      warehouse -> """graft_.+_bkt_.+_p(\d{1,10})""".r)
+    for ((dir, layout) <- owned; f <- Option(dir.listFiles).toSeq.flatten)
+      f.getName match {
+        case layout(pid) if !ProcessHandle.of(pid.toLong).filter(_.isAlive).isPresent => rm(f)
+        case _ =>
+      }
+  }
 
   /** Collision-free filesystem/table tag for a data dir: the sanitized
     * full path for readability PLUS an md5 head of the RAW path for

@@ -9,20 +9,18 @@ import org.apache.spark.sql.SparkSession
   * through the session's UDF registry instead. Parameters (k) are baked
   * into each registered name because SQL function resolution happens
   * before literals are known to the encoder-based UDAF bridge.
+  *
+  * Frequent items and mergeable quantiles need no registration: Spark's
+  * built-in `approx_top_k_accumulate`/`approx_top_k_estimate` and
+  * `kll_sketch_agg_double`/`kll_merge_agg_double`/
+  * `kll_sketch_get_quantile_double` are plain SQL.
   */
 object GraftFunctions {
 
   def registerAll(spark: SparkSession): Unit = {
     // grouped MinHash signature over token arrays (16 components)
     spark.udf.register("graft_minhash_agg", MinHashAggregator.column(16))
-    // Misra-Gries frequent items, 8-counter buffer
-    spark.udf.register("graft_heavy8", HeavyHitters.column(8))
     // bounded-buffer grouped top-3 over (key, value) pairs
     spark.udf.register("graft_top3", TopK.column(3))
-    // mergeable GK quantile sketch: build (double -> binary) and
-    // union+query (binary -> [p50, p90, p99])
-    spark.udf.register("graft_qsketch", QuantileSketchAgg.column())
-    spark.udf.register("graft_qmerge_p50_90_99",
-      QuantileMergeAgg.column(Seq(0.5, 0.9, 0.99)))
   }
 }

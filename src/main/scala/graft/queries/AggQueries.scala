@@ -157,6 +157,8 @@ object AggQueries {
     },
 
     // Pivot: one column per order status, conditional-aggregate oracle.
+    // A pivot cell with no rows is NULL in Spark's pivot; the count it
+    // stands for is 0, as the oracle's count(*) FILTER gives.
     QueryDef(
       "q_pivot",
       Some("""SELECT o_orderpriority,
@@ -164,10 +166,13 @@ object AggQueries {
                      CAST(count(*) FILTER (WHERE o_orderstatus = 'O') AS BIGINT) AS O,
                      CAST(count(*) FILTER (WHERE o_orderstatus = 'P') AS BIGINT) AS P
               FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""")) { (s, d) =>
+      val statuses = Seq("F", "O", "P")
       Tables.orders(s, d)
         .groupBy("o_orderpriority")
-        .pivot("o_orderstatus", Seq("F", "O", "P"))
+        .pivot("o_orderstatus", statuses)
         .agg(count(lit(1)))
+        .select(col("o_orderpriority") +:
+          statuses.map(v => coalesce(col(v), lit(0L)).as(v)): _*)
         .orderBy("o_orderpriority")
     },
 
@@ -214,36 +219,39 @@ object AggQueries {
         .orderBy("status", "priority")
     },
 
-    // Misra-Gries heavy hitters (custom bounded-memory UDAF,
-    // graft.functions.HeavyHittersAggregator): the sketch buffer is at
-    // most k counters regardless of item cardinality, so the shuffle
-    // carries k entries total — the "frequent items without a full
-    // per-item shuffle" primitive. Determinism contract making this
-    // oracle-checkable: MG guarantees any item with true count > 2n/(k+1)
-    // is emitted (est >= true - n/(k+1) > n/(k+1)) and any item with
-    // true count <= n/(k+1) never is (est <= true). TPC-H o_orderstatus
-    // splits ~48.6% 'F' / ~48.7% 'O' / ~2.6% 'P'; with k=7 the
-    // indeterminate band (n/8, n/4] is empty because F and O sit far
-    // above n/4 and P far below n/8, so the emitted SET is exact. Sketch
-    // estimates are merge-order-dependent, so the output joins back to
-    // exact counts.
+    // Heavy hitters over DataSketches' frequent-items sketch (the built-in
+    // approx_top_k family): the sketch tracks at most maxItemsTracked = 48
+    // items (hash map size M = 64) whatever the item cardinality, so the
+    // aggregation is partial map-side and the shuffle carries one bounded
+    // sketch. Contract, from the sketch's a-priori error 3.5·n/M
+    // (= 0.055n): the reported count is an UPPER bound,
+    // true <= est <= true + 0.055n, and every item with true > 2·0.055n is
+    // reported. So est - 0.055n > n/4 is the guaranteed-real band: each
+    // emitted item's true count exceeds n/4 (the oracle's threshold), and
+    // every item above n/4 + 0.055n is emitted; only (n/4, 0.305n] is
+    // indeterminate. The generated o_orderstatus splits about a third
+    // each (0.329-0.343 of n at sf0.001-sf0.1), above that band, so the
+    // emitted SET is exact. Estimates depend on merge order, so the output
+    // joins back to exact counts.
     QueryDef(
       "q_agg_heavy",
       Some("""WITH t AS (SELECT count(*) AS n FROM orders)
               SELECT o_orderstatus AS item, CAST(count(*) AS BIGINT) AS n_item
               FROM orders, t GROUP BY o_orderstatus, t.n
               HAVING count(*) * 4 > n ORDER BY item""")) { (s, d) =>
-      import graft.functions.HeavyHitters
       val orders = Tables.orders(s, d)
-      val k = 7
+      val tracked = 48
+      val aprioriError = 3.5 / 64 // 3.5 / M, M = 2^ceil(log2(tracked / 0.75))
       val sketch = orders
-        .agg(HeavyHitters.column(k)(col("o_orderstatus")).as("hh"))
-        .select(explode(col("hh")).as(Seq("item", "est")))
+        .agg(call_function("approx_top_k_estimate",
+          call_function("approx_top_k_accumulate", col("o_orderstatus"), lit(tracked)),
+          lit(tracked)).as("hh"))
+        .select(inline(col("hh")))
       val total = orders.agg(count(lit(1)).as("n"))
       val exact = orders.groupBy(col("o_orderstatus").as("item"))
         .agg(count(lit(1)).as("n_item"))
       sketch.crossJoin(broadcast(total))
-        .filter(col("est") * (k + 1) > col("n")) // guaranteed-real band
+        .filter(col("count") - col("n") * aprioriError > col("n") / 4) // guaranteed-real band
         .join(exact, "item")
         .select(col("item"), col("n_item"))
         .orderBy("item")
@@ -498,21 +506,19 @@ object AggQueries {
     },
 
     // Rolling 7-day value percentiles via MERGEABLE QUANTILE SKETCHES —
-    // the percentile twin of q_agg_wau_sketch: per-day Greenwald–Khanna
-    // summaries (Spark's own percentile_approx engine, map-side partial
-    // merge; one ~O(1/ε) summary per day crosses the shuffle) unioned
-    // into each 7-day window over the DAY-sketch table. Raw events are
-    // touched once; any re-window merges stored sketches. No DuckDB
-    // oracle by nature (the sketch binary and its ε-rank answers are
-    // engine-specific); EntrySpec bounds every window's p50/p90/p99
-    // against the exact per-window percentile within the GK rank-error
-    // guarantee.
+    // the percentile twin of q_agg_wau_sketch: per-day KLL sketches
+    // (DataSketches, default k = 200; map-side partial merge, one compact
+    // sketch per day crosses the shuffle) merged into each 7-day window
+    // over the DAY-sketch table. Raw events are touched once; any
+    // re-window merges stored sketches. No DuckDB oracle by nature (the
+    // sketch binary and its rank-approximate answers are engine-specific);
+    // EntrySpec brackets every window's p50/p90/p99 between the exact
+    // quantiles at p ± 0.03, above KLL's k = 200 normalized rank error
+    // (1.65% two-sided at 99% confidence).
     QueryDef("q_agg_quantile_sketch", None) { (s, d) =>
-      val sketch = graft.functions.QuantileSketchAgg.column()
-      val probe = graft.functions.QuantileMergeAgg.column(Seq(0.5, 0.9, 0.99))
       val daily = Tables.events(s, d)
         .groupBy(to_date(date_trunc("DAY", col("ts"))).as("day"))
-        .agg(sketch(col("value")).as("sk"))
+        .agg(kll_sketch_agg_double(col("value")).as("sk"))
       val mx = daily.agg(max("day").as("max_day"))
       daily
         .select(col("day"), col("sk"), explode(sequence(lit(0), lit(6))).as("k"))
@@ -520,7 +526,8 @@ object AggQueries {
         .crossJoin(broadcast(mx))
         .filter(col("tday") <= col("max_day"))
         .groupBy(date_format(col("tday"), "yyyy-MM-dd").as("day"))
-        .agg(probe(col("sk")).as("q"))
+        .agg(kll_sketch_get_quantile_double(kll_merge_agg_double(col("sk")),
+          array(lit(0.5), lit(0.9), lit(0.99))).as("q"))
         .select(col("day"),
           col("q")(0).as("p50"), col("q")(1).as("p90"), col("q")(2).as("p99"))
         .orderBy("day")

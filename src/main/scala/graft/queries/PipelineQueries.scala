@@ -14,9 +14,18 @@ import scala.jdk.CollectionConverters._
   */
 object PipelineQueries {
 
-  /** Fixture CSV (absolute path — Verify/Bench may run from any cwd). */
-  private val fixtureCsv = "/root/repo/src/test/resources/fixtures/tmp_dataset.csv"
-  private val corruptCsv = "/root/repo/src/test/resources/fixtures/tmp_dataset_corrupt.csv"
+  /** The running checkout's CSV fixtures, as absolute paths (Verify and
+    * Bench may run from any cwd): the nearest ancestor of this class's
+    * compiled location that holds `src/test/resources/fixtures`. */
+  private val fixtures: String =
+    Iterator.iterate(new java.io.File(
+        getClass.getProtectionDomain.getCodeSource.getLocation.toURI))(_.getParentFile)
+      .takeWhile(_ != null)
+      .map(new java.io.File(_, "src/test/resources/fixtures"))
+      .find(_.isDirectory)
+      .fold("src/test/resources/fixtures")(_.getAbsolutePath)
+  private[graft] val fixtureCsv = s"$fixtures/tmp_dataset.csv"
+  private[graft] val corruptCsv = s"$fixtures/tmp_dataset_corrupt.csv"
 
   val defs: Seq[QueryDef] = Seq(
 

@@ -57,13 +57,13 @@ class EntrySpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("q_agg_quantile_sketch: merged day-sketch percentiles respect the GK rank bound") {
+  test("q_agg_quantile_sketch: merged day-sketch percentiles respect the KLL rank bound") {
     import org.apache.spark.sql.functions._
-    // GK guarantee: a query at rank p returns a value whose TRUE rank is
-    // within ε·n. Merging k compressed summaries keeps the bound at ε
-    // (Spark merges map-side partials the same way); verify in VALUE space
-    // by bracketing each estimate between the exact quantiles at p ± 3ε
-    // (3ε = ε guarantee + discrete-rank slack on tied/stepped data).
+    // KLL (k = 200): a query at rank p returns a value whose TRUE rank is
+    // within 1.65%·n at 99% confidence, and merged sketches keep that
+    // bound (Spark merges map-side partials the same way); verify in VALUE
+    // space by bracketing each estimate between the exact quantiles at
+    // p ± 0.03 (rank error + discrete-rank slack on tied/stepped data).
     val eps = 0.03
     val est = SparkEntry.queries("q_agg_quantile_sketch")(spark, sf).collect()
       .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3)))
@@ -94,31 +94,42 @@ class EntrySpec extends AnyFunSuite with SparkTest {
   test("quantile day-sketch table survives a parquet round-trip byte-exactly") {
     import org.apache.spark.sql.functions._
     // the 100 TB contract is a STORED day-sketch table: build per-day
-    // sketches, persist, read back, merge — answers must equal merging
-    // the in-memory sketches directly (serialization is the load-bearing
-    // part; QuantileSketch's hand-rolled layout must round-trip stable)
-    val sketch = graft.functions.QuantileSketchAgg.column()
-    val probe = graft.functions.QuantileMergeAgg.column(Seq(0.25, 0.5, 0.9))
-    // materialize ONCE: GK summary bytes depend on partial-merge order,
-    // which Spark does not fix across independent executions — every use
-    // below (the write, `direct`, the byte comparison) must read the same
+    // sketches, persist, read back — each stored sketch must answer as the
+    // in-memory one does (the KLL binary is the load-bearing part and must
+    // round-trip stable). Answers are compared per day: a merge compacts
+    // with DataSketches' unseeded random offsets, so two merges of equal
+    // sketches may differ within the rank bound (checked above).
+    def probe(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("day"), kll_sketch_get_quantile_double(col("sk"),
+          array(lit(0.25), lit(0.5), lit(0.9))))
+        .collect().map(r => r.getDate(0).toString -> r.getSeq[Double](1)).toMap
+    // materialize ONCE: sketch bytes depend on partial-merge order, which
+    // Spark does not fix across independent executions — every use below
+    // (the write, `direct`, the byte comparison) must read the same
     // materialization or the byte-exact assertions can flake
     val daily = Tables.events(spark, sf)
       .groupBy(to_date(date_trunc("DAY", col("ts"))).as("day"))
-      .agg(sketch(col("value")).as("sk"))
+      .agg(kll_sketch_agg_double(col("value")).as("sk"))
       .localCheckpoint(true)
     val path = SparkTest.tempDir("graft-qsketch") + "/daily"
     daily.write.parquet(path)
-    val direct = daily.agg(probe(col("sk"))).collect()(0).getSeq[Double](0)
-    val viaDisk = spark.read.parquet(path)
-      .agg(probe(col("sk"))).collect()(0).getSeq[Double](0)
-    assert(viaDisk == direct, s"disk $viaDisk != direct $direct")
+    val direct = probe(daily)
+    val viaDisk = probe(spark.read.parquet(path))
+    assert(direct.nonEmpty && viaDisk == direct, s"disk $viaDisk != direct $direct")
     // and the stored bytes themselves are identical per day
     val a = daily.collect().map(r => r.getDate(0).toString ->
       r.getAs[Array[Byte]]("sk").toSeq).toMap
     val b = spark.read.parquet(path).collect().map(r => r.getDate(0).toString ->
       r.getAs[Array[Byte]]("sk").toSeq).toMap
     assert(a == b)
+  }
+
+  test("q_pivot gives 0, not NULL, for a pivot value with no rows") {
+    val dir = SparkTest.tempDir("graft-pivot-single")
+    Tables.orders(spark, sf).filter(org.apache.spark.sql.functions.col("o_orderstatus") === "F")
+      .limit(1).write.parquet(s"$dir/orders.parquet")
+    val Array(row) = SparkEntry.queries("q_pivot")(spark, dir).collect()
+    assert(row.toSeq.drop(1) == Seq(1L, 0L, 0L), row.toString)
   }
 
   test("representative queries from each family execute and return rows") {

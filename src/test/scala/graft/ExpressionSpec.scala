@@ -1,6 +1,5 @@
 package graft
 
-import graft.expressions.CosineSimilarity
 import graft.functions.{VectorFunctions => V}
 import graft.operators.{Joins, Skew}
 import org.apache.spark.sql.Column
@@ -38,8 +37,7 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
   }
 
   test("graft_cosine is callable from SQL after registration") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
+    registerGraftExtensions()
     val r = spark.sql(
       "SELECT graft_cosine(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS c," +
         " graft_cosine(array(1.0D, 2.0D), array(1.0D, 2.0D)) AS s")
@@ -69,13 +67,7 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
   }
 
   test("graft_minhash is callable from SQL with a literal k") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => graft.expressions.MinHashSignature(
-        exprs(0),
-        exprs(1).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Int]),
-      "built-in")
+    registerGraftExtensions()
     val sig = spark.sql(
       "SELECT graft_minhash(array('a','b','c'), 8) AS s").collect()(0).getSeq[Long](0)
     assert(sig.length == 8)
@@ -99,9 +91,7 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
   }
 
   test("graft_simhash is callable from SQL") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash",
-      exprs => graft.expressions.SimHash64(exprs(0)), "built-in")
+    registerGraftExtensions()
     val r = spark.sql(
       "SELECT graft_simhash(array('a','b','c')) AS h," +
         " graft_simhash(CAST(array() AS array<string>)) AS e").collect()(0)
@@ -160,9 +150,7 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
   }
 
   test("native jaccard treats null elements as one distinct value (built-in parity)") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard",
-      exprs => graft.expressions.JaccardSimilarity(exprs(0), exprs(1)), "built-in")
+    registerGraftExtensions()
     val r = spark.sql(
       "SELECT graft_jaccard(array('x', NULL), array('x', '')) AS a," +
         // built-in reference for the same inputs
@@ -174,15 +162,7 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
   }
 
   test("graft_tokens and graft_ngrams are callable from SQL") {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tokens", exprs => graft.expressions.Tokenize(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ngrams",
-      exprs => graft.expressions.NGrams(
-        exprs(0),
-        exprs(1).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Int]),
-      "built-in")
+    registerGraftExtensions()
     val r = spark.sql(
       "SELECT graft_tokens('The  Quick Fox') AS t," +
         " graft_ngrams(graft_tokens('a b c'), 2) AS g").collect()(0)
@@ -193,15 +173,7 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
   test("graft_rk_windows is callable from SQL and matches the Column API") {
     import spark.implicits._
     import graft.functions.{Portable, TextFunctions => T}
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tokens", exprs => graft.expressions.Tokenize(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rk_windows",
-      exprs => graft.expressions.RabinKarpWindows(
-        exprs(0),
-        exprs(1).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-          .value.asInstanceOf[Int]),
-      "built-in")
+    registerGraftExtensions()
     val viaSql = spark.sql(
       "SELECT graft_rk_windows(graft_tokens('a b c d e'), 3) AS w")
       .collect()(0).getSeq[Long](0)
@@ -332,9 +304,8 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
     assert(twice == df.select(T.nfc(col("s"))).collect().map(_.getString(0)).toSeq)
     // equality after normalization is what dedup needs
     assert(got(1L) == got(3L) && got(2L) == got(4L))
-    // SQL surface (same temp-function registration path as graft_cosine)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => graft.expressions.NfcNormalize(exprs(0)), "built-in")
+    // SQL surface (the GraftExtensions builder)
+    registerGraftExtensions()
     val viaSql = spark.sql(s"SELECT graft_nfc('$decomposedHan')").collect()(0).getString(0)
     assert(viaSql == "한")
   }

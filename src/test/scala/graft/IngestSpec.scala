@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class IngestSpec extends AnyFunSuite with SparkTest {
 
-  private val fixture = "/root/repo/src/test/resources/fixtures/tmp_dataset.csv"
+  private val fixture = graft.queries.PipelineQueries.fixtureCsv
 
   private def schema: StructType = {
     import spark.implicits._
@@ -124,8 +124,7 @@ class IngestSpec extends AnyFunSuite with SparkTest {
     assert(audit.getAs[Long]("data_quarantine_row") == 0L)
   }
 
-  private val corruptFixture =
-    "/root/repo/src/test/resources/fixtures/tmp_dataset_corrupt.csv"
+  private val corruptFixture = graft.queries.PipelineQueries.corruptCsv
 
   test("csvQuarantine: planted malformed lines quarantine, clean lines pass untouched") {
     val df = Ingest.csvQuarantine(spark, corruptFixture, schema)

@@ -156,15 +156,14 @@ class PropertySpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("property: merged GK day-sketches respect the rank bound over random windows and percentiles") {
-    import graft.functions.{QuantileMergeAgg, QuantileSketchAgg}
-    val eps = 0.03 // 3x sketch ε: guarantee + discrete-rank slack (EntrySpec)
+  test("property: merged KLL day-sketches respect the rank bound over random windows and percentiles") {
+    val eps = 0.03 // KLL k = 200 rank error (1.65%) + discrete-rank slack (EntrySpec)
     val ev = Tables.events(spark, sweepSf)
       .select(to_date(date_trunc("DAY", col("ts"))).as("day"), col("value"))
     val days = ev.select("day").distinct().orderBy("day")
       .collect().map(_.getDate(0))
     val daily = ev.groupBy("day")
-      .agg(QuantileSketchAgg.column()(col("value")).as("sk"))
+      .agg(kll_sketch_agg_double(col("value")).as("sk"))
       .localCheckpoint(true)
     val cases = Gen.zip(
       Gen.choose(2, math.min(12, days.length)),
@@ -174,9 +173,9 @@ class PropertySpec extends AnyFunSuite with SparkTest {
       val start = math.min(start0, days.length - len0)
       val (lo, hi) = (days(start), days(start + len0 - 1))
       val est = daily.filter(col("day").between(lo, hi))
-        .agg(QuantileMergeAgg.column(Seq(p))(col("sk")).as("qs"))
-        .collect()(0).getSeq[Double](0).head
-      // exact VALUE bracket at ranks p ± 3ε over the same window
+        .agg(kll_sketch_get_quantile_double(kll_merge_agg_double(col("sk")), lit(p)))
+        .collect()(0).getDouble(0)
+      // exact VALUE bracket at ranks p ± eps over the same window
       val bounds = ev.filter(col("day").between(lo, hi))
         .agg(expr(s"percentile(value, array(${math.max(0, p - eps)}, " +
           s"${math.min(1, p + eps)}))").as("b"))

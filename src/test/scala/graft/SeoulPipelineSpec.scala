@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * miniature catalog fixtures (FIXTURES.md §2). */
 class SeoulPipelineSpec extends AnyFunSuite with SparkTest {
 
-  private val fixtureCsv = "/root/repo/src/test/resources/fixtures/tmp_dataset.csv"
+  private val fixtureCsv = graft.queries.PipelineQueries.fixtureCsv
 
   test("entry 1: category enrichment extracts from page text and merges back") {
     import spark.implicits._

@@ -7,6 +7,17 @@ trait SparkTest {
   lazy val spark: SparkSession =
     Tables.session(cores = Some(4), conf = Seq("spark.app.name" -> "graft-test"))
 
+  /** Register [[GraftExtensions]]' SQL functions into the shared session
+    * (it is built without `spark.sql.extensions`), through the same
+    * builders the extension injects. */
+  def registerGraftExtensions(): Unit =
+    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+          f._1.funcName, f._3, "built-in")
+      }
+    })
+
   /** Scoped session-conf override (restores prior values afterwards) —
     * for plan-shape assertions that must pin e.g. the broadcast threshold. */
   def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {

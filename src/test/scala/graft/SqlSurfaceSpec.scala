@@ -51,11 +51,6 @@ class SqlSurfaceSpec extends AnyFunSuite with SparkTest {
     graft.functions.GraftFunctions.registerAll(spark)
     (Seq.fill(30)("hot") ++ Seq("a", "b", "c")).toDF("item")
       .createOrReplaceTempView("items_v")
-    val hh = spark.sql(
-      "SELECT graft_heavy8(item) AS hh FROM items_v")
-      .select(explode(col("hh")).as(Seq("item", "est"))).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(hh.contains("hot") && hh("hot") >= 30 - 33 / 9)
     val top = spark.sql(
       """SELECT graft_top3(key, n) AS t FROM (
            SELECT item AS key, count(*) AS n FROM items_v GROUP BY item)""")
@@ -66,15 +61,44 @@ class SqlSurfaceSpec extends AnyFunSuite with SparkTest {
       "SELECT graft_minhash_agg(array('x','y')) AS s FROM items_v LIMIT 1")
       .collect()(0).getSeq[Long](0)
     assert(sig.length == 16 && sig.forall(_ != Long.MaxValue))
+  }
+
+  test("built-in frequent-items and KLL sketches are plain SQL") {
+    import spark.implicits._
+    (Seq.fill(30)("hot") ++ Seq("a", "b", "c")).toDF("item")
+      .createOrReplaceTempView("items_v")
+    // 8 items tracked (map size 16): an upper bound within 3.5 * 33/16
+    val hh = spark.sql(
+      """SELECT inline(approx_top_k_estimate(approx_top_k_accumulate(item, 8), 8))
+         FROM items_v""").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(hh.contains("hot") && hh("hot") >= 30 && hh("hot") <= 30 + 33 * 3.5 / 16)
     // quantile sketch round-trip through SQL: build per-group sketches,
-    // union them, read the median of 1..100 (exact on this small input)
+    // merge them, read the median of 1..100 (exact on this small input)
     (1 to 100).map(i => (i % 4, i.toDouble)).toDF("g", "v")
       .createOrReplaceTempView("qs_v")
     val med = spark.sql(
-      """SELECT graft_qmerge_p50_90_99(sk) AS q FROM (
-           SELECT g, graft_qsketch(v) AS sk FROM qs_v GROUP BY g)""")
+      """SELECT kll_sketch_get_quantile_double(kll_merge_agg_double(sk),
+                array(0.5, 0.9, 0.99)) AS q FROM (
+           SELECT g, kll_sketch_agg_double(v) AS sk FROM qs_v GROUP BY g)""")
       .collect()(0).getSeq[Double](0)
     assert(med.length == 3 && math.abs(med(0) - 50.0) <= 3.0 &&
       math.abs(med(1) - 90.0) <= 3.0, med.mkString(","))
+  }
+
+  test("a non-literal k, n or w of a graft SQL function is an analysis error naming it") {
+    registerGraftExtensions()
+    for ((fn, param) <- Seq("graft_minhash" -> "k", "graft_ngrams" -> "n",
+        "graft_rk_windows" -> "w")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(
+        s"SELECT $fn(graft_tokens(t), n) FROM VALUES ('a b c', 2) AS v(t, n)").collect())
+      assert(e.getCondition == "NON_FOLDABLE_ARGUMENT", e.getMessage)
+      assert(e.getMessage.contains(fn) && e.getMessage.contains(s"parameter $param "),
+        e.getMessage)
+    }
+    // a literal still builds the expression
+    val w = spark.sql("SELECT graft_rk_windows(graft_tokens('a b c d'), 3) AS w")
+      .collect()(0).getSeq[Long](0)
+    assert(w.length == 2)
   }
 }

@@ -141,6 +141,23 @@ class TablesSpec extends AnyFunSuite with SparkTest {
     val kept = layouts.filterNot { case (_, p) => Tables.registeredForCleanup(p) }
     assert(kept.isEmpty, s"left on disk at exit: ${kept.keys.toSeq.sorted}")
   }
+
+  test("session start removes the layouts of dead pids and keeps a live pid's") {
+    val dead = { val p = new ProcessBuilder("true").start(); p.waitFor(); p.pid() }
+    val live = ProcessHandle.current().pid()
+    val warehouse = new java.io.File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    val planted = Seq(
+      new java.io.File(s"/tmp/graft_spec_sweep_p$dead"),
+      new java.io.File(warehouse, s"graft_spec_bkt_sweep_p$dead"),
+      new java.io.File(s"/tmp/graft_spec_sweep_p$live"),
+      new java.io.File(warehouse, s"graft_spec_bkt_sweep_p$live"))
+    planted.foreach { d => d.mkdirs(); new java.io.File(d, "part-0").createNewFile() }
+    planted.drop(2).foreach(d => Tables.cleanupOnExit(d.getPath))
+    assert(planted.forall(_.exists))
+    Tables.session(cores = Some(4), conf = Seq("spark.app.name" -> "graft-test"))
+    assert(planted.map(_.exists) == Seq(false, false, true, true))
+  }
 }
 
 private case class Row3(id: Long, micros: Long)
