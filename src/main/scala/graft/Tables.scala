@@ -44,11 +44,20 @@ object Tables {
     * the vectorized reader rejects; read as long and convert in [[events]].
     * `session.timeZone=UTC`: the NTZ→TIMESTAMP cast in [[normalizeEventsTs]]
     * is instant-preserving only under a UTC session zone; pinning it here
-    * makes every consumer independent of the host default. */
+    * makes every consumer independent of the host default.
+    * `buffer.pageSize=1m` (Spark's floor for its computed default, which
+    * is 64 MiB at a 7 GiB heap on 4 cores): every task-level sort or hash
+    * aggregate takes at least one page, G1 allocates a 64 MiB page as a
+    * humongous object, and Spark pools freed pages behind weak references
+    * until a concurrent mark. On perfbench `corpus_dedup` (4 cores, 7 GiB
+    * heap) such pages were 580-750 MiB of the ~1.07 GiB live-heap peak,
+    * varying run to run with G1's cycle timing; with 1 MiB pages the peak
+    * is ~0.5 GiB and steady. A larger record gets a page of its own size. */
   def configure(builder: SparkSession.Builder): SparkSession.Builder =
     builder
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.buffer.pageSize", "1m")
 
   /** The one session recipe of the graft mains: `local[SPARK_GRAFT_CPUS]`
     * (default 4), `SPARK_GRAFT_SHUFFLE` shuffle partitions (default: the
@@ -237,7 +246,7 @@ object Tables {
   // with the corpus via bucketCountByBytes.
 
   /** Band table of the EXISTING corpus split (doc_id % 5 != 0, k=16,
-    * nBands=4, portable hash family — the q_dedup_incremental contract),
+    * nBands=4 — the q_dedup_incremental contract),
     * bucketed on (band_idx, band_hash). */
   def bucketedBandTable(s: SparkSession, d: String): String =
     bucketed(s, d, "bands") { case Seq(t) =>
@@ -250,7 +259,7 @@ object Tables {
         .filter(size(col("shingles")) > 0)
         .filter(col("id") % 5 =!= 0)
       val bands = graft.operators.Similarity
-        .bandTable(existing, k = 16, nBands = 4, portable = true)
+        .bandTable(existing, k = 16, nBands = 4)
       // bands ~= 4 per existing doc -> rows estimate = 4 x doc count
       graft.sources.Warehouse.writeBucketedMulti(
         bands, t, Seq("band_idx", "band_hash"),
@@ -258,7 +267,7 @@ object Tables {
     }.head
 
   /** SRP bucket table + vector table of the EXISTING embedding split
-    * (vec_id % 5 != 0, corpus-sized nBits, portable — the
+    * (vec_id % 5 != 0, corpus-sized nBits — the
     * q_dedup_embed_incremental contract): buckets bucketed on `bucket`
     * (the multi-probe join key), vectors on `vec_id` (the candidate-fetch
     * key), so BOTH corpus-side joins of an arrival batch are
@@ -277,8 +286,7 @@ object Tables {
         // probe parallelism
         val nB = bucketCountByBytes(existing, rowCount(s, d, "embeddings"))
         graft.sources.Warehouse.writeBucketed(
-          graft.operators.Similarity.bucketTable(
-            existing, dim = 64, nBits, portable = true),
+          graft.operators.Similarity.bucketTable(existing, dim = 64, nBits),
           bktT, "bucket", nB)
         graft.sources.Warehouse.writeBucketed(existing, vecT, "vec_id", nB)
     }

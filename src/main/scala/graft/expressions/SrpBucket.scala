@@ -23,12 +23,13 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * OR of `1L << j`; a NULL vector maps to bucket 0L (the per-bit
   * `when(...).otherwise(0L)` swallowed the null), and a vector whose
   * length differs from the plane dimension ALSO maps to 0L (zip_with's
-  * null-padding nulled every plane's dot). So every portable-bucket
-  * oracle replays unchanged, and — load-bearing for plan shape — the
-  * output is NON-nullable like the old fold: Catalyst cannot infer an
-  * `isnotnull(graft_srp_bucket(v))` join-key filter, which in r16 pushed
+  * null-padding nulled every plane's dot). So every SRP-bucket oracle
+  * replays unchanged, and — load-bearing for plan shape — the output is
+  * NON-nullable like the old fold: Catalyst cannot infer an
+  * `isnotnull(graft_srp_bucket(v))` join-key filter, which would push
   * asymmetrically into lshBucketJoin/knnGraph's probe-vs-plain branches
-  * and broke their single-corpus-exchange ReuseExchange contract.
+  * and break their single-corpus-exchange ReuseExchange contract
+  * (ExchangeReuseSpec: one corpus exchange for lshBucketJoin(multiProbe)).
   */
 case class SrpBucket(child: Expression, signs: Array[Array[Double]])
     extends UnaryExpression {

@@ -6,41 +6,25 @@ import org.apache.spark.sql.functions._
 /** MinHash signatures for near-duplicate detection — SURVEY.md §2.10.
   *
   * A document's MinHash signature is a per-row computation over its shingle
-  * set, so it stays inside whole-stage codegen as higher-order built-ins:
-  * component j = min over shingles of xxhash64(shingle, j) (the seed rides
-  * along as an extra hashed column). Banding for LSH: the signature is cut
-  * into bands and each band hashed; near-dup candidates collide on at least
-  * one (band index, band hash) pair — turning the O(n²) all-pairs problem
-  * into a shuffle on band keys, the 100 TB-safe shape.
+  * set: component j = min over shingles of the j-th Carter–Wegman map of
+  * the shingle's md5 base hash (graft.functions.Portable, the engine's one
+  * hash family). Banding for LSH (Portable.bandKeys): the signature is cut
+  * into bands; near-dup candidates collide on at least one (band index,
+  * band key) pair — turning the O(n²) all-pairs problem into a shuffle on
+  * band keys.
   */
 object MinHash {
 
-  /** k-component MinHash signature (array<bigint>) of a token/shingle array.
-    *
-    * The k components are unrolled statically (j is a plan-time constant)
-    * rather than via transform(sequence(0, k-1), j -> ...): a nested lambda
-    * capturing an outer lambda variable falls off Spark's fast interpreted
-    * path and measured ~200x slower (171s vs <1s for 5k docs at sf0.1). */
-  def signature(shingles: Column, k: Int): Column =
-    array((0 until k).map(j =>
-      array_min(transform(shingles, t => xxhash64(t, lit(j))))): _*)
-
-  /** [[signature]] via the native codegen expression — bit-identical values
-    * (same xxhash64 fold), one string hash per shingle instead of k, JIT
-    * loop instead of the interpreted HOF evaluator. Preferred in hot paths
-    * (Similarity.minhashCandidatePairs). */
-  def signatureNative(shingles: Column, k: Int): Column = {
+  /** k-component MinHash signature (array<bigint>, non-null) of a
+    * shingle array, as the native codegen expression
+    * graft.expressions.MinHashSignature: one md5 per shingle and a JIT
+    * loop over the k affine maps. Bit-identical to
+    * `Portable.minhashFromHashes(transform(shingles, Portable.h48), k)`,
+    * the built-in formulation it is verified against. */
+  def signature(shingles: Column, k: Int): Column = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.expressions.MinHashSignature(expression(shingles), k))
   }
-
-  /** Band hashes of a signature: nBands hashes of rowsPerBand consecutive
-    * components each. Pair with posexplode to get (band_idx, band_hash).
-    * Statically unrolled for the same interpreted-path reason as
-    * [[signature]]. */
-  def bands(sig: Column, nBands: Int, rowsPerBand: Int): Column =
-    array((0 until nBands).map(b =>
-      xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand))): _*)
 
   /** Estimated Jaccard similarity = fraction of equal signature components. */
   def estJaccard(sigA: Column, sigB: Column, k: Int): Column =

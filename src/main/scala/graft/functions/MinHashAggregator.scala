@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.expressions.MinHashSignature
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -16,37 +17,21 @@ import org.apache.spark.sql.expressions.Aggregator
   * merge is element-wise min — so partial aggregation is map-side and the
   * shuffle carries k longs per group regardless of group cardinality.
   */
-class MinHashAggregator(k: Int, portable: Boolean = false)
+class MinHashAggregator(k: Int)
     extends Aggregator[Seq[String], Array[Long], Seq[Long]] {
 
-  /** Default: same per-(token, seed) hash family as MinHash.signature
-    * (xxhash64 of the token with the seed hashed alongside) so grouped and
-    * per-row signatures are comparable. Portable: the md5-derived affine
-    * family (Portable.h48Jvm), reproducible by the DuckDB oracle. */
-  private def hash(token: String, seed: Int): Long =
-    if (portable)
-      (Portable.a(seed) * (Portable.h48Jvm(token) % Portable.P) +
-        Portable.b(seed)) % Portable.P
-    else {
-      val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(token),
-        org.apache.spark.sql.types.StringType, 42L)
-      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-        seed, org.apache.spark.sql.types.IntegerType, h)
-    }
+  /** The md5 Carter–Wegman maps of MinHash.signature
+    * (graft.functions.Portable), so grouped and per-row signatures are
+    * comparable and the DuckDB oracle replays both. */
+  @transient private lazy val as: Array[Long] = Array.tabulate(k)(Portable.a)
+  @transient private lazy val bs: Array[Long] = Array.tabulate(k)(Portable.b)
 
   override def zero: Array[Long] = Array.fill(k)(Long.MaxValue)
 
+  /** One md5 per token; NULL tokens are skipped, as in MinHash.signature. */
   override def reduce(buf: Array[Long], tokens: Seq[String]): Array[Long] = {
-    var j = 0
-    while (j < k) {
-      var m = buf(j)
-      tokens.foreach { t =>
-        val h = hash(t, j)
-        if (h < m) m = h
-      }
-      buf(j) = m
-      j += 1
+    tokens.foreach { t =>
+      if (t != null) MinHashSignature.minInto(buf, Portable.h48Jvm(t), as, bs)
     }
     buf
   }
@@ -68,9 +53,8 @@ class MinHashAggregator(k: Int, portable: Boolean = false)
 
 object MinHashAggregator {
   /** Column form, registered over a token-array column via udaf(). */
-  def column(k: Int, portable: Boolean = false)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
+  def column(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(
-      new MinHashAggregator(k, portable),
+      new MinHashAggregator(k),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]())
 }

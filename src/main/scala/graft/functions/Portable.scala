@@ -3,22 +3,25 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Portable (engine-independent) hash family for the near-dup operators.
+/** The engine's one hash family for MinHash and SRP, derived from MD5 so
+  * the DuckDB oracle can replay it.
   *
-  * The default MinHash/SimHash/SRP paths hash with xxhash64 / a JVM integer
-  * mix — fast, but only THIS engine can reproduce them, so the driver's
-  * DuckDB oracle could never check the hash-family queries. This object
-  * derives every hash from MD5 of the input string, which both Spark
-  * (`md5` + `conv`, all codegen'd built-ins) and DuckDB (`md5` + arithmetic
-  * hex parse) compute bit-identically, making minhash signatures, simhash
-  * fingerprints and SRP buckets — and therefore the candidate-pair /
-  * survivor outputs built on them — exactly reproducible by the oracle.
-  * The companion SQL builders live in graft.queries.PortableSql.
+  * Every MinHash signature (Similarity.bandTable / minhashCandidatePairs,
+  * the streaming dedup sink, MinHashAggregator, SQL `graft_minhash`) and
+  * every SRP hyperplane (Similarity.srpBucket and everything built on it)
+  * comes from this object. There is no second family: band and bucket
+  * state written by any writer is probeable by every reader. Both Spark
+  * (`md5` + `conv`, codegen'd built-ins) and DuckDB (`md5` + hex parse)
+  * compute the hashes bit-identically, so signatures, band keys, SRP
+  * buckets and every candidate-pair or survivor output built on them are
+  * exactly reproducible by the oracle. The companion SQL builders live in
+  * graft.queries.PortableSql.
   *
-  * Cost note: MD5 is ~5-10x slower per string than xxhash64. The portable
-  * family hashes each string ONCE (components are affine maps of the one
-  * base hash), so the overhead is one MD5 per shingle — acceptable for the
-  * registered queries; latency-critical callers keep the xxhash64 family.
+  * Cost: one MD5 per shingle (the k components are affine maps of that one
+  * base hash); SRP signs are plan-time constants, so a row pays only its
+  * dot products. SimHash is separate:
+  * SimHash.simhash64 (xxhash64) and SimHash.simhashPortable (this family)
+  * are two functions with their own callers.
   */
 object Portable {
 
@@ -29,12 +32,13 @@ object Portable {
     * wraps the modulus ~2^30 times, so the k components are genuinely
     * decorrelated.
     *
-    * P must be SMALL relative to the 48-bit base hash for that to hold: a
-    * first version used P = 2^61-1 with small multipliers, where a*h+b
-    * never exceeded P, the mod never wrapped, every component was a
-    * monotone affine map of the same base hash, and the "signature" was a
-    * single-hash min in 16 disguises (est_jaccard could only ever be 0
-    * or 1). Caught in round-5 review; do not reintroduce. */
+    * P must be SMALL relative to the 48-bit base hash for that to hold:
+    * if a·h + b never reaches P the mod never wraps, every component is a
+    * monotone affine map of the one base hash, all k components pick the
+    * same argmin, and est_jaccard can only be 0 or 1. ExpressionSpec's
+    * "decorrelated" case pins the wrap: on two 40-shingle sets with true
+    * Jaccard 1/3, 64 components agree on more than 0 and fewer than 64,
+    * and more than 32 of them are distinct. */
   val P: Long = (1L << 31) - 1
 
   /** Per-component multiplier/offset, md5-derived at plan/class-init time
@@ -48,11 +52,11 @@ object Portable {
     conv(substring(md5(c), 1, 12), 16, 10).cast("long")
 
   /** k-component MinHash signature over a PRE-HASHED array (one md5 per
-    * shingle, done by the caller via `transform(shingles, h48)` behind an
-    * exchange so CollapseProject cannot inline it k times). Each
-    * component applies the Carter–Wegman map to the 48-bit base hash
-    * reduced into [0, P). Empty shingle arrays yield all-Long.MaxValue
-    * components — same convention as MinHashAggregator.zero. */
+    * shingle: `transform(shingles, h48)`), as built-in higher-order
+    * functions. Each component applies the Carter–Wegman map to the 48-bit
+    * base hash reduced into [0, P); empty arrays yield all-Long.MaxValue
+    * components. The engine signs with the native MinHash.signature; this
+    * built-in formulation is kept as its differential-test reference. */
   def minhashFromHashes(hs: Column, k: Int): Column =
     array((0 until k).map(j =>
       coalesce(
@@ -105,27 +109,28 @@ object Portable {
   }
 
   /** JVM-side h48 of a string — identical value to [[h48]] (md5 head,
-    * big-endian). Used by MinHashAggregator's portable mode where hashing
-    * happens in typed JVM code, not Catalyst. */
-  def h48Jvm(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    * big-endian). */
+  def h48Jvm(s: String): Long =
+    h48Jvm(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** [[h48Jvm]] of a string's UTF-8 bytes, on a per-thread digest. */
+  def h48Jvm(utf8: Array[Byte]): Long = {
+    val d = md5Digest.get().digest(utf8)
     var v = 0L
     var i = 0
     while (i < 6) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
     v
   }
 
+  private val md5Digest = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
   /** Deterministic ±1 hyperplane entry for SRP bucketing, derived from
     * md5("srp_<j>_<i>"): first hex digit < 8 → +1 else -1. Computed at
-    * PLAN TIME (j, i are constants), so the runtime cost is identical to
-    * the non-portable integer-mix planes; DuckDB re-derives the same sign
-    * with `md5()` + `strpos`. */
-  def srpSign(j: Int, i: Int): Double = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"srp_${j}_${i}".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    if ((d(0) & 0x80) == 0) 1.0 else -1.0
-  }
+    * PLAN TIME (j, i are constants), so rows pay only the dot products;
+    * DuckDB re-derives the same sign with `md5()` + `strpos`. */
+  def srpSign(j: Int, i: Int): Double =
+    if ((h48Jvm(s"srp_${j}_${i}") & (1L << 47)) == 0) 1.0 else -1.0
 
   /** 63-bit portable SimHash over an exploded token stream: callers
     * aggregate [[simhashVotes]] per doc and fold with [[simhashFromVotes]].

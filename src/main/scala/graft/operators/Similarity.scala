@@ -223,20 +223,9 @@ object Similarity {
       .withColumn("cos", V.cosineNative(col("qv"), col("cv"))), "q_id", "cos", "vec_id", k)
   }
 
-  /** Deterministic ±1 random-hyperplane entry for (plane j, dimension i) —
-    * a fixed integer mix, no RNG state, so every executor and every round
-    * derives the same planes. */
-  private def hyperplaneSign(j: Int, i: Int): Double = {
-    val x = j * 1315423911L + i * 2654435761L
-    val mixed = (x ^ (x >>> 16)) * 0x45d9f3bL
-    if (((mixed >>> 8) & 1L) == 0L) 1.0 else -1.0
-  }
-
   /** nBits-bit signed-random-projection bucket id for a vector column.
-    * `portable = true` derives the hyperplane signs from md5 instead of the
-    * JVM integer mix (Portable.srpSign) — identical runtime cost (signs are
-    * plan-time literals either way) but reproducible by the DuckDB oracle,
-    * whose checked BIGINT arithmetic cannot replay the wrapping mix.
+    * The hyperplane signs are md5-derived (Portable.srpSign), computed at
+    * plan time and reproducible by the DuckDB oracle.
     *
     * Degenerate-input contract (pinned by ExpressionSpec): a NULL vector
     * and a vector whose length != dim both map to bucket 0L, and the
@@ -245,20 +234,17 @@ object Similarity {
     * nullable bucket join key lets Catalyst infer isnotnull filters that
     * push asymmetrically into [[lshBucketJoin]]/[[knnGraph]]'s
     * probe-vs-plain branches and break their one-corpus-exchange
-    * ReuseExchange contract (the r16 regression). Rows bucketed to 0L by
+    * ReuseExchange contract (ExchangeReuseSpec pins one corpus exchange
+    * for lshBucketJoin(multiProbe)). Rows bucketed to 0L by
     * the degenerate rule still never emit pairs: cosine against a NULL
     * vector is NULL, which fails every consumer's `cos >= threshold`
     * filter; zero-NORM vectors (whose cosine is NaN — and NaN compares
     * HIGH in both Spark and DuckDB) are dropped by knnGraph's explicit
     * norm guard before bucketing. */
-  def srpBucket(vec: Column, dim: Int, nBits: Int, portable: Boolean = false): Column = {
-    val sign: (Int, Int) => Double =
-      if (portable) Portable.srpSign else hyperplaneSign
-    // one fused codegen loop over a plan-constant sign matrix — the
-    // previous per-bit aggregate(zip_with) trees ran nBits interpreted
-    // HOF passes per corpus row (see graft.expressions.SrpBucket; FP
-    // semantics bit-identical, oracle buckets unchanged)
-    val signs = Array.tabulate(nBits, dim)((j, i) => sign(j, i))
+  def srpBucket(vec: Column, dim: Int, nBits: Int): Column = {
+    // one fused codegen loop over a plan-constant sign matrix (see
+    // graft.expressions.SrpBucket)
+    val signs = Array.tabulate(nBits, dim)(Portable.srpSign)
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     column(graft.expressions.SrpBucket(expression(vec), signs))
   }
@@ -313,12 +299,11 @@ object Similarity {
       dim: Int,
       nBits: Int,
       minCosine: Double,
-      multiProbe: Boolean = false,
-      portable: Boolean = false): DataFrame = {
+      multiProbe: Boolean = false): DataFrame = {
     // exchange on the join key: materializes the bucket bits once instead
     // of letting CollapseProject recompute 16 dot products per joined row
     val bucketed = pinnedByBucket(
-      emb.withColumn("bucket", srpBucket(col("v"), dim, nBits, portable)))
+      emb.withColumn("bucket", srpBucket(col("v"), dim, nBits)))
     val a = bucketed.select(
       col("bucket"), col("vec_id").as("id_a"), col("v").as("v_a"))
     // single-probe keeps b a plain projection so the join reuses the one
@@ -348,10 +333,9 @@ object Similarity {
   def bucketTable(
       emb: DataFrame, // (vec_id, v: array<double>)
       dim: Int,
-      nBits: Int,
-      portable: Boolean = false): DataFrame =
+      nBits: Int): DataFrame =
     emb.select(col("vec_id"),
-      srpBucket(col("v"), dim, nBits, portable).as("bucket"))
+      srpBucket(col("v"), dim, nBits).as("bucket"))
 
   /** Incremental embedding near-dup: which incoming vectors are
     * near-duplicates (cosine >= minCosine) of the EXISTING corpus,
@@ -371,12 +355,11 @@ object Similarity {
       incoming: DataFrame,        // (vec_id, v)
       dim: Int,
       nBits: Int,
-      minCosine: Double,
-      portable: Boolean = false): DataFrame = {
+      minCosine: Double): DataFrame = {
     // exchange after bucketing: materialize the nBits hyperplane dot
     // products once, before the probe explode fans the row out nBits+1x
     val probed = incoming
-      .withColumn("bucket", srpBucket(col("v"), dim, nBits, portable))
+      .withColumn("bucket", srpBucket(col("v"), dim, nBits))
       .repartition(col("vec_id"))
       .withColumn("probe", explode(probeKeys(col("bucket"), nBits)))
     val cands = probed.join(
@@ -416,13 +399,12 @@ object Similarity {
       corpus: DataFrame,  // (vec_id, cv: array<double>)
       dim: Int,
       nBits: Int,
-      k: Int,
-      portable: Boolean = false): DataFrame = {
+      k: Int): DataFrame = {
     val cb = corpus
-      .withColumn("bucket", srpBucket(col("cv"), dim, nBits, portable))
+      .withColumn("bucket", srpBucket(col("cv"), dim, nBits))
       .repartition(col("bucket"))
     val probes = queries
-      .withColumn("__qb", srpBucket(col("qv"), dim, nBits, portable))
+      .withColumn("__qb", srpBucket(col("qv"), dim, nBits))
       .withColumn("bucket", explode(probeKeys(col("__qb"), nBits)))
       .drop("__qb")
     topKBy(probes.join(cb, Seq("bucket"))
@@ -445,9 +427,8 @@ object Similarity {
     * [[lshNBits]] corpus-derived bit count under its 24-bit cap, so the
     * per-bucket quadratic term carries the same contract as
     * [[lshBucketJoin]]; the per-node ranking is a partitioned window over
-    * (cos desc, dst asc) and the output is k·N edges. `portable = true`
-    * derives hyperplanes from the md5 family the DuckDB oracle replays
-    * exactly.
+    * (cos desc, dst asc) and the output is k·N edges. The md5 hyperplanes
+    * let the DuckDB oracle replay buckets and ranks exactly.
     *
     * `prescoreFactor > 0` gates the SEED scoring the same way
     * [[nnDescentRound]]'s dial gates a round: candidate pairs are scored
@@ -473,12 +454,11 @@ object Similarity {
       dim: Int,
       nBits: Int,
       k: Int,
-      portable: Boolean = false,
       prescoreFactor: Int = 0,
       corpusRows: Option[Long] = None): DataFrame = {
     val vecs = nonZero(emb)
     def bucketed(df: DataFrame) =
-      df.withColumn("bucket", srpBucket(col("v"), dim, nBits, portable))
+      df.withColumn("bucket", srpBucket(col("v"), dim, nBits))
     if (prescoreFactor <= 0)
       rankNeighbors(bucketPairs(pinnedByBucket(bucketed(vecs)), Seq("v"), nBits), k)
     else {
@@ -1166,37 +1146,27 @@ object Similarity {
   }
 
   /** Persistable band table of a shingled corpus: (id, band_idx,
-    * band_hash) — the compact representation incremental dedup joins
-    * against. k longs per doc regardless of document size, so the table is
-    * orders of magnitude smaller than the corpus text and is the ONLY
-    * state an ingest pipeline must keep to near-dup new arrivals. */
+    * band_hash) with string band keys (Portable.bandKeys) — the compact
+    * representation incremental dedup joins against. Each doc gets nBands
+    * rows whose key joins k/nBands components, whatever the document's
+    * size: 132.5 parquet bytes per doc at k = 16, nBands = 4 (sf0.1's 5,000
+    * documents). So the table is orders of magnitude smaller than the
+    * corpus text and is the ONLY state an ingest pipeline must keep to
+    * near-dup new arrivals. */
   def bandTable(
       docs: DataFrame, // (id, shingles: array<string>)
       k: Int,
-      nBands: Int,
-      portable: Boolean = false): DataFrame = {
-    val rowsPerBand = k / nBands
-    val signed = signShingles(docs, k, portable)
-    val bandExpr =
-      if (portable) Portable.bandKeys(col("sig"), nBands, rowsPerBand)
-      else MinHash.bands(col("sig"), nBands, rowsPerBand)
-    signed.select(col("id"),
-      posexplode(bandExpr).as(Seq("band_idx", "band_hash")))
-  }
+      nBands: Int): DataFrame =
+    signShingles(docs, k).select(col("id"),
+      posexplode(Portable.bandKeys(col("sig"), nBands, k / nBands))
+        .as(Seq("band_idx", "band_hash")))
 
-  /** (id, shingles) -> (id, [hs,] sig): signature behind an id-hash
-    * exchange so CollapseProject cannot inline the (expensive) signature
-    * expression into downstream joins. Portable mode md5-hashes each
-    * shingle ONCE before the exchange; the k components are affine maps of
-    * that one base-hash array (graft.functions.Portable). */
-  private def signShingles(docs: DataFrame, k: Int, portable: Boolean): DataFrame =
-    if (portable)
-      docs.withColumn("hs", transform(col("shingles"), Portable.h48(_)))
-        .repartition(col("id"))
-        .withColumn("sig", Portable.minhashFromHashes(col("hs"), k))
-    else
-      docs.repartition(col("id"))
-        .withColumn("sig", MinHash.signatureNative(col("shingles"), k))
+  /** (id, shingles) -> (id, sig): the native signature behind an id-hash
+    * exchange so CollapseProject cannot inline the signature expression
+    * into downstream joins. */
+  private def signShingles(docs: DataFrame, k: Int): DataFrame =
+    docs.repartition(col("id"))
+      .withColumn("sig", MinHash.signature(col("shingles"), k))
 
   /** Incremental near-dup: which incoming docs collide with the EXISTING
     * corpus, joining the new batch's bands against the persisted
@@ -1208,9 +1178,8 @@ object Similarity {
       existingBands: DataFrame, // (id, band_idx, band_hash)
       incoming: DataFrame,      // (id, shingles: array<string>)
       k: Int,
-      nBands: Int,
-      portable: Boolean = false): DataFrame = {
-    val inBands = bandTable(incoming, k, nBands, portable)
+      nBands: Int): DataFrame = {
+    val inBands = bandTable(incoming, k, nBands)
     inBands.join(
         existingBands.select(col("id").as("matched_id"),
           col("band_idx"), col("band_hash")),
@@ -1226,27 +1195,22 @@ object Similarity {
       docs: DataFrame,
       k: Int,
       nBands: Int,
-      minEstJaccard: Double,
-      portable: Boolean = false): DataFrame = {
+      minEstJaccard: Double): DataFrame = {
     val rowsPerBand = k / nBands
-    // Barrier between shingling and signing (inside signShingles): without
-    // it CollapseProject substitutes the caller's shingle expression into
-    // each of the k signature components and the (interpreted) shingling
-    // runs k times per row. The exchange materializes shingles once and
-    // spreads the hashing across the cluster.
-    val signed = signShingles(docs, k, portable)
+    // signShingles' id exchange materializes the caller's shingles once
+    // and spreads the md5 hashing over the shuffle partitions (a corpus
+    // may arrive as one split).
+    val signed = signShingles(docs, k)
     // The repartition is load-bearing, not a tuning knob: without an
     // exchange, CollapseProject inlines the signature expression into the
     // self-join and recomputes the full MinHash PER CANDIDATE PAIR (360s at
     // sf0.1). The exchange materializes signatures once, and because it
     // hash-partitions on the join keys the join adds no further shuffle.
-    val bandExpr =
-      if (portable) Portable.bandKeys(col("sig"), nBands, rowsPerBand)
-      else MinHash.bands(col("sig"), nBands, rowsPerBand)
     val banded = signed
       .select(
         col("id"), col("sig"),
-        posexplode(bandExpr).as(Seq("band_idx", "band_hash")))
+        posexplode(Portable.bandKeys(col("sig"), nBands, rowsPerBand))
+          .as(Seq("band_idx", "band_hash")))
       .repartition(col("band_idx"), col("band_hash"))
     val a = banded.select(
       col("band_idx"), col("band_hash"),

@@ -514,7 +514,12 @@ object AggQueries {
     // sketch binary and its rank-approximate answers are engine-specific);
     // EntrySpec brackets every window's p50/p90/p99 between the exact
     // quantiles at p ± 0.03, above KLL's k = 200 normalized rank error
-    // (1.65% two-sided at 99% confidence).
+    // (1.65% two-sided at 99% confidence). The answers are NOT
+    // reproducible run to run: kll_merge_agg_double compacts with
+    // DataSketches' unseeded static KllSketch.random and Spark exposes no
+    // seed, so two runs give different quantiles inside the rank bound
+    // (the same 30 day sketches merged five times gave p50 498–500 and
+    // p90 893–903). That alone rules out a hash oracle for this query.
     QueryDef("q_agg_quantile_sketch", None) { (s, d) =>
       val daily = Tables.events(s, d)
         .groupBy(to_date(date_trunc("DAY", col("ts"))).as("day"))

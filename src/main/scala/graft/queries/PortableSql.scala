@@ -119,7 +119,7 @@ object PortableSql {
     s"list_sum(list_transform(generate_series(1, len($a)), li -> ($a[li] - $b[li]) * ($a[li] - $b[li])))"
 
   /** SRP bucket of vector column `v` with a dynamic bit count `nbitsExpr`
-    * (SQL scalar) — mirrors Similarity.srpBucket(portable = true). */
+    * (SQL scalar) — mirrors Similarity.srpBucket. */
   def srpBucket(v: String, nbitsExpr: String, dim: Int = 64): String =
     s"""list_sum(list_transform(generate_series(0, CAST($nbitsExpr AS BIGINT) - 1), sj -> CASE WHEN list_sum(list_transform(generate_series(1, $dim), si -> $v[si] * (CASE WHEN strpos('01234567', substring(md5('srp_' || CAST(sj AS VARCHAR) || '_' || CAST(si - 1 AS VARCHAR)), 1, 1)) > 0 THEN 1.0 ELSE -1.0 END))) > 0 THEN CAST(power(2, sj) AS BIGINT) ELSE 0 END))"""
 

@@ -28,7 +28,7 @@ object SimilarityQueries {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     // native mix loop (graft.expressions.HighDimMix) — the
     // transform(sequence(...)) spelling evaluated the lambda interpreted
-    // per element (~10 ms/row at 704 elements, r17); exact long + IEEE
+    // per element (~10 ms/row at 704 elements); exact long + IEEE
     // arithmetic is unchanged, so the oracle's extendDimSql replay and
     // the HOF form stay bit-identical (ExpressionSpec)
     concat(col("v"),
@@ -52,12 +52,13 @@ object SimilarityQueries {
     * the expensive part of the scan at dim=768: the extension + int8
     * quantize are interpreted higher-order-function passes (~1.5k element
     * ops/row), and the sf0.1 source parquet is ONE split, so every
-    * recomputation ran as a ~2-6 s SINGLE task (measured r17: 13 such
-    * serial stages = ~17 s of the query's steady wall). The round-robin
+    * recomputation ran as a ~2-6 s SINGLE task (13 such serial stages =
+    * ~17 s of the query's steady wall at sf0.1). The round-robin
     * repartition parallelizes the derivation (pre-extension rows are
     * 0.5 KB, so the exchange is cheap), and the eager localCheckpoint
     * pays it exactly once inside the timed body — also avoiding the lazy
-    * checkpoint's concurrent-branch duplication (the r13 jaccard lesson).
+    * checkpoint's duplication: a lazy checkpoint read by two concurrent
+    * branches computes its input once per branch.
     * Blocks die with the bench's per-query unpersist, like the operators'
     * own Lineage checkpoints; values are bit-identical, so the oracle
     * replay is unchanged. */
@@ -161,7 +162,7 @@ object SimilarityQueries {
       // q_dedup_embed, and re-running the builder (Explain) stays cheap.
       val nBits = Similarity.lshNBits(Tables.rowCount(s, d, "embeddings"))
       Similarity.lshBucketJoin(emb, dim = 64, nBits = nBits, minCosine = 0.3,
-          multiProbe = true, portable = true)
+          multiProbe = true)
         .select(col("id_a"), col("id_b"), Num.round2(col("cos")).as("cos"))
         .orderBy("id_a", "id_b")
     },
@@ -182,8 +183,7 @@ object SimilarityQueries {
         .select(col("vec_id"), V.asDouble(col("embedding")).as("v"))
       val n = Tables.rowCount(s, d, "embeddings")
       val nBits = Similarity.lshNBits(n)
-      Similarity.knnGraph(emb, dim = 64, nBits = nBits, k = 5, portable = true,
-          corpusRows = Some(n))
+      Similarity.knnGraph(emb, dim = 64, nBits = nBits, k = 5, corpusRows = Some(n))
         .select(col("src"), col("dst"), Num.round2(col("cos")).as("cos"),
           col("rn").cast("long").as("rn"))
         .orderBy("src", "rn")
@@ -217,7 +217,7 @@ object SimilarityQueries {
       val n = Tables.rowCount(s, d, "embeddings")
       val nBits = Similarity.lshNBits(n)
       val seed = Similarity.knnGraph(emb, dim = 64, nBits = nBits, k = 5,
-        portable = true, corpusRows = Some(n))
+        corpusRows = Some(n))
       Similarity.nnDescentRound(seed, emb, k = 5, corpusRows = Some(n))
         .select(col("src"), col("dst"), Num.round2(col("cos")).as("cos"),
           col("rn").cast("long").as("rn"))
@@ -225,7 +225,7 @@ object SimilarityQueries {
     },
 
     // HIGH-DIM NN-descent round with the int8 pre-score gate ON — the
-    // geometry the gate exists for (r16 A/B, SCALE_r16.nndescent_ab: at
+    // geometry the gate exists for (SCALE_r16.json `nndescent_ab`: at
     // dim=768 the gate wins 4.4x at 200k vectors, where the exact path
     // moves ~120 GB of 6 KB float vectors through the candidate exchange
     // and the gate's 768-BYTE codes are 8x narrower + survivor-only float
@@ -247,7 +247,7 @@ object SimilarityQueries {
       val n = Tables.rowCount(s, d, "embeddings")
       val nBits = Similarity.lshNBits(n)
       val seed = Similarity.knnGraph(emb, dim = dim, nBits = nBits, k = 5,
-        portable = true, prescoreFactor = 3, corpusRows = Some(n))
+        prescoreFactor = 3, corpusRows = Some(n))
       Similarity.nnDescentRound(seed, emb, k = 5, prescoreFactor = 3,
         corpusRows = Some(n))
         .select(col("src"), col("dst"), Num.round2(col("cos")).as("cos"),
@@ -275,7 +275,7 @@ object SimilarityQueries {
       val n = Tables.rowCount(s, d, "embeddings")
       val nBits = Similarity.lshNBits(n)
       val seed = Similarity.knnGraph(emb, dim = dim, nBits = nBits, k = 5,
-        portable = true, prescoreFactor = 3, corpusRows = Some(n))
+        prescoreFactor = 3, corpusRows = Some(n))
       val r1 = Similarity.nnDescentRound(seed, emb, k = 5, prescoreFactor = 3,
         corpusRows = Some(n))
       Similarity.nnDescentRound(r1, emb, k = 5, prescoreFactor = 3,
@@ -300,8 +300,7 @@ object SimilarityQueries {
       val corpus = emb.filter(col("vec_id") % 100 =!= 0)
         .select(col("vec_id"), col("v").as("cv"))
       val nBits = Similarity.lshNBits(Tables.rowCount(s, d, "embeddings"))
-      Similarity.lshTopK(queries, corpus, dim = 64, nBits = nBits, k = 5,
-          portable = true)
+      Similarity.lshTopK(queries, corpus, dim = 64, nBits = nBits, k = 5)
         .select(col("q_id"), col("vec_id"),
           Num.round2(col("cos")).as("cos"), col("rn").cast("long").as("rn"))
         .orderBy("q_id", "rn")
@@ -386,7 +385,7 @@ object SimilarityQueries {
         .select(col("doc_id").as("id"), T.ngrams(T.tokens(col("text")), 3).as("shingles"))
         .filter(size(col("shingles")) > 0)
       Similarity.minhashCandidatePairs(docs, k = 16, nBands = 4,
-          minEstJaccard = 0.5, portable = true)
+          minEstJaccard = 0.5)
         .select(col("id_a"), col("id_b"), Num.round2(col("est_jaccard")).as("est_jaccard"))
         .orderBy("id_a", "id_b")
     },
@@ -417,7 +416,7 @@ object SimilarityQueries {
     // also proves the contraction ran to convergence.
     QueryDef(
       "q_dedup_clusters",
-      // MATERIALIZED on t/pairs/edges (r18, oracle-side execution hint
+      // MATERIALIZED on t/pairs/edges (oracle-side execution hint
       // only): DuckDB 1.0 inlines CTEs, so the RECURSIVE reach otherwise
       // re-evaluates the quadratic pair join per iteration (measured
       // 5.0 -> 0.36 s at sf0.01, identical frames)
@@ -462,7 +461,7 @@ object SimilarityQueries {
       val pairs = Similarity.lshBucketJoin(
           emb, dim = 64,
           nBits = Similarity.lshNBits(Tables.rowCount(s, d, "embeddings")),
-          minCosine = 0.98, multiProbe = true, portable = true)
+          minCosine = 0.98, multiProbe = true)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
       Dedup.keepFromPairs(emb.select("vec_id"), "vec_id", pairs)
         .orderBy("vec_id")
@@ -494,9 +493,10 @@ object SimilarityQueries {
 
     // Incremental near-dup: every 5th document plays the "incoming batch"
     // and is deduped against the band table of the rest — the corpus text
-    // is never rescanned, only its (id, band_idx, band_hash) state (k
-    // longs per doc). The streaming-ingest shape at 100 TB. Portable hash
-    // family: the oracle recomputes both band tables and the join exactly
+    // is never rescanned, only its (id, band_idx, band_hash) state (4 rows
+    // per doc, 132.5 parquet bytes at sf0.1). The streaming-ingest shape at
+    // 100 TB. md5 hash family: the oracle recomputes both band tables and
+    // the join exactly
     // (PortableSql.incrementalOracle).
     QueryDef("q_dedup_incremental",
         Some(PortableSql.incrementalOracle(16, 4)),
@@ -512,8 +512,7 @@ object SimilarityQueries {
       // corpus-side exchange (plan-asserted in SourcesSpec); without the
       // bucketing, every batch re-shuffles the full corpus-sized state
       val bands = s.table(Tables.bucketedBandTable(s, d))
-      Similarity.incrementalNearDup(bands, incoming, k = 16, nBands = 4,
-          portable = true)
+      Similarity.incrementalNearDup(bands, incoming, k = 16, nBands = 4)
         .orderBy("id", "matched_id")
     },
 
@@ -538,7 +537,7 @@ object SimilarityQueries {
       // joins of an arrival batch are exchange-free (SourcesSpec)
       val (bktT, vecT) = Tables.bucketedEmbedTables(s, d)
       Similarity.incrementalEmbedDedup(s.table(bktT), s.table(vecT), incoming,
-          dim = 64, nBits, minCosine = 0.3, portable = true)
+          dim = 64, nBits, minCosine = 0.3)
         .orderBy("id", "matched_id")
     },
 
@@ -560,7 +559,7 @@ object SimilarityQueries {
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("lang"), T.tokens(col("text")).as("toks"))
         .groupBy("lang")
-        .agg(MinHashAggregator.column(16, portable = true)(col("toks")).as("sig_arr"))
+        .agg(MinHashAggregator.column(16)(col("toks")).as("sig_arr"))
         .select(col("lang"),
           array_join(col("sig_arr").cast("array<string>"), ",").as("sig"))
         .orderBy("lang")
@@ -689,7 +688,7 @@ object SimilarityQueries {
     // shuffles only ids at 100 TB; Spark broadcasts it when small).
     QueryDef(
       "q_corpus_dedup_e2e",
-      // MATERIALIZED on t/pairs/edges/roots (r18): same recursive-CTE
+      // MATERIALIZED on t/pairs/edges/roots: same recursive-CTE
       // re-evaluation fix as q_dedup_clusters (measured 4.4 -> 0.32 s at
       // sf0.01, identical frames); roots additionally feeds the NOT
       // EXISTS probe per corpus row
@@ -731,7 +730,7 @@ object SimilarityQueries {
         .orderBy("doc_id")
     },
 
-    // EMBEDDING-NATIVE end-to-end dedup (the r13 kNN graph consumed by the
+    // EMBEDDING-NATIVE end-to-end dedup (the knnGraph edges consumed by the
     // clustering operator — SURVEY §2.10's declared seed structure for
     // graph-based dedup): kNN edges (per-vector top-5 among
     // same-or-Hamming-1 SRP bucket mates) thresholded at cosine >= tau
@@ -765,7 +764,7 @@ object SimilarityQueries {
       val n = Tables.rowCount(s, d, "embeddings")
       val nBits = Similarity.lshNBits(n)
       val edges = Similarity.knnGraph(emb, dim = 64, nBits = nBits, k = 5,
-          portable = true, corpusRows = Some(n))
+          corpusRows = Some(n))
         .filter(col("cos") >= 0.3)
         .select(col("src").as("doc_a"), col("dst").as("doc_b"))
       val roots = Dedup.duplicateClusters(edges)

@@ -7,8 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Recall artifact for the kNN-graph construction path (r14 verdict #3):
-  * measures recall@k vs brute-force kNN for the SRP-bucketed seed graph
+/** Recall artifact for the kNN-graph construction path: measures recall@k vs brute-force kNN for the SRP-bucketed seed graph
   * ([[Similarity.knnGraph]]) and each NN-descent refinement round
   * ([[Similarity.nnDescentRound]]) on the real embeddings table — the
   * number that justifies (or refutes) paying for a refinement round at
@@ -21,7 +20,7 @@ import org.apache.spark.sql.functions._
   * O(N²) cost the bucketed path exists to avoid. Recall is computed
   * distributed (edge-set equi-join), only scalars reach the driver.
   *
-  * Mirrors the registered q_sim_nndescent exactly: portable buckets,
+  * Mirrors the registered q_sim_nndescent exactly: md5 hyperplanes,
   * corpus-derived bit count, k = 5 default.
   *
   * A fourth arg selects a derived fixture over the raw table:
@@ -30,11 +29,11 @@ import org.apache.spark.sql.functions._
   *    deterministic jitters of their cluster base vec_id - vec_id%4.
   *    Uniform random embeddings are the worst case for both LSH recall
   *    and neighbor transitivity (no manifold structure); planted mode
-  *    shows the lift on data with real neighborhood structure. Its limit
-  *    (r15 verdict): jittered clones co-bucket, so the SEED already finds
+  *    shows the lift on data with real neighborhood structure. Its limit:
+  *    jittered clones co-bucket, so the SEED already finds
   *    them — it demonstrates LSH recall, not transitivity.
-  *  - `chained` — ELONGATED clusters wider than one SRP bucket (r15
-  *    verdict #5, the fixture NN-descent can actually win on): chains of
+  *  - `chained` — ELONGATED clusters wider than one SRP bucket (the
+  *    fixture NN-descent can actually win on): chains of
   *    8, member m of chain c placed at angle m·θ (θ=0.2 rad) along the
   *    great circle from c's base vector toward a deterministic
   *    norm-matched ±1 direction, so cos(member_i, member_j) ≈
@@ -127,7 +126,7 @@ object RecallProbe {
 
     // seed graph, materialized so each round's wall is its own cost
     val (seed, seedWall) = timed {
-      Similarity.knnGraph(emb, dim = 64, nBits = nBits, k = k, portable = true)
+      Similarity.knnGraph(emb, dim = 64, nBits = nBits, k = k)
         .localCheckpoint(true)
     }
     var g = seed

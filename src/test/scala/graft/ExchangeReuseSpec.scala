@@ -88,7 +88,7 @@ class ExchangeReuseSpec extends AnyFunSuite with SparkTest {
         .select(col("vec_id"), V.asDouble(col("embedding")).as("v"))
       val plan = graft.operators.Similarity
         .lshBucketJoin(emb, dim = 64, nBits = 4, minCosine = 0.98,
-          multiProbe = true, portable = true)
+          multiProbe = true)
         .queryExecution.executedPlan.toString
       assert(plan.contains("ReusedExchange"),
         s"multi-probe branch no longer reuses the bucketed-corpus " +

@@ -48,22 +48,24 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
 
   test("native minhash signature is bit-identical to the HOF formulation") {
     import spark.implicits._
-    import graft.functions.{MinHash, TextFunctions => T}
+    import graft.functions.{MinHash, Portable}
+    // ASCII, Hangul, a NULL element (skipped by both), an empty array and a
+    // NULL array (both Long.MaxValue components)
     val docs = Seq(
-      "the quick brown fox", "spark shuffles partitions", "one"
-    ).toDF("text").select(T.tokens(col("text")).as("toks"))
+      Some(Seq("the", "quick", "brown", "fox")),
+      Some(Seq("서울", "데이터", "공통", "측정소명")),
+      Some(Seq("spark", null, "shuffles")),
+      Some(Seq.empty[String]),
+      None
+    ).toDF("toks")
     val both = docs.select(
-      MinHash.signature(col("toks"), 16).as("hof"),
-      MinHash.signatureNative(col("toks"), 16).as("native"))
+      Portable.minhashFromHashes(transform(col("toks"), Portable.h48(_)), 16).as("hof"),
+      MinHash.signature(col("toks"), 16).as("native"))
     val rows = both.collect()
-    rows.foreach { r =>
-      assert(r.getSeq[Long](0) == r.getSeq[Long](1))
-    }
-    // divergence on EMPTY input is deliberate: HOF = null components
-    // (array_min([])), native = Long.MaxValue fold identity
-    val empty = Seq("").toDF("text").select(T.tokens(col("text")).as("toks"))
-      .select(MinHash.signatureNative(col("toks"), 4)).collect()(0).getSeq[Long](0)
-    assert(empty == Seq.fill(4)(Long.MaxValue))
+    rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
+    assert(rows(2).getSeq[Long](1).forall(_ != Long.MaxValue))
+    assert(rows(3).getSeq[Long](1) == Seq.fill(16)(Long.MaxValue))
+    assert(rows(4).getSeq[Long](1) == Seq.fill(16)(Long.MaxValue))
   }
 
   test("graft_minhash is callable from SQL with a literal k") {
@@ -384,33 +386,21 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
     * expression to this, including the degenerate inputs the HOF shape
     * implied (NULL vector -> 0L, length mismatch -> 0L via zip_with
     * null-padding). */
-  private def hofSrpBucket(vec: Column, dim: Int, nBits: Int,
-      sign: (Int, Int) => Double): Column = {
+  private def hofSrpBucket(vec: Column, dim: Int, nBits: Int): Column = {
     val bits: Seq[Column] = (0 until nBits).map { j =>
-      val plane = array((0 until dim).map(i => lit(sign(j, i))): _*)
+      val plane = array((0 until dim).map(i =>
+        lit(graft.functions.Portable.srpSign(j, i))): _*)
       when(V.dot(vec, plane) > 0, lit(1L << j)).otherwise(lit(0L))
     }
     bits.reduce(_.bitwiseOR(_))
   }
 
-  // the default (non-portable) sign source, mirrored from
-  // Similarity.hyperplaneSign (private there by design)
-  private def jvmMixSign(j: Int, i: Int): Double = {
-    val x = j * 1315423911L + i * 2654435761L
-    val mixed = (x ^ (x >>> 16)) * 0x45d9f3bL
-    if (((mixed >>> 8) & 1L) == 0L) 1.0 else -1.0
-  }
-
-  test("graft_srp_bucket matches the HOF formulation bit-for-bit, both sign families") {
+  test("graft_srp_bucket matches the HOF formulation bit-for-bit on the md5 planes") {
     import graft.operators.Similarity
-    for ((portable, sign) <- Seq(
-        (false, jvmMixSign _), (true, graft.functions.Portable.srpSign _))) {
-      val df = vecs.select(
-        Similarity.srpBucket(col("v"), 16, 20, portable).as("native"),
-        hofSrpBucket(col("v"), 16, 20, sign).as("hof"))
-      assert(df.filter(col("native") =!= col("hof")).count() == 0,
-        s"portable=$portable")
-    }
+    val df = vecs.select(
+      Similarity.srpBucket(col("v"), 16, 20).as("native"),
+      hofSrpBucket(col("v"), 16, 20).as("hof"))
+    assert(df.filter(col("native") =!= col("hof")).count() == 0)
   }
 
   test("graft_srp_bucket codegen and interpreted paths agree") {

@@ -38,38 +38,20 @@ class SchemaInferSpec extends AnyFunSuite with SparkTest {
     assert(got == "LIST_AIR_QUALITY_BY_DISTRICT_SERVICE")
   }
 
-  test("MinHashAggregator matches the per-row HOF signature on one group") {
+  test("MinHashAggregator matches the native per-row signature on one group") {
     import spark.implicits._
-    val toks = Seq("alpha", "beta", "gamma", "delta")
-    // grouped: two rows whose tokens union to `toks`
-    val grouped = Seq((1L, toks.take(2)), (1L, toks.drop(2)))
+    val toks = Seq("alpha", "beta", "gamma", "delta", "서울", "데이터")
+    // grouped JVM path: tokens split across rows, one NULL token skipped
+    val grouped = Seq((1L, toks.take(3) :+ null), (1L, toks.drop(3)))
       .toDF("id", "tokens")
       .groupBy("id")
       .agg(MinHashAggregator.column(8)(col("tokens")).as("sig"))
       .select("sig").collect()(0).getSeq[Long](0)
-    // per-row: all tokens in one array through the HOF path
-    val hof = Seq(toks).toDF("tokens")
+    // per-row native expression over all tokens in one array
+    val perRow = Seq(toks).toDF("tokens")
       .select(MinHash.signature(col("tokens"), 8).as("sig"))
       .select("sig").collect()(0).getSeq[Long](0)
-    assert(grouped == hof)
-  }
-
-  test("portable MinHashAggregator matches Portable.minhashFromHashes on one group") {
-    import spark.implicits._
-    import graft.functions.Portable
-    val toks = Seq("alpha", "beta", "gamma", "delta", "서울", "데이터")
-    // grouped JVM path: tokens split across rows, portable Carter–Wegman maps
-    val grouped = Seq((1L, toks.take(3)), (1L, toks.drop(3)))
-      .toDF("id", "tokens")
-      .groupBy("id")
-      .agg(MinHashAggregator.column(8, portable = true)(col("tokens")).as("sig"))
-      .select("sig").collect()(0).getSeq[Long](0)
-    // per-row Catalyst path: same tokens through md5/conv built-ins
-    val exprSig = Seq(toks).toDF("tokens")
-      .select(Portable.minhashFromHashes(
-        org.apache.spark.sql.functions.transform(col("tokens"), Portable.h48(_)), 8).as("sig"))
-      .select("sig").collect()(0).getSeq[Long](0)
-    assert(grouped == exprSig) // h48Jvm == md5+conv, map for map
+    assert(grouped == perRow)
   }
 
   test("MinHashAggregator signature is order- and split-invariant") {

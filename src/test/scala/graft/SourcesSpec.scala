@@ -104,14 +104,14 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
       val existing = (1L to 200L).filter(_ % 5 != 0)
         .map(i => (i, Seq.tabulate(6)(j => s"tok${(i * 7 + j) % 23} x$j y$j")))
         .toDF("id", "shingles")
-      val bands = Similarity.bandTable(existing, k = 16, nBands = 4, portable = true)
+      val bands = Similarity.bandTable(existing, k = 16, nBands = 4)
       Warehouse.writeBucketedMulti(bands, "t_bands_bkt",
         Seq("band_idx", "band_hash"), 4)
       val incoming = (1L to 200L).filter(_ % 5 == 0)
         .map(i => (i, Seq.tabulate(6)(j => s"tok${(i * 7 + j) % 23} x$j y$j")))
         .toDF("id", "shingles")
       val out = Similarity.incrementalNearDup(
-        spark.table("t_bands_bkt"), incoming, k = 16, nBands = 4, portable = true)
+        spark.table("t_bands_bkt"), incoming, k = 16, nBands = 4)
       val plan = out.queryExecution.executedPlan
       assert(scanOf(plan, "t_bands_bkt"), plan.toString)
       assert(!corpusShuffled(plan, "t_bands_bkt"),
@@ -124,13 +124,13 @@ class SourcesSpec extends AnyFunSuite with SparkTest {
       val emb = (1L to 100L).map(i => (i, vec(i))).toDF("vec_id", "v")
       val exVec = emb.filter($"vec_id" % 5 =!= 0)
       Warehouse.writeBucketed(
-        Similarity.bucketTable(exVec, dim = 64, nBits = 4, portable = true),
+        Similarity.bucketTable(exVec, dim = 64, nBits = 4),
         "t_srp_bkt", "bucket", 4)
       Warehouse.writeBucketed(exVec, "t_vec_bkt", "vec_id", 4)
       val incomingV = emb.filter($"vec_id" % 5 === 0)
       val outE = Similarity.incrementalEmbedDedup(
         spark.table("t_srp_bkt"), spark.table("t_vec_bkt"), incomingV,
-        dim = 64, nBits = 4, minCosine = -1.0, portable = true)
+        dim = 64, nBits = 4, minCosine = -1.0)
       val planE = outE.queryExecution.executedPlan
       assert(scanOf(planE, "t_srp_bkt") && scanOf(planE, "t_vec_bkt"), planE.toString)
       assert(!corpusShuffled(planE, "t_srp_bkt"),

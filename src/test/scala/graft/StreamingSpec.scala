@@ -668,6 +668,66 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     assert(stateIds.toSet === admitted && stateIds.length === admitted.size)
   }
 
+  // The ingest sinks and the public incremental operators must hash in one
+  // family: state a sink wrote is probed by Similarity directly. Each
+  // admitted doc / vector probed against the state must match itself.
+  test("dedup ingest band state is probeable by Similarity.incrementalNearDup") {
+    import spark.implicits._
+    import graft.functions.{TextFunctions => T}
+    import graft.operators.Similarity
+    val bandPath = SparkTest.tempDir("graft-probe-bands") + "/bands"
+    val admitPath = SparkTest.tempDir("graft-probe-admit") + "/admitted"
+    val input = MemoryStream[(Long, String)](spark)
+    def shingled(df: org.apache.spark.sql.DataFrame) = df.toDF("id", "text")
+      .select(col("id"), T.ngrams(T.tokens(col("text")), 3).as("shingles"))
+    val q = Streams.dedupIngestSink(shingled(input.toDF()), bandPath, admitPath,
+      k = 16, nBands = 4)
+    val batch0 = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog tonight"),
+      (2L, "spark shuffles partitions across the cluster respecting locality"),
+      (3L, "서울 열린데이터 광장 대기오염 측정 정보 일별 평균"))
+    input.addData(batch0)
+    q.processAllAvailable()
+    q.stop()
+    val admitted = Streams.admittedDocs(spark, admitPath)
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(admitted === Set(1L, 2L, 3L))
+    val flagged = Similarity.incrementalNearDup(
+        spark.read.parquet(bandPath).select("id", "band_idx", "band_hash"),
+        shingled(batch0.toDF()), k = 16, nBands = 4)
+      .filter(col("id") === col("matched_id"))
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(flagged === admitted)
+  }
+
+  test("embed ingest bucket state is probeable by Similarity.incrementalEmbedDedup") {
+    import spark.implicits._
+    import graft.operators.Similarity
+    def vec(seed: Int): Seq[Double] = (0 until 16).map { i =>
+      (((seed * 2654435761L + i * 40503L) & 0xffff).toDouble / 0xffff) - 0.5
+    }
+    val bucketPath = SparkTest.tempDir("graft-probe-buckets") + "/buckets"
+    val admitPath = SparkTest.tempDir("graft-probe-vadmit") + "/admitted"
+    val input = MemoryStream[(Long, Seq[Double])](spark)
+    val q = Streams.embedIngestSink(input.toDF().toDF("vec_id", "v"),
+      bucketPath, admitPath, dim = 16, nBits = 4, minCosine = 0.95)
+    // the seeds of the sink test above: no two correlate above ~0.35
+    val batch0 = Seq(1, 2, 5, 11, 17, 31).map(s0 => (s0.toLong, vec(s0)))
+    input.addData(batch0)
+    q.processAllAvailable()
+    q.stop()
+    val admitted = spark.read.parquet(admitPath)
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(admitted === batch0.map(_._1).toSet)
+    val flagged = Similarity.incrementalEmbedDedup(
+        spark.read.parquet(bucketPath).select("vec_id", "bucket"),
+        spark.read.parquet(admitPath).select("vec_id", "v"),
+        batch0.toDF("vec_id", "v"), dim = 16, nBits = 4, minCosine = 0.95)
+      .filter(col("id") === col("matched_id"))
+      .select("id").collect().map(_.getLong(0)).toSet
+    assert(flagged === admitted)
+  }
+
   test("embedding ingest restarted from the SAME checkpoint keeps rejecting " +
     "vectors admitted before the restart") {
     import spark.implicits._
