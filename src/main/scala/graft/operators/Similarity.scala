@@ -772,9 +772,10 @@ object Similarity {
       .select(col("vec_id").as("c_id"), col("cv").as("centroid"))
     // withOrderedIndex materializes the sorted seed layout internally
     // (its correctness requires one frozen partitioning); `ranked` is that
-    // checkpoint plus narrow arithmetic and a tiny broadcast join, so the
-    // per-level bundle builds and the root collect re-derive it cheaply
-    // and deterministically — no second materialization needed
+    // checkpoint plus narrow arithmetic (and a tiny broadcast join when it
+    // has more than one partition), so the per-level bundle builds and the
+    // root collect re-derive it cheaply and deterministically — no second
+    // materialization needed
     val ranked = ZipIndex.withOrderedIndex(fines, "c_id", "r")
     RadixTree(ranked, ranked.count(), fanout)
   }

@@ -1,36 +1,42 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Contiguous 0-based row indexing that never leaves the DataFrame engine.
   *
-  * `RDD.zipWithIndex` has the right SHAPE for surrogate ids at scale (one
-  * lightweight counting job, then per-partition offset arithmetic — never a
-  * global single-partition window), but the classic
+  * `RDD.zipWithIndex` has the right SHAPE for surrogate ids at scale
+  * (per-partition row counts, then per-partition offset arithmetic —
+  * never a global single-partition window), but the classic
   * `df.rdd.zipWithIndex().map(Row...)` round-trip deserializes every row to
   * a GenericRow and drops whole-stage codegen / columnar execution for the
   * rest of the stage — real money on a wide ingest (60-column CSV: 1.0x at
   * 150k rows, 1.31x at 600k, 1.65x at 1.5M; SCALE_r14.json
-  * `zipindex_wide_csv_ab`). This helper keeps the same two-job plan
-  * entirely in Catalyst:
+  * `zipindex_wide_csv_ab`). This helper keeps the indexed read in Catalyst:
   *
   *  1. `monotonically_increasing_id()` encodes (partitionIndex << 33 |
   *     rowInPartition) — Spark's documented layout: partition id in the
   *     upper 31 bits, a contiguous 0-based per-partition counter below.
-  *  2. A partial-aggregated count per partition id (the map side emits ONE
-  *     row per task, so the "extra job" shuffles #partitions rows) collects
-  *     the per-partition sizes — bounded driver state, one entry per task,
-  *     the exact state `zipWithIndex` itself drives through the driver.
-  *  3. Cumulative offsets come back as a broadcast equi-join on the
-  *     partition id plus `offset + (mid & rowMask)` arithmetic — all
-  *     codegen'd projections; the scan stays columnar.
+  *  2. The partitions are those of the column-pruned plan
+  *     `select(mid).queryExecution.toRdd`, which a file scan or a
+  *     checkpointed frame plans without running a job.
+  *     - ONE partition: its offset is 0, so the index is the id itself —
+  *       0 Spark jobs, no join. Every file that fits one split (Spark's
+  *       split floor is 4 MiB at 4 cores) takes this path.
+  *     - Otherwise ONE scan-only job counts the rows of every partition
+  *       (`sparkContext.runJob`, as `zipWithIndex` does: no exchange, no
+  *       aggregate), and the cumulative offsets come back as a broadcast
+  *       equi-join on the partition id plus `offset + (mid & rowMask)`.
   *
-  * Determinism contract (identical to `RDD.zipWithIndex`): the input is
-  * evaluated twice (count job + main job), so the assignment is stable only
-  * over deterministic, narrowly-computed inputs — file scans and
-  * deterministic projections over them. Order within a shuffled partition
-  * is pinned only if the caller sorts it ([[withOrderedIndex]] does).
+  * Precondition, checked: the full plan must split its rows exactly as the
+  * pruned plan did — true of file scans, checkpointed frames and narrow
+  * deterministic projections over them. A shuffled input under AQE is not
+  * such a plan (narrower rows can coalesce to fewer partitions), so a row
+  * whose partition id has no counted offset, or that lies past its
+  * partition's count, fails the query (`raise_error`) instead of being
+  * dropped or misnumbered. Order within a shuffled partition is pinned only
+  * if the caller freezes and sorts it ([[withOrderedIndex]] does).
   */
 object ZipIndex {
 
@@ -46,23 +52,28 @@ object ZipIndex {
     import spark.implicits._
     val mid = "__zip_mid"
     val withMid = df.withColumn(mid, monotonically_increasing_id())
-    // per-partition sizes: partial aggregation makes each task emit a
-    // single (pid, count) row, so this job is scan + #partitions-row shuffle
-    val counts = withMid
-      .groupBy(shiftright(col(mid), RowBits).as("__zip_pid"))
-      .agg(count(lit(1)).as("__zip_cnt"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1)
-    var acc = 0L
-    val offsets = counts.toSeq.map { case (pid, cnt) =>
-      val off = acc; acc += cnt; (pid, off)
+    val parts = withMid.select(mid).queryExecution.toRdd
+    val n = parts.getNumPartitions
+    val pid = shiftright(col(mid), RowBits)
+    val row = col(mid).bitwiseAND(lit(RowMask))
+    val unsplit = raise_error(lit(
+      s"ZipIndex.withRowIndex: the input split unlike its $n counted partition(s); " +
+        "index a file scan or a checkpointed frame"))
+    if (n <= 1)
+      withMid.withColumn(name, when(pid === 0L, col(mid)).otherwise(unsplit)).drop(mid)
+    else {
+      val counts = spark.sparkContext.runJob(parts,
+        (it: Iterator[InternalRow]) => it.foldLeft(0L)((c, _) => c + 1))
+      val offsets = counts.indices.zip(counts.scanLeft(0L)(_ + _))
+        .map { case (i, off) => (i.toLong, off, counts(i)) }
+      // left join: a row of an uncounted partition meets a NULL count
+      withMid
+        .join(broadcast(offsets.toDF("__zip_pid", "__zip_off", "__zip_cnt")),
+          pid === col("__zip_pid"), "left")
+        .withColumn(name,
+          when(row < col("__zip_cnt"), col("__zip_off") + row).otherwise(unsplit))
+        .drop(mid, "__zip_pid", "__zip_off", "__zip_cnt")
     }
-    withMid
-      .join(broadcast(offsets.toDF("__zip_pid", "__zip_off")),
-        shiftright(col(mid), RowBits) === col("__zip_pid"))
-      .withColumn(name, col("__zip_off") + (col(mid).bitwiseAND(lit(RowMask))))
-      .drop(mid, "__zip_pid", "__zip_off")
   }
 
   /** Append `name` = the row's 0-based dense rank by `orderCol` ascending

@@ -29,9 +29,10 @@ object Ingest {
     * partition = death at 100 TB) and NOT an `rdd.zipWithIndex` round-trip
     * (which deserializes every row and drops codegen/columnar execution
     * for the rest of a wide ingest stage). [[graft.operators.ZipIndex]]
-    * keeps zipWithIndex's two-job shape — per-partition counts in one
-    * lightweight extra job, then offset arithmetic — entirely inside the
-    * DataFrame engine, preserving file order within and across splits.
+    * numbers rows inside the DataFrame engine in file order, within and
+    * across splits: a file that fits one split costs no Spark job before
+    * the caller's own action; a multi-split file costs one scan-only job
+    * that counts each split's rows, then offset arithmetic.
     */
   def withSurrogateId(df: DataFrame): DataFrame =
     graft.operators.ZipIndex.withRowIndex(df, "id")

@@ -24,7 +24,13 @@ object SchemaInfer {
     * 3-column doc table (category, english, korean per row) — to one row
     * per inferred column: (page_id, ordinal, english, korean, col_name).
     * Rows whose category is 공통 are metadata shared by every dataset and
-    * are skipped, exactly as the reference does. */
+    * are skipped, exactly as the reference does; so are rows whose
+    * category cell is NULL.
+    *
+    * Numbering is per input row: the kept columns of one row are numbered
+    * 1, 2, ... in cell order, inside a projection (no window, no
+    * exchange). Two input rows with the same `page_id` are two pages and
+    * are numbered separately. */
   def inferColumns(pages: DataFrame, skipCategory: String = "공통"): DataFrame = {
     val triples = transform(
       sequence(lit(0), (size(col("cells")) / 3).cast("int") - 1),
@@ -33,16 +39,13 @@ object SchemaInfer {
         element_at(col("cells"), i * 3 + 2).as("english"),
         element_at(col("cells"), i * 3 + 3).as("korean")))
     pages
-      .select(col("page_id"), posexplode(triples).as(Seq("pos", "t")))
-      .filter(col("t.category") =!= skipCategory)
-      .withColumn(
-        "ordinal",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("page_id").orderBy("pos")))
+      .select(col("page_id"),
+        posexplode(filter(triples, t => t("category") =!= skipCategory))
+          .as(Seq("pos", "t")))
+      .withColumn("ordinal", (col("pos") + 1).cast("long"))
       .select(
         col("page_id"),
-        col("ordinal").cast("long").as("ordinal"),
+        col("ordinal"),
         col("t.english").as("english"),
         col("t.korean").as("korean"),
         TextFunctions.paddedName("COL_", col("ordinal"), 3).as("col_name"))

@@ -234,16 +234,18 @@ object Streams {
       .start()
 
   /** The `batch=<id>` rows under `path` that `keep` selects, or None while
-    * nothing is readable there. Missing path OR no visible files yet (a
-    * crashed first batch leaves only batch=N/_temporary, which schema
-    * inference cannot read; a zero-row write can leave no part files) both
-    * raise AnalysisException at read time. Any OTHER failure (corrupt
-    * footer, permission, transient FS fault — these surface as Spark/IO
-    * exceptions, not AnalysisException) must FAIL the batch so the
-    * streaming replay retries it — swallowing it would silently treat the
-    * state as empty and re-admit dups. */
+    * nothing is readable there. A missing path is found through the
+    * FileSystem (no read attempted); an existing directory with no visible
+    * files yet (a crashed first batch leaves only batch=N/_temporary,
+    * which schema inference cannot read; a zero-row write can leave no
+    * part files) raises AnalysisException at read time. Any OTHER failure
+    * (corrupt footer, permission, transient FS fault — these surface as
+    * Spark/IO exceptions, not AnalysisException) must FAIL the batch so
+    * the streaming replay retries it — swallowing it would silently treat
+    * the state as empty and re-admit dups. */
   private def readBatches(spark: SparkSession, path: String, keep: Column): Option[DataFrame] =
-    (try Some(spark.read.parquet(path)) catch { case _: AnalysisException => None })
+    if (!fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))) None
+    else (try Some(spark.read.parquet(path)) catch { case _: AnalysisException => None })
       .map(_.filter(keep))
 
   /** Write `df` as batch `batchId`'s directory under `path`; overwrite

@@ -37,6 +37,85 @@ class IngestSpec extends AnyFunSuite with SparkTest {
     assert(ids.map(_._1).toSeq == (1L to 8L))
   }
 
+  /** A CSV whose first column is each data line's 1-based number. */
+  private def numberedCsv(rows: Int): String = {
+    val path = s"${SparkTest.tempDir("graft_numbered_")}/data.csv"
+    val lines = "N,PAD" +: (1 to rows).map(i => s"$i,${"x" * 40}")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), lines.mkString("", "\n", "\n"))
+    path
+  }
+
+  private val numberedSchema =
+    StructType(Seq(StructField("N", LongType), StructField("PAD", StringType)))
+
+  /** Every row's id equals the CSV's own line number; the row count. */
+  private def idsMatchLines(df: org.apache.spark.sql.DataFrame): Long = {
+    val rows = df.select(col("id"), col("N").cast("long")).collect()
+    assert(rows.forall(r => r.getLong(0) == r.getLong(1)))
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (1L to rows.length.toLong))
+    rows.length.toLong
+  }
+
+  test("one-split CSV: csvResume builds with no Spark job; ids are line numbers") {
+    val path = numberedCsv(500)
+    val (df, jobs, _) = jobsOf(Ingest.csvResume(spark, path, numberedSchema, 0L))
+    assert(jobs == 0)
+    assert(df.rdd.getNumPartitions == 1)
+    assert(idsMatchLines(df) == 500L)
+  }
+
+  test("multi-split CSV: csvResume builds with one shuffle-free job; ids are line numbers") {
+    val path = numberedCsv(2000)
+    withSQLConf(
+        "spark.sql.files.maxPartitionBytes" -> "8192",
+        "spark.sql.files.openCostInBytes" -> "0") {
+      val (df, jobs, shuffleW) = jobsOf(Ingest.csvResume(spark, path, numberedSchema, 0L))
+      assert(jobs == 1)
+      assert(shuffleW == 0L)
+      val splits = spark.read.option("header", "true").csv(path).rdd.getNumPartitions
+      assert(splits >= 3, s"$splits splits")
+      assert(idsMatchLines(df) == 2000L)
+      assert(idsMatchLines(Ingest.csvResume(spark, path, numberedSchema, 1500L)
+        .unionByName(Ingest.csvResume(spark, path, numberedSchema, 0L)
+          .filter(col("id") <= 1500L))) == 2000L)
+    }
+  }
+
+  test("header-only CSV ingests as an empty frame") {
+    val path = numberedCsv(0)
+    val df = Ingest.csvResume(spark, path, numberedSchema, 0L)
+    assert(df.columns.toSeq == Seq("N", "PAD", "id"))
+    assert(df.collect().isEmpty)
+  }
+
+  test("ZipIndex fails loudly when the input splits unlike its counted partitions") {
+    import graft.operators.ZipIndex
+    import org.apache.spark.sql.functions.monotonically_increasing_id
+    // The count runs on the column-pruned plan, whose narrow shuffle AQE
+    // coalesces to fewer partitions than the full plan's padded rows (to
+    // one at 400 rows, to two at 4000): no row may be dropped or
+    // misnumbered, so the query must fail on both paths.
+    withSQLConf(
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "16",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16384") {
+      for ((rows, pruned) <- Seq(400L -> 1, 4000L -> 2)) {
+        val df = spark.range(0L, rows, 1L, 4)
+          .selectExpr("id", "concat_ws('', transform(sequence(1, 16), " +
+            "i -> sha2(cast(id * 100 + i AS string), 256))) AS pad")
+          .repartition(col("id"))
+        def parts(d: org.apache.spark.sql.DataFrame) = d.queryExecution.toRdd.getNumPartitions
+        assert(parts(df.select(monotonically_increasing_id())) == pruned)
+        assert(parts(df) > pruned)
+        val err = intercept[Exception](ZipIndex.withRowIndex(df, "idx").collect())
+        assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+          .exists(e => String.valueOf(e.getMessage).contains("ZipIndex.withRowIndex")), err)
+      }
+    }
+  }
+
   test("resume skips rows at or below the high-water mark (reference contract)") {
     val resumed = Ingest.csvResume(spark, fixture, schema, startIdx = 5L)
     assert(resumed.select("STN_ID").collect().map(_.getString(0)).sorted.toSeq ==

@@ -27,6 +27,37 @@ trait SparkTest {
     try f
     finally olds.foreach { case (k, o) => o.fold(conf.unset(k))(v => conf.set(k, v)) }
   }
+
+  /** Run `f` under a job group of its own; return its result, the number
+    * of Spark jobs it started and the shuffle bytes those jobs wrote. */
+  def jobsOf[T](f: => T): (T, Int, Long) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleW = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId))
+          Option(e.taskMetrics).foreach(m => shuffleW.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val r = f
+      org.apache.spark.BusDrain.await(sc)
+      (r, jobs.get, shuffleW.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkTest {
