@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * higher-order-function formulation (aggregate over zip_with) runs on
   * Spark's interpreted path, which profiling showed 10–200x slower than
   * tight JVM loops for per-row hot math (see the MinHash notes in
-  * graft.functions). This expression generates a single fused loop in
-  * whole-stage codegen (one pass computes dot, |a|² and |b|²), with an
-  * identical interpreted `nullSafeEval` fallback.
+  * graft.functions). One fused JVM loop ([[CosineSimilarity.cosine]]: one
+  * pass computes dot, |a|² and |b|²) serves both the interpreted and the
+  * generated path.
   *
   * Semantics: sequential left-to-right accumulation, matching both the HOF
   * formulation and the DuckDB oracle arithmetic, so swapping it into an
@@ -28,9 +28,15 @@ case class CosineSimilarity(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.expressions.CosineSimilarity.cosine($a, $b)")
+}
+
+object CosineSimilarity {
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -41,25 +47,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = $a.getDouble($i);
-         |  double $yi = $b.getDouble($i);
-         |  $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
-       """.stripMargin
-    })
 }

@@ -1,47 +1,26 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Intersection SIZE of two SORTED, DISTINCT, null-free array<long>
-  * columns by a single primitive merge pass — the counting sibling of
-  * [[JaccardSortedLongs]] (same merge, returns |a ∩ b| instead of the
-  * Jaccard ratio). 0 for empty inputs.
-  *
-  * Used by the asymmetric-containment verify stage
-  * (Similarity.containmentNearDupPairs): containment |A ∩ B| / |A| needs
-  * the raw overlap count, not a symmetric ratio — reconstructing the
-  * count from a Jaccard double would round-trip through floating point,
-  * so the count is computed directly. Same 64-bit collision risk class
-  * as [[JaccardSortedLongs]] (~n²/2⁶⁵ per pair).
+/** Set scores of two SORTED, DISTINCT, null-free array<long> columns from
+  * a single primitive merge pass — no hash sets, no string hashing or
+  * equality. The verify stage of both token-HASH near-dup operators calls
+  * these kernels (Similarity.hashSetScore): tokens are xxhash64-mapped
+  * once per document, deduplicated and sorted, so the candidate stage
+  * shuffles 8-byte longs instead of strings. Scores equal the
+  * distinct-string ones unless two DISTINCT tokens of the same pair
+  * collide in 64 bits (~n²/2⁶⁵ per pair ≈ 7e-17 at 50 tokens — the
+  * library's accepted cross-engine risk class, cf. the band-boundary note
+  * in SimilarityQueries).
   *
   * PRECONDITION (library-internal, not enforced): both arrays ascending,
   * duplicate-free, null-free — exactly what
   * `sort_array(array_distinct(transform(toks, xxhash64)))` produces.
   */
-case class IntersectSortedLongs(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_intersect_hashed"
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    IntersectSortedLongs.compute(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.expressions.IntersectSortedLongs.compute($a, $b);")
-}
-
 object IntersectSortedLongs {
-  def compute(a: ArrayData, b: ArrayData): Long = {
+
+  /** |a ∩ b|; 0 for empty inputs. */
+  def intersectSize(a: ArrayData, b: ArrayData): Long = {
     val nA = a.numElements()
     val nB = b.numElements()
     var i = 0
@@ -55,5 +34,12 @@ object IntersectSortedLongs {
       else j += 1
     }
     inter
+  }
+
+  /** Jaccard |a ∩ b| / (|a| + |b| − |a ∩ b|), exact since every term is an
+    * integer; NaN for two empty arrays (0/0). */
+  def jaccard(a: ArrayData, b: ArrayData): Double = {
+    val inter = intersectSize(a, b)
+    inter.toDouble / (a.numElements() + b.numElements() - inter).toDouble
   }
 }

@@ -14,8 +14,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Whitespace = Java-regex ASCII `\s` ([ \t\n\x0B\f\r]); UTF-8 multi-byte
   * sequences never contain ASCII bytes, so the byte scan is Unicode-safe.
-  * Lowercasing reuses UTF8String.toLowerCase — the same call the built-in
-  * `lower()` makes under the default UTF8_BINARY collation.
+  * Lowercasing is locale-independent: ASCII text byte by byte, any other
+  * text by `String.toLowerCase(Locale.ROOT)`, so a Turkish default locale
+  * cannot turn "I" into "ı". The built-in `lower()` maps non-ASCII text
+  * through ICU (`spark.sql.icu.caseMappings.enabled`), which follows the
+  * JVM default locale; under the root locale the two agree on the
+  * differential alphabets of PropertySpec and ExpressionSpec.
   */
 case class Tokenize(child: Expression) extends UnaryExpression {
 
@@ -39,7 +43,10 @@ object Tokenize {
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
   def compute(s: UTF8String): ArrayData = {
-    val bytes = s.toLowerCase.getBytes
+    val lower =
+      if (s.isFullAscii) s.toLowerCaseAscii
+      else UTF8String.fromString(s.toString.toLowerCase(java.util.Locale.ROOT))
+    val bytes = lower.getBytes
     val n = bytes.length
     val out = new java.util.ArrayList[UTF8String](8)
     var i = 0

@@ -125,6 +125,21 @@ object Portable {
   private val md5Digest = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
 
+  /** Rank key of `round(x, 6)` as the DuckDB oracles evaluate it: x·1e6
+    * (one double product) rounded half away from zero, as a double. Spark's
+    * own `round(x, 6)` rounds the decimal of `Double.toString(x)` instead,
+    * so near a ±0.5e-6 step the two can land on different sides; ordering
+    * by this key ranks exactly as the oracles' `ORDER BY round(x, 6)`
+    * (distinct keys stay distinct after the oracle's division by 1e6).
+    * At |x·1e6| >= 2^52 the product is already an integer and is its own
+    * key, which keeps NaN above +Inf above every finite key above -Inf. */
+  def round6Key(x: Column): Column = {
+    val y = x * lit(1e6)
+    val m = abs(y)
+    when(isnan(y) || m >= lit(4503599627370496.0), y)
+      .otherwise(signum(y) * (floor(m) + when(m - floor(m) >= 0.5, 1).otherwise(0)))
+  }
+
   /** Deterministic ±1 hyperplane entry for SRP bucketing, derived from
     * md5("srp_<j>_<i>"): first hex digit < 8 → +1 else -1. Computed at
     * PLAN TIME (j, i are constants), so rows pay only the dot products;

@@ -85,10 +85,12 @@ object TextFunctions {
   def vocabCount(toks: Column, vocab: Seq[String]): Column =
     size(filter(toks, t => t.isin(vocab: _*)))
 
-  /** Content fingerprint: md5 of the lowercased whitespace-normalized text —
-    * the portable exact-dup key. */
+  /** Content fingerprint: md5 of the text's [[tokens]] joined by single
+    * spaces — the portable exact-dup key. Byte for byte this is
+    * `md5(normalizeWs(lower(c)))` (the same six ASCII whitespace bytes,
+    * no leading or trailing space), lowercased as [[tokens]] lowercases. */
   def fingerprintMd5(c: Column): Column =
-    md5(normalizeWs(lower(c)))
+    md5(array_join(tokens(c), " "))
 
   /** Polynomial rolling hash over the first k tokens (length-based, engine
     * portable): h = fold(h*31 + len(token)) mod 1e9+7. */

@@ -2,8 +2,10 @@ package graft.operators
 
 import graft.functions.{MinHash, Portable, VectorFunctions => V}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** Similarity search and near-duplicate detection — SURVEY.md §2.10.
   *
@@ -30,12 +32,13 @@ object Similarity {
 
   /** Top `n` rows per `partition` by `round(score, 6)` desc, ties broken by
     * `tieBreak` asc — the one deterministic ranking of every operator here
-    * (the DuckDB oracles replay it), with the rank in `rn`. A partitioned
-    * window, never a global sort; Spark's WindowGroupLimit applies the
-    * limit map-side, so the exchange carries survivors only. */
+    * (the DuckDB oracles replay it; [[Portable.round6Key]] rounds as they
+    * do), with the rank in `rn`. A partitioned window, never a global
+    * sort; Spark's WindowGroupLimit applies the limit map-side, so the
+    * exchange carries survivors only. */
   private def topKBy(df: DataFrame, partition: String, score: String,
       tieBreak: String, n: Int): DataFrame = {
-    val w = Window.partitionBy(partition).orderBy(round(col(score), 6).desc, col(tieBreak))
+    val w = Window.partitionBy(partition).orderBy(Portable.round6Key(col(score)).desc, col(tieBreak))
     df.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
   }
 
@@ -840,7 +843,7 @@ object Similarity {
     * merge-intersection of the sorted arrays. Set scores over the hashes
     * equal the scores over the tokens unless two distinct tokens of one
     * compared pair collide in 64 bits (~7e-17 per pair — accepted risk
-    * class, see JaccardSortedLongs). Null tokens are dropped BEFORE
+    * class, see IntersectSortedLongs). Null tokens are dropped BEFORE
     * hashing: xxhash64 maps null to its seed, which would count one phantom
     * token shared by every such doc. */
   private def hashedTokenSets(docs: DataFrame, keys: Column*): DataFrame =
@@ -923,6 +926,17 @@ object Similarity {
         .join(baseArr.select(col("doc_id").as(s"doc_$side"), col("hs").as(s"hs_$side")),
           Seq(s"doc_$side"))
     cand.transform(fetch(first)).transform(fetch(if (first == "a") "b" else "a"))
+  }
+
+  /** `kernel` of [[graft.expressions.IntersectSortedLongs]] (one merge
+    * walk) over the verify join's sorted hash arrays `hs_a` and `hs_b`.
+    * The score is one call, not a ratio around a count column: Catalyst
+    * pushes each threshold filter into the join condition and would inline
+    * such a count there twice. */
+  private[graft] def hashSetScore(kernel: String, t: DataType): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    column(StaticInvoke(graft.expressions.IntersectSortedLongs.getClass, t, kernel,
+      Seq(expression(col("hs_a")), expression(col("hs_b"))), returnNullable = false))
   }
 
   /** Exact-Jaccard near-dup pairs with log-length-band blocking.
@@ -1023,14 +1037,9 @@ object Similarity {
         alpha)
       .select("doc_a", "doc_b")
 
-    val jac = {
-      import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-      column(graft.expressions.JaccardSortedLongs(
-        expression(col("hs_a")), expression(col("hs_b"))))
-    }
     // b is the smaller doc (n_b <= n_a), so its array rides the re-key
     withTokenSets(cand, base, p, first = "b")
-      .withColumn("jaccard", jac)
+      .withColumn("jaccard", hashSetScore("jaccard", DoubleType))
       .filter(col("jaccard") >= minJaccard)
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("jaccard"))
@@ -1135,13 +1144,9 @@ object Similarity {
         need(col("n_a")))
       .select("doc_a", "doc_b", "n_a")
 
-    val inter = {
-      import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-      column(graft.expressions.IntersectSortedLongs(
-        expression(col("hs_a")), expression(col("hs_b"))))
-    }
     withTokenSets(cand, base, p, first = "a")
-      .withColumn("containment", inter.cast("double") / col("n_a"))
+      .withColumn("containment",
+        hashSetScore("intersectSize", LongType).cast("double") / col("n_a"))
       .filter(col("containment") >= minContainment)
       .select(col("doc_a"), col("doc_b"), col("containment"))
   }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.util.Locale
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -20,7 +21,7 @@ object CatalogSchema {
     * else as string (cast stage applies later, ANSI mode for loud
     * failures). */
   def toDataType(physicalType: String): DataType =
-    physicalType.trim.toUpperCase.takeWhile(c => c.isLetter) match {
+    physicalType.trim.toUpperCase(Locale.ROOT).takeWhile(c => c.isLetter) match {
       case "NUMBER" | "INT" | "INTEGER" | "BIGINT" => LongType
       case "FLOAT" | "DOUBLE" | "REAL"             => DoubleType
       case "DATE" | "TIMESTAMP" | "DATETIME"       => TimestampType

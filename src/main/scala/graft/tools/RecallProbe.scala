@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import graft.functions.{VectorFunctions => V}
+import graft.functions.{Portable, VectorFunctions => V}
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -102,7 +102,7 @@ object RecallProbe {
     println(s"[recall-probe] sfDir=$sfDir n=$n k=$k nBits=$nBits rounds=$rounds mode=$mode theta=$theta")
 
     // brute-force truth: same tie-break as knnGraph's window
-    val truthW = Window.partitionBy("src").orderBy(round(col("cos"), 6).desc, col("dst"))
+    val truthW = Window.partitionBy("src").orderBy(Portable.round6Key(col("cos")).desc, col("dst"))
     val truth = emb.select(col("vec_id").as("src"), col("v").as("sv"))
       .crossJoin(broadcast(emb.select(col("vec_id").as("dst"), col("v").as("dv"))))
       .filter(col("src") =!= col("dst"))

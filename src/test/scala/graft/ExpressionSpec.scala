@@ -4,6 +4,7 @@ import graft.functions.{VectorFunctions => V}
 import graft.operators.{Joins, Skew}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExpressionSpec extends AnyFunSuite with SparkTest {
@@ -34,6 +35,53 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
         assert(n == 50, s"codegen=$cg")
       }
     } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
+  }
+
+  test("Int8Dot: codegen and interpreted paths equal the exact integer dot") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
+    import org.apache.spark.sql.types.{ArrayType, ByteType}
+    // full int8 range, length mismatch (min-length clamp) and empty arrays
+    val rnd = new scala.util.Random(13)
+    def code(n: Int) = Seq.fill(n)((rnd.nextInt(255) - 127).toByte)
+    val cases = Seq.fill(40)((code(rnd.nextInt(20)), code(rnd.nextInt(20)))) ++
+      Seq((Seq.fill(64)(127.toByte), Seq.fill(64)(-127.toByte)), (Seq.empty[Byte], code(3)))
+    def exact(a: Seq[Byte], b: Seq[Byte]) = a.zip(b).map { case (x, y) => x.toLong * y }.sum
+    val generated = cases.toDF("a", "b").select(V.int8Dot(col("a"), col("b"))).collect()
+    cases.zip(generated).foreach { case ((a, b), r) =>
+      def lit(v: Seq[Byte]) =
+        Literal(UnsafeArrayData.fromPrimitiveArray(v.toArray), ArrayType(ByteType, containsNull = false))
+      val interpreted = graft.expressions.Int8Dot(lit(a), lit(b)).eval()
+      assert(r.getLong(0) == exact(a, b) && interpreted == exact(a, b), s"a=$a b=$b")
+    }
+  }
+
+  test("round6Key rounds x·1e6 half away from zero and keeps the NaN/±Inf order") {
+    import spark.implicits._
+    import graft.functions.Portable
+    // values whose product x·1e6 lies within 3 ulps of a half step k + 0.5,
+    // both signs, where a decimal round of Double.toString(x) can tip the
+    // other way; the reference rounds the exact binary value of the product
+    val rnd = new scala.util.Random(17)
+    val boundary = (0 until 500).flatMap { _ =>
+      val mid = (rnd.nextInt(2000001) - 1000000 + 0.5) / 1e6
+      Iterator.iterate(mid)(Math.nextDown).slice(1, 4).toSeq ++ Seq(mid) ++
+        Iterator.iterate(mid)(Math.nextUp).slice(1, 4).toSeq
+    }
+    val xs = boundary ++ Seq(0.0, -0.0, 0.5e-6, -0.5e-6, 1.5e-6, 2.5e-6, -2.5e-6,
+      0.9999995, -0.9999995, 1.0, -1.0, 4.5e9, 1e300, -1e300, Double.MinPositiveValue)
+    val keys = xs.toDF("x").select(Portable.round6Key(col("x"))).collect().map(_.getDouble(0))
+    xs.zip(keys).foreach { case (x, k) =>
+      val ref = new java.math.BigDecimal(x * 1e6)
+        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue
+      assert(k == ref, s"x=$x key=$k reference=$ref")
+    }
+    // descending: NaN first, then +Inf, the finite keys, -Inf last
+    val special = Seq(1.0, Double.NegativeInfinity, Double.NaN, -1.0, Double.PositiveInfinity)
+    val order = special.toDF("x").orderBy(Portable.round6Key(col("x")).desc)
+      .collect().map(_.getDouble(0)).toSeq
+    assert(order.head.isNaN &&
+      order.tail == Seq(Double.PositiveInfinity, 1.0, -1.0, Double.NegativeInfinity))
   }
 
   test("graft_cosine is callable from SQL after registration") {
@@ -312,9 +360,8 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
     assert(viaSql == "한")
   }
 
-  test("JaccardSortedLongs == string-set Jaccard on random token multisets") {
+  test("hashed-set Jaccard (intersection count) == string-set Jaccard") {
     import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     // random multisets with shared vocabulary (dups + overlaps + empties);
     // the hashed path must agree exactly (64-bit collisions are ~7e-17
     // per pair — a deterministic fixture never hits one)
@@ -325,20 +372,24 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
       ((Seq.empty[String], Seq.empty[String])) :+ ((Seq("a"), Seq.empty[String]))
     val hs = (c: org.apache.spark.sql.Column) =>
       sort_array(array_distinct(transform(c, xxhash64(_))))
-    val rows = cases.toDF("a", "b").select(
-      graft.functions.MinHash.exactJaccard(col("a"), col("b")).as("s"),
-      column(graft.expressions.JaccardSortedLongs(
-        expression(hs(col("a"))), expression(hs(col("b"))))).as("h")).collect()
-    rows.foreach { r =>
-      val (s, h) = (r.getDouble(0), r.getDouble(1))
-      assert(s == h || (s.isNaN && h.isNaN), s"string $s vs hashed $h")
+    val df = cases.toDF("a", "b")
+      .select(graft.functions.MinHash.exactJaccard(col("a"), col("b")).as("s"),
+        hs(col("a")).as("hs_a"), hs(col("b")).as("hs_b"))
+      .select(col("s"), graft.operators.Similarity.hashSetScore("jaccard", DoubleType))
+    // generated and interpreted (reflective) calls of the one kernel
+    Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach { case (mode, wsc) =>
+      withSQLConf("spark.sql.codegen.factoryMode" -> mode, "spark.sql.codegen.wholeStage" -> wsc) {
+        df.collect().foreach { r =>
+          val (s, h) = (r.getDouble(0), r.getDouble(1))
+          assert(s == h || (s.isNaN && h.isNaN), s"$mode: string $s vs hashed $h")
+        }
+      }
     }
   }
 
   test("IntersectSortedLongs == distinct-string intersection size") {
     import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    // same fixture family as the JaccardSortedLongs case, plus the edges
+    // same fixture family as the hashed-set Jaccard case, plus the edges
     // the containment verify leans on: subsets, identical sets, empties
     val rnd = new scala.util.Random(11)
     val vocab = (0 until 40).map(i => s"tok$i")
@@ -352,9 +403,9 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
       sort_array(array_distinct(transform(c, xxhash64(_))))
     val rows = cases.toDF("a", "b").select(
       size(array_intersect(array_distinct(col("a")), array_distinct(col("b"))))
-        .cast("long").as("s"),
-      column(graft.expressions.IntersectSortedLongs(
-        expression(hs(col("a"))), expression(hs(col("b"))))).as("h")).collect()
+        .cast("long").as("s"), hs(col("a")).as("hs_a"), hs(col("b")).as("hs_b"))
+      .select(col("s"), graft.operators.Similarity.hashSetScore("intersectSize", LongType))
+      .collect()
     rows.foreach(r =>
       assert(r.getLong(0) == r.getLong(1), s"string ${r.getLong(0)} vs hashed ${r.getLong(1)}"))
   }

@@ -19,6 +19,21 @@ class IngestSpec extends AnyFunSuite with SparkTest {
     ).toDF("physical_column_name", "physical_column_type", "physical_column_order"))
   }
 
+  test("physical type names map to Spark types under any default locale") {
+    val table = Seq(
+      "number" -> LongType, "int" -> LongType, "integer" -> LongType, "bigint" -> LongType,
+      "float" -> DoubleType, "double" -> DoubleType, "real" -> DoubleType,
+      "date" -> TimestampType, "timestamp" -> TimestampType, "datetime" -> TimestampType,
+      " NUMBER(10) " -> LongType, "varchar2" -> StringType, "" -> StringType)
+    Seq("en", "tr").foreach { tag =>
+      SparkTest.withDefaultLocale(tag) {
+        table.foreach { case (name, t) =>
+          assert(CatalogSchema.toDataType(name) == t, s"locale=$tag type=$name")
+        }
+      }
+    }
+  }
+
   test("catalog rows build the typed schema in ordinal order") {
     assert(schema.fieldNames.toSeq ==
       Seq("STN_ID", "STN_NAME", "MEA_DATE", "MEA_VALUE"))

@@ -69,19 +69,34 @@ class PropertySpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  // characters chosen to stress the byte scan: every ASCII whitespace
+  // class, multi-byte UTF-8, case-fold targets, punctuation, empties
+  private val adversarialText = Gen.listOf(Gen.oneOf(
+    Gen.oneOf(' ', '\t', '\n', '\u000B', '\f', '\r'),
+    Gen.alphaNumChar, Gen.oneOf('É', 'ß', '한', '.', ',', '!', 'Ω'))).map(_.mkString)
+
   test("property: native tokenizer == HOF formulation on adversarial strings") {
     import spark.implicits._
-    // characters chosen to stress the byte scan: every ASCII whitespace
-    // class, multi-byte UTF-8, case-fold targets, punctuation, empties
-    val ch = Gen.oneOf(
-      Gen.oneOf(' ', '\t', '\n', '\u000B', '\f', '\r'),
-      Gen.alphaNumChar, Gen.oneOf('É', 'ß', '한', '.', ',', '!', 'Ω'))
-    val text = Gen.listOf(ch).map(_.mkString)
-    samples(text, 40).foreach { t =>
+    samples(adversarialText, 40).foreach { t =>
       val r = Seq(t).toDF("s").select(
         T.tokens(col("s")).as("n"), T.tokensHof(col("s")).as("h")).collect()(0)
       assert(r.getSeq[String](0) == r.getSeq[String](1), s"input=${t.map(_.toInt)}")
     }
+  }
+
+  test("property: native tokenizer lowercases alike under a Turkish default locale") {
+    import spark.implicits._
+    // "I" in a non-ASCII string is where a locale-sensitive lowercase turns
+    // into dotless "ı"; the built-in lower() follows the default locale
+    // too, so the reference is the HOF formulation under the root locale
+    val texts = samples(adversarialText, 40) ++ Seq("TITLE É", "TITLE", "İI ı")
+    val df = texts.toDF("s")
+    def run(c: org.apache.spark.sql.Column) = df.select(c).collect().map(_.getSeq[String](0)).toSeq
+    val root = SparkTest.withDefaultLocale("und")(run(T.tokensHof(col("s"))))
+    val tr = SparkTest.withDefaultLocale("tr")(run(T.tokens(col("s"))))
+    texts.indices.foreach(i =>
+      assert(tr(i) == root(i), s"input=${texts(i).map(_.toInt)}"))
+    assert(tr.takeRight(3).take(2) == Seq(Seq("title", "é"), Seq("title")))
   }
 
   test("property: native ngrams == HOF formulation for n in 2..5") {

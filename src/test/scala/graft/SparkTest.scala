@@ -61,6 +61,23 @@ trait SparkTest {
 }
 
 object SparkTest {
+  /** Run `body` with the JVM default locale set to the BCP 47 `tag`
+    * (e.g. "tr"), then restore the previous default locale and its
+    * display and format categories, so no suite leaks it into later ones.
+    * Local-mode tasks run in this JVM, so Spark jobs in `body` see it too. */
+  def withDefaultLocale[T](tag: String)(body: => T): T = {
+    import java.util.Locale
+    import java.util.Locale.Category.{DISPLAY, FORMAT}
+    val (all, display, format) = (Locale.getDefault, Locale.getDefault(DISPLAY), Locale.getDefault(FORMAT))
+    Locale.setDefault(Locale.forLanguageTag(tag))
+    try body
+    finally {
+      Locale.setDefault(all)
+      Locale.setDefault(DISPLAY, display)
+      Locale.setDefault(FORMAT, format)
+    }
+  }
+
   /** A fresh `<prefix>…` temp directory, deleted when the test JVM exits. */
   def tempDir(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString

@@ -30,6 +30,28 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTest {
     assert(one(T.normalizeWs(col("s")), "  a\t\tb \n c  ") == "a b c")
   }
 
+  test("fingerprintMd5 == md5(normalizeWs(lower(text))) byte for byte") {
+    import spark.implicits._
+    // the fingerprint's built-in formulation, kept here as its reference
+    def reference(c: org.apache.spark.sql.Column) = md5(T.normalizeWs(lower(c)))
+    // the tokenizer property's alphabet (PropertySpec)
+    val alphabet = " \t\n\u000B\f\r" + ('a' to 'z').mkString + ('A' to 'Z').mkString +
+      ('0' to '9').mkString + "Éß한.,!Ω"
+    val rnd = new scala.util.Random(5)
+    val random = Seq.fill(60)(
+      Seq.fill(rnd.nextInt(24))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    val nfdHan = "\u1112\u1161\u11AB" // 한 as conjoining jamo
+    val texts = random ++ Seq(
+      "  leading", "trailing \t\r\n", " \t\n mixed \u000B\f\r ws \r\n end ",
+      s"$nfdHan  $nfdHan\tX", "UPPER Case ÉTÉ ß", "", " \t\n", null)
+    val rows = texts.toDF("s")
+      .select(T.fingerprintMd5(col("s")), reference(col("s"))).collect()
+    rows.zip(texts).foreach { case (r, t) =>
+      assert(r.getString(0) == r.getString(1), s"input=${Option(t).map(_.map(_.toInt))}")
+    }
+    assert(rows.last.isNullAt(0))
+  }
+
   test("tokens drops empties; ngrams guard short inputs") {
     import spark.implicits._
     val df = Seq("one two three", "one", "").toDF("s")
