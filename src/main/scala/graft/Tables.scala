@@ -138,10 +138,7 @@ object Tables {
     * pid so concurrent PROCESSES over the same dir (Verify alongside
     * Bench) each own their layout instead of racing one overwrite. */
   private[graft] def dirTag(d: String): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(6).map(b => f"${b & 0xff}%02x").mkString
-    d.replaceAll("[^A-Za-z0-9]", "_") + "_" + md5 +
+    d.replaceAll("[^A-Za-z0-9]", "_") + "_" + f"${graft.functions.Portable.h48Jvm(d)}%012x" +
       "_p" + java.lang.ProcessHandle.current().pid()
   }
 

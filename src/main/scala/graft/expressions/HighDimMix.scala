@@ -30,8 +30,8 @@ case class HighDimMix(child: Expression, fromIdx: Int, untilIdx: Int)
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_highdim_mix"
-  // analysis-time input contract (r17 ADVICE): reject a non-long key on
-  // both eval paths at analysis instead of diverging at runtime
+  // analysis-time input contract: a non-long key fails at analysis on
+  // both eval paths instead of diverging at runtime
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case LongType => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(

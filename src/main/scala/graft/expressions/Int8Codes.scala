@@ -52,7 +52,7 @@ case class Int8Codes(child: Expression) extends UnaryExpression {
   override def dataType: DataType = Int8Codes.schema
   override def nullable: Boolean = true
   override def prettyName: String = "graft_int8_codes"
-  // analysis-time input contract (r17 ADVICE): a mistyped child fails fast
+  // analysis-time input contract: a mistyped child fails fast
   // on BOTH eval paths instead of ClassCastException-ing interpreted while
   // silently widening under codegen (AbstractDataType is private[sql], so
   // the check is spelled directly rather than via ExpectsInputTypes)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 /** Set scores of two SORTED, DISTINCT, null-free array<long> columns from
   * a single primitive merge pass — no hash sets, no string hashing or
   * equality. The verify stage of both token-HASH near-dup operators calls
-  * these kernels (Similarity.hashSetScore): tokens are xxhash64-mapped
-  * once per document, deduplicated and sorted, so the candidate stage
+  * these kernels (Similarity.hashSetScore): tokens are mapped to 64-bit
+  * hashes once per document (Similarity.hashedTokenSets), deduplicated and sorted, so the candidate stage
   * shuffles 8-byte longs instead of strings. Scores equal the
   * distinct-string ones unless two DISTINCT tokens of the same pair
   * collide in 64 bits (~n²/2⁶⁵ per pair ≈ 7e-17 at 50 tokens — the
@@ -14,8 +14,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * in SimilarityQueries).
   *
   * PRECONDITION (library-internal, not enforced): both arrays ascending,
-  * duplicate-free, null-free — exactly what
-  * `sort_array(array_distinct(transform(toks, xxhash64)))` produces.
+  * duplicate-free, null-free — exactly what Similarity.hashedTokenSets
+  * produces.
   */
 object IntersectSortedLongs {
 

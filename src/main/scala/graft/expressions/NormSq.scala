@@ -19,7 +19,8 @@ case class NormSq(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_norm_sq"
-  // analysis-time input contract (r17 ADVICE)
+  // analysis-time input contract: a mistyped child fails at analysis on
+  // both eval paths
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(

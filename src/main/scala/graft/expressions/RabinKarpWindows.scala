@@ -1,5 +1,6 @@
 package graft.expressions
 
+import graft.functions.Portable
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -14,7 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * `Portable.windowHashes(transform(toks, t -> h48(t) % P), w)` — md5-head
   * base hash per token, two Carter–Wegman-style mod-P polynomials combined
   * as h1·2³¹ + h2 — which the DuckDB oracle replays exactly
-  * (PortableSql.tokenHashes/windowHashes). The win is the computation
+  * (PortableSql.tokenHashes/windowHashes). NULL elements are skipped
+  * before windowing, so `graft_rk_windows(array('a', NULL, 'b'), 2)` equals
+  * `graft_rk_windows(array('a', 'b'), 2)`. The win is the computation
   * shape: the HOF path runs the interpreted lambda evaluator per window
   * (measured SLOWER than even md5-per-window native n-grams at sf0.1);
   * here each token is md5'd once and the window polynomials run as a plain
@@ -39,29 +42,27 @@ case class RabinKarpWindows(child: Expression, w: Int)
 }
 
 object RabinKarpWindows {
-  private val P = graft.functions.Portable.P
-  private val B1 = graft.functions.Portable.rkB(1)
-  private val B2 = graft.functions.Portable.rkB(2)
+  private val P = Portable.P
+  private val B1 = Portable.rkB(1)
+  private val B2 = Portable.rkB(2)
 
-  /** One md5 per token (first 6 digest bytes = Portable.h48, reduced into
-    * [0, P)), then the two window polynomials over the cached token hashes.
-    * Shorter-than-w inputs yield an empty array (no windows). Every
-    * intermediate product is < 2^62: acc, base < P = 2^31 - 1. */
+  /** One md5 per token (Portable.h48Jvm, reduced into [0, P)), then the
+    * two window polynomials over the cached token hashes. NULL elements are
+    * skipped before windowing, as MinHashSignature and MinHashAggregator
+    * skip them. Fewer than w non-NULL tokens yield an empty array (no
+    * windows). Every intermediate product is < 2^62: acc, base < P = 2^31 - 1. */
   def compute(toks: ArrayData, w: Int): ArrayData = {
-    val n = toks.numElements()
-    if (n < w) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hs = new Array[Long](n)
+    val hs = new Array[Long](toks.numElements())
+    var n = 0
     var i = 0
-    while (i < n) {
-      md.reset()
-      val d = md.digest(toks.getUTF8String(i).getBytes)
-      var v = 0L
-      var b = 0
-      while (b < 6) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
-      hs(i) = v % P
+    while (i < hs.length) {
+      if (!toks.isNullAt(i)) {
+        hs(n) = Portable.h48Jvm(toks.getUTF8String(i).getBytes) % P
+        n += 1
+      }
       i += 1
     }
+    if (n < w) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val m = n - w + 1
     val out = new Array[Long](m)
     var s = 0

@@ -1,24 +1,22 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
+import graft.functions.Portable
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 
-/** 64-bit SimHash of an array<string> as a native expression.
+/** 63-bit SimHash of an array<string> on the md5 family of
+  * graft.functions.Portable, as a native expression (SQL `graft_simhash`).
   *
-  * Same hash family as the built-in formulation (per token
-  * `xxhash64(t)` = XxHash64 seed 42; bit j votes +1 when `(h >> j) & 1`
-  * is set, else -1; fingerprint bit j set when the vote sum is positive),
-  * so values are bit-identical to the HOF version
-  * (graft.functions.SimHash.simhash64Hof). The win is the computation
-  * shape: the HOF version is 64 separate `aggregate` calls, each
-  * re-hashing every token and re-traversing the array — 64x redundant
-  * work in the interpreted higher-order evaluator. Here each token is
-  * hashed ONCE and its 64 votes unrolled in a JIT-compiled loop.
+  * Per token: md5 of its UTF-8 bytes, digest bytes 0-3 big-endian = `hi`,
+  * 4-7 = `lo`; bit j (0-31 from `lo`, 32-62 from `hi`) votes +1 when set,
+  * else -1, and the fingerprint sets bit j when its vote sum is > 0. These
+  * are the rules of Portable.simhashVoteCols / simhashFromVotes and of the
+  * DuckDB oracle (PortableSql.simhashOracle). Bit 63 is never set.
   *
-  * Codegen emits a single call to [[SimHash64.compute]] so the
-  * whole-stage span stays intact while the loop runs as plain JVM code.
+  * A NULL element votes -1 on every bit, as md5(NULL) does in the
+  * reference; an empty or all-NULL array gives 0; a NULL array gives NULL.
   */
 case class SimHash64(child: Expression) extends UnaryExpression {
 
@@ -37,30 +35,28 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 }
 
 object SimHash64 {
-  /** One xxhash64 per token; 64 vote counters; bit j of the result set
-    * when counter j ends positive. Empty input yields 0L (all votes 0,
-    * none positive) — same as the HOF fold over an empty array. */
+  private val Bits = Portable.SimHashBits
+
+  /** One md5 per token; its first 8 digest bytes as one big-endian long
+    * are `hi << 32 | lo`, so vote j reads bit j of that long. */
   def compute(tokens: ArrayData): Long = {
-    val votes = new Array[Int](64)
+    val votes = new Array[Int](Bits)
     val n = tokens.numElements()
     var i = 0
     while (i < n) {
-      // a null element votes with the unchanged seed, bit-identical to the
-      // HOF formulation where xxhash64(null) folds the accumulator through
-      // untouched (graft_simhash is SQL-exposed, so nulls can reach here)
       val h =
-        if (tokens.isNullAt(i)) 42L
-        else XxHash64Function.hash(tokens.getUTF8String(i), StringType, 42L)
+        if (tokens.isNullAt(i)) 0L
+        else java.nio.ByteBuffer.wrap(Portable.md5Jvm(tokens.getUTF8String(i).getBytes)).getLong
       var j = 0
-      while (j < 64) {
-        if (((h >> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
+      while (j < Bits) {
+        if (((h >>> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
         j += 1
       }
       i += 1
     }
     var fp = 0L
     var j = 0
-    while (j < 64) {
+    while (j < Bits) {
       if (votes(j) > 0) fp |= (1L << j)
       j += 1
     }

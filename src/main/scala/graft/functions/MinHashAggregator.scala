@@ -28,9 +28,10 @@ class MinHashAggregator(k: Int)
 
   override def zero: Array[Long] = Array.fill(k)(Long.MaxValue)
 
-  /** One md5 per token; NULL tokens are skipped, as in MinHash.signature. */
+  /** One md5 per token; NULL tokens and NULL arrays are skipped, as in
+    * MinHash.signature, so a group of only NULL arrays finishes at [[zero]]. */
   override def reduce(buf: Array[Long], tokens: Seq[String]): Array[Long] = {
-    tokens.foreach { t =>
+    if (tokens != null) tokens.foreach { t =>
       if (t != null) MinHashSignature.minInto(buf, Portable.h48Jvm(t), as, bs)
     }
     buf

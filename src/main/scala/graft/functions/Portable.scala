@@ -3,13 +3,15 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The engine's one hash family for MinHash and SRP, derived from MD5 so
-  * the DuckDB oracle can replay it.
+/** The engine's one hash family for MinHash, SRP and SimHash, derived from
+  * MD5 so the DuckDB oracle can replay it.
   *
   * Every MinHash signature (Similarity.bandTable / minhashCandidatePairs,
-  * the streaming dedup sink, MinHashAggregator, SQL `graft_minhash`) and
-  * every SRP hyperplane (Similarity.srpBucket and everything built on it)
-  * comes from this object. There is no second family: band and bucket
+  * the streaming dedup sink, MinHashAggregator, SQL `graft_minhash`),
+  * every SRP hyperplane (Similarity.srpBucket and everything built on it),
+  * every SimHash fingerprint (SimHash.simhash, SQL `graft_simhash`) and
+  * every Rabin–Karp token hash comes from this object, and every JVM-side
+  * md5 is [[md5Jvm]]. There is no second family: band and bucket
   * state written by any writer is probeable by every reader. Both Spark
   * (`md5` + `conv`, codegen'd built-ins) and DuckDB (`md5` + hex parse)
   * compute the hashes bit-identically, so signatures, band keys, SRP
@@ -19,9 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * Cost: one MD5 per shingle (the k components are affine maps of that one
   * base hash); SRP signs are plan-time constants, so a row pays only its
-  * dot products. SimHash is separate:
-  * SimHash.simhash64 (xxhash64) and SimHash.simhashPortable (this family)
-  * are two functions with their own callers.
+  * dot products; a SimHash token pays one MD5 for all 63 bits.
   */
 object Portable {
 
@@ -113,14 +113,13 @@ object Portable {
   def h48Jvm(s: String): Long =
     h48Jvm(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  /** [[h48Jvm]] of a string's UTF-8 bytes, on a per-thread digest. */
-  def h48Jvm(utf8: Array[Byte]): Long = {
-    val d = md5Digest.get().digest(utf8)
-    var v = 0L
-    var i = 0
-    while (i < 6) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v
-  }
+  /** [[h48Jvm]] of a string's UTF-8 bytes: digest bytes 0-5, big-endian. */
+  def h48Jvm(utf8: Array[Byte]): Long =
+    java.nio.ByteBuffer.wrap(md5Jvm(utf8)).getLong >>> 16
+
+  /** The 16 md5 bytes of `utf8`, on a per-thread digest — the one md5 the
+    * JVM side of the engine takes (h48, SimHash, Rabin–Karp, layout tags). */
+  def md5Jvm(utf8: Array[Byte]): Array[Byte] = md5Digest.get().digest(utf8)
 
   private val md5Digest = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
@@ -147,13 +146,17 @@ object Portable {
   def srpSign(j: Int, i: Int): Double =
     if ((h48Jvm(s"srp_${j}_${i}") & (1L << 47)) == 0) 1.0 else -1.0
 
-  /** 63-bit portable SimHash over an exploded token stream: callers
-    * aggregate [[simhashVotes]] per doc and fold with [[simhashFromVotes]].
-    * (63, not 64 bits: DuckDB's checked BIGINT cannot form 1<<63.) */
+  /** SimHash width: 63, not 64 bits, because DuckDB's checked BIGINT cannot
+    * form 1<<63. The engine computes the fingerprint per row with the native
+    * graft.expressions.SimHash64; [[simhashVoteCols]] and
+    * [[simhashFromVotes]] are its built-in formulation over an exploded
+    * token stream, kept as the differential-test reference (the DuckDB
+    * oracle, PortableSql.simhashOracle, replays the same shape). */
   val SimHashBits = 63
 
   /** Per-token vote columns: +1/-1 for each of the 63 bit positions, from
-    * the md5 32-bit halves (bits 0-31 from the low half, 32-62 high). */
+    * the md5 32-bit halves (bits 0-31 from the low half, 32-62 high). A
+    * NULL half (md5 of a NULL token) votes -1 on every bit. */
   def simhashVoteCols(hiCol: Column, loCol: Column): Seq[Column] =
     (0 until SimHashBits).map { j =>
       val bit =

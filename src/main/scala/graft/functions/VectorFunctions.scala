@@ -46,7 +46,7 @@ object VectorFunctions {
 
   /** L2 norm via the native NormSq loop — bit-identical to [[l2Norm]]
     * (same fold order under the same builtin sqrt); use on corpus-scan
-    * guards/metadata where the interpreted HOF pass is hot (r17: one
+    * guards/metadata where the interpreted HOF pass is hot (it costs one
     * full interpreted corpus pass per plan branch in knnGraph /
     * nnDescentRound / quantRerankTopK). */
   def l2NormNative(a: Column): Column = {

@@ -210,7 +210,7 @@ object Multimodal {
       pngFile(width, height, raw)
     }
 
-    /** Real PNG pixel decode (closes the r14 "IHDR-only" gap): full chunk
+    /** Real PNG pixel decode, not just the IHDR header: full chunk
       * walk with per-chunk CRC32 verification, IDAT concatenation, zlib
       * inflate (java.util.zip.Inflater), then per-row filter
       * RECONSTRUCTION — all five spec filters (None/Sub/Up/Average/Paeth,

@@ -45,15 +45,15 @@ private[graft] object AqeGate {
           state.remove(spark)
           // A stopped session can throw from conf.set; swallowing keeps
           // the body's own exception (the interesting one) propagating
-          // instead of being masked by the restore (r9 ADVICE). The map
-          // entry is already removed, so gate state stays consistent.
-          // Narrowed (r10 ADVICE): only the stopped-session case is
-          // silent — a restore failure on a LIVE session would leave AQE
-          // off for the rest of the session, so it is at least loud.
-          // Deliberate (r11 ADVICE): a FATAL throwable (OOM, thread
-          // death) on the live path still propagates and can mask the
-          // body's exception — the conventional trade; fatal errors mean
-          // the JVM is past caring which exception wins.
+          // instead of being masked by the restore. The map entry is
+          // already removed, so gate state stays consistent.
+          // Only the stopped-session case is silent: a restore failure on
+          // a LIVE session would leave AQE off for the rest of the
+          // session, so it is at least loud.
+          // A FATAL throwable (OOM, thread death) on the live path still
+          // propagates and can mask the body's exception — the
+          // conventional trade; fatal errors mean the JVM is past caring
+          // which exception wins.
           try spark.conf.set(Key, before)
           catch {
             case _: Throwable if spark.sparkContext.isStopped => ()

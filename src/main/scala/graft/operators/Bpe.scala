@@ -102,7 +102,7 @@ object Bpe {
     *              k/m — the k≈32,000 production-tokenizer lever, where
     *              sequential selection means 32k Spark jobs of scheduler
     *              overhead regardless of data size. Measured at k=1024 on
-    *              a 100k-word Zipf vocabulary (PROGRESS r8): 441 rounds
+    *              a 100k-word Zipf vocabulary: 441 rounds
     *              at EVERY width in {8,32,64} (~650 s on local[32]) vs
     *              1024 sequential — effective batch 2.3, capped by guard
     *              (2), not by width: on a Zipf head the top-ranked pairs

@@ -347,7 +347,7 @@ object Dedup {
   /** Partition count for one CC round-shuffle over `rows` two-long edge
     * rows. AQE's byte-based coalescing is the wrong policy on both ends of
     * this loop: early rounds carry tens of millions of tiny rows that pack
-    * into a handful of 64 MB-advisory partitions (multi-GB sorts, spill —
+    * into a handful of 64 MB AQE target-size partitions (multi-GB sorts, spill —
     * measured superlinear in the 10x->100x decade), while pinning the full
     * `spark.sql.shuffle.partitions` wastes fixed per-task overhead on the
     * late rounds where the graph has collapsed to thousands of edges

@@ -333,7 +333,7 @@ object AggQueries {
       // comparable bytes, 1 exchange instead of 7. A whale user's events
       // buffer in one window group (spillable); funnel events per human
       // user are bounded in practice.
-      // 100 TB whale-user guard (r9 advisory): the unbounded-unordered
+      // Whale-user guard at 100 TB scale: the unbounded-unordered
       // window buffers ONE GROUP at a time, so the failure mode is not
       // correctness but a straggler task when a single user_id carries
       // millions of rows — at warehouse scale that is a BOT or a null/

@@ -149,7 +149,7 @@ object PortableSql {
     * extends each vector with the deterministic [[extendDimSql]]
     * components (the high-dim fixture of q_sim_nndescent_highdim). */
   def srpCtes(dim: Int = 64): String = {
-    // MATERIALIZED (r18, oracle-side cost only): at dim > 64 the fixture
+    // MATERIALIZED (oracle-side cost only): at dim > 64 the fixture
     // extension + bucket expressions are ~3k element-lambda ops per row;
     // DuckDB 1.0 inlines CTEs, so every downstream reference (the bucket
     // self-joins reference bk on BOTH sides) re-evaluated them per join
@@ -200,7 +200,7 @@ object PortableSql {
     // quantCtes rides along unconditionally: unreferenced CTEs cost only
     // parse time, and both the gated seed here and any gated rounds
     // appended by the nnDescent builders share the one code table
-    // MATERIALIZED (r18): bkz feeds the bucket self-join (both sides) and
+    // MATERIALIZED: bkz feeds the bucket self-join (both sides) and
     // every exact-rescore join; qc both sides of each pre-score join; knn
     // every chained round's fwd/rev and q_dedup_knn_e2e's RECURSIVE reach
     // (which otherwise re-evaluates the whole graph per iteration —

@@ -402,7 +402,7 @@ object ScalarQueries {
         .orderBy("media_id")
     },
 
-    // REAL multimodal resize (closes the r11 "stub resampler" gap): every
+    // REAL multimodal resize, not a stub resampler: every
     // document becomes a spec-conformant 24-bit BMP with arithmetic
     // pattern pixels, the engine DECODES the actual byte layout
     // (bottom-up rows, BGR channels, 4-byte row padding) and box-filters
@@ -450,7 +450,7 @@ object ScalarQueries {
         .orderBy("media_id", "cell_y", "cell_x")
     },
 
-    // REAL PNG decode + resample (closes the r14 "IHDR-only" image gap):
+    // REAL PNG decode + resample, not just the IHDR header:
     // the same planted pattern and box-filter as q_mm_resize_real, but the
     // payload is a spec-conformant PNG — zlib-deflated IDAT the engine
     // must INFLATE and per-row filter bytes cycling all five spec filters

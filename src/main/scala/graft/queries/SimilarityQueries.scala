@@ -566,14 +566,13 @@ object SimilarityQueries {
     },
 
     // SimHash fingerprints + bucket sizes (near-dup by identical
-    // fingerprint). Portable 63-bit variant (SimHash.simhashPortable):
-    // votes from md5 halves, aggregated as codegen'd conditional sums —
-    // the DuckDB oracle replays every fingerprint (PortableSql.simhashOracle).
+    // fingerprint): the 63-bit md5 SimHash, one native kernel per row
+    // (doc_id is unique, so per row is per doc) — the DuckDB oracle
+    // replays every fingerprint (PortableSql.simhashOracle).
     QueryDef("q_dedup_simhash", Some(PortableSql.simhashOracle)) { (s, d) =>
-      val wFp = Window.partitionBy("simhash")
-      SimHash.simhashPortable(
-          Tables.documents(s, d), "doc_id", T.tokens(col("text")))
-        .withColumn("n_same", count(lit(1)).over(wFp).cast("long"))
+      Tables.documents(s, d)
+        .select(col("doc_id"), SimHash.simhash(T.tokens(col("text"))).as("simhash"))
+        .withColumn("n_same", count(lit(1)).over(Window.partitionBy("simhash")).cast("long"))
         .orderBy("doc_id")
     },
 

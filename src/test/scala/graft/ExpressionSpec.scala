@@ -126,27 +126,55 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
 
   test("native simhash is bit-identical to the HOF formulation") {
     import spark.implicits._
-    import graft.functions.{SimHash, TextFunctions => T}
-    val docs = Seq(
-      "the quick brown fox jumps over the lazy dog",
-      "spark shuffles partitions across the cluster",
-      "one", "", "repeated repeated repeated tokens tokens"
-    ).toDF("text").select(T.tokens(col("text")).as("toks"))
-    val both = docs.select(
-      SimHash.simhash64Hof(col("toks")).as("hof"),
-      SimHash.simhash64(col("toks")).as("native"))
-    both.collect().foreach { r =>
-      assert(r.getLong(0) == r.getLong(1), s"hof=${r.getLong(0)} native=${r.getLong(1)}")
+    import graft.functions.{Portable, SimHash}
+    // the built-in reference: explode, md5 halves via conv, 63 vote sums
+    // per doc, left-joined back and NULL-coalesced to 0
+    def reference(df: org.apache.spark.sql.DataFrame) = {
+      val tok = df.select(col("id"), explode(col("toks")).as("t"))
+        .select(col("id"), md5(col("t")).as("m"))
+        .select(col("id"),
+          conv(substring(col("m"), 1, 8), 16, 10).cast("long").as("hi"),
+          conv(substring(col("m"), 9, 8), 16, 10).cast("long").as("lo"))
+      val votes = Portable.simhashVoteCols(col("hi"), col("lo"))
+        .zipWithIndex.map { case (v, j) => sum(v).as(s"v$j") }
+      val fp = tok.groupBy("id").agg(votes.head, votes.tail: _*)
+        .select(col("id"), Portable.simhashFromVotes(
+          (0 until Portable.SimHashBits).map(j => col(s"v$j"))).as("fp"))
+      df.select("id").join(fp, Seq("id"), "left")
+        .select(col("id"), coalesce(col("fp"), lit(0L)).as("fp"))
     }
+    // tokens over the tokenizer property's non-whitespace alphabet (PropertySpec)
+    val alphabet = ('a' to 'z').mkString + ('A' to 'Z').mkString +
+      ('0' to '9').mkString + "Éß한.,!Ω"
+    val rnd = new scala.util.Random(16)
+    val random = Seq.fill(60)(Seq.fill(rnd.nextInt(12))(
+      Seq.fill(1 + rnd.nextInt(6))(alphabet(rnd.nextInt(alphabet.length))).mkString))
+    val nfdHan = "\u1112\u1161\u11AB" // 한 as conjoining jamo
+    val arrays: Seq[Seq[String]] = random ++ Seq(
+      Seq(nfdHan, "한", nfdHan), Seq("the", "quick", "brown", "fox"),
+      Seq("a", null, "b"), Seq(null, null), Seq(), null)
+    val df = arrays.zipWithIndex.map { case (a, i) => (i.toLong, a) }.toDF("id", "toks")
+    val want = reference(df).orderBy("id").collect().map(_.getLong(1)).toSeq
+    Seq(("true", "FALLBACK"), ("false", "NO_CODEGEN")).foreach { case (cg, fm) =>
+      withSQLConf("spark.sql.codegen.wholeStage" -> cg, "spark.sql.codegen.factoryMode" -> fm) {
+        val got = df.select(SimHash.simhash(col("toks"))).orderBy(col("id"))
+          .collect().map(_.getLong(0)).toSeq
+        assert(got == want, s"factoryMode=$fm")
+      }
+    }
+    assert(want.forall(_ >= 0L)) // bit 63 is never set
+    assert(want.takeRight(3) == Seq(0L, 0L, 0L)) // all-NULL, empty, NULL array
   }
 
   test("graft_simhash is callable from SQL") {
     registerGraftExtensions()
     val r = spark.sql(
       "SELECT graft_simhash(array('a','b','c')) AS h," +
-        " graft_simhash(CAST(array() AS array<string>)) AS e").collect()(0)
-    assert(r.getLong(0) != 0L)
+        " graft_simhash(CAST(array() AS array<string>)) AS e," +
+        " graft_simhash(CAST(NULL AS array<string>)) AS n").collect()(0)
+    assert(r.getLong(0) != 0L && r.getLong(0) >= 0L) // bit 63 never set
     assert(r.getLong(1) == 0L) // empty input: no positive votes
+    assert(r.isNullAt(2)) // SQL keeps NULL; the Column function gives 0
   }
 
   test("native tokenizer matches the HOF formulation on awkward inputs") {
@@ -231,6 +259,16 @@ class ExpressionSpec extends AnyFunSuite with SparkTest {
       .select(Portable.windowHashesNative(T.tokens(col("text")), 3))
       .collect()(0).getSeq[Long](0)
     assert(viaSql == viaApi && viaSql.length == 3)
+  }
+
+  test("graft_rk_windows skips NULL elements before windowing") {
+    registerGraftExtensions()
+    val r = spark.sql(
+      "SELECT graft_rk_windows(array('a', NULL, 'b', 'c'), 2) AS n," +
+        " graft_rk_windows(array('a', 'b', 'c'), 2) AS p," +
+        " graft_rk_windows(array(NULL, 'a', NULL), 2) AS s").collect()(0)
+    assert(r.getSeq[Long](0) == r.getSeq[Long](1) && r.getSeq[Long](1).length == 2)
+    assert(r.getSeq[Long](2).isEmpty) // one non-NULL token: no window
   }
 
   test("portable minhash components are decorrelated and estimate Jaccard (not 0/1-only)") {

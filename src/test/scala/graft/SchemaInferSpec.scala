@@ -54,6 +54,19 @@ class SchemaInferSpec extends AnyFunSuite with SparkTest {
     assert(grouped == perRow)
   }
 
+  test("MinHashAggregator skips NULL arrays like NULL elements") {
+    import spark.implicits._
+    def sig(rows: Seq[(Long, Seq[String])]) =
+      rows.toDF("id", "tokens").groupBy("id")
+        .agg(MinHashAggregator.column(8)(col("tokens")).as("sig"))
+        .select("sig").collect()(0).getSeq[Long](0)
+    val mixed = sig(Seq((1L, null), (1L, Seq("x", null, "y")), (1L, null), (1L, Seq("z"))))
+    assert(mixed == sig(Seq((1L, Seq("x", "y", "z")))))
+    // every array NULL: the all-Long.MaxValue zero, as the oracle's
+    // coalesce(s_j, MaxLong) gives for a group without tokens
+    assert(sig(Seq((1L, null), (1L, null))) == Seq.fill(8)(Long.MaxValue))
+  }
+
   test("MinHashAggregator signature is order- and split-invariant") {
     import spark.implicits._
     val a = Seq((1L, Seq("x", "y")), (1L, Seq("z")))

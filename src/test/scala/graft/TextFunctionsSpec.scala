@@ -102,10 +102,11 @@ class TextFunctionsSpec extends AnyFunSuite with SparkTest {
       (2L, "spark window join filter group aggregate shuffle partitions"),
       (3L, "entirely unrelated vocabulary about cooking pasta and sauce")
     ).toDF("id", "text")
-      .select(col("id"), SimHash.simhash64(T.tokens(col("text"))).as("h"))
+      .select(col("id"), SimHash.simhash(T.tokens(col("text"))).as("h"))
     val h = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val d12 = java.lang.Long.bitCount(h(1L) ^ h(2L))
     val d13 = java.lang.Long.bitCount(h(1L) ^ h(3L))
     assert(d12 < d13)
+    assert(h.values.forall(_ >= 0L)) // 63-bit: bit 63 is never set
   }
 }
